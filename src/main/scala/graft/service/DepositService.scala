@@ -2,54 +2,64 @@ package graft.service
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException,
+  LinkedBlockingQueue}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.model.{KeyedFlagEvent, TimedDeposit}
+import graft.model.TimedDeposit
 import graft.streaming.DepositStreams
-import graft.streaming.DepositStreams.BalanceRow
+import graft.streaming.DepositStreams.WalletRow
 
 /** The reference's two HTTP endpoints (/root/reference/service/service.go)
   * over the streaming engine:
   *
   *  - `POST /deposit` `{"wallet_id": w, "amount": a}` — reject
   *    `amount <= 0` with 422 (service.go:87-91), otherwise feed the deposit
-  *    stream and ACK only after the micro-batch commits (the analog of the
-  *    blocking `EmitSync`, service.go:99). Test hook: an optional
-  *    `ts_unix` field pins processing time (the reference stamps wall
-  *    clock, detector.go:57).
-  *  - `GET /check/{wallet_id}` — balance ⟕ flag with unknown-wallet →
+  *    stream and ACK only after the deposit is fsynced to the changelog
+  *    and its micro-batch has committed (the analog of the blocking
+  *    `EmitSync`, service.go:99). Test hook: an optional `ts_unix` field
+  *    pins processing time (the reference stamps wall clock,
+  *    detector.go:57).
+  *  - `GET /check/{wallet_id}` — balance and flag, with unknown-wallet →
   *    `{balance: 0, above_threshold: false}` and HTTP 200 (SURVEY §2.3.6).
   *
-  * Topology: one collector query and one detector query, each feeding a
-  * KEYED SERVING VIEW through `foreachBatch` — the analog of the
-  * reference's local LevelDB view (`view.Get`, service.go:128-133):
-  * every committed micro-batch upserts only ITS OWN keys (LWW by
-  * nDeposits / seq — the flagger's O7 discipline applied at write time),
-  * and `GET /check` is two O(1) map reads with NO Spark job. Per-request
+  * Topology: ONE keyed stateful query, [[DepositStreams.wallet]], that
+  * evaluates the collector and the detector together and feeds one KEYED
+  * SERVING VIEW through `foreachBatch` — the analog of the reference's
+  * local LevelDB view (`view.Get`, service.go:128-133). Every committed
+  * micro-batch upserts only its own keys (last-writer-wins by nDeposits),
+  * and `GET /check` is one O(1) map read with NO Spark job. Per-request
   * cost is therefore independent of table size; per-batch maintenance
   * cost is proportional to the keys the batch touched, never to the
   * accumulated state. On a cluster the same `foreachBatch` writes to an
   * external KV store (RocksDB service, Redis, Cassandra) — the lifecycle
   * (upsert-on-commit, last-writer-wins keyed rows) is identical; only
-  * the map implementation changes. A JDK HttpServer stands in for the
-  * reference's chi router.
+  * the map implementation changes.
+  *
+  * Writes are GROUP-COMMITTED: HTTP threads parse and validate a deposit,
+  * queue it, and block on its result; one writer thread takes everything
+  * that queued while the previous group was committing and commits it as
+  * one group — one fsync, one micro-batch — so the fixed cost of a
+  * micro-batch is shared by every deposit in flight (the D-Streams batch
+  * argument). A group is never held open to wait for more deposits. A
+  * JDK HttpServer stands in for the reference's chi router.
   */
 final class DepositService(spark: SparkSession, port: Int = 0,
                            changelogDir: Option[String] = None) {
   import spark.implicits._
+  import DepositService.Pending
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private val mapper = new ObjectMapper()
-  private val seq = new AtomicLong(0L)
 
   // The retained input log (the deposits TOPIC analog): every ACKed
   // deposit appends one JSON line before the engine absorbs it. At boot
   // the log replays through the fresh topology BEFORE the HTTP port
-  // opens, so a restarted service re-materializes its serving views the
+  // opens, so a restarted service re-materializes its serving view the
   // way the reference's do from the changelog topics
   // (/root/reference/service/service.go:43-53) — and, stronger, restores
   // the group-table STATE too (running balances, detector windows), so
@@ -64,35 +74,40 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     new java.io.File(d, "deposits.jsonl")
   }
 
-  // The serving views (view.Get analog). ConcurrentHashMap.merge makes the
+  // The serving view (view.Get analog). ConcurrentHashMap.merge makes the
   // LWW upsert atomic per key — the HTTP executor reads concurrently with
   // the streaming thread's batch commit.
-  private val balanceView = new ConcurrentHashMap[String, BalanceRow]()
-  private val flagView = new ConcurrentHashMap[String, KeyedFlagEvent]()
+  private val view = new ConcurrentHashMap[String, WalletRow]()
 
   private val input = MemoryStream[TimedDeposit]
 
-  private val collectorQuery = DepositStreams.collector(spark, input.toDS())
+  private val query = DepositStreams.wallet(spark, input.toDS())
     .writeStream.outputMode("update")
-    .foreachBatch { (batch: Dataset[BalanceRow], _: Long) =>
+    .foreachBatch { (batch: Dataset[WalletRow], _: Long) =>
       // collect() here is bounded by the keys THIS batch updated (update
       // mode emits changed keys only), not by the size of the view.
       batch.collect().foreach { r =>
-        balanceView.merge(r.walletId, r,
+        view.merge(r.walletId, r,
           (old, nw) => if (nw.nDeposits >= old.nDeposits) nw else old)
       }
     }
     .start()
 
-  private val detectorQuery = DepositStreams.detector(spark, input.toDS())
-    .writeStream.outputMode("append")
-    .foreachBatch { (batch: Dataset[KeyedFlagEvent], _: Long) =>
-      batch.collect().foreach { r =>
-        flagView.merge(r.walletId, r,
-          (old, nw) => if (nw.seq >= old.seq) nw else old)
-      }
-    }
-    .start()
+  /** The serving query, for tests that kill it. */
+  private[service] def servingQuery = query
+
+  private def ensureRunning(): Unit =
+    if (!query.isActive) throw new IllegalStateException(
+      "DepositService: serving query is not running", query.exception.orNull)
+
+  /** Runs every deposit added so far through the serving query. On a
+    * stopped query `processAllAvailable` returns without running
+    * anything, so that case is turned into a failure here: returning
+    * normally means the view reflects every added deposit. */
+  private def commit(): Unit = {
+    query.processAllAvailable()
+    ensureRunning()
+  }
 
   // Client-supplied idempotency keys already absorbed (rebuilt from the
   // log at boot): a retried POST whose key is present ACKs without
@@ -105,8 +120,12 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   // in its KV store alongside the views, compacted with the changelog.
   private val seenIdem = ConcurrentHashMap.newKeySet[String]()
 
+  // Seq of the last logged deposit. Set by the boot replay, then read and
+  // written only by the writer thread, which starts after it.
+  private var lastSeq = 0L
+
   // Rebuild-on-start: replay the retained log (seq order) through the
-  // running queries and only then open the port — the first GET a client
+  // running query and only then open the port — the first GET a client
   // can issue already sees the pre-restart state (zero-mismatch contract,
   // asserted by DepositServiceSpec's restart scenario). A crash mid-append
   // leaves a torn FINAL line; since the ACK follows the flush, a final
@@ -117,13 +136,13 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   // would be worse than refusing to start. Replay also dedupes by
   // idempotency key (first occurrence wins — the occurrence the client
   // was ACKed for, or will be on retry). The whole block stops the
-  // already-started queries before rethrowing a refusal — a constructor
-  // failure must not leak two running streams into the host JVM.
+  // already-started query before rethrowing a refusal — a constructor
+  // failure must not leak a running stream into the host JVM.
   try logFile.filter(_.isFile).foreach { f =>
     // REPLACE (not the default REPORT) on malformed bytes: a tear inside
     // a multi-byte UTF-8 character must reach the per-LINE torn-tail
     // handler as a garbled final line, not crash the read itself. Whole
-    // mid-file lines are complete (one flush per append), so REPLACE can
+    // mid-file lines are complete (one flush per group), so REPLACE can
     // only fire on the torn tail — or on real corruption, which then
     // fails the JSON parse loudly below.
     val codec = scala.io.Codec.UTF8
@@ -185,14 +204,12 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     val replayed = fresh.map(_._1).sortBy(_.seq)
     if (replayed.nonEmpty) {
       input.addData(replayed)
-      collectorQuery.processAllAvailable()
-      detectorQuery.processAllAvailable()
-      seq.set(replayed.map(_.seq).max) // LWW ordering survives the restart
+      commit()
+      lastSeq = replayed.map(_.seq).max // seq order survives the restart
     }
   } catch {
     case t: Throwable =>
-      try collectorQuery.stop() catch { case scala.util.control.NonFatal(_) => () }
-      try detectorQuery.stop() catch { case scala.util.control.NonFatal(_) => () }
+      try query.stop() catch { case scala.util.control.NonFatal(_) => () }
       throw t
   }
 
@@ -203,49 +220,107 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   private val logWriter = logStream.map(s =>
     new java.io.OutputStreamWriter(s, StandardCharsets.UTF_8))
 
-  private def appendToLog(d: TimedDeposit, idem: Option[String]): Unit =
+  /** Appends a group's records with ONE flush and fsync. flush() pushes
+    * to OS buffers and getFD.sync() forces them to stable storage — an
+    * ACK after this point holds across process AND OS/power failure (the
+    * full EmitSync contract, not just the process-crash half). Called
+    * only from the writer thread. */
+  private def appendToLog(group: Seq[(TimedDeposit, Option[String])]): Unit =
     logWriter.zip(logStream).foreach { case (w, s) =>
-      val n = mapper.createObjectNode()
-      n.put("wallet_id", d.walletId); n.put("amount", d.amount)
-      n.put("ts_unix", d.tsUnix); n.put("seq", d.seq)
-      idem.foreach(n.put("idem", _))
-      // The dispatcher serializes requests (no executor), but keep the
-      // append atomic anyway. flush() pushes to OS buffers and
-      // getFD.sync() forces the page to stable storage — the ACK below
-      // this point holds across process AND OS/power failure (the full
-      // EmitSync contract, not just the process-crash half).
-      w.synchronized {
-        w.write(mapper.writeValueAsString(n)); w.write("\n"); w.flush()
-        s.getFD.sync()
+      group.foreach { case (d, idem) =>
+        val n = mapper.createObjectNode()
+        n.put("wallet_id", d.walletId); n.put("amount", d.amount)
+        n.put("ts_unix", d.tsUnix); n.put("seq", d.seq)
+        idem.foreach(n.put("idem", _))
+        w.write(mapper.writeValueAsString(n)); w.write("\n")
       }
+      w.flush()
+      s.getFD.sync()
     }
 
-  /** Serializes the deposit write path end-to-end (idempotency check →
-    * fsynced append → ingest → commit → ACK). The check-then-add on
-    * [[seenIdem]] is only race-free under this lock. Declared (like
-    * every field the handlers touch) BEFORE `server.start()` below — a
-    * request racing the constructor tail must never observe a null
-    * field through the already-open port. */
-  private val writeLock = new Object
+  /** Commits one group, in order: idempotency check (first occurrence of
+    * a key wins, against earlier groups and inside this group) → seq →
+    * fsynced append → one `addData` and one micro-batch → keys marked
+    * seen → every member completed. A key is marked seen only after the
+    * engine has absorbed its deposit: "seen" must mean "durably logged
+    * AND absorbed this boot", or a retry after a failure between append
+    * and commit would be ACKed as duplicate while the view never ingests
+    * the deposit until a restart. A failure therefore leaves the group's
+    * keys unseen and completes EVERY member with it, duplicates included
+    * — a retry re-appends, and the boot replay dedupes on first
+    * occurrence per key, keeping the view exactly-once over an
+    * at-least-once log. Duplicates are answered only after the group
+    * commits, so a `duplicate` never precedes the durability of the
+    * deposit it refers to. */
+  private def commitGroup(group: Seq[Pending]): Unit =
+    try {
+      val inGroup = mutable.HashSet.empty[String]
+      val (fresh, dups) = group.partition(
+        _.idem.forall(k => !seenIdem.contains(k) && inGroup.add(k)))
+      if (fresh.nonEmpty) {
+        ensureRunning() // a group that cannot commit is not logged either
+        val events = fresh.map { p =>
+          lastSeq += 1
+          TimedDeposit(p.walletId, p.amount, p.tsUnix, lastSeq)
+        }
+        appendToLog(events.zip(fresh.map(_.idem))) // log-then-absorb: a crash after this replays it
+        input.addData(events)
+        commit()
+        fresh.foreach(_.idem.foreach(seenIdem.add))
+      }
+      fresh.foreach(_.result.complete("ok"))
+      dups.foreach(_.result.complete("duplicate"))
+    } catch {
+      case t: Throwable => group.foreach(_.result.completeExceptionally(t))
+    }
+
+  // Admitted deposits, in arrival order. Each element is one submission;
+  // the writer drains whole elements, so one element always commits as
+  // (part of) one group.
+  private val queue = new LinkedBlockingQueue[Seq[Pending]]()
+  @volatile private var stopping = false
+
+  /** The single writer: a group is whatever queued while the previous
+    * group was committing. A failed group is completed with its failure
+    * inside [[commitGroup]], so the thread outlives it; only [[stop]]
+    * ends it. */
+  private def writeLoop(): Unit =
+    try while (!stopping) {
+      val drained = new java.util.ArrayList[Seq[Pending]]()
+      drained.add(queue.take())
+      queue.drainTo(drained)
+      commitGroup(drained.asScala.toSeq.flatten)
+    } catch { case _: InterruptedException => () }
+
+  private val writer = new Thread(() => writeLoop(), "deposit-group-commit")
+  writer.setDaemon(true)
+  writer.start()
+
+  /** Queues deposits that must commit in one group; each member's
+    * `result` completes once that group has committed or failed. */
+  private[service] def enqueue(group: Seq[Pending]): Unit = queue.put(group)
 
   /** Write-admission bound: at most this many pool threads may be inside
     * (or queued on) the write path at once; excess POSTs are REJECTED
-    * with 503 instead of consuming a thread. Without it, 8 concurrent
-    * writers would occupy the whole pool holding/waiting on [[writeLock]]
-    * through multi-hundred-ms commits and GETs would queue behind write
-    * latency again — the regression the pool exists to prevent. 503 +
-    * retry is safe for keyed clients (idempotency) and honest
-    * backpressure for keyless ones (the deposit was NOT accepted). */
+    * with 503 instead of consuming a thread. Without it, concurrent
+    * writers would occupy the whole pool waiting on group commits and
+    * GETs would queue behind write latency again — the regression the
+    * pool exists to prevent. 503 + retry is safe for keyed clients
+    * (idempotency) and honest backpressure for keyless ones (the deposit
+    * was NOT accepted). Declared (like every field the handlers touch)
+    * BEFORE `server.start()` below — a request racing the constructor
+    * tail must never observe a null field through the already-open
+    * port. */
   private val writePermits = new java.util.concurrent.Semaphore(4)
 
   DepositService.ensureNoDelay()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/deposit", (ex: HttpExchange) => handleDeposit(ex))
   server.createContext("/check/", (ex: HttpExchange) => handleCheck(ex))
-  // Reads must not queue behind the write path: GET /check is two
-  // lock-free ConcurrentHashMap reads, so a small pool serves them in
-  // parallel while POSTs serialize on [[writeLock]] (one writer at
-  // a time = the reference topic's per-partition ordering; parallel
+  // Reads must not queue behind the write path: GET /check is one
+  // lock-free ConcurrentHashMap read, so a small pool serves reads in
+  // parallel while POST threads wait on their group commit (one writer
+  // at a time = the reference topic's per-partition ordering; parallel
   // lock-free reads = its local view), with [[writePermits]] keeping
   // half the pool free for reads under any write load. Measured under
   // concurrent load (DepositServiceLoadSpec): with the single-dispatcher
@@ -265,6 +340,17 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     ex.close()
   }
 
+  /** Logs a handler failure with its route and answers 500. */
+  private def fail(ex: HttpExchange, route: String, t: Throwable): Unit = {
+    val cause = t match {
+      case e: ExecutionException if e.getCause != null => e.getCause
+      case _ => t
+    }
+    System.err.println(s"DepositService: $route failed with 500")
+    cause.printStackTrace()
+    respond(ex, 500, """{"error":"internal"}""")
+  }
+
   private def handleDeposit(ex: HttpExchange): Unit =
     try {
       if (ex.getRequestMethod != "POST") { respond(ex, 405, """{"error":"POST only"}"""); return }
@@ -275,85 +361,72 @@ final class DepositService(spark: SparkSession, port: Int = 0,
       }
       try handleDepositAdmitted(ex) finally writePermits.release()
     } catch {
-      case _: Throwable => respond(ex, 500, """{"error":"internal"}""")
+      case t: Throwable => fail(ex, "POST /deposit", t)
     }
 
-  private def handleDepositAdmitted(ex: HttpExchange): Unit =
-    try {
-      val node = mapper.readTree(ex.getRequestBody)
-      val wallet = Option(node.get("wallet_id")).map(_.asText()).getOrElse("")
-      val amount = Option(node.get("amount")).map(_.asDouble()).getOrElse(0.0)
-      if (wallet.isEmpty) { respond(ex, 400, """{"error":"wallet_id required"}"""); return }
-      if (amount <= 0) { // service.go:87-91
-        respond(ex, 422, """{"error":"amount must be positive"}"""); return
-      }
-      val ts = Option(node.get("ts_unix")).map(_.asLong())
-        .getOrElse(System.currentTimeMillis() / 1000L)
-      // Idempotent retry: a key we already logged means the deposit is
-      // durable and will reach the views (this boot or the next replay) —
-      // ACK without a second log record or ingest, so a client that
-      // retries on 500/timeout cannot double-count. Keyless POSTs are
-      // documented at-least-once. The whole check→append→ingest→commit
-      // sequence runs under [[writeLock]] (one writer at a time; reads
-      // never take it), which also makes the check-then-add race-free
-      // under the parallel HTTP pool.
-      // filterNot(_.isNull): Jackson's NullNode.asText() is the STRING
-      // "null" — an explicit {"idem": null} must mean "no key", not a
-      // shared key that marks every later null-idem deposit duplicate.
-      val idem = Option(node.get("idem")).filterNot(_.isNull)
-        .map(_.asText()).filter(_.nonEmpty)
-      val body = writeLock.synchronized {
-        if (idem.exists(seenIdem.contains))
-          s"""{"wallet_id":"$wallet","status":"duplicate"}"""
-        else {
-          val event = TimedDeposit(wallet, amount, ts, seq.incrementAndGet())
-          appendToLog(event, idem) // log-then-absorb: a crash after this replays it
-          input.addData(event)
-          // Mark the key seen only AFTER the engine holds the event:
-          // "seen" must mean "durably logged AND absorbed this boot", or
-          // a retry after a failure between append and addData would be
-          // ACKed as duplicate while the views never ingest it until a
-          // restart (read-your-writes silently broken for that key). A
-          // failure here leaves the key unseen, so the retry re-appends —
-          // the boot replay dedupes on first-occurrence-per-key, keeping
-          // the views exactly-once over an at-least-once log.
-          idem.foreach(seenIdem.add)
-          // EmitSync analog: ack only once the engine has absorbed the
-          // event — and, since the views update inside foreachBatch, once
-          // the serving maps reflect it (read-your-writes for the ACK).
-          collectorQuery.processAllAvailable()
-          detectorQuery.processAllAvailable()
-          s"""{"wallet_id":"$wallet","status":"ok"}"""
-        }
-      }
-      respond(ex, 200, body)
-    } catch {
-      case _: Throwable => respond(ex, 500, """{"error":"internal"}""")
+  private def handleDepositAdmitted(ex: HttpExchange): Unit = {
+    val node = mapper.readTree(ex.getRequestBody)
+    val wallet = Option(node.get("wallet_id")).map(_.asText()).getOrElse("")
+    val amount = Option(node.get("amount")).map(_.asDouble()).getOrElse(0.0)
+    if (wallet.isEmpty) { respond(ex, 400, """{"error":"wallet_id required"}"""); return }
+    if (amount <= 0) { // service.go:87-91
+      respond(ex, 422, """{"error":"amount must be positive"}"""); return
     }
+    val ts = Option(node.get("ts_unix")).map(_.asLong())
+      .getOrElse(System.currentTimeMillis() / 1000L)
+    // Idempotent retry: a key we already logged means the deposit is
+    // durable and will reach the view (this boot or the next replay) —
+    // the group commit answers `duplicate` without a second log record
+    // or ingest, so a client that retries on 500/timeout cannot
+    // double-count. Keyless POSTs are documented at-least-once.
+    // filterNot(_.isNull): Jackson's NullNode.asText() is the STRING
+    // "null" — an explicit {"idem": null} must mean "no key", not a
+    // shared key that marks every later null-idem deposit duplicate.
+    val idem = Option(node.get("idem")).filterNot(_.isNull)
+      .map(_.asText()).filter(_.nonEmpty)
+    val pending = new Pending(wallet, amount, ts, idem)
+    enqueue(Seq(pending))
+    // EmitSync analog: the group commit completes this only once the
+    // deposit is fsynced and the view reflects it (read-your-writes for
+    // the ACK).
+    val status = pending.result.get()
+    respond(ex, 200, mapper.writeValueAsString(
+      mapper.createObjectNode().put("wallet_id", wallet).put("status", status)))
+  }
 
-  /** O8: the point lookup. Two keyed map reads — no scan, no job; the
+  /** O8: the point lookup. One keyed map read — no scan, no job; the
     * same asymptotics as the reference's `view.Get` (service.go:128-133). */
   private def handleCheck(ex: HttpExchange): Unit =
     try {
       val wallet = ex.getRequestURI.getPath.stripPrefix("/check/")
-      val balance = Option(balanceView.get(wallet)).map(_.balance).getOrElse(0.0)
-      val flagged = Option(flagView.get(wallet)).exists(e => !e.flagRemoved)
-      respond(ex, 200,
-        s"""{"wallet_id":"$wallet","balance":$balance,"above_threshold":$flagged}""")
+      val row = Option(view.get(wallet))
+      respond(ex, 200, mapper.writeValueAsString(mapper.createObjectNode()
+        .put("wallet_id", wallet)
+        .put("balance", row.map(_.balance).getOrElse(0.0))
+        .put("above_threshold", row.exists(_.flagged))))
     } catch {
-      case _: Throwable => respond(ex, 500, """{"error":"internal"}""")
+      case t: Throwable => fail(ex, "GET /check", t)
     }
 
   def stop(): Unit = {
     server.stop(0)
     httpPool.shutdownNow()
-    collectorQuery.stop()
-    detectorQuery.stop()
+    stopping = true
+    writer.interrupt()
+    query.stop()
+    writer.join() // no append may follow the close below
     logWriter.foreach(_.close())
   }
 }
 
 object DepositService {
+  /** An admitted deposit waiting for its group to commit. `result`
+    * completes with "ok" or "duplicate", or with the group's failure. */
+  private[service] final class Pending(val walletId: String, val amount: Double,
+                                       val tsUnix: Long, val idem: Option[String]) {
+    val result = new CompletableFuture[String]()
+  }
+
   // TCP_NODELAY on the serving socket: headers and body go out as two
   // small writes, and with Nagle on, a keep-alive client's next request
   // waits out the peer's delayed ACK — measured 44 ms per GET (the

@@ -6,7 +6,7 @@ import graft.streaming.DetectorLogic
 /** CI-executable serve smoke for the two cells the DuckDB oracle cannot
   * express — O8 (point lookup / view.Get) and O13 (processor
   * orchestration): stands up the full [[DepositService]] (MemoryStream →
-  * collector + detector micro-batch queries → memory sinks → HTTP serve),
+  * fused collector+detector micro-batch query → serving view → HTTP serve),
   * POSTs a deterministic deposit sequence derived from the events fixture
   * through the real HTTP edge (the 422 reject path included), then checks
   * every `GET /check/{wallet}` response against a driver-side replay of

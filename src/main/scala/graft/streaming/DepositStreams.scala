@@ -31,6 +31,15 @@ object DepositStreams {
   /** Balance-table row served by GET /check (SURVEY §2.1 O8). */
   final case class BalanceRow(walletId: String, nDeposits: Long, balance: Double)
 
+  /** Serving-view row of [[wallet]]: the wallet's deposit count and
+    * balance, and the detector verdict of the last deposit folded. */
+  final case class WalletRow(walletId: String, nDeposits: Long, balance: Double,
+                             flagged: Boolean)
+
+  /** Per-wallet state of [[wallet]]: the collector's count and running
+    * balance beside the detector's counter. */
+  final case class WalletState(nDeposits: Long, balance: Double, counter: Counter)
+
   /** Flagger-table row. */
   final case class FlagRow(walletId: String, flagged: Boolean,
                            rollingPeriodStartUnix: Long)
@@ -76,6 +85,35 @@ object DepositStreams {
           }
           state.update(st)
           out.iterator
+      }
+  }
+
+  /** Collector and detector fused into one keyed query, for the serving
+    * path: one micro-batch and one state commit where the two queries
+    * took two of each.
+    * Each batch folds a wallet's deposits in the order [[collector]] and
+    * [[detector]] use, `(tsUnix, seq)`, through [[DetectorLogic.step]];
+    * the running balance is the same left fold as the collector's
+    * `deposits.map(_.amount).sum`, so balances are bit-identical to it,
+    * and the emitted flag is the detector's verdict on the last deposit
+    * folded. Unlike the collector, the state keeps no deposit history.
+    * Update output — one row per touched wallet. */
+  def wallet(spark: SparkSession, deposits: Dataset[TimedDeposit]): Dataset[WalletRow] = {
+    import spark.implicits._
+    deposits
+      .groupByKey(_.walletId)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
+        (key: String, events: Iterator[TimedDeposit], state: GroupState[WalletState]) =>
+          val sorted = events.toSeq.sortBy(d => (d.tsUnix, d.seq))
+          val init = (state.getOption.getOrElse(WalletState(0L, 0.0, Counter(0L, 0.0))), false)
+          // Without a timeout the function only runs for keys that have
+          // deposits in this batch, so the fold always sets the flag.
+          val (st, flagged) = sorted.foldLeft(init) { case ((s, _), d) =>
+            val (next, ev) = DetectorLogic.step(s.counter, d.amount, d.tsUnix)
+            (WalletState(s.nDeposits + 1, s.balance + d.amount, next), !ev.flagRemoved)
+          }
+          state.update(st)
+          WalletRow(key, st.nDeposits, st.balance, flagged)
       }
   }
 

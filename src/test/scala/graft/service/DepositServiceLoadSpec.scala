@@ -9,8 +9,9 @@ import graft.SparkSpec
 
 /** The serving edge under SUSTAINED CONCURRENT LOAD — the scenario the
   * reference's chi router lives in: N parallel clients mixing POST
-  * /deposit (each triggering a micro-batch commit before its ACK) and
-  * GET /check (keyed map reads) against one service process, then a
+  * /deposit (each ACKed only after the group commit that carries it —
+  * one fsync and one micro-batch of the fused wallet query) and GET
+  * /check (keyed map reads) against one service process, then a
   * RESTART UNDER LOAD with durability accounting.
   *
   * What is asserted (correctness) and what is measured (latency):
@@ -21,9 +22,10 @@ import graft.SparkSpec
   *    un-ACKed in-flight requests may simply be absent — at-least-once
   *    for keyless POSTs, exactly-once per idempotency key;
   *  - per-request wall latencies are collected and the p50/p95/p99
-  *    table is printed for PERF.md (the single-dispatcher design
-  *    serializes requests, so tail latency under load ≈ queueing behind
-  *    micro-batch commits — the measured trade of ACK-after-commit).
+  *    table is printed for PERF.md (one writer thread commits the POSTs
+  *    group by group, so a POST's latency under load ≈ waiting for the
+  *    group in flight plus its own group's commit — the measured trade
+  *    of ACK-after-commit; GETs never wait on the writer).
   */
 class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
 

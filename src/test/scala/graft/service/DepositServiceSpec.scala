@@ -2,8 +2,12 @@ package graft.service
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.streaming.DetectorLogic
 
 /** Drives the HTTP surface end-to-end: the FIXTURES.md §B scenarios
   * through real POST/GET requests against the running service. */
@@ -186,6 +190,127 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       assert(postOn(b, dep).body().contains("duplicate"))
       assert(checkOn(b, "gail") ==
         """{"wallet_id":"gail","balance":30.0,"above_threshold":false}""")
+    } finally b.stop()
+  }
+
+  private val mapper = new ObjectMapper()
+
+  private def postTo(s: DepositService, body: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${s.boundPort}/deposit"))
+      .timeout(java.time.Duration.ofSeconds(60))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def checkAt(s: DepositService, wallet: String): String =
+    client.send(HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Changelog lines that carry idempotency key `key`. */
+  private def loggedWithKey(dir: String, key: String): Int = {
+    val src = scala.io.Source.fromFile(new java.io.File(dir, "deposits.jsonl"))
+    try src.getLines().count(l => mapper.readTree(l).path("idem").asText() == key)
+    finally src.close()
+  }
+
+  test("responses stay valid JSON for a wallet id holding a quote or backslash") {
+    val s = new DepositService(spark)
+    try {
+      val unknown = mapper.readTree(checkAt(s, "a%22b"))
+      assert(unknown.get("wallet_id").asText() == "a\"b")
+      assert(unknown.get("balance").asDouble() == 0.0)
+      assert(!unknown.get("above_threshold").asBoolean())
+      val r = postTo(s, """{"wallet_id":"a\"b\\c","amount":25,"ts_unix":1000}""")
+      assert(r.statusCode() == 200)
+      val ack = mapper.readTree(r.body())
+      assert(ack.get("wallet_id").asText() == "a\"b\\c")
+      assert(ack.get("status").asText() == "ok")
+      val known = mapper.readTree(checkAt(s, "a%22b%5Cc"))
+      assert(known.get("wallet_id").asText() == "a\"b\\c")
+      assert(known.get("balance").asDouble() == 25.0)
+    } finally s.stop()
+  }
+
+  test("group commit: concurrent POSTs of one idempotency key count once") {
+    val dir = tempDir("svc_group_idem")
+    val s = new DepositService(spark, changelogDir = Some(dir))
+    try {
+      val body = """{"wallet_id":"ivy","amount":40,"ts_unix":1000,"idem":"same"}"""
+      val go = new CountDownLatch(1)
+      val statuses = new ConcurrentLinkedQueue[String]()
+      val threads = (0 until 8).map { _ =>
+        new Thread(() => {
+          go.await()
+          // A 503 is admission backpressure, not an answer: retry it the
+          // way a client honouring Retry-After would.
+          var r = postTo(s, body)
+          while (r.statusCode() == 503) { Thread.sleep(20); r = postTo(s, body) }
+          statuses.add(s"${r.statusCode()} ${mapper.readTree(r.body()).path("status").asText()}")
+        })
+      }
+      threads.foreach(_.start()); go.countDown(); threads.foreach(_.join(120000))
+      val got = statuses.asScala.toSeq
+      assert(got.size == 8)
+      assert(got.count(_ == "200 ok") == 1, got)
+      assert(got.count(_ == "200 duplicate") == 7, got)
+      assert(checkAt(s, "ivy") ==
+        """{"wallet_id":"ivy","balance":40.0,"above_threshold":false}""")
+      assert(loggedWithKey(dir, "same") == 1)
+
+      // The same key three times inside ONE group: the first member wins.
+      val group = Seq.fill(3)(new DepositService.Pending("jo", 7.0, 1000L, Some("in-group")))
+      s.enqueue(group)
+      assert(group.map(_.result.get(60, TimeUnit.SECONDS)) == Seq("ok", "duplicate", "duplicate"))
+      assert(checkAt(s, "jo") ==
+        """{"wallet_id":"jo","balance":7.0,"above_threshold":false}""")
+      assert(loggedWithKey(dir, "in-group") == 1)
+    } finally s.stop()
+  }
+
+  test("a group holding out-of-order deposits of one wallet flags as " +
+    "DetectorLogic in (ts, seq) order, live and after a restart") {
+    val dir = tempDir("svc_group_order")
+    val a = new DepositService(spark, changelogDir = Some(dir))
+    // The later seq carries the earlier timestamp. Folded in (ts, seq)
+    // order the wallet ends flagged; the verdict of the highest seq alone
+    // (2,000 opening the window) would read unflagged.
+    val group = Seq(new DepositService.Pending("kai", 9000.0, 1100L, None),
+      new DepositService.Pending("kai", 2000.0, 1000L, None))
+    val (_, verdicts) = DetectorLogic.run(Seq((2000.0, 1000L), (9000.0, 1100L)))
+    val want = s"""{"wallet_id":"kai","balance":11000.0,"above_threshold":${!verdicts.last.flagRemoved}}"""
+    assert(want.endsWith("true}"))
+    try {
+      a.enqueue(group)
+      assert(group.map(_.result.get(60, TimeUnit.SECONDS)) == Seq("ok", "ok"))
+      assert(checkAt(a, "kai") == want)
+    } finally a.stop()
+    val b = new DepositService(spark, changelogDir = Some(dir))
+    try assert(checkAt(b, "kai") == want) finally b.stop()
+  }
+
+  test("a stopped serving query turns POSTs into prompt 500s; the writer " +
+    "survives and a retry on a fresh boot counts once") {
+    val dir = tempDir("svc_dead_query")
+    val a = new DepositService(spark, changelogDir = Some(dir))
+    val dep = """{"wallet_id":"lee","amount":12,"ts_unix":1000,"idem":"k-dead"}"""
+    try {
+      assert(postTo(a, """{"wallet_id":"lee","amount":30,"ts_unix":900}""").statusCode() == 200)
+      a.servingQuery.stop()
+      // Two groups in a row: the first failure did not end the writer.
+      assert(postTo(a, dep).statusCode() == 500)
+      assert(postTo(a, dep).statusCode() == 500)
+    } finally a.stop()
+    val b = new DepositService(spark, changelogDir = Some(dir))
+    try {
+      val retry = postTo(b, dep)
+      assert(retry.statusCode() == 200 && retry.body().contains("\"ok\""))
+      assert(postTo(b, dep).body().contains("duplicate"))
+      assert(checkAt(b, "lee") ==
+        """{"wallet_id":"lee","balance":42.0,"above_threshold":false}""")
     } finally b.stop()
   }
 

@@ -40,6 +40,18 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
     out.groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
   }
 
+  /** Latest serving row per wallet from the fused query. */
+  private def runWallet(batches: Seq[TimedDeposit]*): Seq[DepositStreams.WalletRow] = {
+    val input = MemoryStream[TimedDeposit]
+    val name = freshName
+    val q = DepositStreams.wallet(spark, input.toDS())
+      .writeStream.format("memory").queryName(name).outputMode("update").start()
+    batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    val out = spark.table(name).as[DepositStreams.WalletRow].collect().toSeq
+    q.stop()
+    out.groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
+  }
+
   private def runFlagger(events: Seq[KeyedFlagEvent]): Seq[DepositStreams.FlagRow] = {
     val input = MemoryStream[KeyedFlagEvent]
     val name = freshName
@@ -112,5 +124,40 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
     val streamed = runDetector(batches.toSeq: _*)
     val (_, expected) = DetectorLogic.run(deposits.map(d => (d.amount, d.tsUnix)))
     assert(streamed.map(_.flagRemoved) == expected.map(_.flagRemoved))
+  }
+
+  test("fused wallet query == collector balances and the detector's last verdict") {
+    val rnd = new scala.util.Random(11)
+    var seq = 0L
+    var t = 1000L
+    // Six wallets over nine micro-batches. Inside a batch the timestamps
+    // are shuffled against seq order, and some gaps exceed the 120 s
+    // window, so both flags and resets occur.
+    val batches = (1 to 9).map { _ =>
+      t += (if (rnd.nextInt(4) == 0) 150 else rnd.nextInt(30))
+      val ts = (1 to 4 + rnd.nextInt(5)).map(_ => t + rnd.nextInt(40))
+      rnd.shuffle(ts).map { ti =>
+        seq += 1
+        TimedDeposit(s"f${rnd.nextInt(6)}", (1 + rnd.nextInt(4000)).toDouble + 0.1, ti, seq)
+      }
+    }
+    val fused = runWallet(batches: _*).map(r => r.walletId -> r).toMap
+    val collected = runCollector(batches: _*).map(r => r.walletId -> r).toMap
+    val events = runDetector(batches: _*).map(e => e.seq -> e).toMap
+    assert(fused.keySet == collected.keySet)
+    fused.values.foreach { r =>
+      assert((r.nDeposits, r.balance) ==
+        ((collected(r.walletId).nDeposits, collected(r.walletId).balance)), r)
+      // The detector's last verdict: its event for the deposit it folded
+      // last, the (ts, seq)-greatest one of the wallet's last batch.
+      val last = batches.filter(_.exists(_.walletId == r.walletId)).last
+        .filter(_.walletId == r.walletId).maxBy(d => (d.tsUnix, d.seq))
+      assert(r.flagged == !events(last.seq).flagRemoved, r)
+      // ... which is the pure state machine folded batch by batch.
+      val folded = batches.flatMap(_.filter(_.walletId == r.walletId)
+        .sortBy(d => (d.tsUnix, d.seq)).map(d => (d.amount, d.tsUnix)))
+      assert(r.flagged == !DetectorLogic.run(folded)._2.last.flagRemoved, r)
+    }
+    assert(fused.values.exists(_.flagged) && fused.values.exists(!_.flagged))
   }
 }
