@@ -126,9 +126,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try {
-            queries.QueryTuning.withProfile(spark, name) {
-              SparkEntry.queries(name)(spark, sfDir).count()
-            }
+            SparkEntry.queries(name)(spark, sfDir).count()
             true
           }
           catch { case e: Throwable =>

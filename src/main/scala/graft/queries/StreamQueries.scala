@@ -10,7 +10,7 @@ import graft.Q
 import graft.model.TimedDeposit
 import graft.operators.Maintenance
 import graft.sources.Tables
-import graft.streaming.{CollectorProcessor, DepositStreams, DetectorLogic, DetectorProcessor}
+import graft.streaming.{DepositStreams, DetectorLogic}
 
 /** The REAL Structured Streaming pipeline (file-backed replay log →
   * detector → flagger + collector, chained streaming queries exactly like
@@ -441,7 +441,6 @@ object StreamQueries {
 
   private def streamCheck(s: SparkSession, dir: String, windowSec: Long,
                           threshold: Double,
-                          useTws: Boolean = false,
                           chunked: Boolean = false,
                           proto: Boolean = false,
                           replay: Boolean = false): DataFrame = {
@@ -507,10 +506,7 @@ object StreamQueries {
       // first poll and only ever reads sink-COMMITTED files (never a
       // half-written part file).
       new java.io.File(s"$flagDir/_spark_metadata").mkdirs()
-      val detected =
-        if (useTws) DetectorProcessor.detect(s, deposits, windowSec, threshold)
-        else DepositStreams.detector(s, deposits, windowSec, threshold)
-      val q1 = detected.writeStream
+      val q1 = DepositStreams.detector(s, deposits, windowSec, threshold).writeStream
         .format("parquet").option("path", flagDir)
         .option("checkpointLocation", s"$work/cp_detector")
         .outputMode("append").start()
@@ -518,10 +514,7 @@ object StreamQueries {
 
       // Collector: parallel consumer group over the SAME feed — started
       // before hop 1 is awaited, so both run concurrently.
-      val collected =
-        if (useTws) CollectorProcessor.collect(s, deposits)
-        else DepositStreams.collector(s, deposits)
-      val q3 = collected.writeStream
+      val q3 = DepositStreams.collector(s, deposits).writeStream
         .format("memory").queryName(balName)
         .option("checkpointLocation", s"$work/cp_collector")
         .outputMode("update").start()
@@ -564,7 +557,7 @@ object StreamQueries {
           .sum / 1e3
         def sec(a: Long, b: Long) = (b - a) / 1e9
         System.err.println(
-          f"""{"forensics":"stream_check","tws":$useTws,"chunked":$chunked,"feed_s":${sec(t0, tFeed)}%.3f,""" +
+          f"""{"forensics":"stream_check","chunked":$chunked,"feed_s":${sec(t0, tFeed)}%.3f,""" +
           f""""hop1_collector_wall_s":${sec(tFeed, tHop1)}%.3f,"hop1_collector_batch_s":${batchSec(q1, q3)}%.3f,""" +
           f""""hop2_wall_s":${sec(tHop1, tHop2)}%.3f,"hop2_batch_s":${batchSec(q2)}%.3f}""")
       }
@@ -993,24 +986,21 @@ object StreamQueries {
 
   private def byWallet(df: DataFrame): DataFrame = df.orderBy(col("wallet_id"))
 
+  // Tuned so verdicts vary on the synthetic feed (1-day window, 300).
+  private val tuned = Q("stream_check_tuned", checkSql(86400L, 300.0)) {
+    (s, d) => materialized(s, "stream_check_tuned", depositFeed(s, d))(
+      streamCheck(s, d, 86400L, 300.0))(byWallet)
+  }
+
   val all: Seq[Q] = Seq(
     // Reference constants: 120 s window, threshold 10,000 (detector.go:16-17).
     Q("stream_check", checkSql(DetectorLogic.RollingPeriodSec, DetectorLogic.MaxAmount)) {
       (s, d) => materialized(s, "stream_check", depositFeed(s, d))(
         streamCheck(s, d, DetectorLogic.RollingPeriodSec, DetectorLogic.MaxAmount))(byWallet)
     },
-    // Tuned so verdicts vary on the synthetic feed (1-day window, 300).
-    Q("stream_check_tuned", checkSql(86400L, 300.0)) {
-      (s, d) => materialized(s, "stream_check_tuned", depositFeed(s, d))(
-        streamCheck(s, d, 86400L, 300.0))(byWallet)
-    },
-    // Same tuned pipeline through the Spark 4 transformWithState detector
-    // (StatefulProcessor + RocksDB state store) — must match the same
-    // oracle as the flatMapGroupsWithState form.
-    Q("stream_check_tws", checkSql(86400L, 300.0)) {
-      (s, d) => materialized(s, "stream_check_tws", depositFeed(s, d))(
-        streamCheck(s, d, 86400L, 300.0, useTws = true))(byWallet)
-    },
+    tuned,
+    // Alias of stream_check_tuned, kept so the registered name stays.
+    tuned.copy(name = "stream_check_tws"),
     // The reference's actual wire format end-to-end: the feed carries
     // proto3-marshaled Deposit bytes (wallet.proto:14-17) in Kafka message
     // framing, decoded per record by the codegen'd wire codec inside the

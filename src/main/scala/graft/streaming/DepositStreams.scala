@@ -16,10 +16,9 @@ import graft.model._
   * per-partition LevelDB entry, and the `groupByKey` shuffle is the analog
   * of Kafka partition assignment (SURVEY §1.5) — co-partitioning of state
   * with input is automatic, checkpointing upgrades Goka's at-least-once to
-  * exactly-once. At scale: RocksDB state store provider + watermarked state
-  * eviction (the collector's unbounded history is parity behavior; the
-  * incremental balance in [[graft.operators.DepositOps.balances]] is the
-  * 100-TB version — SURVEY §2.3.5).
+  * exactly-once. Per-key state is kept forever, as in the reference
+  * (SURVEY §2.3.5), and stays small: the collector keeps a running count
+  * and balance, not the deposit history.
   *
   * Processing time: the reference stamps wall-clock seconds per message
   * (detector.go:57). For deterministic replay and tests, `tsUnix` rides on
@@ -44,23 +43,25 @@ object DepositStreams {
   final case class FlagRow(walletId: String, flagged: Boolean,
                            rollingPeriodStartUnix: Long)
 
-  /** Collector: per-wallet deposit history + running balance (O3). Update
-    * output — each batch emits the refreshed state row per touched key. */
+  /** Collector: per-wallet deposit count and running balance (O3+O9).
+    * The reference appends every deposit to a history (collector.go:17-29)
+    * and sums it at read time (service.go:136-140). Here the state is the
+    * running `(nDeposits, balance)`, folded in `(tsUnix, seq)` order: the
+    * same left fold, so balances are bit-identical to summing the history.
+    * The history itself is the batch [[graft.operators.DepositOps.history]].
+    * Update output — each batch emits the refreshed row per touched key. */
   def collector(spark: SparkSession, deposits: Dataset[TimedDeposit]): Dataset[BalanceRow] = {
     import spark.implicits._
     deposits
       .groupByKey(_.walletId)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (key: String, events: Iterator[TimedDeposit], state: GroupState[DepositHistory]) =>
+        (key: String, events: Iterator[TimedDeposit], state: GroupState[(Long, Double)]) =>
           val sorted = events.toSeq.sortBy(d => (d.tsUnix, d.seq))
-          val hist = sorted.foldLeft(state.getOption) { (st, d) =>
-            Some(CollectorLogic.step(st, Deposit(d.walletId, d.amount)))
-          }.getOrElse(DepositHistory(key, Vector.empty))
-          state.update(hist)
-          // Balance is computed at read time in the reference
-          // (service.go:136-140); emitting it per update keeps the sink
-          // table point-lookup ready.
-          BalanceRow(key, hist.deposits.size.toLong, hist.deposits.map(_.amount).sum)
+          val (n, balance) = sorted.foldLeft(state.getOption.getOrElse((0L, 0.0))) {
+            case ((n, b), d) => (n + 1, b + d.amount)
+          }
+          state.update((n, balance))
+          BalanceRow(key, n, balance)
       }
   }
 
@@ -93,10 +94,8 @@ object DepositStreams {
     * took two of each.
     * Each batch folds a wallet's deposits in the order [[collector]] and
     * [[detector]] use, `(tsUnix, seq)`, through [[DetectorLogic.step]];
-    * the running balance is the same left fold as the collector's
-    * `deposits.map(_.amount).sum`, so balances are bit-identical to it,
-    * and the emitted flag is the detector's verdict on the last deposit
-    * folded. Unlike the collector, the state keeps no deposit history.
+    * the running balance is the collector's, and the emitted flag is the
+    * detector's verdict on the last deposit folded.
     * Update output — one row per touched wallet. */
   def wallet(spark: SparkSession, deposits: Dataset[TimedDeposit]): Dataset[WalletRow] = {
     import spark.implicits._

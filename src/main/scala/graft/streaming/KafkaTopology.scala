@@ -84,35 +84,37 @@ object KafkaTopology {
       .as[KeyedFlagEvent]
   }
 
-  /** The whole processor group (cmd/processor/main.go:25-55): three
-    * streaming queries under one session; await any termination like the
-    * reference's errgroup. Balance/flag tables land as parquet "changelog"
-    * directories that the serve path (DepositOps.check) reads. */
-  def runProcessors(spark: SparkSession, brokers: String,
-                    stateDir: String): Seq[StreamingQuery] = {
-    val deposits = depositSource(spark, brokers)
+  /** The three keyed processors, by their command-line names. */
+  val Processors: Seq[String] = Seq("collector", "detector", "flagger")
+
+  /** The processor group (cmd/processor/main.go:25-55): the `selected`
+    * processors as streaming queries under one session. Balance/flag tables
+    * land as parquet "changelog" directories that the serve path
+    * (DepositOps.check) reads. */
+  def runProcessors(spark: SparkSession, brokers: String, stateDir: String,
+                    selected: Set[String]): Seq[StreamingQuery] = {
+    lazy val deposits = depositSource(spark, brokers)
     // State-table updates flow through foreachBatch as append-only
     // changelog rows (mapGroupsWithState is Update-mode; a parquet sink is
     // append-only) — readers take the latest row per key, exactly like a
     // compacted Kafka changelog topic.
-    def changelog[T](path: String): (Dataset[T], Long) => Unit =
-      (batch, _) => batch.write.mode("append").parquet(path)
-    val q1 = DepositStreams.collector(spark, deposits)
-      .writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt/collector")
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .outputMode("update")
-      .foreachBatch(changelog[DepositStreams.BalanceRow](s"$stateDir/balance-table"))
-      .start()
-    val q2 = flagEventSink(DepositStreams.detector(spark, deposits),
-      brokers, s"$stateDir/ckpt/detector").start()
-    val q3 = DepositStreams.flagger(spark, flagEventSource(spark, brokers))
-      .writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt/flagger")
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .outputMode("update")
-      .foreachBatch(changelog[DepositStreams.FlagRow](s"$stateDir/flagger-table"))
-      .start()
-    Seq(q1, q2, q3)
+    def changelog[T](rows: Dataset[T], name: String, table: String): StreamingQuery =
+      rows.writeStream
+        .option("checkpointLocation", s"$stateDir/ckpt/$name")
+        .trigger(Trigger.ProcessingTime("5 seconds"))
+        .outputMode("update")
+        .foreachBatch((batch: Dataset[T], _: Long) =>
+          batch.write.mode("append").parquet(s"$stateDir/$table"))
+        .start()
+    Processors.filter(selected).map {
+      case "collector" =>
+        changelog(DepositStreams.collector(spark, deposits), "collector", "balance-table")
+      case "detector" =>
+        flagEventSink(DepositStreams.detector(spark, deposits),
+          brokers, s"$stateDir/ckpt/detector").start()
+      case "flagger" =>
+        changelog(DepositStreams.flagger(spark, flagEventSource(spark, brokers)),
+          "flagger", "flagger-table")
+    }
   }
 }

@@ -2,22 +2,14 @@ package graft.streaming
 
 import graft.model._
 
-/** The reference's three per-key state machines as pure functions —
+/** The reference's detector and flagger state machines as pure functions —
   * independently unit-testable, wrapped by the Structured Streaming
-  * processors in [[DepositStreams]].
+  * processors in [[DepositStreams]]. (The collector's state machine is a
+  * running sum and lives in [[DepositStreams.collector]].)
   *
   * Branch order is load-bearing (SURVEY §2.3) and mirrored exactly from
   * /root/reference; each quirk has a named regression test.
   */
-object CollectorLogic {
-  /** Per-key append aggregation (/root/reference/collector/collector.go:17-29):
-    * load-or-create history, append the deposit, overwrite wallet_id. */
-  def step(state: Option[DepositHistory], d: Deposit): DepositHistory = {
-    val h = state.getOrElse(DepositHistory(d.walletId, Vector.empty))
-    DepositHistory(d.walletId, h.deposits :+ d)
-  }
-}
-
 object DetectorLogic {
   /** /root/reference/detector/detector.go:16-17 */
   val RollingPeriodSec = 120L

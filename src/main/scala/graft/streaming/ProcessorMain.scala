@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 /** Processor launcher (O13 — /root/reference/cmd/processor/main.go:25-55):
   * runs the selected subset of {collector, detector, flagger} as streaming
-  * queries under one session and blocks until any terminates (the errgroup
-  * analog is `awaitAnyTermination`).
+  * queries under one session ([[KafkaTopology.runProcessors]]) and blocks
+  * until any terminates (the errgroup analog is `awaitAnyTermination`).
   *
   * Usage: runMain graft.streaming.ProcessorMain --brokers host:port
   *        --state /path [--collector] [--detector] [--flagger]
@@ -14,45 +12,28 @@ import org.apache.spark.sql.streaming.Trigger
   * classpath — see [[KafkaTopology]].
   */
 object ProcessorMain {
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 1).collect {
-      case Array("--brokers", v) => "brokers" -> v
-      case Array("--state", v)   => "state" -> v
-    }.toMap
-    val brokers = opts.getOrElse("brokers", sys.error("--brokers required"))
-    val stateDir = opts.getOrElse("state", sys.error("--state required"))
-    val wantAll = !Seq("--collector", "--detector", "--flagger")
-      .exists(args.contains)
-    def want(flag: String) = wantAll || args.contains(flag)
+  /** Parsed command line: where the brokers and the state live, and which
+    * processors to run. */
+  final case class Args(brokers: String, stateDir: String, processors: Set[String])
 
+  /** Parses the command line; a missing `--brokers` or `--state` throws
+    * `IllegalArgumentException`. */
+  def parse(args: Seq[String]): Args = {
+    val opts = args.sliding(2).collect {
+      case Seq(k @ ("--brokers" | "--state"), v) => k -> v
+    }.toMap
+    def need(k: String) =
+      opts.getOrElse(k, throw new IllegalArgumentException(s"$k required"))
+    val chosen = KafkaTopology.Processors.filter(p => args.contains(s"--$p")).toSet
+    Args(need("--brokers"), need("--state"),
+      if (chosen.isEmpty) KafkaTopology.Processors.toSet else chosen)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parse(args.toSeq)
     val spark = graft.GraftSession.builder("graft-processors").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val deposits = KafkaTopology.depositSource(spark, brokers)
-
-    def changelog[T](path: String, ckpt: String) =
-      (batch: org.apache.spark.sql.Dataset[T], _: Long) =>
-        batch.write.mode("append").parquet(path)
-
-    if (want("--collector"))
-      DepositStreams.collector(spark, deposits)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$stateDir/ckpt/collector")
-        .trigger(Trigger.ProcessingTime("5 seconds"))
-        .foreachBatch(changelog[DepositStreams.BalanceRow](
-          s"$stateDir/balance-table", "collector"))
-        .start()
-    if (want("--detector"))
-      KafkaTopology.flagEventSink(DepositStreams.detector(spark, deposits),
-        brokers, s"$stateDir/ckpt/detector").start()
-    if (want("--flagger"))
-      DepositStreams.flagger(spark, KafkaTopology.flagEventSource(spark, brokers))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$stateDir/ckpt/flagger")
-        .trigger(Trigger.ProcessingTime("5 seconds"))
-        .foreachBatch(changelog[DepositStreams.FlagRow](
-          s"$stateDir/flagger-table", "flagger"))
-        .start()
-
+    KafkaTopology.runProcessors(spark, a.brokers, a.stateDir, a.processors)
     spark.streams.awaitAnyTermination()
   }
 }

@@ -29,4 +29,11 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
     assert(dups.isEmpty, s"duplicate query names across packs: $dups")
   }
+
+  test("stream_check_tws stays registered as an alias of stream_check_tuned") {
+    assert(SparkEntry.queries.contains("stream_check_tws"))
+    val tuned = SparkEntry.oracleSql.get("stream_check_tuned")
+    assert(tuned.isDefined)
+    assert(SparkEntry.oracleSql.get("stream_check_tws") == tuned)
+  }
 }

@@ -9,8 +9,7 @@ trait SparkSpec {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    // transformWithState needs multiple column families => RocksDB provider
-    // (also the production choice, see GraftSession).
+    // RocksDB state store: the production choice, see GraftSession.
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Spark 4.1's checksum checkpoint layer can deadlock all tasks inside

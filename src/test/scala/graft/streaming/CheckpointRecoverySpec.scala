@@ -56,14 +56,12 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSpec {
     assert(events.last.rollingPeriodStartUnix == 1000L)
   }
 
-  /** Same discipline for the Spark-4 StatefulProcessor collector: both its
-    * column families — the append-only `ListState[Deposit]` history AND the
-    * 16-byte running-balance `ValueState` — must come back after a restart
-    * (RocksDB changelog/snapshot recovery), and committed input must not
-    * be re-appended (an at-least-once replay would double the balance).
+  /** Same discipline for the collector: its running `(nDeposits, balance)`
+    * state must come back after a restart, and committed input must not be
+    * re-folded (an at-least-once replay would double the balance).
     */
-  test("collector ListState history and running balance survive a query restart") {
-    val root = Files.createTempDirectory("graft_ckpt_tws").toString
+  test("collector count and running balance survive a query restart") {
+    val root = Files.createTempDirectory("graft_ckpt_collector").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
 
     def writeBatch(rows: Seq[TimedDeposit]): Unit =
@@ -73,7 +71,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSpec {
       val deposits = spark.readStream
         .schema("walletId STRING, amount DOUBLE, tsUnix LONG, seq LONG")
         .parquet(in).as[TimedDeposit]
-      val q = CollectorProcessor.collect(spark, deposits)
+      val q = DepositStreams.collector(spark, deposits)
         .writeStream
         .option("checkpointLocation", ckpt)
         .outputMode("update")
@@ -90,8 +88,8 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSpec {
       TimedDeposit("w1", 50.0, 1010L, 2L)))
     runOnce()
     // Fresh incarnation, same checkpoint: one more deposit. n must reach 3
-    // and the balance 175 ONLY if both state columns were recovered and
-    // the first two deposits were NOT replayed.
+    // and the balance 175 ONLY if the state was recovered and the first
+    // two deposits were NOT replayed.
     writeBatch(Seq(TimedDeposit("w1", 25.0, 1020L, 3L)))
     runOnce()
 

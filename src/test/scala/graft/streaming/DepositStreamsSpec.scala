@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
@@ -15,41 +16,50 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
   private val n = new AtomicInteger(0)
   private def freshName = s"sink_${n.incrementAndGet()}"
 
+  /** Every row `wire` emits over `batches`, one micro-batch per batch. */
+  private def runQuery[O: Encoder](wire: Dataset[TimedDeposit] => Dataset[O],
+                                   mode: String)(batches: Seq[TimedDeposit]*): Seq[O] = {
+    val input = MemoryStream[TimedDeposit]
+    val name = freshName
+    val q = wire(input.toDS())
+      .writeStream.format("memory").queryName(name).outputMode(mode).start()
+    batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    val out = spark.table(name).as[O].collect().toSeq
+    q.stop()
+    out
+  }
+
   /** Run the detector over timed-deposit batches; returns all emitted flag
     * events (append mode retains every event, like the flag_wallet topic). */
-  private def runDetector(batches: Seq[TimedDeposit]*): Seq[KeyedFlagEvent] = {
-    val input = MemoryStream[TimedDeposit]
-    val name = freshName
-    val q = DepositStreams.detector(spark, input.toDS())
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    val out = spark.table(name).as[KeyedFlagEvent].collect().toSeq
-    q.stop()
-    out.sortBy(_.seq)
-  }
+  private def runDetector(batches: Seq[TimedDeposit]*): Seq[KeyedFlagEvent] =
+    runQuery(DepositStreams.detector(spark, _), "append")(batches: _*).sortBy(_.seq)
 
-  private def runCollector(batches: Seq[TimedDeposit]*): Seq[DepositStreams.BalanceRow] = {
-    val input = MemoryStream[TimedDeposit]
-    val name = freshName
-    val q = DepositStreams.collector(spark, input.toDS())
-      .writeStream.format("memory").queryName(name).outputMode("update").start()
-    batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    val out = spark.table(name).as[DepositStreams.BalanceRow].collect().toSeq
-    q.stop()
-    // Latest state row per wallet = the one with the most deposits.
-    out.groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
-  }
+  /** Latest state row per wallet = the one with the most deposits. */
+  private def runCollector(batches: Seq[TimedDeposit]*): Seq[DepositStreams.BalanceRow] =
+    runQuery(DepositStreams.collector(spark, _), "update")(batches: _*)
+      .groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
 
   /** Latest serving row per wallet from the fused query. */
-  private def runWallet(batches: Seq[TimedDeposit]*): Seq[DepositStreams.WalletRow] = {
-    val input = MemoryStream[TimedDeposit]
-    val name = freshName
-    val q = DepositStreams.wallet(spark, input.toDS())
-      .writeStream.format("memory").queryName(name).outputMode("update").start()
-    batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    val out = spark.table(name).as[DepositStreams.WalletRow].collect().toSeq
-    q.stop()
-    out.groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
+  private def runWallet(batches: Seq[TimedDeposit]*): Seq[DepositStreams.WalletRow] =
+    runQuery(DepositStreams.wallet(spark, _), "update")(batches: _*)
+      .groupBy(_.walletId).values.map(_.maxBy(_.nDeposits)).toSeq
+
+  /** `wallets` wallets over nine micro-batches. Inside a batch the
+    * timestamps are shuffled against seq order, and some gaps exceed the
+    * 120 s window, so both flags and resets occur. Amounts carry a
+    * fraction, so a sum taken in another order can differ in the last bit. */
+  private def shuffledBatches(rnd: scala.util.Random,
+                              wallets: Int = 6): Seq[Seq[TimedDeposit]] = {
+    var seq = 0L
+    var t = 1000L
+    (1 to 9).map { _ =>
+      t += (if (rnd.nextInt(4) == 0) 150 else rnd.nextInt(30))
+      val ts = (1 to 4 + rnd.nextInt(5)).map(_ => t + rnd.nextInt(40))
+      rnd.shuffle(ts).map { ti =>
+        seq += 1
+        TimedDeposit(s"f${rnd.nextInt(wallets)}", (1 + rnd.nextInt(4000)).toDouble + 0.1, ti, seq)
+      }
+    }
   }
 
   private def runFlagger(events: Seq[KeyedFlagEvent]): Seq[DepositStreams.FlagRow] = {
@@ -89,7 +99,7 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
     val bal = runCollector(
       Seq(TimedDeposit("w3", 9000.0, 1000L, 1L)),
       Seq(TimedDeposit("w3", 9000.0, 1130L, 2L)))
-    assert(bal.head.balance == 18000.0) // history keeps both; only the counter resets
+    assert(bal.head.balance == 18000.0) // the balance keeps both; only the counter resets
   }
 
   test("manual flag (O11) is overwritten by the next detector unflag — LWW") {
@@ -127,20 +137,7 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fused wallet query == collector balances and the detector's last verdict") {
-    val rnd = new scala.util.Random(11)
-    var seq = 0L
-    var t = 1000L
-    // Six wallets over nine micro-batches. Inside a batch the timestamps
-    // are shuffled against seq order, and some gaps exceed the 120 s
-    // window, so both flags and resets occur.
-    val batches = (1 to 9).map { _ =>
-      t += (if (rnd.nextInt(4) == 0) 150 else rnd.nextInt(30))
-      val ts = (1 to 4 + rnd.nextInt(5)).map(_ => t + rnd.nextInt(40))
-      rnd.shuffle(ts).map { ti =>
-        seq += 1
-        TimedDeposit(s"f${rnd.nextInt(6)}", (1 + rnd.nextInt(4000)).toDouble + 0.1, ti, seq)
-      }
-    }
+    val batches = shuffledBatches(new scala.util.Random(11))
     val fused = runWallet(batches: _*).map(r => r.walletId -> r).toMap
     val collected = runCollector(batches: _*).map(r => r.walletId -> r).toMap
     val events = runDetector(batches: _*).map(e => e.seq -> e).toMap
@@ -159,5 +156,52 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
       assert(r.flagged == !DetectorLogic.run(folded)._2.last.flagRemoved, r)
     }
     assert(fused.values.exists(_.flagged) && fused.values.exists(!_.flagged))
+  }
+
+  test("collector balance == left fold of its deposits, bit for bit") {
+    val rnd = new scala.util.Random(23)
+    // Two wallets, so each batch folds several deposits per wallet, and
+    // amounts with full-width fractions, so most fold orders round
+    // differently. The batches themselves arrive out of time order too.
+    val batches = rnd.shuffle(shuffledBatches(rnd, wallets = 2))
+      .map(_.map(d => d.copy(amount = d.amount + rnd.nextDouble())))
+    val collected = runCollector(batches: _*)
+    assert(collected.map(_.walletId).toSet == batches.flatten.map(_.walletId).toSet)
+    // Fold order: batch by batch, (tsUnix, seq) inside a batch.
+    def folded(w: String, inBatch: Seq[TimedDeposit] => Seq[TimedDeposit] = identity) =
+      batches.flatMap(b => inBatch(b.filter(_.walletId == w).sortBy(d => (d.tsUnix, d.seq))))
+        .map(_.amount)
+    collected.foreach { r =>
+      val amounts = folded(r.walletId)
+      assert((r.nDeposits, r.balance) == ((amounts.size.toLong, amounts.sum)), r)
+    }
+    // The `==` can tell fold orders apart: reversing the order inside each
+    // batch changes some wallet's sum in the last bit.
+    assert(collected.exists(r => folded(r.walletId, _.reverse).sum != r.balance))
+  }
+
+  /** A wallet idle for a long stretch keeps its state: the reference never
+    * evicts (SURVEY §2.3.5). w1 deposits at t=100, only w2 deposits at
+    * t=1000, and w1 returns at t=1100. */
+  private val idleTimeline = Seq(
+    Seq(TimedDeposit("w1", 5000.0, 100L, 1L)),
+    Seq(TimedDeposit("w2", 1.0, 1000L, 2L)),
+    Seq(TimedDeposit("w1", 5000.0, 1100L, 3L)))
+
+  test("detector keeps an idle wallet's counter (reference parity)") {
+    // A 10000 s window never lapses on this timeline; threshold 6000.
+    val out = runQuery(DepositStreams.detector(spark, _, windowSec = 10000L,
+      threshold = 6000.0), "append")(idleTimeline: _*)
+    // State survived: 5000 + 5000 = 10000 >= 6000 → flagged, window still
+    // anchored at the first deposit's timestamp.
+    val afterReturn = out.find(_.seq == 3L).get
+    assert(!afterReturn.flagRemoved)
+    assert(afterReturn.rollingPeriodStartUnix == 100L)
+  }
+
+  test("collector keeps an idle wallet's balance (reference parity)") {
+    val w1 = runQuery(DepositStreams.collector(spark, _), "update")(idleTimeline: _*)
+      .filter(_.walletId == "w1").sortBy(_.nDeposits)
+    assert(w1.map(r => (r.nDeposits, r.balance)) == Seq((1L, 5000.0), (2L, 10000.0)))
   }
 }

@@ -69,14 +69,6 @@ class LogicSpec extends AnyFunSuite {
     assert(!next.flagged)
   }
 
-  test("collector appends forever and keeps every deposit (SURVEY §2.3.5)") {
-    val h = (1 to 100).foldLeft(Option.empty[DepositHistory]) { (st, i) =>
-      Some(CollectorLogic.step(st, Deposit("w", i.toDouble)))
-    }.get
-    assert(h.deposits.size == 100)
-    assert(h.deposits.map(_.amount).sum == 5050.0)
-  }
-
   test("property: every deposit emits exactly one event; flag iff windowed sum >= 10,000") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 200) {

@@ -116,31 +116,4 @@ class WatermarkSpec extends AnyFunSuite with SparkSpec {
     q.stop()
     assert(got == Set(("u1", 42.0, 100L)))
   }
-
-  test("transformWithState detector matches the flatMapGroupsWithState detector") {
-    val rnd = new scala.util.Random(13)
-    var t = 1000L
-    val deposits = (1 to 30).map { i =>
-      t += rnd.nextInt(100)
-      graft.model.TimedDeposit(s"w${i % 3}", rnd.nextInt(7000).toDouble, t, i.toLong)
-    }
-    def run(f: (org.apache.spark.sql.SparkSession,
-                org.apache.spark.sql.Dataset[graft.model.TimedDeposit]) =>
-                org.apache.spark.sql.Dataset[graft.model.KeyedFlagEvent]): Seq[(String, Boolean, Long)] = {
-      val input = MemoryStream[graft.model.TimedDeposit]
-      val name = freshName
-      val q = f(spark, input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      input.addData(deposits)
-      q.processAllAvailable()
-      val out = spark.table(name).as[graft.model.KeyedFlagEvent].collect()
-        .map(e => (e.walletId, e.flagRemoved, e.seq)).sortBy(_._3).toSeq
-      q.stop()
-      out
-    }
-    val viaTws  = run(DetectorProcessor.detect(_, _))
-    val viaFmgs = run(DepositStreams.detector(_, _))
-    assert(viaTws == viaFmgs)
-    assert(viaTws.size == deposits.size)
-  }
 }
