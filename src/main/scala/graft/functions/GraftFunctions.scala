@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import graft.plans.DotProduct
 import graft.serde._
 
@@ -9,6 +10,27 @@ import graft.serde._
   * against the session registry (the supported route to a custom
   * `Expression` without touching private Column constructors). */
 object GraftFunctions {
+
+  /** The value of `fn`'s constant argument `arg`. A builder matches arity
+    * first and calls this second, so a wrong-arity call, a column where a
+    * constant belongs and a NULL constant each get their own message. */
+  private def literalValue(fn: String, arg: String, e: Expression): Any = e match {
+    case Literal(null, _) => throw new IllegalArgumentException(
+      s"$fn: argument $arg must not be NULL")
+    case Literal(v, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument $arg must be a literal, got ${other.sql}")
+  }
+
+  private def intLiteral(fn: String, arg: String, e: Expression): Int =
+    literalValue(fn, arg, e) match {
+      case n: Number => n.intValue()
+      case v => throw new IllegalArgumentException(
+        s"$fn: argument $arg must be an integer literal, got $v")
+    }
+
+  private def stringLiteral(fn: String, arg: String, e: Expression): String =
+    literalValue(fn, arg, e).toString
 
   /** Idempotently register graft's native functions on a session. */
   def register(spark: SparkSession): Unit = {
@@ -40,15 +62,15 @@ object GraftFunctions {
       // Distinct word n-gram shingles in one token pass (the projection
       // fronting every dedup signing / corpus n-gram scan).
       registry.createOrReplaceTempFunction("word_shingles", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(n, _)) =>
-          graft.plans.WordShingles(child, n.asInstanceOf[Number].intValue())
+        case Seq(child, n) =>
+          graft.plans.WordShingles(child, intLiteral("word_shingles", "n", n))
         case e => throw new IllegalArgumentException(
           s"word_shingles expects (tokens, n literal), got ${e.size} args")
       }, "built-in")
       // MinHash signing hot loop (k keyed md5 minima in one shingle pass).
       registry.createOrReplaceTempFunction("minhash_sig", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(k, _)) =>
-          graft.plans.MinhashSig(child, k.asInstanceOf[Number].intValue())
+        case Seq(child, k) =>
+          graft.plans.MinhashSig(child, intLiteral("minhash_sig", "k", k))
         case e => throw new IllegalArgumentException(
           s"minhash_sig expects (shingles, k literal), got ${e.size} args")
       }, "built-in")
@@ -59,15 +81,16 @@ object GraftFunctions {
       registry.createOrReplaceTempFunction("punct_count",
         e => graft.plans.TextFeatureCounts.PunctCount(e(0)), "built-in")
       registry.createOrReplaceTempFunction("marker_count", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
+        case Seq(child, w) =>
           graft.plans.TextFeatureCounts.MarkerCount(child,
-            w.toString.split('|').toSeq)
+            stringLiteral("marker_count", "words", w).split('|').toSeq)
         case e => throw new IllegalArgumentException(
           s"marker_count expects (text, words literal), got ${e.size} args")
       }, "built-in")
       registry.createOrReplaceTempFunction("ascii_count", {
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
-          graft.plans.TextFeatureCounts.AsciiCount(child, w.toString)
+        case Seq(child, w) =>
+          graft.plans.TextFeatureCounts.AsciiCount(child,
+            stringLiteral("ascii_count", "chars", w))
         case e => throw new IllegalArgumentException(
           s"ascii_count expects (text, chars literal), got ${e.size} args")
       }, "built-in")
@@ -99,18 +122,15 @@ object GraftFunctions {
       // sketch values + set algebra (union/intersection) across tables.
       registry.createOrReplaceTempFunction("theta_sketch", {
         case Seq(child) => ThetaSketchAgg(child)
-        case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(k, _)) =>
-          ThetaSketchAgg(child, k.asInstanceOf[Number].intValue())
+        case Seq(child, k) => ThetaSketchAgg(child, intLiteral("theta_sketch", "k", k))
         case e => throw new IllegalArgumentException(
           s"theta_sketch expects (key[, k literal]), got ${e.size} args")
       }, "built-in")
       // Explicit Bloom-filter semi-join reduction (build + probe).
       registry.createOrReplaceTempFunction("bloom_agg", {
-        case Seq(child,
-            org.apache.spark.sql.catalyst.expressions.Literal(m, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(k, _)) =>
-          BloomAgg(child, m.asInstanceOf[Number].intValue(),
-            k.asInstanceOf[Number].intValue())
+        case Seq(child, m, k) =>
+          BloomAgg(child, intLiteral("bloom_agg", "numBits", m),
+            intLiteral("bloom_agg", "k", k))
         case e => throw new IllegalArgumentException(
           s"bloom_agg expects (key, numBits literal, k literal), got ${e.size} args")
       }, "built-in")

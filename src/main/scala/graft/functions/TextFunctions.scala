@@ -99,12 +99,15 @@ object TextFunctions {
           .as("band_hash"))
     }: _*)
 
-  /** Exact Jaccard similarity of two distinct-element arrays. Integer-count
-    * division — bit-identical in any engine. Two EMPTY sets score 0 (not a
-    * divide-by-zero: ANSI mode throws on 0/0, and degenerate short docs all
-    * band-collide, so the guard is load-bearing); the oracle's NULL for the
-    * same case is threshold-filtered identically. */
-  def jaccard(a: Column, b: Column): Column = {
+  /** Exact Jaccard similarity of two DISTINCT-element arrays. The name
+    * carries the precondition, which is not checked (a guard would cost an
+    * `array_distinct` per row): repeated elements give a wrong score, not
+    * an error. Integer-count division — bit-identical in any engine. Two
+    * EMPTY sets score 0 (not a divide-by-zero: ANSI mode throws on 0/0,
+    * and degenerate short docs all band-collide, so the guard is
+    * load-bearing); the oracle's NULL for the same case is
+    * threshold-filtered identically. */
+  def jaccardDistinct(a: Column, b: Column): Column = {
     // |A∪B| = |A| + |B| − |A∩B| for distinct-element arrays (every caller
     // passes shingle sets, distinct by construction) — skips materializing
     // the union array per pair; JaccardIdentitySpec pins ≡ array_union.

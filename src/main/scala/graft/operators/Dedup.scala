@@ -216,7 +216,9 @@ object Dedup {
       // the (doc × config × band) md5 Generate chain on BOTH sides
       // (plans/r17/dedup_band_sweep_before.txt nodes 1-6 vs 7-12 — no
       // exchange reuse across a broadcast side). One checkpoint job buys
-      // back a full digest pass at any scale.
+      // back a full digest pass. The trade: lineage is cut to
+      // executor-local storage, so losing an executor after this point
+      // fails the query instead of recomputing the digests.
       .localCheckpoint()
     val cand = banded.as("x").join(banded.as("y"),
         col("x.nb") === col("y.nb") && col("x.j") === col("y.j") &&
@@ -229,7 +231,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sa")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sb")), "id_b")
       .select(col("bands"), col("rows_per_band"),
-        jaccard(col("sa"), col("sb")).as("jac"))
+        jaccardDistinct(col("sa"), col("sb")).as("jac"))
       .groupBy(col("bands"), col("rows_per_band"))
       .agg(count(lit(1)).as("n_candidates"),
         sum(when(col("jac") >= threshold, 1L).otherwise(0L)).as("n_verified"))
@@ -256,7 +258,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         // Raw integer-count ratio: bit-identical in any engine, so no
         // rounding (which could itself differ at a decimal boundary).
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardDistinct(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 
@@ -295,7 +297,7 @@ object Dedup {
           size(col("sh_a"))).as("cont_ab"),
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(col("sh_b"))).as("cont_ba"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardDistinct(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
   }
 
@@ -537,7 +539,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         // Integer-count ratio: bit-identical in any engine, no rounding.
         // Two EMPTY sets give union 0 — jaccard defined as 0 there (same
-        // guard as TextFunctions.jaccard; ANSI mode makes 0/0 THROW).
+        // guard as TextFunctions.jaccardDistinct; ANSI mode makes 0/0 THROW).
         when(col("sz_a") + col("sz_b") === 0, lit(0.0))
           .otherwise(col("inter").cast("double") /
             (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
@@ -638,7 +640,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
           m => m)).cast("double") / kHashes).as("est_jaccard"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardDistinct(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 
@@ -868,7 +870,7 @@ object Dedup {
       .join(bm.select(col("doc_id").as("new_id"), col("sh").as("sh_new")), "new_id")
       .join(index.select(col("doc_id").as("dup_of"), col("sh").as("sh_hist")), "dup_of")
       .select(col("new_id"), col("dup_of"),
-        jaccard(col("sh_new"), col("sh_hist")).as("jaccard"))
+        jaccardDistinct(col("sh_new"), col("sh_hist")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 

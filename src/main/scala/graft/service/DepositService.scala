@@ -40,6 +40,16 @@ import graft.streaming.DepositStreams.WalletRow
   * (upsert-on-commit, last-writer-wins keyed rows) is identical; only
   * the map implementation changes.
   *
+  * The query's stateful shuffle has ONE partition, whatever
+  * `spark.sql.shuffle.partitions` says. One writer thread already commits
+  * one group at a time (the reference topic's per-partition order), a
+  * group holds a handful of deposits, and the state is a fraction of a
+  * MB; every further partition only adds a state-store load and commit to
+  * each micro-batch, so the commit cost grew with the core count, not the
+  * rows. The trade is the boot replay, which now folds the whole log in
+  * one task; set-up was still faster than at the session's width with a
+  * 20,000-deposit log (PERF.md, "Serving edge — one state partition").
+  *
   * Writes are GROUP-COMMITTED: HTTP threads parse and validate a deposit,
   * queue it, and block on its result; one writer thread takes everything
   * that queued while the previous group was committing and commits it as
@@ -81,17 +91,32 @@ final class DepositService(spark: SparkSession, port: Int = 0,
 
   private val input = MemoryStream[TimedDeposit]
 
-  private val query = DepositStreams.wallet(spark, input.toDS())
-    .writeStream.outputMode("update")
-    .foreachBatch { (batch: Dataset[WalletRow], _: Long) =>
-      // collect() here is bounded by the keys THIS batch updated (update
-      // mode emits changed keys only), not by the size of the view.
-      batch.collect().foreach { r =>
-        view.merge(r.walletId, r,
-          (old, nw) => if (nw.nDeposits >= old.nDeposits) nw else old)
+  // One state partition (see the class doc). The width is set on the
+  // caller's session only around `start()`: StreamExecution clones the
+  // session in its constructor and the first batch records the width in
+  // the offset log, so the query keeps it for life while the session gets
+  // its own value back. The query stays on the caller's session rather
+  // than a fresh one, so `spark.streams` and its listeners still see it.
+  private val query = {
+    val key = "spark.sql.shuffle.partitions"
+    val previous = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try DepositStreams.wallet(spark, input.toDS())
+      .writeStream.outputMode("update")
+      .foreachBatch { (batch: Dataset[WalletRow], _: Long) =>
+        // collect() here is bounded by the keys THIS batch updated (update
+        // mode emits changed keys only), not by the size of the view.
+        batch.collect().foreach { r =>
+          view.merge(r.walletId, r,
+            (old, nw) => if (nw.nDeposits >= old.nDeposits) nw else old)
+        }
       }
+      .start()
+    finally previous match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
-    .start()
+  }
 
   /** The serving query, for tests that kill it. */
   private[service] def servingQuery = query

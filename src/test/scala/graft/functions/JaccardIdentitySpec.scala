@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
-/** `jaccard` now computes |A∪B| as |A| + |B| − |A∩B| instead of
+/** `jaccardDistinct` computes |A∪B| as |A| + |B| − |A∩B| instead of
   * materializing array_union per pair. The identity holds exactly when
   * both inputs are distinct-element arrays — which every caller passes
   * (word/char shingle sets, distinct by construction). This spec pins the
@@ -30,7 +30,7 @@ class JaccardIdentitySpec extends AnyFunSuite with SparkSpec {
       ((1 to 40).map(i => s"g$i"), (20 to 60).map(i => s"g$i"))
     ).toDF("a", "b")
     val bad = rows.select(
-        TextFunctions.jaccard(col("a"), col("b")).as("fast"),
+        TextFunctions.jaccardDistinct(col("a"), col("b")).as("fast"),
         unionForm(col("a"), col("b")).as("ref"))
       .where(col("fast") =!= col("ref"))
     assert(bad.isEmpty, bad.take(5).mkString("; "))
@@ -42,7 +42,7 @@ class JaccardIdentitySpec extends AnyFunSuite with SparkSpec {
       TextFunctions.shingles(col("text"), 3).as("s"))
     val pairs = sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
     val bad = pairs.select(
-        TextFunctions.jaccard(col("x.s"), col("y.s")).as("fast"),
+        TextFunctions.jaccardDistinct(col("x.s"), col("y.s")).as("fast"),
         unionForm(col("x.s"), col("y.s")).as("ref"))
       .where(col("fast") =!= col("ref"))
     assert(bad.isEmpty, bad.take(5).mkString("; "))

@@ -89,6 +89,24 @@ class TextFeatureCountsSpec extends AnyFunSuite with SparkSpec {
     (0 to 3).foreach(i => assert(r.isNullAt(i), s"col $i"))
   }
 
+  test("literal-argument builders check arity, then name a non-literal " +
+    "or NULL argument") {
+    def refusal(c: org.apache.spark.sql.Column): String = {
+      val e = intercept[Exception](df.select(c).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    }
+    Seq("word_shingles" -> "n", "minhash_sig" -> "k",
+        "marker_count" -> "words", "ascii_count" -> "chars").foreach { case (fn, arg) =>
+      val arity = refusal(call_function(fn, col("text")))
+      assert(arity.contains(s"$fn expects") && arity.contains("got 1 args"), arity)
+      val column = refusal(call_function(fn, col("text"), col("text")))
+      assert(column.contains(s"$fn: argument $arg must be a literal"), column)
+      val nul = refusal(call_function(fn, col("text"), lit(null)))
+      assert(nul.contains(s"$fn: argument $arg must not be NULL"), nul)
+    }
+  }
+
   test("live corpus parity at sf0.001") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val bad = docs.select(

@@ -133,6 +133,8 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       new DepositService(spark, changelogDir = Some(dir))
     }
     assert(e.getMessage.contains("refusing to boot"))
+    // The refused boot still gave the session its shuffle width back.
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("a tear inside a multi-byte UTF-8 character still recovers " +
@@ -290,6 +292,19 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
     } finally a.stop()
     val b = new DepositService(spark, changelogDir = Some(dir))
     try assert(checkAt(b, "kai") == want) finally b.stop()
+  }
+
+  test("the serving query runs one state partition on the caller's " +
+    "session, which keeps its own shuffle width") {
+    val s = new DepositService(spark)
+    try {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(spark.streams.active.exists(_.id == s.servingQuery.id))
+      assert(postTo(s, """{"wallet_id":"mae","amount":5,"ts_unix":1000}""").statusCode() == 200)
+      val op = s.servingQuery.lastProgress.stateOperators.head
+      assert(op.numShufflePartitions == 1)
+      assert(op.numStateStoreInstances == 1)
+    } finally s.stop()
   }
 
   test("a stopped serving query turns POSTs into prompt 500s; the writer " +
