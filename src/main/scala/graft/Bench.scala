@@ -43,9 +43,7 @@ object Bench {
       // (idle-core scheduling overhead dominates tiny post-shuffle stages;
       // big shuffles still split by size).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config(GraftSession.stateStore)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

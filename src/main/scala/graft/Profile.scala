@@ -30,6 +30,8 @@ object Profile {
     val lpPlain = lineitem.join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("o"), col("p_brand").as("b")).distinct()
     time("distinct")(lpPlain.count())
+    // localCheckpoint trade: lineage is cut to executor-local storage,
+    // so losing an executor fails the query instead of recomputing it.
     val lp = lpPlain.localCheckpoint()
     time("checkpoint")(lp.count())
     time("countDistinct o")(lp.agg(countDistinct(col("o")).as("n")).count())

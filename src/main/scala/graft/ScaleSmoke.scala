@@ -204,9 +204,7 @@ object ScaleSmoke {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config(GraftSession.stateStore)
       // Keep EVERY micro-batch progress: the latency-percentile rows read
       // recentProgress, and the chunked feed can exceed the default 100.
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")

@@ -23,9 +23,7 @@ object Verify {
       // Write micros (not INT96) so any parquet reader sees the same instants.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // The production state store (see GraftSession).
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config(GraftSession.stateStore)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

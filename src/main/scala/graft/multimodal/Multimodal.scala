@@ -398,6 +398,8 @@ object Multimodal {
     // strictly cheaper than materializing 32 checkpoint block partitions
     // per run and re-scanning those 8× (round-16 profile: the checkpoint
     // stage plus block re-scans were ~10 of the query's ~25 task-seconds).
+    // localCheckpoint trade: lineage is cut to executor-local storage,
+    // so losing an executor fails the query instead of recomputing it.
     val hashes = if (stage) rawHashes.localCheckpoint() else rawHashes
     val nf = hashes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     // The frame count joins the blocking key: equal counts are already

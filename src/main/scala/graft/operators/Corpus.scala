@@ -199,6 +199,9 @@ object Corpus {
         .where(col("df") <= col("n_docs") * maxDfFrac)
         .select(col("doc_id"), col("tok"),
           round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6).as("w"))
+        // localCheckpoint trade (every call in this file): lineage is cut
+        // to executor-local storage, so losing an executor fails the query
+        // instead of recomputing it.
         .localCheckpoint() // feeds norms + the final join once
       val nrm = w.groupBy(col("doc_id"))
         .agg(round(sqrt(sum(col("w") * col("w"))), 6).as("nrm"))

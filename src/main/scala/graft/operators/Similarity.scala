@@ -129,6 +129,9 @@ object Similarity {
       .select(col("qid"), col("nid"),
         round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
       .where(col("cosine") >= minCosine)
+      // localCheckpoint trade (every call in this file): lineage is cut
+      // to executor-local storage, so losing an executor fails the query
+      // instead of recomputing it.
       .localCheckpoint() // hit-selectivity-bounded; read twice below
     val counts = hits.groupBy("qid")
       .agg(count(lit(1)).as("n_hits"), max(col("cosine")).as("top_cosine"))

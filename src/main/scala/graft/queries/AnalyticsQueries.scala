@@ -469,6 +469,9 @@ object AnalyticsQueries {
         .agg((unix_timestamp(max(col("o_orderdate"))) / 86400.0).as("rec"),
           count(lit(1)).as("freq"),
           round(sum(col("o_totalprice")), 2).as("monetary"))
+        // localCheckpoint trade (every call in this file): lineage is cut
+        // to executor-local storage, so losing an executor fails the query
+        // instead of recomputing it.
         .localCheckpoint() // read twice (thresholds + scoring scan)
       val q = rfm.agg(
         round(expr("percentile(rec, 0.25)"), 6).as("r1"),

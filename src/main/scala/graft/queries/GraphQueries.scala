@@ -89,6 +89,9 @@ object GraphQueries {
       // loops of unknown depth, where lineage really does nest without
       // bound — see connectedComponents).
       val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        // localCheckpoint trade (every call in this file): lineage is cut
+        // to executor-local storage, so losing an executor fails the query
+        // instead of recomputing it.
         .localCheckpoint()
       // |V| is a bounded scalar (node count) — collect it once like a
       // model load instead of re-broadcasting a 1-row frame per round.

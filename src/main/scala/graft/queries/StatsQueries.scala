@@ -208,6 +208,9 @@ object StatsQueries {
       val j = Tables.load(s, d, "documents")
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).cast("double").as("nij"))
+        // localCheckpoint trade (every call in this file): lineage is cut
+        // to executor-local storage, so losing an executor fails the query
+        // instead of recomputing it.
         .localCheckpoint()
       val t = j.agg(sum(col("nij")).as("n"))
       val m = j.groupBy(col("lang")).agg(sum(col("nij")).as("ni"))

@@ -516,6 +516,8 @@ object TextQueries {
               "transform(slice(t, i + 2, 3), y -> struct(x AS w, y AS c))))")).as("p"))
           .select(col("p.w"), col("p.c"))
           .groupBy(col("w"), col("c")).agg(count(lit(1)).as("nwc"))
+      // localCheckpoint trade: lineage is cut to executor-local storage,
+      // so losing an executor fails the query instead of recomputing it.
       }.localCheckpoint() // vocab²-bounded; read 4× below
       val nw = cnt.groupBy("w").agg(sum("nwc").as("nw"))
       val nc = cnt.groupBy("c").agg(sum("nwc").as("nc"))

@@ -515,6 +515,8 @@ object WarehouseQueries {
         val dly = Tables.events(s, d)
           .groupBy(col("event_type"), to_date(col("ts")).as("day"))
           .agg(round(sum(col("value")), 2).as("x"))
+          // localCheckpoint trade: lineage is cut to executor-local storage,
+          // so losing an executor fails the query instead of recomputing it.
           .localCheckpoint() // read twice (mean + cusum scan)
         val m = dly.groupBy(col("event_type"))
           .agg(round(round(sum(col("x")), 2) / count(lit(1)), 6).as("mu"))

@@ -35,10 +35,13 @@ import graft.streaming.DepositStreams.WalletRow
   * and `GET /check` is one O(1) map read with NO Spark job. Per-request
   * cost is therefore independent of table size; per-batch maintenance
   * cost is proportional to the keys the batch touched, never to the
-  * accumulated state. On a cluster the same `foreachBatch` writes to an
-  * external KV store (RocksDB service, Redis, Cassandra) — the lifecycle
-  * (upsert-on-commit, last-writer-wins keyed rows) is identical; only
-  * the map implementation changes.
+  * accumulated state. The state-store commit, too, writes only the
+  * touched wallets' rows, to one RocksDB changelog file; whole-state
+  * snapshots are taken by the maintenance thread, off the ACK path
+  * ([[graft.GraftSession.stateStore]]). On a cluster the same
+  * `foreachBatch` writes to an external KV store (RocksDB service,
+  * Redis, Cassandra) — the lifecycle (upsert-on-commit, last-writer-wins
+  * keyed rows) is identical; only the map implementation changes.
   *
   * The query's stateful shuffle has ONE partition, whatever
   * `spark.sql.shuffle.partitions` says. One writer thread already commits
@@ -384,19 +387,24 @@ final class DepositService(spark: SparkSession, port: Int = 0,
         respond(ex, 503, """{"error":"write path saturated, retry"}""")
         return
       }
-      try handleDepositAdmitted(ex) finally writePermits.release()
+      // The permit bounds the write path, not the response: it is handed
+      // back once the result is known and before the client can read it,
+      // so a closed-loop client's next POST never meets its own previous
+      // request still holding a permit.
+      val (code, body) = try admitted(ex) finally writePermits.release()
+      respond(ex, code, body)
     } catch {
       case t: Throwable => fail(ex, "POST /deposit", t)
     }
 
-  private def handleDepositAdmitted(ex: HttpExchange): Unit = {
+  /** Parses, validates and commits one admitted POST; returns the
+    * response's status and body. */
+  private def admitted(ex: HttpExchange): (Int, String) = {
     val node = mapper.readTree(ex.getRequestBody)
     val wallet = Option(node.get("wallet_id")).map(_.asText()).getOrElse("")
     val amount = Option(node.get("amount")).map(_.asDouble()).getOrElse(0.0)
-    if (wallet.isEmpty) { respond(ex, 400, """{"error":"wallet_id required"}"""); return }
-    if (amount <= 0) { // service.go:87-91
-      respond(ex, 422, """{"error":"amount must be positive"}"""); return
-    }
+    if (wallet.isEmpty) return (400, """{"error":"wallet_id required"}""")
+    if (amount <= 0) return (422, """{"error":"amount must be positive"}""") // service.go:87-91
     val ts = Option(node.get("ts_unix")).map(_.asLong())
       .getOrElse(System.currentTimeMillis() / 1000L)
     // Idempotent retry: a key we already logged means the deposit is
@@ -415,7 +423,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     // deposit is fsynced and the view reflects it (read-your-writes for
     // the ACK).
     val status = pending.result.get()
-    respond(ex, 200, mapper.writeValueAsString(
+    (200, mapper.writeValueAsString(
       mapper.createObjectNode().put("wallet_id", wallet).put("status", status)))
   }
 

@@ -307,6 +307,34 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
     } finally s.stop()
   }
 
+  test("as many closed-loop keyed clients as write permits never draw a 503") {
+    // Guards a race that is rare at today's ACK rate: a permit released
+    // only after the response was written let a client's next POST find
+    // its own previous request still holding one, and answered it 503.
+    val s = new DepositService(spark)
+    try {
+      val clients = 4 // = the service's write permits
+      val posts = 40
+      val statuses = new ConcurrentLinkedQueue[Int]()
+      val threads = (0 until clients).map { c =>
+        new Thread(() => (0 until posts).foreach { k =>
+          statuses.add(postTo(s,
+            s"""{"wallet_id":"permit-$c","amount":1,"ts_unix":${1000 + k},"idem":"p-$c-$k"}""")
+            .statusCode())
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(300000))
+      val got = statuses.asScala.toSeq
+      assert(got.size == clients * posts)
+      assert(got.count(_ == 503) == 0, got.groupBy(identity).map { case (k, v) => k -> v.size })
+      assert(got.forall(_ == 200))
+      (0 until clients).foreach { c =>
+        assert(checkAt(s, s"permit-$c") ==
+          s"""{"wallet_id":"permit-$c","balance":$posts.0,"above_threshold":false}""")
+      }
+    } finally s.stop()
+  }
+
   test("a stopped serving query turns POSTs into prompt 500s; the writer " +
     "survives and a retry on a fresh boot counts once") {
     val dir = tempDir("svc_dead_query")

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.model.{KeyedFlagEvent, TimedDeposit}
 
 /** State-store OPERATIONAL edges — the production lifecycle behaviors a
@@ -11,10 +11,11 @@ import graft.model.{KeyedFlagEvent, TimedDeposit}
   * (CheckpointRecoverySpec):
   *
   *  - RocksDB CHANGELOG checkpointing (the incremental-commit mode that
-  *    replaces full-snapshot uploads with per-batch deltas — the setting
-  *    large state actually runs under): state must survive a restart with
-  *    it enabled, and the checkpoint must contain changelog files proving
-  *    the mode engaged.
+  *    replaces full-snapshot uploads with per-batch deltas — the engine's
+  *    session default, GraftSession.stateStore): state must survive a
+  *    restart under it, the checkpoint must contain changelog files
+  *    proving the mode engaged, and a checkpoint written in snapshot mode
+  *    must resume under it.
   *  - Stateful shuffle partitioning is FIXED AT FIRST CHECKPOINT: Spark
   *    keys state-store directories by partition id, so a later session
   *    with a different spark.sql.shuffle.partitions must keep running at
@@ -44,37 +45,55 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
     q.stop()
   }
 
+  /** Every `.changelog` file under the checkpoint's state directory. */
+  private def changelogs(ckpt: String): Seq[java.io.File] = {
+    def find(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(find)
+      else if (f.getName.endsWith(".changelog")) Seq(f) else Seq.empty
+    find(new java.io.File(s"$ckpt/state"))
+  }
+
+  /** The snapshot-mode recovery semantics: no replay, and the open window
+    * carried across incarnations (11,000 >= threshold). */
+  private def assertCarriedWindow(out: String): Unit = {
+    val events = spark.read.parquet(out).as[KeyedFlagEvent]
+      .collect().sortBy(_.seq).toSeq
+    assert(events.map(_.seq) == Seq(1L, 2L))
+    assert(events.map(_.flagRemoved) == Seq(true, false))
+  }
+
   test("changelog checkpointing: state survives restart and changelogs are written") {
     val root = Files.createTempDirectory("graft_ckpt_cl").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
-    val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
-      runDetectorOnce(in, out, ckpt)
-      writeBatch(in, Seq(TimedDeposit("w1", 5000.0, 1060L, 2L)))
-      runDetectorOnce(in, out, ckpt)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-    val events = spark.read.parquet(out).as[KeyedFlagEvent]
-      .collect().sortBy(_.seq).toSeq
-    // Same semantics as the snapshot-mode recovery spec: no replay, and
-    // the open window carried across incarnations (11,000 >= threshold).
-    assert(events.map(_.seq) == Seq(1L, 2L))
-    assert(events.map(_.flagRemoved) == Seq(true, false))
+    // No conf set here: the session default (GraftSession.stateStore) must
+    // engage the mode.
+    writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
+    runDetectorOnce(in, out, ckpt)
+    writeBatch(in, Seq(TimedDeposit("w1", 5000.0, 1060L, 2L)))
+    runDetectorOnce(in, out, ckpt)
+    assertCarriedWindow(out)
     // The mode actually engaged: per-batch .changelog files exist under
     // the state store (snapshot-only mode writes .zip/.snapshot instead).
-    val stateDir = new java.io.File(s"$ckpt/state")
-    def findChangelogs(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(findChangelogs)
-      else if (f.getName.endsWith(".changelog")) Seq(f) else Seq.empty
-    assert(findChangelogs(stateDir).nonEmpty,
-      s"no .changelog files under $stateDir — changelog mode did not engage")
+    assert(changelogs(ckpt).nonEmpty,
+      s"no .changelog files under $ckpt/state — changelog mode did not engage")
+  }
+
+  test("a checkpoint written in snapshot mode resumes in changelog mode") {
+    // The deploy path of every existing processor checkpoint: written
+    // before the engine turned changelog checkpointing on, restarted after.
+    val root = Files.createTempDirectory("graft_ckpt_upgrade").toString
+    val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
+    val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
+    spark.conf.set(key, "false")
+    try runDetectorOnce(in, out, ckpt)
+    finally spark.conf.set(key, GraftSession.stateStore(key))
+    assert(changelogs(ckpt).isEmpty, "snapshot mode wrote .changelog files")
+    writeBatch(in, Seq(TimedDeposit("w1", 5000.0, 1060L, 2L)))
+    runDetectorOnce(in, out, ckpt)
+    assertCarriedWindow(out)
+    assert(changelogs(ckpt).nonEmpty,
+      s"no .changelog files under $ckpt/state after the restart in changelog mode")
   }
 
   test("stateful shuffle partitioning is pinned by the first checkpoint") {
@@ -97,10 +116,7 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
     }
     // Results are correct (the restart found every key's state where the
     // ORIGINAL partitioning put it)...
-    val events = spark.read.parquet(out).as[KeyedFlagEvent]
-      .collect().sortBy(_.seq).toSeq
-    assert(events.map(_.seq) == Seq(1L, 2L))
-    assert(events.map(_.flagRemoved) == Seq(true, false))
+    assertCarriedWindow(out)
     // ...and the store stayed at width 4: operator 0's state directory
     // has exactly partitions 0..3, none were added for the new conf.
     val parts = new java.io.File(s"$ckpt/state/0").listFiles()
