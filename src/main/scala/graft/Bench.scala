@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: times every registered query on
   * SPARK_GRAFT_SF_DIR over SPARK_GRAFT_BENCH_RUNS iterations (default 3)
   * and reports per-query MEDIANS — the streaming pipelines stand up a full
@@ -17,12 +15,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val aqeOn = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toBoolean
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"), Some(cpus))
       // Local-scale coalesce target: sf0.1 shuffles are single-digit MBs,
       // and the 64 MB default advisory collapses every reduce stage to ONE
       // task — serializing joins/aggs behind one core. 8 MB keeps tiny
@@ -31,19 +26,6 @@ object Bench {
       // shuffle-heavy subset). A cluster deployment at real scale keeps
       // the 64 MB default (GraftSession.builder does not set this).
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Env-overridable for LOCAL measurement only (the driver never sets
-      // it): quantifies how much of the small-query tail is AQE's
-      // stage-by-stage re-planning vs fixed scheduling cost. The resolved
-      // value is embedded in the emitted JSON ("aqe":…) so an AQE-off
-      // draw is distinguishable from a baseline draw after the fact.
-      .config("spark.sql.adaptive.enabled", aqeOn.toString)
-      // Coalesce small shuffles to the advisory size rather than keeping
-      // one partition per core — the production-recommended AQE setting
-      // (idle-core scheduling overhead dominates tiny post-shuffle stages;
-      // big shuffles still split by size).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config(GraftSession.stateStore)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -184,7 +166,7 @@ object Bench {
       }.mkString("{", ",", "}")
     }.mkString("\"forensics\":{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"aqe":$aqeOn,${failedJson}"queries":$qs,$forensicsJson,$calib,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,${failedJson}"queries":$qs,$forensicsJson,$calib,"sf":"$sfDir"}"""
     println(fullLine)
     // Per-query medians WITHOUT the forensics blob (round-17 verdict item:
     // the driver could not build its per-query table from stdout). A
@@ -195,13 +177,13 @@ object Bench {
     // the truncation-proof summary, for any consumer that reads more
     // than the tail. Additions-only: the full line and the final short
     // line are unchanged in shape.
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},"aqe":$aqeOn,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},"queries":$qs,"sf":"$sfDir"}""")
     // Short, truncation-proof summary LAST. The driver's BENCH_r*.json
     // keeps only a ~2000-char stdout tail; round 12's "short" line still
     // carried the forensics blob and outgrew it (BENCH_r12.json parsed:
     // null). This line is total + conditions ONLY — forensics and
     // per-query medians live in the full line and bench_full.json.
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},"aqe":$aqeOn,$calib,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},$calib,"sf":"$sfDir"}""")
     // Machine-readable artifact of record: the driver's BENCH_r*.json
     // keeps only a 2000-char stdout tail, so the full per-query medians +
     // forensics are ALSO written to a file (committed per round → git

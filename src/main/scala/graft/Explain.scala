@@ -1,22 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of each named query
   * (or all, with no args beyond the dir) — the tool behind the "is the
   * filter pushed, is the dim broadcast, how wide are the codegen spans"
-  * checks. Usage: runMain graft.Explain <sfDir> [queryName ...] */
+  * checks. The session is [[GraftSession.builder]]'s, so the plan is the
+  * one a deployment runs (engine rule and functions, RocksDB state store).
+  * Usage: runMain graft.Explain <sfDir> [queryName ...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder("graft-explain", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

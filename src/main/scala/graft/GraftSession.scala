@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session factory for the graft engine — the configuration a
-  * deployment should start from, local or cluster.
+  * deployment should start from, local or cluster. Every session of the
+  * engine's mains is built here; a main adds only its own deltas (cores,
+  * shuffle partitions) as `.config` lines on [[builder]].
   *
+  * What a session gets by construction:
   *  - AQE on: runtime re-planning (skew-join splitting, partition
   *    coalescing, dynamic broadcast) is the main defense at 100 TB where
   *    static stats lie.
@@ -17,7 +20,20 @@ import org.apache.spark.sql.SparkSession
   *    does not count. Recovery loads the last snapshot and replays at most
   *    the changelogs written since it.
   *  - UTC + micros parquet timestamps: oracle-stable instants everywhere.
+  *    A TIMESTAMP(NANOS) parquet column reads as a LONG
+  *    (`nanosAsLong`) instead of failing the read; `sources.Tables`
+  *    turns it back into micros.
+  *  - Kryo serialization.
+  *  - [[plans.GraftExtensions]]: the engine's optimizer rule and every
+  *    native SQL function of [[functions.GraftFunctions.functions]], so no
+  *    call site registers them. `newSession()` gets them too.
   *  - shuffle partitions default to cluster parallelism, not Spark's 200.
+  *
+  * The one fallback: extensions apply only when a session is created, so a
+  * session built elsewhere (a caller's own `SparkSession.builder()`) has
+  * neither the functions nor `nanosAsLong`. [[adopt]] gives it both,
+  * idempotently; [[SparkEntry]], where such sessions enter the engine,
+  * calls it before every query.
   */
 object GraftSession {
 
@@ -30,8 +46,10 @@ object GraftSession {
     // instead of building, zipping and copying a whole checkpoint;
     // snapshots are taken off the batch path (see the scaladoc above).
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    // 4.1 checksum checkpoint layer: observed whole-stage deadlock in
-    // ChecksumCancellableFSDataOutputStream.close (see SparkSpec).
+    // Spark 4.1's checksum checkpoint layer can deadlock all tasks inside
+    // ChecksumCancellableFSDataOutputStream.close (observed: a whole stage
+    // parked on its await for 35+ min). Plain checkpoint files are the
+    // pre-4.1 behavior, exercised by CheckpointRecoverySpec.
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
   def builder(appName: String, master: Option[String] = None,
@@ -46,10 +64,11 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(stateStore)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // Engine optimizer rules (e.g. size(filter)>0 → exists).
-      // withExtensions COMPOSES with any deployment-supplied
+      // Engine optimizer rules (e.g. size(filter)>0 → exists) and native
+      // SQL functions. withExtensions COMPOSES with any deployment-supplied
       // --conf spark.sql.extensions instead of clobbering it; like the
       // conf route, it only takes effect at session CREATION.
       .withExtensions(new plans.GraftExtensions)
@@ -61,14 +80,21 @@ object GraftSession {
   /** Local session sized for this machine. */
   def local(appName: String): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors()
-    val spark = builder(appName, Some(s"local[$cores]"), Some(cores))
+    builder(appName, Some(s"local[$cores]"), Some(cores))
       // Local data is MBs; the 64 MB advisory would coalesce every reduce
       // stage to one task (see Bench.scala — measured −10% at 8 MB). The
       // cluster builder above deliberately keeps the default.
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+  }
+
+  /** The fallback for a session not built by [[builder]]: registers the
+    * native functions it lacks ([[functions.GraftFunctions.register]]) and
+    * sets `nanosAsLong`. A no-op on a session of [[builder]]. */
+  def adopt(spark: SparkSession): SparkSession = {
     functions.GraftFunctions.register(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 }

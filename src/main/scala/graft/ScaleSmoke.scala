@@ -198,16 +198,18 @@ object ScaleSmoke {
     // more partitions or they exceed executor memory (AQE re-coalesces
     // the small stages either way).
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(GraftSession.stateStore)
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt
+    val spark = GraftSession.builder("graft-scale-smoke", Some(s"local[$cpus]"),
+        Some(shufflePartitions))
       // Keep EVERY micro-batch progress: the latency-percentile rows read
       // recentProgress, and the chunked feed can exceed the default 100.
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
+      // The partition count above is the knob: with the builder's
+      // parallelismFirst=false and the 64 MB advisory, AQE coalesces the
+      // artifact-build stages below the core count (cold
+      // dedup_char_jaccard at 2× on local[4]: 18 s / 27 s, against
+      // 12 s / 11 s with this).
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,9 +25,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("check")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. The session
+    * may be the caller's own rather than [[GraftSession]]'s, so each query
+    * first [[GraftSession.adopt]]s it. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.map(q => q.name -> q.run).toMap
+    packs.map { q =>
+      q.name -> ((s: SparkSession, d: String) => q.run(GraftSession.adopt(s), d))
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

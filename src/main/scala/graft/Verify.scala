@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,8 @@ object Verify {
     // Optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two args = full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Coalesce small shuffles to the advisory size rather than keeping
-      // one partition per core — the production-recommended AQE setting
-      // (idle-core scheduling overhead dominates tiny post-shuffle stages;
-      // big shuffles still split by size).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Write micros (not INT96) so any parquet reader sees the same instants.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // The production state store (see GraftSession).
-      .config(GraftSession.stateStore)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder("graft-verify", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

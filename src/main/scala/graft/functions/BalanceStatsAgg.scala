@@ -10,7 +10,8 @@ final case class BalanceStats(n: Long, sum: Double, min: Double, max: Double)
   * row): count/sum/min/max of deposit amounts in a single mergeable
   * buffer — the map-side-combine shape every custom aggregate must have
   * at scale (partial buffers merge associatively across partitions).
-  * Registered as SQL function `balance_stats` via `udaf()`.
+  * Applied as a column function through `functions.udaf` at its one call
+  * site (`q_custom_udaf`); it has no SQL name.
   */
 object BalanceStatsAgg extends Aggregator[Double, BalanceStats, BalanceStats] {
 

@@ -28,8 +28,8 @@ object TextFunctions {
   def shinglesFromTokens(t: Column, n: Int): Column =
     // Native single-pass expression (graft.plans.WordShingles); the
     // original HOF chain stays below as [[shinglesFromTokensHof]], the
-    // executable spec WordShinglesSpec pins equality against. Callers
-    // must have GraftFunctions.register'ed the session (Tables.load does).
+    // executable spec WordShinglesSpec pins equality against. Every
+    // GraftSession session has the function (GraftExtensions).
     call_function("word_shingles", t, lit(n))
 
   /** The interpreted-HOF formulation `word_shingles` replaced — retained
@@ -77,8 +77,8 @@ object TextFunctions {
     * shingle set is empty). Runs as the native `minhash_sig` expression
     * (graft.plans.MinhashSig — one shingle pass, no interpreted lambdas);
     * [[minhashSignatureHof]] keeps the original HOF formulation for the
-    * equality spec. Callers must have [[GraftFunctions.register]]ed the
-    * session ([[graft.sources.Tables.load]] does). */
+    * equality spec. Every [[graft.GraftSession]] session has the function
+    * ([[graft.plans.GraftExtensions]]). */
   def minhashSignature(shingleSet: Column, k: Int): Column =
     call_function("minhash_sig", shingleSet, lit(k))
 

@@ -15,9 +15,9 @@ object VectorFunctions {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Dot product of two equal-length double arrays — resolves to the native
-    * codegen'd [[graft.plans.DotProduct]] expression (registered by
-    * [[GraftFunctions.register]]; [[graft.sources.Tables.load]] does this
-    * automatically). Same left-to-right accumulation as [[dotHof]]. */
+    * codegen'd [[graft.plans.DotProduct]] expression, which every
+    * [[graft.GraftSession]] session has ([[graft.plans.GraftExtensions]]).
+    * Same left-to-right accumulation as [[dotHof]]. */
   def dot(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 

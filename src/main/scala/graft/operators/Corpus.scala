@@ -380,7 +380,6 @@ object Corpus {
     * 1-row broadcast merge; the corpus is never rescanned. Returns one row
     * per merge round: (it, a, b, n). */
   def bpeTrain(docs: DataFrame, iters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // Word-frequency table; letters-only lowercase words keep the symbol
     // alphabet closed under concatenation (and '/'-safe for the oracle's
     // string-accumulator fold).
@@ -827,7 +826,6 @@ object Corpus {
 
   private def segmentUsage(words: DataFrame, vocab: DataFrame,
                            maxLen: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(words.sparkSession)
     words.crossJoin(broadcast(vocabLists(vocab, maxLen)))
       .select(col("freq"),
         explode(expr(greedySegmentExpr(maxLen))).as("piece"))

@@ -71,7 +71,6 @@ object Dedup {
     * artifact build (which derives its own banding downstream and would
     * otherwise pay k discarded band digests per document). */
   def signed(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession) // minhash_sig
     // Signing is the expensive per-document step (k keyed md5s per
     // shingle) — spread it across every executor thread regardless of how
     // narrow the source scan arrived (at real scale the source is already
@@ -339,10 +338,6 @@ object Dedup {
                                         threshold: Double,
                                         prefixCutover: Long = 20000L,
                                         cache: Option[JaccardCacheKey] = None): DataFrame = {
-    // The verify kernel is the registered `sorted_intersect_count`
-    // expression; registration is idempotent, so self-register for callers
-    // that never touched graft.sources.Tables.
-    graft.functions.GraftFunctions.register(base.sparkSession)
     // Partition the materialized shingle table to the session's shuffle
     // parallelism when the source arrives narrower: the loaders pin small
     // fixed partitioning (fine at bench scale), but at 100× a 32-way

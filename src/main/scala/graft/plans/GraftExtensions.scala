@@ -44,13 +44,18 @@ object CountFilterToExists extends Rule[LogicalPlan] {
   }
 }
 
-/** Deploy-time injection point: `--conf
-  * spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`); tests use
-  * `spark.experimental.extraOptimizations`, which runs the same rule in
-  * the optimizer's user-provided batch.
+/** The engine's session extension: the optimizer rule above and every
+  * native SQL function of [[graft.functions.GraftFunctions.functions]].
+  * [[graft.GraftSession.builder]] installs it; a deployment that builds
+  * its own session passes `--conf
+  * spark.sql.extensions=graft.plans.GraftExtensions`. Extensions apply
+  * when a session is created, and `newSession()` applies them again.
+  * A test that needs the unrewritten plan turns the rule off with
+  * `spark.sql.optimizer.excludedRules`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CountFilterToExists)
+    graft.functions.GraftFunctions.functions.foreach(e.injectFunction)
+  }
 }

@@ -24,7 +24,6 @@ object SerdeQueries {
         "CAST((CASE WHEN wallet_id = '' THEN 0 ELSE 2 + octet_length(encode(wallet_id)) END) " +
         "+ (CASE WHEN amount = 0 THEN 0 ELSE 9 END) AS BIGINT) AS wire_len " +
         "FROM d ORDER BY seq") { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       DepositOps.deposits(Tables.events(s, dir))
         .select(col("wallet_id").cast("string").as("wid"), col("seq"), col("amount"))
         .withColumn("bin",

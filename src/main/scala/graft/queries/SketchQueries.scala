@@ -39,7 +39,6 @@ object SketchQueries {
         "  SELECT o_custkey AS k FROM orders UNION ALL " +
         "  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')) AS exact_union, " +
         "TRUE AS tol_a, TRUE AS tol_b, TRUE AS tol_inter, TRUE AS tol_union") { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val orders   = Tables.orders(s, d)
       val building = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
 
@@ -97,7 +96,6 @@ object SketchQueries {
         "SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')) " +
         "SELECT a - i AS exact_diff, ROUND(i / (u * 1.0), 6) AS exact_jaccard, " +
         "TRUE AS tol_diff, TRUE AS tol_jaccard FROM ea, ei, eu") { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val orders = Tables.orders(s, d)
       val building = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
       val skA = orders.agg(call_function("theta_sketch", col("o_custkey")).as("sk_a"))
@@ -181,7 +179,6 @@ object SketchQueries {
     // DuckDB replays register assignment, max-rho, the exact-integer
     // harmonic sum (HUGEINT ≡ BigInteger) and the one rounded division.
     Q("q_hll_md5_distinct", HllOracle.distinctSql) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("pri"))
         .agg(
@@ -199,7 +196,6 @@ object SketchQueries {
     // stored-sketch rollup path: at 100 TB only 4 KiB sketches cross the
     // second shuffle and a yearly rollup never rescans raw data.
     Q("q_hll_md5_merge", HllOracle.mergeSql) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val orders = Tables.orders(s, d)
       val merged = orders
         .groupBy(col("o_orderpriority").as("pri"),
@@ -225,7 +221,6 @@ object SketchQueries {
     // cms_merged comes through per-month grids + cms_merge_agg and must
     // equal the direct estimate (element-wise sum = total counts).
     Q("q_cms_heavy_hitters", CmsOracle.sql) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val li = Tables.lineitem(s, d)
       val probes = (1L to 10L).toSeq
       val direct = li.agg(call_function("cms_sketch", col("l_suppkey")).as("sk"))
@@ -259,7 +254,6 @@ object SketchQueries {
     // genuinely computed on the Spark side, literal TRUE in the oracle,
     // same convention as q_cms_heavy_hitters' cms_merged).
     Q("q_quantile_sketch_merge", QskOracle.sql) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val base = Tables.orders(s, d).select(
         col("o_orderpriority").as("grp"), month(col("o_orderdate")).as("mon"),
         floor(col("o_totalprice") * 100).cast("long").as("c"))

@@ -122,7 +122,7 @@ object StatsQueries {
         "FROM events WHERE value > 0 GROUP BY 1 ORDER BY 1") { (s, d) =>
       val dep = graft.operators.DepositOps.deposits(Tables.events(s, d))
       dep.groupBy(col("wallet_id"))
-        .agg(call_function("balance_stats", col("amount")).as("st"))
+        .agg(udaf(graft.functions.BalanceStatsAgg).apply(col("amount")).as("st"))
         .select(col("wallet_id"), col("st.n").as("n"),
           round(col("st.sum"), 2).as("total"),
           col("st.min").as("vmin"), col("st.max").as("vmax"))

@@ -119,7 +119,6 @@ object StreamQueries {
 
   private def protoDepositFeed(s: SparkSession, dir: String): String =
     protoFeedCache.computeIfAbsent(dir, { _ =>
-      graft.functions.GraftFunctions.register(s)
       val path = s"$wsRoot/protofeed_" + UUID.randomUUID().toString.replace("-", "")
       depositProjection(s, dir)
         .select(
@@ -469,7 +468,6 @@ object StreamQueries {
         // Kafka-message framing: decode the proto3 Deposit wire bytes
         // in-stream (codegen'd expression — the same per-record decode a
         // broker consumer runs), broker ts/offset columns alongside.
-        graft.functions.GraftFunctions.register(s)
         s.readStream
           .schema(StructType(Seq(
             StructField("value", BinaryType),
@@ -605,7 +603,6 @@ object StreamQueries {
     * state, which is the point of a MERGEABLE sketch: the same aggregate
     * serves batch rollups and incremental streaming maintenance. */
   private def streamQuantile(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     runStream(s, depositFeed(s, dir),
         Encoders.product[TimedDeposit].schema) { src =>
       src
@@ -658,7 +655,6 @@ object StreamQueries {
     * aggregates are unsupported inside streaming aggregations — exactly
     * WHY a production stream maintains the sketch instead). */
   private def streamDistinctHll(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     runStream(s, depositFeed(s, dir),
         Encoders.product[TimedDeposit].schema) { src =>
       src
@@ -686,7 +682,6 @@ object StreamQueries {
     * from the maintained sketch and the exact counts join in from the
     * batch table (all-integer oracle — the estimate compares exactly). */
   private def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val probes = (1L to 10L).toSeq
     runStream(s, eventsFeed(s, dir),
         Encoders.product[graft.model.TypedEvent].schema) { src =>

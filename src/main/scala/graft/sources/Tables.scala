@@ -28,7 +28,8 @@ object Tables {
 
   /** Normalize one decoded timestamp column to microsecond TimestampType,
     * matching what DuckDB computes for the same file under a UTC session:
-    *  - LongType (TIMESTAMP(NANOS) surfaced via nanosAsLong): integer-
+    *  - LongType (TIMESTAMP(NANOS) surfaced via the `nanosAsLong` setting
+    *    every [[graft.GraftSession]] session carries): integer-
     *    divide to micros — DuckDB's TIMESTAMP_NS read truncates the same;
     *  - TimestampNTZType (micros, not UTC-adjusted): cast — bit-identical
     *    under the UTC session timezone to DuckDB's naive read;
@@ -77,10 +78,6 @@ object Tables {
     // whole resolve — correct (resolution must not race) and cheap (only
     // the first touch of a table pays the footer read).
     relCache.computeIfAbsent((spark, dir, name), { _ =>
-      graft.functions.GraftFunctions.register(spark) // idempotent
-      // Surface TIMESTAMP(NANOS) as a raw LONG instead of a read error —
-      // normalizeTs turns it back into micros TimestampType.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       timestampCols.getOrElse(name, Nil).foldLeft(raw)(normalizeTs)
     })

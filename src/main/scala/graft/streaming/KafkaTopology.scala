@@ -31,7 +31,6 @@ object KafkaTopology {
     * `Deposit` messages (wallet.proto:14-17). */
   def depositSource(spark: SparkSession, brokers: String): Dataset[TimedDeposit] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
@@ -54,7 +53,6 @@ object KafkaTopology {
     * `FlagEvent` messages (flagger.proto:15-18). */
   def flagEventSink(events: Dataset[KeyedFlagEvent], brokers: String,
                     checkpoint: String): DataStreamWriter[_] = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     events
       .select(col("walletId").as("key"),
         call_function("proto_encode_flag_event",
@@ -69,7 +67,6 @@ object KafkaTopology {
   /** O6 source side of the flagger (flagger.go:62). */
   def flagEventSource(spark: SparkSession, brokers: String): Dataset[KeyedFlagEvent] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)

@@ -1,15 +1,46 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{call_function, col}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver's t1 smoke: entry(spark) must return rows on a session the
-  * driver configured itself (no graft-specific confs preset — the loaders
-  * must self-provision what they need, e.g. nanosAsLong). */
+/** The entry smoke: entry(spark) must return rows, on the engine's
+  * session ([[GraftSession.builder]]) and on a session the caller built
+  * itself, which reaches the engine without its extension. */
 class EntrySpec extends AnyFunSuite with SparkSpec {
   test("entry returns rows on the smoke scale") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
     assert(df.columns.toSeq == Seq("wallet_id", "balance", "above_threshold"))
+  }
+
+  test("entry and the native functions run on a plain SparkSession.builder() session") {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // A new session on the running context, without GraftSession's
+      // extension or settings.
+      val plain = SparkSession.builder().master("local[4]")
+        .config("spark.ui.enabled", "false").getOrCreate()
+      assert(plain ne shared)
+      assert(!plain.catalog.functionExists("theta_sketch"))
+      // The context's conf carries the shared session's settings; drop the
+      // one the fallback must restore.
+      plain.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+      assert(plain.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
+
+      assert(SparkEntry.entry(plain).count() > 0)
+      assert(plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      // The native functions now resolve through call_function, as every
+      // query that uses them does.
+      val est = plain.range(0, 700).agg(call_function("theta_estimate",
+        call_function("theta_sketch", col("id")))).head().getDouble(0)
+      assert(est == 700.0)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 
   test("every registered query has either oracle SQL or a documented rows-only status") {

@@ -1,0 +1,52 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source scan that keeps session setup in one place: every session of
+  * `src/main` comes from [[GraftSession]], the native functions come from
+  * the extension it installs, and loaders set no session conf. */
+class SessionSetupGuardSpec extends AnyFunSuite {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** (file name, line number) of every line of `files` that contains `needle`. */
+  private def hits(files: Seq[Path], needle: String): Seq[(String, Int)] =
+    files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => (f.getFileName.toString, i + 1)
+      }
+    }
+
+  private lazy val main = scalaFiles("src/main/scala")
+
+  test("src/main builds no SparkSession outside GraftSession") {
+    val found = hits(main, "SparkSession.builder(")
+    assert(found.nonEmpty && found.forall(_._1 == "GraftSession.scala"), found)
+  }
+
+  test("src/main calls GraftFunctions.register at most once, as GraftSession's fallback") {
+    val found = hits(main, "GraftFunctions.register(").filterNot(_._1 == "GraftFunctions.scala")
+    assert(found.size <= 1 && found.forall(_._1 == "GraftSession.scala"), found)
+  }
+
+  test("the table loaders set no session conf") {
+    val tables = main.filter(_.getFileName.toString == "Tables.scala")
+    assert(tables.size == 1, tables)
+    val found = hits(tables, "conf.set")
+    assert(found.isEmpty, found)
+  }
+
+  test("no spec calls GraftFunctions.register except the fallback's own spec") {
+    val found = hits(scalaFiles("src/test/scala"), "GraftFunctions.register(")
+      .filterNot { case (f, _) => f == "GraftFunctionsSpec.scala" || f == "SessionSetupGuardSpec.scala" }
+    assert(found.isEmpty, found)
+  }
+}

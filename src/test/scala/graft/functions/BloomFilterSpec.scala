@@ -8,7 +8,6 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
 
   private def buildBloom(keys: Seq[Long], numBits: Int, k: Int): Array[Byte] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     keys.toDF("k")
       .select(call_function("bloom_agg", col("k"), lit(numBits), lit(k)))
       .head().getAs[Array[Byte]](0)
@@ -43,7 +42,6 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
 
   test("codegen'd probe filter matches exact semi join") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val dim = (0L until 200L).map(_ * 3L)
     val fact = (0L until 600L)
     val (nb, k) = Bloom.sizeFor(dim.size.toLong, 0.01)
@@ -63,7 +61,6 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
 
   test("string keys round-trip") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val keys = (0 until 300).map(i => s"doc_$i")
     val bytes = keys.toDF("k")
       .select(call_function("bloom_agg", col("k"), lit(1 << 13), lit(4)))

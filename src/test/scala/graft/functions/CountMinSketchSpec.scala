@@ -11,8 +11,6 @@ import graft.SparkSpec
 class CountMinSketchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("buckets match the hex-substr derivation the oracle replays") {
     def fromHex(key: String): Seq[Int] = {
       val hex = java.security.MessageDigest.getInstance("MD5")
@@ -27,7 +25,6 @@ class CountMinSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("never underestimates; overestimate bounded on zipf-ish data") {
-    registered
     // Key j appears ~30000/j times — a skewed frequency profile.
     val rows = (1 to 60).flatMap(j => Seq.fill(30000 / j / 10)(j.toLong))
     val df = rows.toDF("k")
@@ -46,7 +43,6 @@ class CountMinSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merged per-group grids == one-pass grid, bit-identical") {
-    registered
     val df = (1L to 40000L).map(i => (i % 11, i % 997)).toDF("g", "k")
     val rolled = df.groupBy($"g")
       .agg(call_function("cms_sketch", $"k").as("sk"))
@@ -58,7 +54,6 @@ class CountMinSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("estimate is invariant to partitioning (partial-agg merge path)") {
-    registered
     def estAt(parts: Int): Long =
       (1L to 20000L).map(_ % 500).toDF("k").repartition(parts)
         .agg(call_function("cms_estimate",
@@ -68,7 +63,6 @@ class CountMinSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("absent key estimates 0 when its buckets are clean; nulls skipped") {
-    registered
     val df = Seq[java.lang.Long](1L, 1L, null).toDF("k")
     val est = df.agg(call_function("cms_estimate",
       call_function("cms_sketch", $"k"), lit(99999L)).as("e"))

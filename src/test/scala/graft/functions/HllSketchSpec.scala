@@ -12,8 +12,6 @@ import graft.SparkSpec
 class HllSketchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("registerAndRho matches the hex-string derivation the oracle replays") {
     // Reference implementation straight off the md5 HEX STRING — the
     // formula the DuckDB SQL uses (SketchQueries.HllOracle).
@@ -46,7 +44,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("linear-counting branch: small cardinalities estimate within 2%") {
-    registered
     val df = (1 to 10000).map(i => (i % 800).toLong).toDF("k")
     val est = df.agg(call_function("hll_md5_estimate",
       call_function("hll_md5_sketch", $"k")).as("e")).collect().head.getDouble(0)
@@ -56,7 +53,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("raw branch: 60k distinct keys estimate within 5% (RSE ~1.6%)") {
-    registered
     val df = (1L to 60000L).toDF("k")
     val est = df.agg(call_function("hll_md5_estimate",
       call_function("hll_md5_sketch", $"k")).as("e")).collect().head.getDouble(0)
@@ -64,7 +60,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merge rollup over group sketches == one-pass sketch, bit-identical") {
-    registered
     val df = (1L to 30000L).map(i => (i % 13, i % 9001)).toDF("g", "k")
     val rolled = df.groupBy($"g")
       .agg(call_function("hll_md5_sketch", $"k").as("sk"))
@@ -77,7 +72,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("hll_md5_union of disjoint halves == sketch of the whole") {
-    registered
     val lo = (1L to 5000L).toDF("k")
       .agg(call_function("hll_md5_sketch", $"k").as("a"))
     val hi = (5001L to 10000L).toDF("k")
@@ -94,7 +88,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("estimate is invariant to partitioning (partial-agg merge path)") {
-    registered
     def estAt(parts: Int): Double =
       (1L to 20000L).toDF("k").repartition(parts)
         .agg(call_function("hll_md5_estimate",
@@ -104,7 +97,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("nulls are skipped; empty input yields the zero sketch (estimate 0)") {
-    registered
     val df = Seq[java.lang.Long](null, null).toDF("k")
     val est = df.agg(call_function("hll_md5_estimate",
       call_function("hll_md5_sketch", $"k")).as("e")).collect().head.getDouble(0)
@@ -113,7 +105,6 @@ class HllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("string and long keys of equal canonical form land identically") {
-    registered
     val asLong = (1L to 1000L).toDF("k")
       .agg(call_function("hll_md5_sketch", $"k").as("sk")).collect().head.getAs[Array[Byte]](0)
     val asStr = (1L to 1000L).map(String.valueOf).toDF("k")

@@ -11,8 +11,6 @@ import graft.SparkSpec
 class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("bucket matches the bin-length shift derivation the oracle replays") {
     def oracle(v: Long): Long = {
       val e = if (v == 0) 0 else v.toBinaryString.length - 1
@@ -25,7 +23,6 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("estimate is a lower bound within 2^-P relative of the exact rank value") {
-    registered
     // Log-uniform-ish values over 5 decades, deterministic.
     val rows = (1 to 20000).map(i => ((i.toLong * 2654435761L) % 100000000L).abs)
     val df = rows.toDF("c")
@@ -49,7 +46,6 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merged per-group sketches == one-pass sketch, bit-identical") {
-    registered
     val df = (1L to 40000L).map(i => (i % 7, (i * 31) % 99991)).toDF("g", "c")
     val rolled = df.groupBy($"g")
       .agg(call_function("qsk_sketch", $"c").as("sk"))
@@ -61,7 +57,6 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("estimate is invariant to partitioning (partial-agg merge path)") {
-    registered
     val rows = (1L to 30000L).map(i => (i * 7919L) % 1000000L)
     def p50(parts: Int): Long = rows.toDF("c").repartition(parts)
       .agg(call_function("qsk_quantile",
@@ -71,7 +66,6 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sketch state folds incrementally across micro-batches") {
-    registered
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[Long]
@@ -101,7 +95,6 @@ class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("empty sketch yields null quantile; nulls are skipped") {
-    registered
     val df = Seq[Option[Long]](None, Some(10L), None).toDF("c")
     val r = df.agg(
       call_function("qsk_quantile",

@@ -11,10 +11,7 @@ import graft.SparkSpec
 class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("lossless below k: estimate is exactly the distinct count") {
-    registered
     val df = (1 to 5000).map(i => ("g" + (i % 4), (i % 700).toLong)).toDF("g", "k")
     val got = df.groupBy($"g")
       .agg(call_function("theta_estimate",
@@ -27,7 +24,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("saturated estimate lands within 5% (k=2048 over 60k distinct keys)") {
-    registered
     // RSE ≈ 1/√(k−1): 2.2% at k=2048, so a 5% bound is ~2.3σ — and the
     // data + hash are deterministic, so the measured value is fixed.
     val df = (1L to 60000L).toDF("k")
@@ -38,7 +34,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("string keys hash deterministically and estimate exactly below k") {
-    registered
     val df = (1 to 3000).map(i => s"doc-${i % 901}").toDF("k")
     val est = df.agg(call_function("theta_estimate",
       call_function("theta_sketch", $"k")).as("e")).collect().head.getDouble(0)
@@ -46,7 +41,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("theta_union_agg rollup over group sketches == one-pass sketch") {
-    registered
     val df = (1L to 20000L).map(i => (i % 16, i % 7001)).toDF("g", "k")
     val rolled = df.groupBy($"g")
       .agg(call_function("theta_sketch", $"k", lit(1024)).as("sk"))
@@ -62,7 +56,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("union + intersection set algebra: exact below k, within tol saturated") {
-    registered
     // A = [1, 4000], B = [3001, 8000] → |A∪B| = 8000, |A∩B| = 1000.
     val a = (1L to 4000L).toDF("k")
     val b = (3001L to 8000L).toDF("k")
@@ -87,7 +80,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("within_tol predicate is falsifiable: a bad estimate flips it false") {
-    registered
     // ADVICE r2: the oracle asserts literal TRUE for within_tol, so prove
     // here that the predicate itself can go false — feed an estimate that
     // is deliberately 2x the exact count through the same expression shape

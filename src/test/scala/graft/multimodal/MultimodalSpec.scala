@@ -3,24 +3,14 @@ package graft.multimodal
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSpec
 
 /** Pins the REAL javax.imageio decode path: genuine PNG/BMP/GIF containers
   * round-trip through the typed mapPartitions decoder and come back with
   * the header-declared dimensions; raw-tagged and corrupt payloads land in
   * their deterministic fallback branches. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalSpec extends AnyFunSuite with SparkSpec {
 
   private def encode(fmt: String, w: Int, h: Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)

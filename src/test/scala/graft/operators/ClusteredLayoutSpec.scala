@@ -13,7 +13,6 @@ import graft.plans.Morton
   */
 class ClusteredLayoutSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
-  graft.functions.GraftFunctions.register(spark)
 
   test("Morton interleave/deinterleave roundtrip incl. negatives") {
     val probes = Seq(0, 1, -1, 42, -42, 65535, -65536,

@@ -143,7 +143,6 @@ class DedupEdgeSpec extends AnyFunSuite with SparkSpec {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)),
       (2L, Array(0.9f, 0.1f)), (3L, Array(0.1f, 0.9f)),
       (4L, Array(-1.0f, 0.0f))).toDF("vec_id", "embedding")
-    graft.functions.GraftFunctions.register(spark)
 
     val all = Dedup.semanticDedup(emb, k = 2, threshold = 1.1)
       .as[(Long, Long, Boolean)].collect()

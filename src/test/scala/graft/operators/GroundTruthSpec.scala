@@ -13,7 +13,6 @@ import graft.SparkSpec
   * every recall/MRR row at once. */
 class GroundTruthSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
-  graft.functions.GraftFunctions.register(spark)
 
   // Deterministic small corpus: 40 vectors, dim 6, planted structure
   // (id and id+20 are near-identical so top-1 is never trivially self).

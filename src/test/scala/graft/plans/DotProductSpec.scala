@@ -3,7 +3,7 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.functions.{GraftFunctions, VectorFunctions}
+import graft.functions.VectorFunctions
 
 /** The native vec_dot expression must agree bit-for-bit with the HOF fold
   * and survive codegen. */
@@ -11,7 +11,6 @@ class DotProductSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("vec_dot == HOF fold on random vectors (bit-exact)") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (1 to 100).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextDouble() * 2 - 1),
@@ -27,7 +26,6 @@ class DotProductSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vec_dot participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     // Non-foldable input (derived from range) so the expression survives
     // constant folding and lands inside a codegen stage.
     val df = spark.range(10)
@@ -41,7 +39,6 @@ class DotProductSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mismatched lengths use the common prefix; empty arrays give 0") {
-    GraftFunctions.register(spark)
     val df = Seq((Array(1.0, 2.0, 9.0), Array(3.0, 4.0)),
       (Array.empty[Double], Array.empty[Double])).toDF("a", "b")
       .select(call_function("vec_dot", col("a"), col("b")).as("d"))

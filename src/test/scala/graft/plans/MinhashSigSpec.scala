@@ -13,8 +13,6 @@ import graft.functions.TextFunctions
 class MinhashSigSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.register(spark)
-
   private def both(df: org.apache.spark.sql.DataFrame, k: Int) =
     df.select(
       TextFunctions.minhashSignature(col("sh"), k).as("native"),

@@ -15,8 +15,6 @@ import graft.functions.TextFunctions
 class TextFeatureCountsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.register(spark)
-
   private val texts = Seq(
     "",
     " ",

@@ -13,8 +13,6 @@ import graft.SparkSpec
 class TokenizerFoldsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.register(spark)
-
   // The original interpreted greedy fold, verbatim shape (string
   // accumulator "pos|pieces"), from Corpus.greedyFoldExpr.
   private def hofSegment(maxLen: Int): String = {

@@ -11,8 +11,6 @@ import graft.functions.TextFunctions
 class WordShinglesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.register(spark)
-
   private def both(df: org.apache.spark.sql.DataFrame, n: Int) =
     df.select(
       TextFunctions.shinglesFromTokens(col("t"), n).as("native"),

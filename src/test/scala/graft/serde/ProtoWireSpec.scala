@@ -106,7 +106,6 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
 
   test("proto_encode/proto_decode round-trip as codegen'd columns") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(("w1", 2.5), ("w2", 0.0), ("", 9.75), ("héllo", -1.5))
       .toDF("wallet_id", "amount")
     val back = df
@@ -154,7 +153,6 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
   test("detector output is identical when deposits ride the proto wire") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
 
     val deposits = Seq(
       TimedDeposit("a", 6000, 100, 1), TimedDeposit("a", 5000, 150, 2),

@@ -17,8 +17,8 @@ import graft.SparkSpec
   * TimestampType rows for all of them.
   *
   * Note on the nanos form: Spark cannot WRITE parquet TIMESTAMP(NANOS),
-  * but under `spark.sql.legacy.parquet.nanosAsLong=true` (which the loader
-  * sets) a nanos column decodes as plain LongType — indistinguishable, at
+  * but under `spark.sql.legacy.parquet.nanosAsLong=true` (which
+  * `GraftSession.builder` sets) a nanos column decodes as plain LongType — indistinguishable, at
   * the loader's branch point, from the BIGINT column written here.
   */
 class EventsLoaderSpec extends AnyFunSuite with SparkSpec {
