@@ -19,6 +19,14 @@ import org.apache.spark.sql.SparkSession
   *    to the state-store maintenance thread, which the tasks' executor CPU
   *    does not count. Recovery loads the last snapshot and replays at most
   *    the changelogs written since it.
+  *  - One checkpoint file manager for every streaming query
+  *    ([[streaming.CheckpointFiles]], in [[stateStore]]), reaching the
+  *    driver's offset and commit logs and the executors' state-store
+  *    files. On a local path it renames with rename(2); Spark's default
+  *    forks a `readlink` process per renamed path. Any other file system
+  *    keeps Spark's default: HDFS's `FileSystem.rename` does not replace
+  *    an existing file, so the rename-based manager would silently keep
+  *    a stale file where a re-run batch overwrites one.
   *  - UTC + micros parquet timestamps: oracle-stable instants everywhere.
   *    A TIMESTAMP(NANOS) parquet column reads as a LONG
   *    (`nanosAsLong`) instead of failing the read; `sources.Tables`
@@ -50,7 +58,11 @@ object GraftSession {
     // ChecksumCancellableFSDataOutputStream.close (observed: a whole stage
     // parked on its await for 35+ min). Plain checkpoint files are the
     // pre-4.1 behavior, exercised by CheckpointRecoverySpec.
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    // Checkpoint files on a local path are renamed with rename(2), not
+    // through Hadoop's FileContext, which forks a readlink per path.
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[streaming.CheckpointFiles].getName)
 
   def builder(appName: String, master: Option[String] = None,
               shufflePartitions: Option[Int] = None): SparkSession.Builder = {

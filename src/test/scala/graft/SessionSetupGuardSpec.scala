@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan that keeps session setup in one place: every session of
   * `src/main` comes from [[GraftSession]], the native functions come from
-  * the extension it installs, and loaders set no session conf. */
+  * the extension it installs, state-store and checkpoint settings live in
+  * its one map, and loaders set no session conf. */
 class SessionSetupGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -35,6 +36,12 @@ class SessionSetupGuardSpec extends AnyFunSuite {
   test("src/main calls GraftFunctions.register at most once, as GraftSession's fallback") {
     val found = hits(main, "GraftFunctions.register(").filterNot(_._1 == "GraftFunctions.scala")
     assert(found.size <= 1 && found.forall(_._1 == "GraftSession.scala"), found)
+  }
+
+  test("src/main sets state-store and checkpoint confs only in GraftSession") {
+    val found = Seq("spark.sql.streaming.stateStore.", "checkpointFileManagerClass")
+      .flatMap(hits(main, _))
+    assert(found.nonEmpty && found.forall(_._1 == "GraftSession.scala"), found)
   }
 
   test("the table loaders set no session conf") {

@@ -1,7 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftSession, SparkSpec}
 import graft.model.{KeyedFlagEvent, TimedDeposit}
@@ -16,6 +20,9 @@ import graft.model.{KeyedFlagEvent, TimedDeposit}
   *    restart under it, the checkpoint must contain changelog files
   *    proving the mode engaged, and a checkpoint written in snapshot mode
   *    must resume under it.
+  *  - The engine's checkpoint file manager (CheckpointFiles) resumes a
+  *    checkpoint written through Spark's default one, including the
+  *    overwrite of a re-run batch's changelog.
   *  - Stateful shuffle partitioning is FIXED AT FIRST CHECKPOINT: Spark
   *    keys state-store directories by partition id, so a later session
   *    with a different spark.sql.shuffle.partitions must keep running at
@@ -29,7 +36,14 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
   private def writeBatch(in: String, rows: Seq[TimedDeposit]): Unit =
     rows.toDS().repartition(1).write.mode("append").parquet(in)
 
-  private def runDetectorOnce(in: String, out: String, ckpt: String): Unit = {
+  /** Runs the detector over everything in `in` and returns the ids of
+    * the batches it ran. Batch `n` writes its verdicts to `out/batch=n`:
+    * appended, so a replay shows as a duplicate, or, with `mode`
+    * "overwrite", replacing a re-run batch's earlier output (an idempotent
+    * sink). */
+  private def runDetectorOnce(in: String, out: String, ckpt: String,
+                              mode: String = "append"): Seq[Long] = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val deposits = spark.readStream
       .schema("walletId STRING, amount DOUBLE, tsUnix LONG, seq LONG")
       .parquet(in).as[TimedDeposit]
@@ -37,12 +51,14 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
       .writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .foreachBatch { (batch: Dataset[KeyedFlagEvent], _: Long) =>
-        batch.write.mode("append").parquet(out)
+      .foreachBatch { (batch: Dataset[KeyedFlagEvent], id: Long) =>
+        batch.write.mode(mode).parquet(s"$out/batch=$id")
+        ran.add(id): Unit
       }
       .start()
     q.processAllAvailable()
     q.stop()
+    ran.asScala.toSeq
   }
 
   /** Every `.changelog` file under the checkpoint's state directory. */
@@ -94,6 +110,43 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
     assertCarriedWindow(out)
     assert(changelogs(ckpt).nonEmpty,
       s"no .changelog files under $ckpt/state after the restart in changelog mode")
+  }
+
+  test("a checkpoint written through Spark's default file manager resumes, overwriting a re-run batch's changelog") {
+    // The deploy path of every existing checkpoint: written before the
+    // engine set its own checkpoint file manager, restarted after, with
+    // the last batch re-run because its commit never landed.
+    val root = Files.createTempDirectory("graft_ckpt_fm_upgrade").toString
+    val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
+    spark.conf.unset(key)
+    try {
+      assert(CheckpointFileManager.create(new Path(ckpt), spark.sessionState.newHadoopConf())
+        .isInstanceOf[FileContextBasedCheckpointFileManager])
+      assert(runDetectorOnce(in, out, ckpt, "overwrite") == Seq(0L))
+      writeBatch(in, Seq(TimedDeposit("w1", 5000.0, 1060L, 2L)))
+      assert(runDetectorOnce(in, out, ckpt, "overwrite") == Seq(1L))
+    } finally spark.conf.set(key, GraftSession.stateStore(key))
+    // Batch 1 committed state version 2; without its commit entry the
+    // restart runs it again and rewrites every partition's 2.changelog.
+    val rewritten = changelogs(ckpt).filter(_.getName == "2.changelog").map(_.toPath)
+    assert(rewritten.size == spark.conf.get("spark.sql.shuffle.partitions").toInt, rewritten)
+    def crc(f: JPath): JPath = f.resolveSibling(s".${f.getFileName}.crc")
+    def inode(f: JPath): AnyRef = Files.getAttribute(f, "unix:ino")
+    val before = rewritten.map(f => (inode(f), inode(crc(f))))
+    Files.delete(java.nio.file.Paths.get(s"$ckpt/commits/1"))
+    assert(runDetectorOnce(in, out, ckpt, "overwrite") == Seq(1L))
+    assertCarriedWindow(out)
+    // Each changelog and its .crc were replaced, and the new file reads
+    // back through the local file system's checksum verification.
+    val local = FileSystem.getLocal(new Configuration())
+    rewritten.zip(before).foreach { case (f, (fileIno, crcIno)) =>
+      assert(inode(f) != fileIno && inode(crc(f)) != crcIno, s"$f was not rewritten")
+      val read = local.open(new Path(f.toUri))
+      try assert(read.readAllBytes().toSeq == Files.readAllBytes(f).toSeq)
+      finally read.close()
+    }
   }
 
   test("stateful shuffle partitioning is pinned by the first checkpoint") {
