@@ -17,17 +17,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"), Some(cpus))
-      // Local-scale coalesce target: sf0.1 shuffles are single-digit MBs,
-      // and the 64 MB default advisory collapses every reduce stage to ONE
-      // task — serializing joins/aggs behind one core. 8 MB keeps tiny
-      // shuffles at 1 task but lets the mid-size ones (token tables, span
-      // tables, lineitem aggs) spread across cores (measured −10% on the
-      // shuffle-heavy subset). A cluster deployment at real scale keeps
-      // the 64 MB default (GraftSession.builder does not set this).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The same session Verify checks: GraftSession.local, whose 8 MB
+    // advisory partition size suits sf0.1's single-digit-MB shuffles.
+    val spark = GraftSession.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: touch every table (footer reads + codegen paths) once.

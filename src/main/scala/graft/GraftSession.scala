@@ -89,13 +89,16 @@ object GraftSession {
     b
   }
 
-  /** Local session sized for this machine. */
-  def local(appName: String): SparkSession = {
-    val cores = Runtime.getRuntime.availableProcessors()
+  /** Local session on `cores` cores, by default all of this machine's. */
+  def local(appName: String,
+            cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     builder(appName, Some(s"local[$cores]"), Some(cores))
-      // Local data is MBs; the 64 MB advisory would coalesce every reduce
-      // stage to one task (see Bench.scala — measured −10% at 8 MB). The
-      // cluster builder above deliberately keeps the default.
+      // Local data is MBs: the 64 MB advisory would coalesce every reduce
+      // stage to ONE task, serializing joins/aggs behind one core. 8 MB
+      // keeps tiny shuffles at 1 task but lets the mid-size ones (token
+      // tables, span tables, lineitem aggs) spread across cores (measured
+      // −10% on the bench's shuffle-heavy subset). The cluster builder
+      // above deliberately keeps the default.
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

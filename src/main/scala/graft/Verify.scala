@@ -9,9 +9,8 @@ object Verify {
     // the driver always calls with exactly two args = full dump).
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder("graft-verify", Some(s"local[$cpus]"), Some(cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The same session Bench times.
+    val spark = GraftSession.local("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

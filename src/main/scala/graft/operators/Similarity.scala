@@ -29,11 +29,6 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
-  /** With SPARK_GRAFT_ANN_FORENSICS=1, model-build calls print one JSON
-    * line each to stderr: cache hit/miss, fingerprint cost, train cost —
-    * the train-vs-serve split for the bench forensics in PERF.md. */
-  private val forensics = sys.env.get("SPARK_GRAFT_ANN_FORENSICS").contains("1")
-
   /** Data-size-derived sign-LSH width: the smallest `bits` whose 2^bits
     * buckets hold ≤ `targetBucketRows` vectors each in expectation, so the
     * per-bucket candidate-pair space (~bucketRows²/2) stays bounded as the
@@ -448,22 +443,15 @@ object Similarity {
                                        read: String => T,
                                        write: (String, T) => Unit)
                                       (train: => T): T = {
-    val t0 = System.nanoTime()
     val fp = contentFp(emb)
-    val tFp = System.nanoTime()
     val key = s"$kind|$fp|$params"
     val hit = trainedModels.get(key)
     if (hit != null) {
       IndexCache.record(s"$kind.mem")
-      if (forensics) System.err.println(
-        f"""{"forensics":"${kind}_model","cache":"hit","fp_s":${(tFp - t0) / 1e9}%.3f}""")
       return hit.asInstanceOf[T]
     }
     val model = IndexCache.cachedModelArtifact(kind, params, fp)(read, write)(train)
     trainedModels.put(key, model)
-    if (forensics) System.err.println(
-      f"""{"forensics":"${kind}_model","cache":"miss","fp_s":${(tFp - t0) / 1e9}%.3f,""" +
-      f""""resolve_s":${(System.nanoTime() - tFp) / 1e9}%.3f}""")
     model
   }
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.util.UUID
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.TextFunctions
@@ -13,36 +12,14 @@ import graft.sources.Tables
   * the SQL-text layer with a scalar subquery. */
 object ExtrasQueries {
 
-  /** Per-JVM scratch root for the maintenance roundtrip (the compacted
-    * dir must outlive the returned lazy DataFrame); removed on exit. */
-  private lazy val scratchRoot: String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_extras_" +
-      UUID.randomUUID().toString.replace("-", "")
-    new java.io.File(p).mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      Maintenance.deleteRecursively(new java.io.File(p))))
-    p
-  }
-
-  /** Clustered-layout dirs per (kind, sf dir), built ONCE per JVM — the
-    * production contract: layout maintenance is a scheduled job over
-    * closed partitions, serving reads the maintained table. The layout
-    * REQUIREs (disjoint ranges / box skipping) run at standup; serves
-    * read the already-clustered files. Same lifecycle precedent as the
-    * materialized streaming topologies. */
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Replay log per (JVM, sf dir) — the build step of the `graft-replay`
     * connector's query: the accepted-deposit projection of events framed
     * into 4 offset-ranged segments (see [[graft.sources.replay.ReplayLog]]).
     * Built once, served by every run, like the stream feeds. */
-  private val replayLogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def replayLogFor(s: org.apache.spark.sql.SparkSession,
                            d: String): String =
-    replayLogCache.computeIfAbsent(d, { _ =>
-      val path = s"$scratchRoot/replaylog_" + UUID.randomUUID().toString.replace("-", "")
+    Workspace.once(s"replaylog|$d") {
+      val path = Workspace.fresh("replaylog")
       graft.sources.replay.ReplayLog.writeSegments(
         Tables.events(s, d).filter(col("value") > 0).select(
           col("event_id").as("offset"),
@@ -51,7 +28,7 @@ object ExtrasQueries {
           col("value").as("amount")),
         path, nSegments = 4)
       path
-    })
+    }
 
   /** Time-travel log per (JVM, sf dir): its OWN directory (appending to
     * the shared log would shift every other replay oracle), written in
@@ -64,13 +41,11 @@ object ExtrasQueries {
     * metadata-only); the registered query then reads v1 AND current
     * through the connector and the oracle pins both against the events
     * projection. */
-  private val replayTtCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def replayTtFor(s: org.apache.spark.sql.SparkSession,
                           d: String): String =
-    replayTtCache.computeIfAbsent(d, { _ =>
+    Workspace.once(s"replaytt|$d") {
       import graft.sources.replay.ReplayLog
-      val path = s"$scratchRoot/replaytt_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("replaytt")
       val deps = Tables.events(s, d).filter(col("value") > 0).select(
         col("event_id").as("offset"),
         expr("unix_micros(ts) div 1000000").as("ts_unix"),
@@ -88,7 +63,7 @@ object ExtrasQueries {
       require(v2Count == curCount,
         s"compaction must be snapshot-invisible: v2=$v2Count current=$curCount")
       path
-    })
+    }
 
   /** Copy a prototype log directory file-by-file (KB-scale frames +
     * manifest metadata — milliseconds, vs the Spark write jobs that
@@ -98,7 +73,7 @@ object ExtrasQueries {
     * while the fixture build is paid once — the artifact playbook
     * applied to lifecycle fixtures. */
   private def copyLog(proto: String, prefix: String): String = {
-    val dest = s"$scratchRoot/${prefix}_" + UUID.randomUUID().toString.replace("-", "")
+    val dest = Workspace.fresh(prefix)
     new java.io.File(dest).mkdirs()
     Option(new java.io.File(proto).listFiles()).getOrElse(Array.empty)
       .filter(_.isFile).foreach { f =>
@@ -110,13 +85,11 @@ object ExtrasQueries {
 
   /** Prototype for q_replay_expire: the three-generation (write, append,
     * compaction-overwrite) log, built once per (JVM, sf dir). */
-  private val replayExpProtoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def replayExpProtoFor(s: org.apache.spark.sql.SparkSession,
                                 d: String): String =
-    replayExpProtoCache.computeIfAbsent(d, { _ =>
+    Workspace.once(s"replayexpp|$d") {
       import graft.sources.replay.ReplayLog
-      val path = s"$scratchRoot/replayexpp_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("replayexpp")
       val deps = Tables.events(s, d)
         .filter(col("value") > 0 && col("event_id") % 7 === 0).select(
           col("event_id").as("offset"),
@@ -128,17 +101,15 @@ object ExtrasQueries {
       ReplayLog.writeSegments(deps.filter(col("offset") >= thr), path, 1)
       ReplayLog.compactSegments(s, path, target = 1)
       path
-    })
+    }
 
   /** Prototype for q_replay_delete: the 2-segment log plus its victim
     * wallet (the slice's minimum), built once per (JVM, sf dir). */
-  private val replayDelProtoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def replayDelProtoFor(s: org.apache.spark.sql.SparkSession,
                                 d: String): (String, String) =
-    replayDelProtoCache.computeIfAbsent(d, { _ =>
+    Workspace.once(s"replaydelp|$d") {
       import graft.sources.replay.ReplayLog
-      val path = s"$scratchRoot/replaydelp_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("replaydelp")
       val deps = Tables.events(s, d)
         .filter(col("value") > 0 && col("event_id") % 5 === 2).select(
           col("event_id").as("offset"),
@@ -148,7 +119,7 @@ object ExtrasQueries {
       ReplayLog.writeSegments(deps, path, 2)
       val victim = deps.agg(min(col("wallet_id").cast("long"))).head().getLong(0).toString
       (path, victim)
-    })
+    }
 
   /** Probe-keys table for the runtime-pruning query: the top offset
     * quartile of the log's keys, bucketed by a non-key attribute. Built
@@ -156,19 +127,17 @@ object ExtrasQueries {
     * the table's CONTENT, not in any read-side predicate, so the only
     * way the scan learns which segments matter is the runtime join-key
     * filter. */
-  private val replayDimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def replayDimFor(s: org.apache.spark.sql.SparkSession,
                            d: String, logDir: String): String =
-    replayDimCache.computeIfAbsent(d, { _ =>
-      val path = s"$scratchRoot/replaydim_" + UUID.randomUUID().toString.replace("-", "")
+    Workspace.once(s"replaydim|$d") {
+      val path = Workspace.fresh("replaydim")
       val thr = 3L * graft.sources.replay.ReplayLog.maxOffset(logDir) / 4
       Tables.events(s, d).filter(col("value") > 0 && col("event_id") >= thr)
         .select(col("event_id").as("k"), (col("user_id") % 7).as("bucket"))
         .coalesce(1)
         .write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
   val all: Seq[Q] = Seq(
 
@@ -185,11 +154,11 @@ object ExtrasQueries {
       // The 32-file spray is a once-per-JVM prototype; each run compacts
       // a fresh file-copy of it (the compaction under test still runs
       // for real — see copyLog).
-      val proto = layoutCache.computeIfAbsent(s"frag|$d", { _ =>
-        val p = s"$scratchRoot/fragp_" + UUID.randomUUID().toString.replace("-", "")
+      val proto = Workspace.once(s"frag|$d") {
+        val p = Workspace.fresh("fragp")
         Tables.supplier(s, d).repartition(32).write.parquet(p)
         p
-      })
+      }
       val dir = copyLog(proto, "frag")
       val (before, after) = Maintenance.compactParquet(s, dir)
       require(after < before, s"compaction did not reduce files: $before -> $after")
@@ -215,8 +184,12 @@ object ExtrasQueries {
         "WHERE l_shipdate >= TIMESTAMP '1996-01-01' " +
         "AND l_shipdate < TIMESTAMP '1996-07-01' " +
         "GROUP BY 1 ORDER BY 1") { (s, d) =>
-      val dir = layoutCache.computeIfAbsent(s"clus|$d", { _ =>
-        val p = s"$scratchRoot/clus_" + UUID.randomUUID().toString.replace("-", "")
+      // The clustered layout is built ONCE per JVM — the production
+      // contract: layout maintenance is a scheduled job over closed
+      // partitions, serving reads the maintained table. The layout
+      // REQUIREs below run at standup; serves read the clustered files.
+      val dir = Workspace.once(s"clus|$d") {
+        val p = Workspace.fresh("clus")
         // Cluster the serving projection, not all 11 columns — the layout
         // contract is identical and the rewrite I/O is the 3 columns the
         // query reads (what a real layout job does for a hot projection).
@@ -245,7 +218,7 @@ object ExtrasQueries {
           .count()
         require(overlaps == 0, s"$overlaps overlapping clustered file ranges")
         p
-      })
+      }
       s.read.parquet(dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-07-01").cast("timestamp"))
@@ -268,8 +241,8 @@ object ExtrasQueries {
         "ROUND(SUM(l_quantity), 2) AS qty " +
         "FROM lineitem WHERE l_partkey <= 400 AND l_suppkey <= 20 " +
         "GROUP BY 1 ORDER BY 1") { (s, d) =>
-      val dir = layoutCache.computeIfAbsent(s"zord|$d", { _ =>
-        val p = s"$scratchRoot/zord_" + UUID.randomUUID().toString.replace("-", "")
+      val dir = Workspace.once(s"zord|$d") {
+        val p = Workspace.fresh("zord")
         Tables.lineitem(s, d)
           .select(col("l_partkey"), col("l_suppkey"), col("l_linestatus"),
             col("l_quantity"))
@@ -291,7 +264,7 @@ object ExtrasQueries {
         require(stats.getLong(1) < stats.getLong(0),
           s"z-order layout skipped nothing: ${stats.getLong(1)}/${stats.getLong(0)} files overlap the box")
         p
-      })
+      }
       s.read.parquet(dir)
         .filter(col("l_partkey") <= 400 && col("l_suppkey") <= 20)
         .groupBy(col("l_linestatus"))
@@ -436,9 +409,9 @@ object ExtrasQueries {
     Q("q_csv_source",
       "SELECT user_id AS wallet_id, COUNT(*) AS n, ROUND(SUM(value), 2) AS total " +
         "FROM events GROUP BY 1 ORDER BY 1") { (s, d) =>
-      // Under the shutdown-cleaned scratch root like the ORC/JSONL spills
-      // — a bare /tmp UUID path leaked one ~1 MB dir per bench/verify run.
-      val path = s"$scratchRoot/csv_" + UUID.randomUUID().toString.replace("-", "")
+      // Under the workspace, removed at exit, like the ORC/JSONL spills —
+      // a bare /tmp path leaked one ~1 MB dir per bench/verify run.
+      val path = Workspace.fresh("csv")
       Tables.events(s, d).select(col("user_id"), col("value"))
         .write.mode("overwrite").option("header", "true").csv(path)
       s.read.option("header", "true")
@@ -455,7 +428,7 @@ object ExtrasQueries {
     Q("q_orc_source",
       "SELECT c_mktsegment, COUNT(*) AS n, ROUND(SUM(c_acctbal), 2) AS total " +
         "FROM customer GROUP BY 1 ORDER BY 1") { (s, d) =>
-      val path = s"$scratchRoot/orc_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("orc")
       Tables.customer(s, d).select(col("c_mktsegment"), col("c_acctbal"))
         .write.mode("overwrite").orc(path)
       s.read.orc(path)
@@ -470,7 +443,7 @@ object ExtrasQueries {
     Q("q_json_source",
       "SELECT n_regionkey, COUNT(*) AS n_nations, " +
         "MIN(n_name) AS first_nation FROM nation GROUP BY 1 ORDER BY 1") { (s, d) =>
-      val path = s"$scratchRoot/jsonl_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("jsonl")
       Tables.nation(s, d).write.mode("overwrite").json(path)
       s.read.schema("n_nationkey LONG, n_name STRING, n_regionkey LONG, n_comment STRING")
         .json(path)
@@ -486,7 +459,7 @@ object ExtrasQueries {
     // format round-trip fails the hash.
     Q("q_xml_source",
       "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey") { (s, d) =>
-      val path = s"$scratchRoot/xml_" + UUID.randomUUID().toString.replace("-", "")
+      val path = Workspace.fresh("xml")
       Tables.region(s, d).select(col("r_regionkey"), col("r_name"))
         .write.mode("overwrite").option("rootTag", "regions").option("rowTag", "region")
         .format("xml").save(path)
@@ -642,7 +615,7 @@ object ExtrasQueries {
       val tbl = new java.io.File(dir).getName
       s.conf.set("spark.sql.catalog.graft_replay",
         "graft.sources.replay.ReplayCatalog")
-      s.conf.set("spark.sql.catalog.graft_replay.root", scratchRoot)
+      s.conf.set("spark.sql.catalog.graft_replay.root", Workspace.root)
       s.sql(s"DELETE FROM graft_replay.`$tbl` WHERE wallet_id = '$victim'")
       // Snapshot isolation: the pre-delete snapshot still serves the
       // wallet; expiry reclaims the originals (the erasure point).
@@ -683,7 +656,7 @@ object ExtrasQueries {
       val tbl = new java.io.File(dir).getName
       s.conf.set("spark.sql.catalog.graft_replay",
         "graft.sources.replay.ReplayCatalog")
-      s.conf.set("spark.sql.catalog.graft_replay.root", scratchRoot)
+      s.conf.set("spark.sql.catalog.graft_replay.root", Workspace.root)
       s.sql(
         "SELECT 'head' AS snapshot, COUNT(*) AS n_frames, " +
           s"ROUND(SUM(amount), 2) AS total_amount FROM graft_replay.`$tbl` " +
@@ -824,8 +797,8 @@ object ExtrasQueries {
         "ROUND(SUM(value), 2) AS total_amount FROM events " +
         "WHERE value >= 10 GROUP BY 1 ORDER BY 1") { (s, d) =>
       val src = replayLogFor(s, d)
-      val out = s"$scratchRoot/replay_sink_" + UUID.randomUUID().toString.replace("-", "")
-      val cp = s"$scratchRoot/replay_sink_cp_" + UUID.randomUUID().toString.replace("-", "")
+      val out = Workspace.fresh("replay_sink")
+      val cp = Workspace.fresh("replay_sink_cp")
       val q = s.readStream.format("graft-replay")
         .option("maxSegmentsPerTrigger", "2").load(src)
         .where(col("amount") >= 10.0)

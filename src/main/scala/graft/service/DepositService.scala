@@ -469,8 +469,8 @@ object DepositService {
   // created earlier in the JVM — which is why it is set from a companion
   // initializer (runs before the first DepositService constructs its
   // server) rather than buried mid-constructor. A JVM that stood up an
-  // unrelated HttpServer first keeps Nagle on; the latency probe in
-  // ServeSmoke would surface that as ~44 ms lookups.
+  // unrelated HttpServer first keeps Nagle on, and its keep-alive GETs
+  // take ~44 ms each.
   private lazy val noDelaySet: Boolean = {
     System.setProperty("sun.net.httpserver.nodelay", "true")
     true

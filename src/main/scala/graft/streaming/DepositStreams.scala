@@ -134,16 +134,4 @@ object DepositStreams {
           FlagRow(key, fv.flagged, fv.rollingPeriodStartUnix)
       }
   }
-
-  /** Serve path (O8+O9+O10): point lookup against the two sink tables with
-    * the unknown-wallet → {0, false} zero-value semantics (SURVEY §2.3.6). */
-  def check(spark: SparkSession, balanceTable: Dataset[BalanceRow],
-            flagTable: Dataset[FlagRow], walletId: String): (String, Double, Boolean) = {
-    import spark.implicits._
-    val bal = balanceTable.filter(_.walletId == walletId)
-      .collect().headOption.map(_.balance).getOrElse(0.0)
-    val flag = flagTable.filter(_.walletId == walletId)
-      .collect().headOption.exists(_.flagged)
-    (walletId, bal, flag)
-  }
 }

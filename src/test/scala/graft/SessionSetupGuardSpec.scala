@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scan that keeps session setup in one place: every session of
   * `src/main` comes from [[GraftSession]], the native functions come from
   * the extension it installs, state-store and checkpoint settings live in
-  * its one map, and loaders set no session conf. */
+  * its one map, and loaders set no session conf. The query packs get the
+  * same treatment: one workspace ([[queries.Workspace]]), no env-var
+  * forks, and the stream queries start through one harness. */
 class SessionSetupGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -49,6 +51,25 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     assert(tables.size == 1, tables)
     val found = hits(tables, "conf.set")
     assert(found.isEmpty, found)
+  }
+
+  private lazy val queryPacks = scalaFiles("src/main/scala/graft/queries")
+
+  test("the query packs make temp paths and exit hooks only in Workspace") {
+    val found = Seq("addShutdownHook", "java.io.tmpdir", "UUID.randomUUID")
+      .flatMap(hits(queryPacks, _))
+    assert(found.nonEmpty && found.forall(_._1 == "Workspace.scala"), found)
+  }
+
+  test("the query packs read no environment variable") {
+    val found = hits(queryPacks, "sys.env")
+    assert(found.isEmpty, found)
+  }
+
+  test("StreamQueries starts its streams from at most 6 writeStream sites") {
+    val found = hits(queryPacks.filter(_.getFileName.toString == "StreamQueries.scala"),
+      "writeStream")
+    assert(found.nonEmpty && found.size <= 6, found)
   }
 
   test("no spec calls GraftFunctions.register except the fallback's own spec") {

@@ -109,13 +109,6 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(flags == Seq(DepositStreams.FlagRow("w4", flagged = false, 0L)))
   }
 
-  test("unknown wallet: zero balance, not flagged (SURVEY §2.3.6)") {
-    val (id, bal, flagged) = DepositStreams.check(spark,
-      spark.emptyDataset[DepositStreams.BalanceRow],
-      spark.emptyDataset[DepositStreams.FlagRow], "ghost")
-    assert((id, bal, flagged) == (("ghost", 0.0, false)))
-  }
-
   test("streaming detector == pure state machine under arbitrary batch splits") {
     val rnd = new scala.util.Random(7)
     var t = 1000L
