@@ -10,7 +10,9 @@ package graft
   * per-query medians only, then a SHORT total-only JSON line. The short
   * line is printed last so a tail capture that truncates the big lines
   * still gets a parseable total; all lines carry the same
-  * "metric":"total" value (sum of per-query medians).
+  * "metric":"total" value (sum of per-query medians) and the "cpus" the
+  * session ran on (SPARK_GRAFT_CPUS), since per-query medians taken at
+  * different core counts do not compare.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -162,7 +164,7 @@ object Bench {
       }.mkString("{", ",", "}")
     }.mkString("\"forensics\":{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,${failedJson}"queries":$qs,$forensicsJson,$calib,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,${failedJson}"queries":$qs,$forensicsJson,$calib,"sf":"$sfDir"}"""
     println(fullLine)
     // Per-query medians WITHOUT the forensics blob (round-17 verdict item:
     // the driver could not build its per-query table from stdout). A
@@ -173,13 +175,13 @@ object Bench {
     // the truncation-proof summary, for any consumer that reads more
     // than the tail. Additions-only: the full line and the final short
     // line are unchanged in shape.
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,$failedJson"nqueries":${names.size},"queries":$qs,"sf":"$sfDir"}""")
     // Short, truncation-proof summary LAST. The driver's BENCH_r*.json
     // keeps only a ~2000-char stdout tail; round 12's "short" line still
     // carried the forensics blob and outgrew it (BENCH_r12.json parsed:
     // null). This line is total + conditions ONLY — forensics and
     // per-query medians live in the full line and bench_full.json.
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,$failedJson"nqueries":${names.size},$calib,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,$failedJson"nqueries":${names.size},$calib,"sf":"$sfDir"}""")
     // Machine-readable artifact of record: the driver's BENCH_r*.json
     // keeps only a 2000-char stdout tail, so the full per-query medians +
     // forensics are ALSO written to a file (committed per round → git

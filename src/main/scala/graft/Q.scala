@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One registered engine query: a Spark plan plus (when SQL-expressible) the
-  * equivalent ANSI SQL the driver runs in DuckDB over the same parquet
-  * tables. Column names and rounding MUST match between the two — the
+/** One registered engine query: a Spark plan plus the equivalent ANSI SQL
+  * (its oracle) the driver runs in DuckDB over the same parquet tables. Column names and rounding MUST match between the two — the
   * driver's compare sorts columns by name and hashes values.
   *
   * Queries end with a total ORDER BY and round any reassociation-sensitive
@@ -14,18 +13,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     expectsEmpty: Boolean = false)
 
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(sql))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
+    Q(name, run, sql)
   /** A query whose CORRECT sf0.01 answer is the empty relation (e.g. an
     * invariant-violation detector that must find nothing). Everything
     * else failing to produce rows is treated as a vacuous pass — a bug —
     * by Verify and EntrySpec. */
   def emptyOk(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(sql), expectsEmpty = true)
+    Q(name, run, sql, expectsEmpty = true)
 }

@@ -5,9 +5,9 @@ import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every operator from SURVEY §2 registers here as a named query; each
-  * SQL-expressible one carries DuckDB oracle SQL with IDENTICAL column names
-  * and rounding (the driver sorts columns by name and hashes values).
+  * Every operator from SURVEY §2 registers here as a named query, and each
+  * carries DuckDB oracle SQL with IDENTICAL column names and rounding (the
+  * driver sorts columns by name and hashes values).
   */
 object SparkEntry {
 
@@ -34,7 +34,7 @@ object SparkEntry {
     }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    packs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    packs.map(q => q.name -> q.oracle).toMap
 }

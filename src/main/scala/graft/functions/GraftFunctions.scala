@@ -120,9 +120,9 @@ object GraftFunctions {
       case e => throw new IllegalArgumentException(
         s"theta_sketch expects (key[, k literal]), got ${e.size} args")
     },
-    fn("theta_union_agg")(e => ThetaUnionAgg(e(0))),
+    fn("theta_kmv_union_agg")(e => ThetaUnionAgg(e(0))),
     fn("theta_estimate")(e => ThetaEstimate(e(0))),
-    fn("theta_union")(e => ThetaUnion(e(0), e(1))),
+    fn("theta_kmv_union")(e => ThetaUnion(e(0), e(1))),
     fn("theta_intersect_estimate")(e => ThetaIntersectEstimate(e(0), e(1))),
     // Explicit Bloom-filter semi-join reduction (build + probe).
     fn("bloom_agg") {

@@ -47,19 +47,6 @@ object TextFunctions {
   def shingles(text: Column, n: Int = 3): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** Distinct character k-gram shingles of the normalized text — finer
-    * granularity than word n-grams: robust to token reordering and
-    * whitespace/punctuation edits. Digested to 16-hex md5 prefixes like
-    * the word-shingle pipeline. */
-  def charShingles(text: Column, k: Int = 8): Column = {
-    val norm = normText(text)
-    array_distinct(
-      when(length(norm) >= k,
-        transform(sequence(lit(1), length(norm) - (k - 1)),
-          i => substring(md5(norm.substr(i, lit(k)).cast("binary")), 1, 16)))
-        .otherwise(array()))
-  }
-
   /** Lowercased, punctuation-stripped, whitespace-collapsed text — the
     * canonical form for exact-after-normalization dedup. */
   def normText(text: Column): Column =

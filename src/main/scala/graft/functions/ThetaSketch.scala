@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * At 100 TB: each of the ~10⁵ input partitions folds its rows into a
   * 32 KiB buffer map-side; only sketches cross the shuffle, and a
-  * year-over-year rollup is `theta_union_agg` over stored daily sketches —
+  * year-over-year rollup is `theta_kmv_union_agg` over stored daily sketches —
   * no re-scan of raw data.
   *
   * Wire format (`binary`): int32 k, int32 n, then n int64 hash values in
@@ -183,7 +183,7 @@ case class ThetaSketchAgg(child: Expression, k: Int = ThetaSketch.DefaultK,
     copy(child = c.head)
 }
 
-/** `theta_union_agg(sketch)`: merge a column of sketches into one — the
+/** `theta_kmv_union_agg(sketch)`: merge a column of sketches into one — the
   * rollup path over stored per-day / per-partition sketches. */
 case class ThetaUnionAgg(child: Expression,
                          mutableAggBufferOffset: Int = 0,
@@ -193,8 +193,8 @@ case class ThetaUnionAgg(child: Expression,
   override def children: Seq[Expression] = Seq(child)
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_union_agg requires a binary sketch column")
-  override def prettyName: String = "theta_union_agg"
+    else TypeCheckResult.TypeCheckFailure("theta_kmv_union_agg requires a binary sketch column")
+  override def prettyName: String = "theta_kmv_union_agg"
   // Cap adopted from the merged sketches themselves (min of their k's).
   override def bufferK: Int = Int.MaxValue
 
@@ -228,14 +228,14 @@ case class ThetaEstimate(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `theta_union(a, b)`: sketch of A ∪ B (k = min of the operands'). */
+/** `theta_kmv_union(a, b)`: sketch of A ∪ B (k = min of the operands'). */
 case class ThetaUnion(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_union requires two binary sketches")
+    else TypeCheckResult.TypeCheckFailure("theta_kmv_union requires two binary sketches")
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "theta_union"
+  override def prettyName: String = "theta_kmv_union"
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val (ka, aa) = ThetaSketch.decode(a.asInstanceOf[Array[Byte]])
     val (kb, bb) = ThetaSketch.decode(b.asInstanceOf[Array[Byte]])

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -358,15 +357,14 @@ object Dedup {
     // are per-document functions of the corpus, so for file-backed sources
     // they persist as fingerprint-keyed IndexCache artifacts (build once
     // per corpus, serve every later run — the tfidf_terms/sparse_postings
-    // lifecycle). Without a cache key (in-memory frames) or with the cache
-    // disabled, the original localCheckpoint staging applies — the 100×
-    // smoke needs the build's shuffle scratch to retire with its job
-    // either way (a persisted write retires it the same way a checkpoint
-    // does).
+    // lifecycle). Without a cache key (in-memory frames) the original
+    // localCheckpoint staging applies — the 100× smoke needs the build's
+    // shuffle scratch to retire with its job either way (a persisted write
+    // retires it the same way a checkpoint does).
     def staged(kindSuffix: String, params: JaccardCacheKey => String)(
         built: => DataFrame): DataFrame =
       cache match {
-        case Some(key) if !IndexCache.disabled =>
+        case Some(key) =>
           IndexCache.cachedFrame(sess, s"${key.kind}_$kindSuffix",
             params(key), key.fp)(built)
         case _ => built.localCheckpoint()
@@ -500,7 +498,7 @@ object Dedup {
     // cannot change the verified output. In-memory frames keep the lazy
     // single-job flow.
     val candS = cache match {
-      case Some(key) if !IndexCache.disabled =>
+      case Some(key) =>
         IndexCache.cachedFrame(sess, s"${key.kind}_cands",
           s"${key.shingleParams}|${key.prefixParams}", key.fp)(cand)
       case _ => cand
@@ -600,7 +598,7 @@ object Dedup {
     // `ngramJaccardPairs` keeps its exact verify live over served
     // candidates — so serving here hides no unexercised code path.
     key match {
-      case Some(kk) if !IndexCache.disabled =>
+      case Some(kk) =>
         IndexCache.cachedFrame(docs.sparkSession, s"char${k}_pairs",
           s"k${k}d${maxDiff}t$threshold", kk.fp)(raw)
       case _ => raw
@@ -685,7 +683,7 @@ object Dedup {
       .select(col("doc_id"), substring(col("norm"), 1, prefixLen).as("p"),
         length(col("norm")).cast("long").as("ln"))
     val n =
-      if (docs.inputFiles.isEmpty || IndexCache.disabled)
+      if (docs.inputFiles.isEmpty)
         swapCachedIn(lastEdit, nBuilt)
       else {
         // File-backed: the regexp pass reads through the persisted
@@ -790,38 +788,11 @@ object Dedup {
 
   // ------------- incremental dedup against an indexed corpus -------------
 
-  /** Content fingerprint of a documents table — order-insensitive xor of
-    * per-row (doc_id, text) hashes + row count, one cheap aggregate. Keys
-    * the persisted LSH index's staleness check (same contract as the IVF
-    * index's [[Similarity]] fingerprint: a rebuilt table at the same path
-    * can never be probed against a stale index silently).
-    *
-    * Memoized behind a METADATA check exactly like Similarity.contentFp:
-    * if the plan (semantic hash) and the input files' (path, size, mtime)
-    * listing are unchanged, the content cannot have changed and the
-    * cached fingerprint returns without a job — the listing-level
-    * staleness contract an object store's etag gives a production index
-    * service. Non-file sources always recompute. */
-  private val docFpCache = new ConcurrentHashMap[String, String]()
-  private[graft] def docFp(docs: DataFrame): String = {
-    val files = docs.inputFiles.sorted
-    val listingKey =
-      if (files.isEmpty) ""
-      else {
-        val listing = files.map { u =>
-          val f = new java.io.File(new java.net.URI(u).getPath)
-          s"${f.getPath}:${f.length}:${f.lastModified}"
-        }.mkString(",")
-        s"${docs.queryExecution.analyzed.semanticHash()}|$listing"
-      }
-    def compute: String = {
-      val r = docs.select(xxhash64(col("doc_id"), col("text")).as("h"))
-        .agg(expr("bit_xor(h)").as("x"), count(lit(1)).as("n")).first()
-      s"${r.getLong(0)}|${r.getLong(1)}"
-    }
-    if (listingKey.isEmpty) compute
-    else docFpCache.computeIfAbsent(listingKey, _ => compute)
-  }
+  /** Content fingerprint of a documents table over (doc_id, text)
+    * ([[IndexCache.tableFp]]). Keys the per-document index artifacts and
+    * the persisted LSH index's staleness check. */
+  private[graft] def docFp(docs: DataFrame): String =
+    IndexCache.tableFp(docs, Seq("doc_id", "text"))
 
   /** Persist the HISTORICAL corpus's LSH dedup index as a parquet table
     * artifact: one row per doc — (doc_id, shingle set, band digests) —

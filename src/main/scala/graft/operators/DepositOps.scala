@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
   * (the analog of the reference's Kafka partition assignment, SURVEY §1.5).
   *
   * Reference constants: rolling window 120 s, threshold 10,000 with `>=`
-  * (/root/reference/detector/detector.go:16-17,44).
+  * (/root/reference/detector/detector.go:16-17,44), defined once in
+  * [[graft.streaming.DetectorLogic]].
   */
 object DepositOps {
-  val RollingPeriodSec = 120L
-  val MaxAmount       = 10000.0
+  val RollingPeriodSec: Long = graft.streaming.DetectorLogic.RollingPeriodSec
+  val MaxAmount: Double      = graft.streaming.DetectorLogic.MaxAmount
 
   /** O1 — ingest + validate + route (/root/reference/service/service.go:69-113).
     * JSON body parse ≈ parquet scan; the `amount <= 0` reject (:87-91) is the

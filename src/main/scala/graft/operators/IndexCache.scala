@@ -7,12 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Disk read-through cache for derived index artifacts — the shared
   * build-once/serve-many layer behind every trained or encoded table the
   * engine derives from a source corpus: IVF centroid models, PQ codebooks,
-  * per-vector cell/code assignments, sparse-retrieval postings.
+  * per-vector cell/code assignments, sparse-retrieval postings, and the
+  * named IVF/LSH indexes.
+  *
+  * It is the one owner of artifact identity: one content fingerprint
+  * ([[tableFp]]), one directory-listing signature ([[dirSig]]) and one
+  * [[root]] for every persisted index.
   *
   * Contract:
   *  - an artifact is keyed by (kind, params, source-content fingerprint);
   *    the fingerprint is IN the path, so a changed source can never serve
   *    a stale artifact — staleness is "the path does not exist";
+  *  - a named index ([[namedIndex]]) has a fixed path and records its
+  *    source fingerprint inside; its freshness probe compares that record
+  *    with the live source on every resolve;
   *  - the root is DETERMINISTIC per machine (overridable via
   *    SPARK_GRAFT_INDEX_ROOT), so a fresh process rediscovers artifacts a
   *    previous build step wrote — training/encoding is a build step, reads
@@ -43,25 +51,19 @@ object IndexCache {
     * simply invisible and get rebuilt. */
   val FormatVersion = 2
 
-  /** User-scoped deterministic /tmp root for an artifact family — the ONE
-    * derivation every persisted-index root shares (this cache, the ANN
-    * and LSH index roots, and their tests), so the scoping scheme can't
-    * silently fork between production and test code. */
-  def userScopedRoot(prefix: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-      sanitize(System.getProperty("user.name", "anon"))
+  /** The one deterministic root of every persisted index: the
+    * fingerprint-keyed artifacts of [[cachedFrame]] and
+    * [[cachedModelArtifact]] and the named indexes of [[namedIndex]].
+    * `SPARK_GRAFT_INDEX_ROOT` when set, else a per-OS-user directory under
+    * `java.io.tmpdir`, so shared machines don't collide on a world-shared
+    * /tmp path. */
+  lazy val root: String = {
+    val p = sys.env.getOrElse("SPARK_GRAFT_INDEX_ROOT",
+      s"${System.getProperty("java.io.tmpdir")}/graft_index_cache_" +
+        sanitize(System.getProperty("user.name", "anon")))
     new java.io.File(p).mkdirs()
     p
   }
-
-  /** Deterministic artifact root (see class doc). Scoped per OS user so
-    * shared machines don't collide on a world-shared /tmp path; override
-    * entirely via SPARK_GRAFT_INDEX_ROOT in multi-tenant environments. */
-  lazy val root: String =
-    sys.env.get("SPARK_GRAFT_INDEX_ROOT") match {
-      case Some(p) => new java.io.File(p).mkdirs(); p
-      case None    => userScopedRoot("graft_index_cache")
-    }
 
   // ------------------------------ forensics ------------------------------
 
@@ -140,40 +142,6 @@ object IndexCache {
 
   private val buildLocks = new ConcurrentHashMap[String, Object]()
 
-  /** Order-insensitive content fingerprint of an arbitrary FILE-BACKED
-    * frame over the named key columns — the generic form of Dedup.docFp
-    * for non-document sources (fact tables feeding mined artifacts).
-    * xor + decimal-space sum + count over xxhash64(keyCols): collision
-    * needs a simultaneous break of two independent folds; the decimal sum
-    * is ANSI-overflow-safe; the empty frame is a stable "0|0|0". Memoized
-    * behind the same (plan semantic hash, file listing) check as docFp —
-    * unchanged files cost no job after the first call per process.
-    * Non-file frames always recompute. */
-  private val tableFpCache = new ConcurrentHashMap[String, String]()
-  def tableFp(df: DataFrame, keyCols: Seq[String]): String = {
-    import org.apache.spark.sql.functions._
-    val files = df.inputFiles.sorted
-    val listingKey =
-      if (files.isEmpty) ""
-      else {
-        val listing = files.map { u =>
-          val f = new java.io.File(new java.net.URI(u).getPath)
-          s"${f.getPath}:${f.length}:${f.lastModified}"
-        }.mkString(",")
-        s"${df.queryExecution.analyzed.semanticHash()}|$listing"
-      }
-    def compute: String = {
-      val r = df.select(xxhash64(keyCols.map(col): _*).as("h"))
-        .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("x"),
-          coalesce(expr("sum(cast(h as decimal(38,0)))"),
-            lit(java.math.BigDecimal.ZERO)).as("s"),
-          count(lit(1)).as("n")).first()
-      s"${r.getLong(0)}|${r.getDecimal(1).toBigInteger}|${r.getLong(2)}"
-    }
-    if (listingKey.isEmpty) compute
-    else tableFpCache.computeIfAbsent(listingKey, _ => compute)
-  }
-
   // ------------------- driver-side artifact-read memos -------------------
   //
   // Every spark.read.parquet costs a fresh file listing plus a one-task
@@ -188,10 +156,10 @@ object IndexCache {
   // out of the bounded LRU. This is exactly the footer/metadata cache a
   // production table format (Delta/Iceberg snapshot pinning) gives reads.
 
-  /** Listing signature of a local artifact directory: sorted
-    * name:length:mtime over its files. Pure driver-side metadata — the
-    * staleness anchor for the memos (same contract as [[tableFp]]'s
-    * listing check). */
+  /** Listing signature of a local directory: sorted name:length:mtime
+    * over its files. Pure driver-side metadata — the staleness anchor for
+    * the memos below (same contract as [[tableFp]]'s listing check) and
+    * for the stream queries' materialized outputs, whose feed it signs. */
   def dirSig(path: String): String = {
     val kids = new java.io.File(path).listFiles()
     if (kids == null) "missing"
@@ -258,13 +226,59 @@ object IndexCache {
   def memoByListing[T <: AnyRef](tag: String, path: String)(compute: => T): T =
     memoized(valueMemo, (tag, path, dirSig(path)))(compute).asInstanceOf[T]
 
-  /** Kill-switch: `SPARK_GRAFT_INDEX_DISABLE=1` bypasses the artifact
-    * layer entirely — build plans run inline, nothing is persisted or
-    * read. For measuring the from-scratch path (scale smokes of index
-    * BUILD cost) and for hosts with no scratch disk. Results are
-    * identical either way; only the lifecycle changes. */
-  private[graft] def disabled: Boolean =
-    sys.env.get("SPARK_GRAFT_INDEX_DISABLE").contains("1")
+  // ------------------------- content fingerprint -------------------------
+
+  /** The content fingerprint every persisted index is keyed or checked by:
+    * order-insensitive xor + decimal-space sum + count over
+    * xxhash64(keyCols). The xor alone cancels paired duplicates ({A,A,B}
+    * ≡ {C,C,B}); the sum does not, so a multiset collision needs a
+    * simultaneous break of two independent folds. The decimal sum is
+    * ANSI-overflow-safe, and the empty frame is a stable "0|0|0".
+    *
+    * The aggregate is one job, memoized behind a METADATA check for
+    * FILE-BACKED frames: if the key columns, the plan (semantic hash) and
+    * its input files' (path, size, mtime) listing are unchanged, the
+    * content cannot have changed and the memoized value returns without a
+    * job — the etag-style staleness contract of [[dirSig]]. Non-file
+    * frames always recompute. */
+  private val fpMemo = boundedLru[(Seq[String], Int, String), String](512)
+  def tableFp(df: DataFrame, keyCols: Seq[String]): String = {
+    import org.apache.spark.sql.functions._
+    def compute: String = {
+      val r = df.select(xxhash64(keyCols.map(col): _*).as("h"))
+        .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("x"),
+          coalesce(expr("sum(cast(h as decimal(38,0)))"),
+            lit(java.math.BigDecimal.ZERO)).as("s"),
+          count(lit(1)).as("n")).first()
+      s"${r.getLong(0)}|${r.getDecimal(1).toBigInteger}|${r.getLong(2)}"
+    }
+    val files = df.inputFiles.sorted
+    if (files.isEmpty) compute
+    else {
+      val listing = files.map { u =>
+        val f = new java.io.File(new java.net.URI(u).getPath)
+        s"${f.getPath}:${f.length}:${f.lastModified}"
+      }.mkString(",")
+      memoized(fpMemo, (keyCols, df.queryExecution.analyzed.semanticHash(), listing))(compute)
+    }
+  }
+
+  // ---------------------------- named indexes ----------------------------
+
+  /** Resolve the NAMED index `name`: a directory under [[root]] that its
+    * build step rewrites in place and that records its source fingerprint
+    * inside (the IVF and LSH index lifecycles). `fresh(path)` is the
+    * read-through probe — the recorded fingerprint matches the live
+    * source — and runs on every call; `build(path)` runs only when it
+    * fails. Both run under the path's build lock, so concurrent first
+    * calls build once. */
+  def namedIndex(name: String)(fresh: String => Boolean)(build: String => Unit): String = {
+    val p = s"$root/${sanitize(name)}"
+    buildLocks.computeIfAbsent(p, _ => new Object).synchronized {
+      if (!fresh(p)) build(p)
+    }
+    p
+  }
 
   /** Read-through resolve: return a DataFrame scanning the persisted
     * artifact for (kind, params, fp), building and persisting it first if
@@ -274,7 +288,6 @@ object IndexCache {
     * cross-process write races benign. */
   def cachedFrame(spark: SparkSession, kind: String, params: String,
                   fp: String)(build: => DataFrame): DataFrame = {
-    if (disabled) { record(s"$kind.inline"); return build }
     val p = path(kind, params, fp)
     buildLocks.computeIfAbsent(p, _ => new Object).synchronized {
       if (complete(p)) record(s"$kind.disk")
@@ -307,7 +320,6 @@ object IndexCache {
     * (callers record `<kind>.mem` for their in-JVM LRU hits). */
   def cachedModelArtifact[T](kind: String, params: String, fp: String)(
       read: String => T, write: (String, T) => Unit)(build: => T): T = {
-    if (disabled) { record(s"$kind.inline"); return build }
     val p = path(s"model_$kind", params, fp)
     buildLocks.computeIfAbsent(p, _ => new Object).synchronized {
       if (complete(p)) { record(s"$kind.disk"); read(p) }

@@ -97,22 +97,6 @@ object Relational {
     fact.where(call_function("bloom_might_contain", lit(bytes), factKey))
   }
 
-  /** Content fingerprint of a dim-side key set — keys the persisted
-    * filter artifact. Order-insensitive xxhash64 SUM (wrapping) + xor +
-    * count: xor alone cancels paired duplicates ({A,A,B} ≡ {C,C,B}), the
-    * sum does not, and carrying both makes multiset collisions require a
-    * simultaneous break of two independent folds. coalesce guards the
-    * empty dim (bit_xor over 0 rows is NULL) so the fingerprint is a
-    * stable "0|0|0" rather than an NPE. */
-  private def keyFp(df: DataFrame, key: Column): String = {
-    val r = df.select(xxhash64(key).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("x"),
-        coalesce(expr("sum(cast(h as decimal(38,0)))"),
-          lit(java.math.BigDecimal.ZERO)).as("s"),
-        count(lit(1)).as("n")).first()
-    s"${r.getLong(0)}|${r.getDecimal(1).toBigInteger}|${r.getLong(2)}"
-  }
-
   /** [[bloomSemiJoinReduce]] with the filter as a PERSISTED read-through
     * artifact ([[IndexCache]], keyed by (bits, k, dim-key fingerprint)) —
     * the relational side of the engine's artifact lifecycle: a runtime
@@ -126,7 +110,7 @@ object Relational {
                           expectedKeys: Long, fpp: Double = 0.01): DataFrame = {
     val (numBits, k) = graft.functions.Bloom.sizeFor(expectedKeys, fpp)
     val bf = IndexCache.cachedFrame(fact.sparkSession, "bloom_filter",
-        s"$numBits|$k", keyFp(dim, dimKey)) {
+        s"$numBits|$k", IndexCache.tableFp(dim.select(dimKey.as("k")), Seq("k"))) {
       dim.select(call_function("bloom_agg", dimKey, lit(numBits), lit(k)).as("bf"))
     }
     val bytes = bf.head().getAs[Array[Byte]](0)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -382,38 +381,13 @@ object Similarity {
   /** One IVF centroid / PQ code: id + vector. */
   final case class Centroid(cid: Long, cv: Array[Double])
 
-  /** Content fingerprint of the embedding table — order-insensitive xor of
-    * per-row hashes + row count; one cheap aggregate pass. Keys the model
-    * cache and the persisted-index staleness check, so re-written files at
-    * the same path can never serve a stale model.
-    *
-    * The pass itself is memoized behind a METADATA check: if the plan
-    * (semantic hash) and its input files' (path, size, mtime) listing are
-    * unchanged, the content cannot have changed and the cached fingerprint
-    * is returned without a job — the same listing-level staleness contract
-    * an object store's etag check gives a production index service. A
-    * non-file source (empty `inputFiles`) always recomputes. */
-  private val fpCache = new ConcurrentHashMap[String, String]()
-
-  private def contentFp(emb: DataFrame): String = {
-    val files = emb.inputFiles.sorted
-    val listingKey =
-      if (files.isEmpty) ""
-      else {
-        val listing = files.map { u =>
-          val f = new java.io.File(new java.net.URI(u).getPath)
-          s"${f.getPath}:${f.length}:${f.lastModified}"
-        }.mkString(",")
-        s"${emb.queryExecution.analyzed.semanticHash()}|$listing"
-      }
-    def compute: String = {
-      val fp = emb.select(xxhash64(col("vec_id"), col("embedding")).as("h"))
-        .agg(expr("bit_xor(h)").as("x"), count(lit(1)).as("n")).first()
-      s"${fp.getLong(0)}|${fp.getLong(1)}"
-    }
-    if (listingKey.isEmpty) compute
-    else fpCache.computeIfAbsent(listingKey, _ => compute)
-  }
+  /** Content fingerprint of the embedding table over (vec_id, embedding)
+    * ([[IndexCache.tableFp]]). Keys the model cache and the persisted-index
+    * staleness check, so re-written files at the same path can never
+    * serve a stale model; query-layer artifact keys that span both base
+    * tables (e.g. the hybrid sparse+dense fusion) use it too. */
+  private[graft] def corpusFp(emb: DataFrame): String =
+    IndexCache.tableFp(emb, Seq("vec_id", "embedding"))
 
   /** Trained-model cache: bounded LRU (a JVM serves a handful of live
     * indexes, not an unbounded history), keyed by CONTENT fingerprint +
@@ -443,7 +417,7 @@ object Similarity {
                                        read: String => T,
                                        write: (String, T) => Unit)
                                       (train: => T): T = {
-    val fp = contentFp(emb)
+    val fp = corpusFp(emb)
     val key = s"$kind|$fp|$params"
     val hit = trainedModels.get(key)
     if (hit != null) {
@@ -577,7 +551,7 @@ object Similarity {
                     path: String): Unit = {
     val cents = trainIvfCentroidsArray(emb, nCells, iters)
     centroidDf(emb.sparkSession, cents)
-      .withColumn("fingerprint", lit(contentFp(emb)))
+      .withColumn("fingerprint", lit(corpusFp(emb)))
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
@@ -609,7 +583,7 @@ object Similarity {
   private def cellsFor(emb: DataFrame, cents: Array[Centroid],
                        model: DataFrame): DataFrame =
     IndexCache.cachedFrame(emb.sparkSession, "ivf_cells",
-        centsDigest(cents.toSeq), contentFp(emb)) {
+        centsDigest(cents.toSeq), corpusFp(emb)) {
       cellsOf(prep(emb), model)
     }
 
@@ -623,7 +597,7 @@ object Similarity {
                         role: String = ""): (Array[Centroid], DataFrame) = {
     val spark = emb.sparkSession
     val (cents, recordedFp) = readIvfIndex(spark, indexPath)
-    val liveFp = contentFp(emb)
+    val liveFp = corpusFp(emb)
     if (recordedFp != liveFp)
       throw new IllegalStateException(
         s"IVF index at $indexPath is stale$role (recorded $recordedFp, " +
@@ -682,7 +656,7 @@ object Similarity {
     new java.io.File(path).exists() && {
       try {
         val (_, fp) = readIvfIndex(spark, path)
-        fp.nonEmpty && fp == contentFp(emb)
+        fp.nonEmpty && fp == corpusFp(emb)
       } catch { case scala.util.control.NonFatal(_) => false }
     }
 
@@ -749,20 +723,9 @@ object Similarity {
     // The labeled artifact's content depends on the LABEL column too, not
     // just (vec_id, embedding): a label-only metadata update must miss the
     // cache, or filtered ANN silently serves results under the old labels.
-    // Same two-fold discipline as Relational.keyFp / IndexCache.tableFp:
-    // bit_xor + decimal sum are independent folds (a paired-duplicate row
-    // set must break both to collide), and coalesce makes the empty-table
-    // fingerprint a stable "0_0_0" instead of an NPE on getDecimal.
-    val labFp = {
-      val r = emb.select(xxhash64(col("vec_id"), col("label")).as("h"))
-        .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("x"),
-          coalesce(expr("sum(cast(h as decimal(38,0)))"),
-            lit(java.math.BigDecimal.ZERO)).as("s"),
-          count(lit(1)).as("n")).first()
-      s"${r.getLong(0)}_${r.getDecimal(1).toBigInteger}_${r.getLong(2)}"
-    }
+    val labFp = IndexCache.tableFp(emb, Seq("vec_id", "label"))
     val cells = IndexCache.cachedFrame(spark, "ivf_cells_lab",
-        s"${centsDigest(cents.toSeq)}_$labFp", contentFp(emb)) {
+        s"${centsDigest(cents.toSeq)}_$labFp", corpusFp(emb)) {
       cellsOf(prep(emb), model)
         .join(emb.select(col("vec_id").as("nid"), col("label").as("nlab")), "nid")
     }
@@ -872,11 +835,6 @@ object Similarity {
         round(count(col("hit")) / lit(k.toDouble), 4).as("recall"))
   }
 
-  /** The corpus content fingerprint, for query-layer artifact keys that
-    * span BOTH base tables (e.g. the hybrid sparse+dense fusion, keyed by
-    * documents fp × embeddings fp). Same memoized listing-level staleness
-    * contract as every index read. */
-  private[graft] def corpusFp(emb: DataFrame): String = contentFp(emb)
 
   /** Read-through artifact for a derived cross-modal QUERY table (the
     * synthetic image-side embeddings): the queries are a pure per-row
@@ -888,7 +846,7 @@ object Similarity {
   def crossModalQueryIndex(emb: DataFrame, params: String)
                           (build: => DataFrame): DataFrame =
     IndexCache.cachedFrame(emb.sparkSession, "xmodal_queries", params,
-      contentFp(emb))(build)
+      corpusFp(emb))(build)
 
   /** Read-through artifact for the exact cross-modal GROUND TRUTH — the
     * brute-force (qid, rank, nid, cosine) top-k that recall/sweep/tuned
@@ -902,7 +860,7 @@ object Similarity {
                            (queries: => DataFrame): DataFrame = {
     val wide = emb.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     IndexCache.cachedFrame(emb.sparkSession, "xmodal_gt", s"$params-k$k",
-      contentFp(emb))(
+      corpusFp(emb))(
       crossModalExactTopK(emb.repartition(wide), queries, k))
   }
 
@@ -921,7 +879,7 @@ object Similarity {
     require(metric == "cos" || metric == "l2", s"unknown metric $metric")
     val wide = emb.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     IndexCache.cachedFrame(emb.sparkSession, "exact_gt",
-      s"$params-$metric-k$k", contentFp(emb))(
+      s"$params-$metric-k$k", corpusFp(emb))(
       if (metric == "l2") bruteForceL2TopK(emb.repartition(wide), queries, k)
       else bruteForceTopK(emb.repartition(wide), queries, k))
   }
@@ -957,13 +915,13 @@ object Similarity {
                       oldPath: String, newPath: String): Unit = {
     val spark = history.sparkSession
     val (cents, recordedFp) = readIvfIndex(spark, oldPath)
-    val histFp = contentFp(history)
+    val histFp = corpusFp(history)
     if (recordedFp != histFp)
       throw new IllegalStateException(
         s"IVF index at $oldPath is stale vs the history corpus " +
           s"(recorded $recordedFp, live $histFp); rebuild with writeIvfIndex")
     val model = centroidDf(spark, cents)
-    val mergedFp = contentFp(history.unionByName(batch))
+    val mergedFp = corpusFp(history.unionByName(batch))
     val histCells = IndexCache.cachedFrame(spark, "ivf_cells",
         centsDigest(cents.toSeq), histFp) { cellsOf(prep(history), model) }
     // Persist the merged inverted file under the merged fingerprint; the
@@ -1085,7 +1043,7 @@ object Similarity {
     // persisted read-through: serving scans the code table, it does not
     // re-encode the corpus per query.
     val codes = IndexCache.cachedFrame(emb.sparkSession, "pq_codes",
-        s"$m|$nCodes|$iters", contentFp(emb)) {
+        s"$m|$nCodes|$iters", corpusFp(emb)) {
       assignCodes(sv, cbDf)
         .select(col("vec_id").as("nid"), col("sub"), col("mc.cid").as("cid"))
     }
@@ -1169,7 +1127,7 @@ object Similarity {
         slice(col("v"), col("sub") * subLen + 1, subLen).as("sv"))
     val cbDf = pqCodebookDf(spark, trainPqCodebooksArray(emb, sv, m, nCodes, pqIters))
     val codes = IndexCache.cachedFrame(spark, "ivfpq_codes",
-        s"$nCells|$ivfIters|$m|$nCodes|$pqIters", contentFp(emb)) {
+        s"$nCells|$ivfIters|$m|$nCodes|$pqIters", corpusFp(emb)) {
       val cells = assignNearest(e, model, Seq.empty)
         .select(col("vec_id").as("nid"), col("mc.cid").as("cell"))
       assignCodes(sv, cbDf)
@@ -1248,7 +1206,7 @@ object Similarity {
     // Residual code table + coarse cell, encoded once and persisted
     // read-through (the stored residual IVF-PQ index).
     val codes = IndexCache.cachedFrame(spark, "ivfpqres_codes",
-        s"$nCells|$ivfIters|$m|$nCodes|$pqIters", contentFp(emb)) {
+        s"$nCells|$ivfIters|$m|$nCodes|$pqIters", corpusFp(emb)) {
       assignCodes(sv, cbDf)
         .select(col("vec_id").as("nid"), col("sub"), col("mc.cid").as("cid"))
         .join(cells.select(col("vec_id").as("nid"), col("cell")), "nid")

@@ -132,19 +132,11 @@ object DetectorFoldStrategy extends SparkStrategy {
 
 object DetectorFold {
   /** Build the operator over a deposit projection. `deposits` must carry
-    * (wallet_id, tsec, seq, amount); the strategy registers idempotently on
-    * the session (the deploy-time equivalent is
-    * `SparkSessionExtensions.injectPlannerStrategy`). */
+    * (wallet_id, tsec, seq, amount). The session plans it through
+    * [[DetectorFoldStrategy]], which [[GraftExtensions]] injects (and
+    * [[graft.GraftSession.adopt]] adds to a session built elsewhere). */
   def apply(spark: SparkSession, deposits: DataFrame,
             windowSec: Long, threshold: Double): DataFrame = {
-    // Synchronized check-then-append: extraStrategies is shared session
-    // state, and two concurrent first calls would otherwise both pass the
-    // contains() check and register the strategy twice.
-    DetectorFold.synchronized {
-      if (!spark.experimental.extraStrategies.contains(DetectorFoldStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ DetectorFoldStrategy
-    }
     val child = deposits.select(
       col("wallet_id").cast("long").as("wallet_id"),
       col("tsec").cast("long").as("tsec"),

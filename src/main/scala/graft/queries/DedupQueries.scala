@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.TextFunctions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexCache}
 import graft.sources.Tables
 
 /** Deduplication operators over `documents` / `embeddings` (the
@@ -51,34 +50,17 @@ object DedupQueries {
     s"WITH $incrementalCtes " +
       "SELECT new_id, dup_of, jaccard FROM v WHERE jaccard >= 0.5 ORDER BY new_id, dup_of"
 
-  // DETERMINISTIC root, kept across processes: a fresh JVM rediscovers
-  // what an earlier build step wrote, and the per-artifact fingerprint
-  // staleness check makes stale reuse impossible (no cleanup hook needed).
-  private lazy val idxRoot: String =
-    graft.operators.IndexCache.userScopedRoot("graft_lshidx")
-
   /** BUILD step of the LSH index lifecycle: shingle + sign the historical
-    * corpus once per (JVM, sf dir) and persist the index table; every
-    * serve probes the artifact (and staleness-checks its fingerprint).
-    * The artifact path is DETERMINISTIC per sf dir and the build is
-    * read-through: a cleared/evicted path slot re-probes the artifact's
-    * recorded fingerprint and only re-shingles the lake when the artifact
-    * is absent or stale — a cold cache costs a metadata read, not a
-    * corpus rebuild. */
-  private val lshIndexCache = new ConcurrentHashMap[String, String]()
-  private[queries] def lshIndexFor(s: SparkSession, d: String): String =
-    lshIndexCache.computeIfAbsent(d, { _ =>
-      val path = s"$idxRoot/lsh_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val hist = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
-      if (!Dedup.lshIndexFresh(s, path, hist))
-        Dedup.writeLshIndex(hist, path)
-      path
-    })
-
-  /** Test hook: drop the in-memory path slots (simulates driver cache
-    * eviction; the artifacts stay on disk for read-through). */
-  def invalidateIndexPathCache(): Unit = {
-    lshIndexCache.clear(); lshCompactCache.clear()
+    * corpus once per sf dir and persist the index table as a named index
+    * under [[IndexCache.root]]; every serve probes the artifact (and
+    * staleness-checks its fingerprint). Each call runs the read-through
+    * probe (the artifact's recorded fingerprint against the live history
+    * — driver metadata once memoized) and re-shingles the lake only when
+    * the artifact is absent or stale. */
+  private[queries] def lshIndexFor(s: SparkSession, d: String): String = {
+    val hist = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
+    IndexCache.namedIndex(s"lsh_$d")(Dedup.lshIndexFresh(s, _, hist))(
+      Dedup.writeLshIndex(hist, _))
   }
 
   /** COMPACTION step closing the text-dedup ingest loop: a seed index
@@ -87,22 +69,17 @@ object DedupQueries {
     * only the batch shingled+signed), producing an artifact whose
     * recorded fingerprint covers the full % 5 ≠ 0 history — which the
     * next batch (% 5 = 0) then probes. */
-  private val lshCompactCache = new ConcurrentHashMap[String, String]()
-  private def lshCompactedIndexFor(s: SparkSession, d: String): String =
-    lshCompactCache.computeIfAbsent(d, { _ =>
-      val path = s"$idxRoot/lshc_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val docs = Tables.documents(s, d)
-      val histFull = docs.filter(col("doc_id") % 5 =!= 0)
-      if (!Dedup.lshIndexFresh(s, path, histFull)) {
-        val hist0 = docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4)
-        val seed = path + "_seed"
-        if (!Dedup.lshIndexFresh(s, seed, hist0))
-          Dedup.writeLshIndex(hist0, seed)
-        Dedup.compactLshIndex(hist0, docs.filter(col("doc_id") % 5 === 4),
-          seed, path)
-      }
-      path
-    })
+  private def lshCompactedIndexFor(s: SparkSession, d: String): String = {
+    val docs = Tables.documents(s, d)
+    val histFull = docs.filter(col("doc_id") % 5 =!= 0)
+    IndexCache.namedIndex(s"lshc_$d")(Dedup.lshIndexFresh(s, _, histFull)) { path =>
+      val hist0 = docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4)
+      val seed = IndexCache.namedIndex(s"lshc_${d}_seed")(
+        Dedup.lshIndexFresh(s, _, hist0))(Dedup.writeLshIndex(hist0, _))
+      Dedup.compactLshIndex(hist0, docs.filter(col("doc_id") % 5 === 4),
+        seed, path)
+    }
+  }
 
   /** Shared URL fixture + canonicalization oracle CTEs through `canon`
     * (doc_id, canonical) — see the dedup_url registration for the
@@ -464,8 +441,8 @@ object DedupQueries {
       // live representative of the two-star iterations); keyed by the
       // same corpus fingerprint the pairs artifact uses, so a changed
       // corpus rebuilds both.
-      val comp = graft.operators.IndexCache.cachedFrame(s, "lsh_comps",
-          "k12b4r3t0.5", graft.operators.Dedup.docFp(docs)) {
+      val comp = IndexCache.cachedFrame(s, "lsh_comps",
+          "k12b4r3t0.5", Dedup.docFp(docs)) {
         Dedup.connectedComponents(pairs)
           .select(col("id").as("doc_id"), col("comp"))
       }

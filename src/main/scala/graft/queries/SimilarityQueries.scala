@@ -1,11 +1,10 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.operators.Similarity
+import graft.operators.{IndexCache, Similarity}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table: exact brute-force cosine
@@ -15,63 +14,37 @@ import graft.sources.Tables
   */
 object SimilarityQueries {
 
-  /** DETERMINISTIC root for persisted ANN index artifacts (kept across
-    * processes — a fresh JVM rediscovers what an earlier build step wrote;
-    * the per-artifact fingerprint staleness check makes stale reuse
-    * impossible, so the dir needs no cleanup hook). */
-  private lazy val idxRoot: String =
-    graft.operators.IndexCache.userScopedRoot("graft_annidx")
-
-  /** BUILD step of the IVF index lifecycle: train once per (JVM, sf dir)
-    * and persist the centroid table as a parquet artifact; every serve
-    * reads the artifact (and staleness-checks its recorded fingerprint).
-    * The artifact path is DETERMINISTIC per sf dir and the build is
-    * read-through: a cleared/evicted path slot re-probes the artifact's
-    * recorded fingerprint and only retrains when the artifact is absent
-    * or stale — a cold cache costs a file read, not a k-means run. */
-  private val ivfIndexCache = new ConcurrentHashMap[String, String]()
+  /** BUILD step of the IVF index lifecycle: train once per sf dir and
+    * persist the centroid table as a named parquet index under
+    * [[IndexCache.root]]; every serve reads the artifact (and
+    * staleness-checks its recorded fingerprint). Each call runs the
+    * read-through probe (the artifact's recorded fingerprint against the
+    * live corpus — driver metadata once memoized) and retrains only when
+    * the artifact is absent or stale. */
   private def ivfIndexFor(s: SparkSession, d: String): String =
-    ivfIndexCache.computeIfAbsent(d, { _ =>
-      val path = s"$idxRoot/ivf_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      if (!Similarity.ivfIndexFresh(s, path, emb(s, d)))
-        Similarity.writeIvfIndex(emb(s, d), nCells = 16, iters = 3, path = path)
-      path
-    })
-
-  /** Test hook: drop the in-memory path slots (simulates driver cache
-    * eviction; the artifacts stay on disk for read-through). */
-  def invalidateIndexPathCache(): Unit = {
-    ivfIndexCache.clear(); ivfHistIndexCache.clear(); ivfCompactCache.clear()
-  }
+    IndexCache.namedIndex(s"ivf_$d")(Similarity.ivfIndexFresh(s, _, emb(s, d)))(
+      Similarity.writeIvfIndex(emb(s, d), nCells = 16, iters = 3, _))
 
   /** Build step closing the ingest loop: COMPACT the history index + the
     * batch delta into a merged index artifact (history cells reused from
     * the artifact, only the batch assigned — see
     * [[Similarity.compactIvfIndex]]); serving then probes the merged
     * artifact with zero assignment work. */
-  private val ivfCompactCache = new ConcurrentHashMap[String, String]()
-  private def ivfCompactedIndexFor(s: SparkSession, d: String): String =
-    ivfCompactCache.computeIfAbsent(d, { _ =>
-      val path = s"$idxRoot/ivfc_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val e = emb(s, d)
-      if (!Similarity.ivfIndexFresh(s, path, e))
-        Similarity.compactIvfIndex(e.filter(col("vec_id") % 10 < 8),
-          e.filter(col("vec_id") % 10 >= 8), ivfHistIndexFor(s, d), path)
-      path
-    })
+  private def ivfCompactedIndexFor(s: SparkSession, d: String): String = {
+    val e = emb(s, d)
+    IndexCache.namedIndex(s"ivfc_$d")(Similarity.ivfIndexFresh(s, _, e))(
+      Similarity.compactIvfIndex(e.filter(col("vec_id") % 10 < 8),
+        e.filter(col("vec_id") % 10 >= 8), ivfHistIndexFor(s, d), _))
+  }
 
   /** Build step for the INCREMENTAL-ingest scenario: an index trained on
     * the history subset only (vec_id % 10 < 8) — the state a continuously
     * ingesting deployment is in between centroid refreshes. */
-  private val ivfHistIndexCache = new ConcurrentHashMap[String, String]()
-  private def ivfHistIndexFor(s: SparkSession, d: String): String =
-    ivfHistIndexCache.computeIfAbsent(d, { _ =>
-      val path = s"$idxRoot/ivfh_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val hist = emb(s, d).filter(col("vec_id") % 10 < 8)
-      if (!Similarity.ivfIndexFresh(s, path, hist))
-        Similarity.writeIvfIndex(hist, nCells = 16, iters = 2, path = path)
-      path
-    })
+  private def ivfHistIndexFor(s: SparkSession, d: String): String = {
+    val hist = emb(s, d).filter(col("vec_id") % 10 < 8)
+    IndexCache.namedIndex(s"ivfh_$d")(Similarity.ivfIndexFresh(s, _, hist))(
+      Similarity.writeIvfIndex(hist, nCells = 16, iters = 2, _))
+  }
 
   /** The embeddings table WITHOUT [[Tables.embeddings]]'s parallelism
     * repartition: every ANN kernel here is either followed by its own

@@ -7,7 +7,7 @@ import graft.sources.Tables
 /** Mergeable-sketch queries (SURVEY §7.3 escalation; VERDICT r2 item #9):
   * the KMV theta sketch aggregate ([[graft.functions.ThetaSketchAgg]])
   * exercised end-to-end — per-group sketches rolled up with
-  * `theta_union_agg`, cross-table set algebra with `theta_union` /
+  * `theta_kmv_union_agg`, cross-table set algebra with `theta_kmv_union` /
   * `theta_intersect_estimate`.
   *
   * Oracle pattern per `q_approx_distinct` precedent: sketch estimates are
@@ -22,7 +22,7 @@ object SketchQueries {
   val all: Seq[Q] = Seq(
 
     // Two-table sketch merge: A = custkeys that placed orders (built as
-    // per-priority sketches, merged with theta_union_agg — the stored-
+    // per-priority sketches, merged with theta_kmv_union_agg — the stored-
     // sketch rollup path), B = customers in the BUILDING segment.
     // Union and intersection estimated from the sketches alone; exact
     // values from full recomputation. At 100 TB only 32 KiB sketches
@@ -45,7 +45,7 @@ object SketchQueries {
       val skA = orders
         .groupBy(col("o_orderpriority"))
         .agg(call_function("theta_sketch", col("o_custkey")).as("sk"))
-        .agg(call_function("theta_union_agg", col("sk")).as("sk_a"))
+        .agg(call_function("theta_kmv_union_agg", col("sk")).as("sk_a"))
       val skB = building
         .agg(call_function("theta_sketch", col("c_custkey")).as("sk_b"))
 
@@ -75,7 +75,7 @@ object SketchQueries {
           withinTol(call_function("theta_intersect_estimate", col("sk_a"), col("sk_b")),
             col("exact_inter"), 0.10).as("tol_inter"),
           withinTol(call_function("theta_estimate",
-              call_function("theta_union", col("sk_a"), col("sk_b"))),
+              call_function("theta_kmv_union", col("sk_a"), col("sk_b"))),
             col("exact_union"), 0.05).as("tol_union"))
     },
 
@@ -110,7 +110,7 @@ object SketchQueries {
       val estInter = call_function("theta_intersect_estimate", col("sk_a"), col("sk_b"))
       val estDiff = call_function("theta_estimate", col("sk_a")) - estInter
       val estJacc = estInter / call_function("theta_estimate",
-        call_function("theta_union", col("sk_a"), col("sk_b")))
+        call_function("theta_kmv_union", col("sk_a"), col("sk_b")))
       skA.crossJoin(skB).crossJoin(exactA).crossJoin(exactI).crossJoin(exactU)
         .select((col("a") - col("i")).as("exact_diff"),
           round(col("i") / (col("u") * lit(1.0)), 6).as("exact_jaccard"),

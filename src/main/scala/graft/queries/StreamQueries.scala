@@ -61,7 +61,7 @@ import graft.streaming.{DepositStreams, DetectorLogic}
   *    feed, and MATERIALIZES the output table as parquet under the
   *    [[Workspace]];
   *  - subsequent invocations perform the catch-up check — the feed dir's
-  *    file listing (name+size fingerprint) is compared against the one the
+  *    listing signature ([[IndexCache.dirSig]]) is compared against the one the
   *    materialization consumed, the file-source analog of "no new Kafka
   *    offsets" — and serve straight from the output table. A changed feed
   *    fingerprint re-runs the topology.
@@ -418,16 +418,6 @@ object StreamQueries {
     q.stop()
   }
 
-  /** Feed-dir file listing fingerprint — the file-source analog of Kafka
-    * committed offsets: unchanged listing ⇒ the topology has nothing to
-    * catch up on. Local listing of a handful of files; no data read.
-    */
-  private def feedFingerprint(feed: String): String = {
-    val fs = Option(new java.io.File(feed).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    fs.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(f => s"${f.getName}:${f.length}").sorted.mkString(",")
-  }
-
   /** Registers the stream query `name` over `feed`: it is served from its
     * materialized output table, and `run` (the full topology) runs only
     * when no output exists for the feed's current fingerprint. `order` is
@@ -437,7 +427,7 @@ object StreamQueries {
                    (run: (SparkSession, String, Feed) => DataFrame): Q =
     Q(name, oracle) { (s, d) =>
       val f = feed(s, d)
-      val fp = feedFingerprint(f.path)
+      val fp = IndexCache.dirSig(f.path)
       val key = s"$name|${f.path}"
       val path = Option(outputs.get(key)).filter(_.feedFp == fp).map(_.path)
         .getOrElse {
@@ -1075,7 +1065,7 @@ object StreamQueries {
   private def streamProvenance(s: SparkSession, dir: String, feed: Feed): DataFrame = {
     val hist = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
     val indexPath = DedupQueries.lshIndexFor(s, dir)
-    val digests = graft.operators.IndexCache.cachedFrame(s, "exact_digests",
+    val digests = IndexCache.cachedFrame(s, "exact_digests",
       "md5", graft.operators.Dedup.docFp(hist)) {
       hist.select(md5(col("text").cast("binary")).as("digest")).distinct()
     }

@@ -1,5 +1,6 @@
 package graft.service
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.KafkaTopology
 
@@ -11,9 +12,21 @@ import graft.streaming.KafkaTopology
   * Usage: runMain graft.service.FlagWalletMain --wallet <id> [--remove]
   *        [--brokers host:port]
   * Without --brokers it dry-runs: prints the exact key/value wire record
-  * (JSON codec, see [[KafkaTopology]]) instead of producing.
+  * (proto `FlagEvent` value as hex, see [[KafkaTopology.flagRecords]])
+  * instead of producing.
   */
 object FlagWalletMain {
+
+  /** The flag_wallet record of one manual flag (or unflag, `remove`) of
+    * `wallet`. flag_removed mirrors the reference's -remove flag; a manual
+    * FLAG has no detector window, so rolling_period_start_unix stays 0
+    * (cmd/flag-wallet/main.go:26-33). */
+  def record(spark: SparkSession, wallet: String, remove: Boolean): DataFrame = {
+    import spark.implicits._
+    KafkaTopology.flagRecords(Seq((wallet, remove, 0L))
+      .toDF("walletId", "flagRemoved", "rollingPeriodStartUnix"))
+  }
+
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 1).collect {
       case Array("--wallet", v)  => "wallet" -> v
@@ -25,15 +38,7 @@ object FlagWalletMain {
 
     val spark = graft.GraftSession.local("graft-flag-wallet")
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    // flag_removed mirrors the reference's -remove flag; a manual FLAG has
-    // no detector window, so rolling_period_start_unix stays 0
-    // (cmd/flag-wallet/main.go:26-33).
-    val event = Seq((wallet, remove, 0L))
-      .toDF("walletId", "flag_removed", "rolling_period_start_unix")
-      .select(col("walletId").as("key"),
-        to_json(struct(col("flag_removed"),
-          col("rolling_period_start_unix"))).as("value"))
+    val event = record(spark, wallet, remove)
     opts.get("brokers") match {
       case Some(brokers) =>
         event.write.format("kafka")
@@ -42,7 +47,7 @@ object FlagWalletMain {
           .save()
         println(s"emitted ${if (remove) "unflag" else "flag"} for $wallet")
       case None =>
-        val r = event.collect().head
+        val r = event.select(col("key"), hex(col("value"))).collect().head
         println(s"[dry-run] topic=${KafkaTopology.FlagTopic} " +
           s"key=${r.getString(0)} value=${r.getString(1)}")
     }

@@ -48,30 +48,21 @@ object KafkaTopology {
       .as[TimedDeposit]
   }
 
-  /** O6 sink: detector verdicts → flag_wallet topic, keyed by wallet (the
-    * manual flag CLI, O11, produces to the same topic). Values are proto
-    * `FlagEvent` messages (flagger.proto:15-18). */
-  def flagEventSink(events: Dataset[KeyedFlagEvent], brokers: String,
-                    checkpoint: String): DataStreamWriter[_] = {
-    events
-      .select(col("walletId").as("key"),
-        call_function("proto_encode_flag_event",
-          col("flagRemoved"), col("rollingPeriodStartUnix")).as("value"))
-      .writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", FlagTopic)
-      .option("checkpointLocation", checkpoint)
-  }
+  /** The flag_wallet wire record of each flag event (walletId,
+    * flagRemoved, rollingPeriodStartUnix): key = wallet id, value = proto
+    * `FlagEvent` message (flagger.proto:15-18). The one encoding of the
+    * topic — the detector's sink and the manual flag CLI (O11) both
+    * produce through it, and [[flagEvents]] reads it back. */
+  def flagRecords(events: DataFrame): DataFrame =
+    events.select(col("walletId").as("key"),
+      call_function("proto_encode_flag_event",
+        col("flagRemoved"), col("rollingPeriodStartUnix")).as("value"))
 
-  /** O6 source side of the flagger (flagger.go:62). */
-  def flagEventSource(spark: SparkSession, brokers: String): Dataset[KeyedFlagEvent] = {
-    import spark.implicits._
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", FlagTopic)
-      .load()
+  /** Flag events of flag_wallet records (key, value, offset): the offset
+    * supplies the LWW sequence. */
+  def flagEvents(records: DataFrame): Dataset[KeyedFlagEvent] = {
+    import records.sparkSession.implicits._
+    records
       .select(col("key").cast("string").as("walletId"),
         call_function("proto_decode_flag_event", col("value")).as("e"),
         col("offset").as("seq"))
@@ -80,6 +71,26 @@ object KafkaTopology {
         col("seq"))
       .as[KeyedFlagEvent]
   }
+
+  /** O6 sink: detector verdicts → flag_wallet topic, keyed by wallet (the
+    * manual flag CLI, O11, produces to the same topic). */
+  def flagEventSink(events: Dataset[KeyedFlagEvent], brokers: String,
+                    checkpoint: String): DataStreamWriter[_] = {
+    flagRecords(events.toDF())
+      .writeStream
+      .format("kafka")
+      .option("kafka.bootstrap.servers", brokers)
+      .option("topic", FlagTopic)
+      .option("checkpointLocation", checkpoint)
+  }
+
+  /** O6 source side of the flagger (flagger.go:62). */
+  def flagEventSource(spark: SparkSession, brokers: String): Dataset[KeyedFlagEvent] =
+    flagEvents(spark.readStream
+      .format("kafka")
+      .option("kafka.bootstrap.servers", brokers)
+      .option("subscribe", FlagTopic)
+      .load())
 
   /** The three keyed processors, by their command-line names. */
   val Processors: Seq[String] = Seq("collector", "detector", "flagger")

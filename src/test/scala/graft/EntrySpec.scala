@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{call_function, col}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.DetectorFoldStrategy
 
 /** The entry smoke: entry(spark) must return rows, on the engine's
   * session ([[GraftSession.builder]]) and on a session the caller built
@@ -14,16 +15,28 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
     assert(df.columns.toSeq == Seq("wallet_id", "balance", "above_threshold"))
   }
 
-  test("entry and the native functions run on a plain SparkSession.builder() session") {
+  /** Runs `body` on a new session over the running context, built without
+    * GraftSession's extension or settings, then restores the shared one. */
+  private def onPlainSession(body: SparkSession => Unit): Unit = {
     val shared = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      // A new session on the running context, without GraftSession's
-      // extension or settings.
       val plain = SparkSession.builder().master("local[4]")
         .config("spark.ui.enabled", "false").getOrCreate()
       assert(plain ne shared)
+      body(plain)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  private def foldStrategies(s: SparkSession): Int =
+    s.sessionState.planner.strategies.count(_ == DetectorFoldStrategy)
+
+  test("entry and the native functions run on a plain SparkSession.builder() session") {
+    onPlainSession { plain =>
       assert(!plain.catalog.functionExists("theta_sketch"))
       // The context's conf carries the shared session's settings; drop the
       // one the fallback must restore.
@@ -37,9 +50,22 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
       val est = plain.range(0, 700).agg(call_function("theta_estimate",
         call_function("theta_sketch", col("id")))).head().getDouble(0)
       assert(est == 700.0)
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("o4_fold_exec runs through SparkEntry on a plain SparkSession.builder() session") {
+    val dir = "/root/testdata/sf0.001"
+    val fold = SparkEntry.queries("o4_fold_exec")
+    val expected = fold(spark, dir).collect().toSeq
+    assert(expected.nonEmpty)
+    // The engine's session has the strategy from its extension; adopting
+    // it adds no second copy.
+    assert(foldStrategies(spark) == 1)
+    onPlainSession { plain =>
+      assert(foldStrategies(plain) == 0)
+      assert(fold(plain, dir).collect().toSeq == expected)
+      assert(fold(plain, dir).collect().toSeq == expected)
+      assert(foldStrategies(plain) == 1)
     }
   }
 

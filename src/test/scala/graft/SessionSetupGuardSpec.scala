@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the extension it installs, state-store and checkpoint settings live in
   * its one map, and loaders set no session conf. The query packs get the
   * same treatment: one workspace ([[queries.Workspace]]), no env-var
-  * forks, and the stream queries start through one harness. */
+  * forks, and the stream queries start through one harness. Persisted
+  * indexes have one identity: one fingerprint and one root, both in
+  * [[operators.IndexCache]]. */
 class SessionSetupGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -70,6 +72,29 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     val found = hits(queryPacks.filter(_.getFileName.toString == "StreamQueries.scala"),
       "writeStream")
     assert(found.nonEmpty && found.size <= 6, found)
+  }
+
+  test("src/main folds a content fingerprint (bit_xor) only in IndexCache") {
+    val found = hits(main, "bit_xor")
+    assert(found.nonEmpty && found.forall(_._1 == "IndexCache.scala"), found)
+  }
+
+  test("the query packs keep a per-JVM build cache only in Workspace") {
+    val found = hits(queryPacks, "computeIfAbsent")
+    assert(found.nonEmpty && found.forall(_._1 == "Workspace.scala"), found)
+  }
+
+  test("every persisted index lives under the one IndexCache root") {
+    // Needles spelled in two parts, so this file is no hit of its own scan.
+    val found = Seq("graft_" + "annidx", "graft_" + "lshidx", "userScopedRoot" + "(")
+      .flatMap(hits(main ++ scalaFiles("src/test/scala"), _))
+      .filterNot(_._1 == "IndexCache.scala")
+    assert(found.isEmpty, found)
+  }
+
+  test("src/main adds planner strategies only in GraftSession") {
+    val found = hits(main, "extraStrategies")
+    assert(found.nonEmpty && found.forall(_._1 == "GraftSession.scala"), found)
   }
 
   test("no spec calls GraftFunctions.register except the fallback's own spec") {

@@ -18,6 +18,12 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(dot == 11.0)
   }
 
+  test("no entry of the function table shadows a Spark built-in") {
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    val clashes = GraftFunctions.functions.map(_._1).filter(builtin.functionExists)
+    assert(clashes.isEmpty, s"replace Spark built-ins: $clashes")
+  }
+
   test("a newSession() has every function without a register call") {
     val child = spark.newSession()
     assert(names.filterNot(child.catalog.functionExists).isEmpty)

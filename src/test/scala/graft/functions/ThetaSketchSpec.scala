@@ -40,11 +40,11 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
     assert(est == 901.0)
   }
 
-  test("theta_union_agg rollup over group sketches == one-pass sketch") {
+  test("theta_kmv_union_agg rollup over group sketches == one-pass sketch") {
     val df = (1L to 20000L).map(i => (i % 16, i % 7001)).toDF("g", "k")
     val rolled = df.groupBy($"g")
       .agg(call_function("theta_sketch", $"k", lit(1024)).as("sk"))
-      .agg(call_function("theta_union_agg", $"sk").as("sk"))
+      .agg(call_function("theta_kmv_union_agg", $"sk").as("sk"))
       .select(call_function("theta_estimate", $"sk"))
       .collect().head.getDouble(0)
     val onePass = df
@@ -64,7 +64,7 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
     // Lossless (k=16384 > 8000): both exact.
     val exact = sk(a, 16384).crossJoin(sk(b, 16384).withColumnRenamed("sk", "sk2"))
       .select(
-        call_function("theta_estimate", call_function("theta_union", $"sk", $"sk2")),
+        call_function("theta_estimate", call_function("theta_kmv_union", $"sk", $"sk2")),
         call_function("theta_intersect_estimate", $"sk", $"sk2"))
       .collect().head
     assert(exact.getDouble(0) == 8000.0 && exact.getDouble(1) == 1000.0)
@@ -72,7 +72,7 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
     // (intersection RSE grows as the overlap fraction shrinks).
     val approx = sk(a, 512).crossJoin(sk(b, 512).withColumnRenamed("sk", "sk2"))
       .select(
-        call_function("theta_estimate", call_function("theta_union", $"sk", $"sk2")),
+        call_function("theta_estimate", call_function("theta_kmv_union", $"sk", $"sk2")),
         call_function("theta_intersect_estimate", $"sk", $"sk2"))
       .collect().head
     assert(math.abs(approx.getDouble(0) - 8000.0) / 8000.0 <= 0.05)

@@ -23,7 +23,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
   test("served-from-artifact probe equals the inline incremental path") {
     val docs = Tables.documents(spark, dir)
     val (hist, batch) = split(docs)
-    val path = Files.createTempDirectory("graft_lshidx_spec").toString + "/idx"
+    val path = Files.createTempDirectory("graft_lsh_index_spec").toString + "/idx"
     Dedup.writeLshIndex(hist, path)
     val served = Dedup.lshServedPairs(hist, batch, path)
       .orderBy(col("new_id"), col("dup_of")).collect().toSeq
@@ -64,7 +64,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
   test("a stale index (historical corpus changed) is refused at serve time") {
     val docs = Tables.documents(spark, dir)
     val (hist, batch) = split(docs)
-    val path = Files.createTempDirectory("graft_lshidx_spec").toString + "/idx"
+    val path = Files.createTempDirectory("graft_lsh_index_spec").toString + "/idx"
     Dedup.writeLshIndex(hist, path)
     val changed = hist.filter(col("doc_id") =!= 1)
     val e = intercept[IllegalStateException] {

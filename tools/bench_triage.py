@@ -9,6 +9,11 @@ instead of judgment-call prose:
 (baseline defaults to the committed bench_full.json next to this repo).
 
 Classification rules, in order:
+ 0. CORES: the draw and the baseline must have run on the same number of
+    cores (the "cpus" field graft.Bench writes; a file without it was
+    drawn at SPARK_GRAFT_CPUS=32, see bench_budgets.json "_note").
+    Per-query medians at different core counts do not compare: the draw
+    is DIRTY whatever its timings say.
  1. CALIB: the draw's calibration probes must sit in the documented clean
     band (pre/post _1t <= 0.33, _allcore <= 0.38, and post/pre drift
     <= 1.25x). Outside it => the HOST was noisy during the draw; per-query
@@ -56,6 +61,8 @@ MEDIAN_BAND = (0.8, 1.2)
 # the budget is the backstop against creep hiding under total weather,
 # not the primary per-draw comparison.
 BUDGET_RATIO = 2.0
+# Core count of a draw or baseline that predates the "cpus" field.
+DEFAULT_CPUS = 32
 
 
 def load(p):
@@ -72,6 +79,13 @@ def main():
     base = load(base_path)
 
     problems, notes = [], []
+
+    # 0. core counts
+    draw_cpus = draw.get("cpus", DEFAULT_CPUS)
+    base_cpus = base.get("cpus", DEFAULT_CPUS)
+    cpus_differ = draw_cpus != base_cpus
+    if cpus_differ:
+        problems.append(f"draw ran on {draw_cpus} cpus, baseline on {base_cpus}")
 
     # 1. calibration band
     cal = draw.get("calib", {})
@@ -198,7 +212,11 @@ def main():
         print("VERDICT: INVALID (draw and baseline are the same file)")
         sys.exit(1)
 
-    if cal_dirty:
+    if cpus_differ:
+        verdict, code = (f"DIRTY (core counts differ: draw {draw_cpus} cpus, "
+                         f"baseline {base_cpus} cpus — redraw at the "
+                         "baseline's core count)"), 1
+    elif cal_dirty:
         verdict, code = "DIRTY (noisy host: calib outside clean band — discard, redraw)", 1
     elif builds:
         verdict, code = "DIRTY (in-sweep artifact builds — warm the cache, redraw)", 1
