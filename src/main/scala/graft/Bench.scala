@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark main: times every registered query on
   * SPARK_GRAFT_SF_DIR over SPARK_GRAFT_BENCH_RUNS iterations (default 3)
   * and reports per-query MEDIANS — the streaming pipelines stand up a full
@@ -12,9 +16,115 @@ package graft
   * still gets a parseable total; all lines carry the same
   * "metric":"total" value (sum of per-query medians) and the "cpus" the
   * session ran on (SPARK_GRAFT_CPUS), since per-query medians taken at
-  * different core counts do not compare.
+  * different core counts do not compare. The full line (and
+  * bench_full.json) also carries the "ledger": per query, the median Spark
+  * cost of its successful runs, as recorded by [[Bench.Ledger]].
   */
 object Bench {
+  /** Wall time and Spark cost of each timed run. One listener counts the
+    * jobs, stages and tasks of every job submitted under the run's
+    * job-local property, and the seconds its tasks spent running, on CPU,
+    * deserializing and in GC. Threads started inside a run (stream
+    * execution, broadcast) inherit the property, so their jobs count too.
+    * Counters are read after [[drain]]. */
+  final class Ledger(spark: SparkSession) extends SparkListener {
+    import Ledger._
+    // Per run, the raw counters in the order of `Fields`. Written only by
+    // the listener-bus thread; read after `drain`, whose volatile
+    // `drained` publishes them.
+    private val costs = new ConcurrentHashMap[String, Array[Long]]()
+    private val stageRun = new ConcurrentHashMap[Int, String]()
+    @volatile private var drained = 0
+    // The recording thread's bookkeeping: runs started, and the runs of
+    // each query that succeeded, with their wall seconds.
+    private var started = 0
+    private val succeeded = scala.collection.mutable.Map[String, Vector[(String, Double)]]()
+    spark.sparkContext.addSparkListener(this)
+
+    private def add(run: String, field: Int, v: Long): Unit =
+      costs.computeIfAbsent(run, _ => new Array[Long](Fields.size))(field) += v
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(Key))).foreach {
+        // The marker starts after every earlier event has been delivered.
+        case DrainRun => drained += 1
+        case run =>
+          add(run, 0, 1)
+          e.stageIds.foreach(stageRun.putIfAbsent(_, run))
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageRun.get(e.stageInfo.stageId)).foreach(add(_, 1, 1))
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stageRun.get(e.stageId)).foreach { run =>
+        add(run, 2, 1)
+        Option(e.taskMetrics).foreach { m =>
+          Seq(m.executorRunTime, m.executorCpuTime, m.executorDeserializeTime,
+            m.jvmGCTime).zipWithIndex.foreach { case (v, i) => add(run, 3 + i, v) }
+        }
+      }
+
+    private def charged[T](run: String)(body: => T): T = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty(Key)
+      sc.setLocalProperty(Key, run)
+      try body finally sc.setLocalProperty(Key, prev)
+    }
+
+    /** Times `body` as a new run of `query`, with every job it submits
+      * charged to that run. A run that throws records no sample. */
+    def record[T](query: String)(body: => T): T = {
+      started += 1
+      val run = s"$query#$started"
+      val (result, wall) = charged(run) {
+        val t0 = System.nanoTime()
+        (body, (System.nanoTime() - t0) / 1e9)
+      }
+      succeeded(query) = succeeded.getOrElse(query, Vector.empty) :+ (run -> wall)
+      result
+    }
+
+    /** Blocks until the listener has seen every event posted so far, by
+      * running one marker job. */
+    def drain(): Unit = {
+      val before = drained
+      charged(DrainRun)(spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000
+      while (drained == before && System.currentTimeMillis() < deadline) Thread.sleep(5)
+    }
+
+    /** Each successful run of `query`, in run order: its `wall_s` and
+      * its counters. */
+    def samples(query: String): Seq[Map[String, Double]] =
+      succeeded.getOrElse(query, Vector.empty).map { case (run, wall) =>
+        val c = costs.getOrDefault(run, new Array[Long](Fields.size))
+        Fields.indices.map(i => Fields(i) -> c(i) / Scale(i)).toMap + ("wall_s" -> wall)
+      }
+
+    /** Per key of [[samples]], the median over the successful runs of
+      * `query`; empty when none succeeded. */
+    def medians(query: String): Map[String, Double] = {
+      val ss = samples(query)
+      if (ss.isEmpty) Map.empty else ss.head.keys.map(k => k -> median(ss.map(_(k)))).toMap
+    }
+  }
+
+  object Ledger {
+    /** The job-local property that names the run a job is charged to. */
+    val Key = "graft.bench.run"
+    private val DrainRun = "graft.bench.drain"
+    /** The counters, in output order, and the divisor from each raw
+      * counter (counts, ms, ns) to its reported unit (counts, seconds). */
+    val Fields = Seq("jobs", "stages", "tasks", "task_s", "cpu_s", "deser_s", "gc_s")
+    private val Scale = Seq(1.0, 1.0, 1.0, 1e3, 1e9, 1e3, 1e3)
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -97,21 +207,15 @@ object Bench {
     // from the artifact alone.
     val forensicsAcc =
       scala.collection.mutable.LinkedHashMap[String, Map[String, Long]]()
-    val samples: Seq[Seq[(String, Option[Double])]] = (1 to runs).map { _ =>
-      val round = names.map { name =>
+    val ledger = new Ledger(spark)
+    (1 to runs).foreach { _ =>
+      names.foreach { name =>
         val query = queries(name)
         val fBefore = operators.IndexCache.forensicsSnapshot
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            query(spark, sfDir).count()
-            true
-          }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
+        try ledger.record(name)(query(spark, sfDir).count())
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
         val delta = operators.IndexCache.forensicsSnapshot.flatMap {
           case (k, v) =>
             val d = v - fBefore.getOrElse(k, 0L)
@@ -123,7 +227,6 @@ object Bench {
             acc.updated(k, acc.getOrElse(k, 0L) + d)
           }
         }
-        name -> (if (ok) Some(elapsed) else None)
       }
       // Between rounds (outside any timed region): a full GC lets Spark's
       // ContextCleaner reap the dead localCheckpoint blocks the round left
@@ -133,16 +236,10 @@ object Bench {
       // (the dedup signature slots, model artifacts) are strongly
       // referenced and survive.
       System.gc()
-      round
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val perQuery: Seq[(String, Option[Double])] = names.map { n =>
-      val ok = samples.flatMap(_.toMap.apply(n))
-      n -> (if (ok.isEmpty) None else Some(median(ok)))
-    }
+    ledger.drain()
+    val perQuery: Seq[(String, Option[Double])] =
+      names.map(n => n -> ledger.medians(n).get("wall_s"))
     val failed = perQuery.collect { case (n, None) => n }
     def r4(x: Double): String = f"$x%.4f"
     val qs = perQuery.map {
@@ -163,8 +260,17 @@ object Bench {
         "\"" + k + "\":" + v
       }.mkString("{", ",", "}")
     }.mkString("\"forensics\":{", ",", "}")
+    // Counts are whole unless a median of an even number of runs halves them.
+    def num(x: Double): String =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+        .bigDecimal.stripTrailingZeros.toPlainString
+    val ledgerJson = names.map(n => n -> ledger.medians(n)).filter(_._2.nonEmpty)
+      .map { case (n, m) =>
+        "\"" + n + "\":" + Ledger.Fields.map(k => "\"" + k + "\":" + num(m(k)))
+          .mkString("{", ",", "}")
+      }.mkString("\"ledger\":{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,${failedJson}"queries":$qs,$forensicsJson,$calib,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,${failedJson}"queries":$qs,$forensicsJson,$ledgerJson,$calib,"sf":"$sfDir"}"""
     println(fullLine)
     // Per-query medians WITHOUT the forensics blob (round-17 verdict item:
     // the driver could not build its per-query table from stdout). A

@@ -31,10 +31,3 @@ final case class TimedDeposit(walletId: String, amount: Double, tsUnix: Long,
 final case class KeyedFlagEvent(
     walletId: String, flagRemoved: Boolean, rollingPeriodStartUnix: Long,
     seq: Long)
-
-/** Full event record for streams that need the type column (stream-stream
-  * joins); `tsUs` is epoch micros — the streaming layer re-derives the
-  * event-time column (timestamps never sit in a feed parquet directly,
-  * keeping the feed readable by any engine without tz coupling). */
-final case class TypedEvent(userId: Long, eventId: Long, eventType: String,
-                            value: Double, tsUs: Long)

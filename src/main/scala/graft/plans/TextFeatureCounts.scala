@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -20,8 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * size(split(...)) and regexp_count propagate NULL the same way).
   */
 object TextFeatureCounts {
-
-  private val BYTE_ARRAY_OFFSET = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
   /** Java-regex \s is exactly these six ASCII chars (no Unicode flags). */
   @inline private def isWs(b: Byte): Boolean =

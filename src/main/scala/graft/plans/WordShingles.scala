@@ -35,8 +35,6 @@ case class WordShingles(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = false
 
-  private val space = UTF8String.fromString(" ")
-
   override def eval(input: InternalRow): Any = {
     val arr = child.eval(input).asInstanceOf[ArrayData]
     if (arr == null) return new GenericArrayData(Array.empty[Any])

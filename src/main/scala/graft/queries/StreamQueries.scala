@@ -371,50 +371,13 @@ object StreamQueries {
   private final case class Materialized(feedFp: String, path: String)
   private val outputs = new ConcurrentHashMap[String, Materialized]()
 
-  /** Drop every materialized output — for harnesses that must re-measure
-    * the full topology stand-up per run (ScaleSmoke's streaming-throughput
-    * row would otherwise time the serve path). */
+  /** Drop every materialized output, so the next run of each stream
+    * query stands its full topology up again. */
   def invalidateMaterialized(): Unit = outputs.clear()
 
-  /** Accumulated state-operator totals (rows, reported bytes) across the
-    * streaming queries drained since the last [[resetStateMetrics]] —
-    * recorded from each query's final progress just before it stops
-    * (the per-run workspace and its RocksDB checkpoints are deleted at
-    * teardown, so nothing on disk survives to measure). The scale-smoke
-    * witness that state scales with KEYS, not events. */
-  @volatile private var stateRowsAcc = 0L
-  @volatile private var stateBytesAcc = 0L
-  def resetStateMetrics(): Unit = { stateRowsAcc = 0L; stateBytesAcc = 0L }
-  def stateMetrics: (Long, Long) = (stateRowsAcc, stateBytesAcc)
-
-  /** Per-micro-batch triggerExecution durations (ms) accumulated across
-    * the queries drained since the last [[resetBatchDurations]] — the
-    * LATENCY distribution behind the throughput number (a scale-up that
-    * keeps throughput but fattens the per-batch tail shows here, not
-    * there). Sample count is bounded by Spark's recentProgress retention
-    * (spark.sql.streaming.numRecentProgressUpdates, default 100 per
-    * query) — raise it in the measuring session if a feed exceeds that
-    * many micro-batches. */
-  private val batchDurAcc = ArrayBuffer[Long]()
-  def resetBatchDurations(): Unit =
-    batchDurAcc.synchronized { batchDurAcc.clear() }
-  def batchDurations: Seq[Long] =
-    batchDurAcc.synchronized { batchDurAcc.toVector }
-
-  /** Drain a streaming query (processAllAvailable), record its final
-    * state-operator metrics and per-batch durations, and stop it. */
+  /** Drain a streaming query (processAllAvailable) and stop it. */
   private def drain(q: StreamingQuery): Unit = {
     q.processAllAvailable()
-    val p = Option(q.lastProgress).orElse(q.recentProgress.lastOption)
-    p.foreach(_.stateOperators.foreach { so =>
-      stateRowsAcc += so.numRowsTotal
-      stateBytesAcc += so.memoryUsedBytes
-    })
-    q.recentProgress.foreach { pr =>
-      Option(pr.durationMs.get("triggerExecution")).foreach { d =>
-        batchDurAcc.synchronized { batchDurAcc += d.toLong }
-      }
-    }
     q.stop()
   }
 

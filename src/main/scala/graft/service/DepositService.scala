@@ -401,12 +401,18 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     * response's status and body. */
   private def admitted(ex: HttpExchange): (Int, String) = {
     val node = mapper.readTree(ex.getRequestBody)
-    val wallet = Option(node.get("wallet_id")).map(_.asText()).getOrElse("")
-    val amount = Option(node.get("amount")).map(_.asDouble()).getOrElse(0.0)
+    // Only JSON numbers count: Jackson's asDouble/asLong coerce strings
+    // ("NaN", "abc") and booleans, and a NaN or infinite amount, once
+    // logged, would poison its wallet on every replay.
+    val wallet = Option(node.get("wallet_id")).filterNot(_.isNull).map(_.asText()).getOrElse("")
+    val amount = Option(node.get("amount")).filter(_.isNumber).map(_.asDouble()).getOrElse(0.0)
+    val tsNode = Option(node.get("ts_unix"))
     if (wallet.isEmpty) return (400, """{"error":"wallet_id required"}""")
-    if (amount <= 0) return (422, """{"error":"amount must be positive"}""") // service.go:87-91
-    val ts = Option(node.get("ts_unix")).map(_.asLong())
-      .getOrElse(System.currentTimeMillis() / 1000L)
+    if (!(amount > 0) || amount.isInfinite) // service.go:87-91
+      return (422, """{"error":"amount must be a positive finite number"}""")
+    if (tsNode.exists(n => !n.isIntegralNumber || !n.canConvertToLong))
+      return (400, """{"error":"ts_unix must be an integer"}""")
+    val ts = tsNode.map(_.asLong()).getOrElse(System.currentTimeMillis() / 1000L)
     // Idempotent retry: a key we already logged means the deposit is
     // durable and will reach the view (this boot or the next replay) —
     // the group commit answers `duplicate` without a second log record

@@ -89,7 +89,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  /** Kept as a named loader (queries and the scale-smoke synth call it);
+  /** Kept as a named loader (the queries call it);
     * the ts normalization itself now happens for every table in [[load]]
     * via [[normalizeTs]]. */
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")

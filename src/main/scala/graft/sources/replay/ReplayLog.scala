@@ -1,7 +1,7 @@
 package graft.sources.replay
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
-  DataOutputStream, EOFException, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, DataInputStream, EOFException, File,
+  FileInputStream, FileOutputStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * same treatment: one workspace ([[queries.Workspace]]), no env-var
   * forks, and the stream queries start through one harness. Persisted
   * indexes have one identity: one fingerprint and one root, both in
-  * [[operators.IndexCache]]. */
+  * [[operators.IndexCache]]. Knobs are read by the mains alone, and specs
+  * take their scratch directories from [[TestDirs]]. */
 class SessionSetupGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -95,6 +96,25 @@ class SessionSetupGuardSpec extends AnyFunSuite {
   test("src/main adds planner strategies only in GraftSession") {
     val found = hits(main, "extraStrategies")
     assert(found.nonEmpty && found.forall(_._1 == "GraftSession.scala"), found)
+  }
+
+  test("src/main reads environment variables only in its three mains and IndexCache") {
+    val found = hits(main, "sys.env").map(_._1).toSet
+    assert(found == Set("Bench.scala", "Verify.scala", "Explain.scala", "IndexCache.scala"), found)
+  }
+
+  test("src/main reaches a Hadoop FileSystem only in CheckpointFiles") {
+    // Every other rename goes through java.io/java.nio and checks its
+    // result; a Hadoop `file:` rename may be Hive's proxy, which returns
+    // false on an existing target instead of replacing it.
+    val found = Seq("getFileSystem", "FileSystem.get").flatMap(hits(main, _))
+    assert(found.nonEmpty && found.forall(_._1 == "CheckpointFiles.scala"), found)
+  }
+
+  test("no spec makes a temp directory of its own; they come from TestDirs") {
+    // Needle spelled in two parts, so this file is no hit of its own scan.
+    val found = hits(scalaFiles("src/test/scala"), "createTemp" + "Directory")
+    assert(found.isEmpty, found)
   }
 
   test("no spec calls GraftFunctions.register except the fallback's own spec") {

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.plans.Morton
+import graft.TestDirs.tempDir
 
 /** Sort-clustered data layout: the Morton code's algebra (roundtrip,
   * per-dimension monotonicity incl. negatives), clusterParquet's
@@ -35,7 +35,7 @@ class ClusteredLayoutSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("clusterParquet: disjoint per-file ranges, content unchanged") {
-    val dir = s"${Files.createTempDirectory("graft_cluster").toString}/t"
+    val dir = s"${tempDir("graft_cluster").toString}/t"
     // Shuffled key order across 8 files — the worst layout for stats.
     val rnd = new scala.util.Random(7)
     rnd.shuffle((0 until 4000).toList).map(k => (k.toLong, s"p_$k"))
@@ -78,7 +78,7 @@ class ClusteredLayoutSpec extends AnyFunSuite with SparkSpec {
       (r.getLong(1), r.getLong(0))
     }
 
-    val zDir = s"${Files.createTempDirectory("graft_zorder").toString}/t"
+    val zDir = s"${tempDir("graft_zorder").toString}/t"
     write(zDir)
     val before = spark.read.parquet(zDir).orderBy("a", "b").collect().toSeq
     Maintenance.clusterParquetByKey(spark, zDir,
@@ -96,7 +96,7 @@ class ClusteredLayoutSpec extends AnyFunSuite with SparkSpec {
     // every file whose a-range starts in the box — here all files with
     // min(a) <= 15, which for a 1-D layout over uniform a is fewer
     // files, but a box on B ALONE (a unconstrained) hits ALL of them).
-    val sDir = s"${Files.createTempDirectory("graft_sorted").toString}/t"
+    val sDir = s"${tempDir("graft_sorted").toString}/t"
     write(sDir)
     Maintenance.clusterParquet(spark, sDir, Seq("a"), targetFileBytes = 2L * 1024)
     val bOnly = spark.read.parquet(sDir)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** Degenerate-document behavior: docs with < 3 tokens have EMPTY shingle
   * sets, so every minhash row is null and all such docs collide into the
@@ -106,7 +107,7 @@ class DedupEdgeSpec extends AnyFunSuite with SparkSpec {
       (2L, base + " extra", (base.length + 6).toLong),
       (3L, s"completely different words appear in this one $salt", 55L),
       (5L, base.replace("quick", "slow"), base.length.toLong))
-    val dir = java.nio.file.Files.createTempDirectory("dedup_rt").toString
+    val dir = tempDir("dedup_rt").toString
     d.write.mode("overwrite").parquet(dir)
     val f = spark.read.parquet(dir)
     try {

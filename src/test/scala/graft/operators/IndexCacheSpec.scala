@@ -1,15 +1,15 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** The one content fingerprint every persisted index is keyed by. */
 class IndexCacheSpec extends AnyFunSuite with SparkSpec {
 
   test("tableFp over one file-backed frame keys its memo by the key columns") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_index_cache_spec").toString + "/t"
+    val path = tempDir("graft_index_cache_spec").toString + "/t"
     Seq((1L, "x", "p"), (2L, "y", "q")).toDF("id", "a", "b").write.parquet(path)
     val df = spark.read.parquet(path)
     val byA = IndexCache.tableFp(df, Seq("id", "a"))

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.TestDirs.tempDir
 
 /** Round-7 IVF index lifecycle: training persists a parquet artifact with
   * the source content fingerprint as metadata; serving from the artifact
@@ -17,7 +17,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
   test("served-from-artifact IVF equals the in-process trained path") {
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < 10)
-    val path = Files.createTempDirectory("graft_ivfidx_spec").toString + "/idx"
+    val path = tempDir("graft_ivfidx_spec").toString + "/idx"
     Similarity.writeIvfIndex(emb, nCells = 16, iters = 3, path)
     val served = Similarity.ivfTopKServed(emb, q, k = 3, nProbe = 2, path)
       .orderBy(col("qid"), col("rank")).collect().toSeq
@@ -30,7 +30,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("a stale index (different source content) is refused at serve time") {
     val emb = Tables.embeddings(spark, dir)
-    val path = Files.createTempDirectory("graft_ivfidx_spec").toString + "/idx"
+    val path = tempDir("graft_ivfidx_spec").toString + "/idx"
     Similarity.writeIvfIndex(emb, nCells = 16, iters = 1, path)
     // Same schema, different content: the fingerprint must mismatch.
     val changed = emb.filter(col("vec_id") >= 1)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.TestDirs.tempDir
 
 /** k-means-trained IVF: determinism of the seeded Lloyd trainer and the
   * recall@3 / probe-cost tradeoff on a query set disjoint from the seeds
@@ -51,7 +52,7 @@ class IvfKmeansSpec extends AnyFunSuite with SparkSpec {
     val hist = emb.filter(col("vec_id") % 10 < 8)
     val batch = emb.filter(col("vec_id") % 10 >= 8)
     val queries = emb.filter(col("vec_id") < 20)
-    val path = java.nio.file.Files.createTempDirectory("ivf_inc_spec")
+    val path = tempDir("ivf_inc_spec")
       .resolve("idx").toString
     Similarity.writeIvfIndex(hist, nCells = 16, iters = 2, path = path)
     val merged = Similarity.ivfTopKIncremental(hist, batch, queries,

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.TestDirs.tempDir
 
 /** Round-8 incremental-dedup index lifecycle (the LSH analog of
   * IvfIndexSpec): building persists a corpus-sized parquet index table
@@ -23,7 +23,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
   test("served-from-artifact probe equals the inline incremental path") {
     val docs = Tables.documents(spark, dir)
     val (hist, batch) = split(docs)
-    val path = Files.createTempDirectory("graft_lsh_index_spec").toString + "/idx"
+    val path = tempDir("graft_lsh_index_spec").toString + "/idx"
     Dedup.writeLshIndex(hist, path)
     val served = Dedup.lshServedPairs(hist, batch, path)
       .orderBy(col("new_id"), col("dup_of")).collect().toSeq
@@ -43,7 +43,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
     val hist0 = docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4)
     val fold = docs.filter(col("doc_id") % 5 === 4)
     val (histFull, batch) = split(docs)
-    val root = Files.createTempDirectory("graft_lshc_spec").toString
+    val root = tempDir("graft_lshc_spec").toString
     Dedup.writeLshIndex(hist0, s"$root/seed")
     Dedup.compactLshIndex(hist0, fold, s"$root/seed", s"$root/merged")
     // The compacted artifact serves the FULL history fingerprint...
@@ -64,7 +64,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
   test("a stale index (historical corpus changed) is refused at serve time") {
     val docs = Tables.documents(spark, dir)
     val (hist, batch) = split(docs)
-    val path = Files.createTempDirectory("graft_lsh_index_spec").toString + "/idx"
+    val path = tempDir("graft_lsh_index_spec").toString + "/idx"
     Dedup.writeLshIndex(hist, path)
     val changed = hist.filter(col("doc_id") =!= 1)
     val e = intercept[IllegalStateException] {

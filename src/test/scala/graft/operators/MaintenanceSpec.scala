@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** Small-file compaction: many tiny appended files collapse to the
   * byte-budgeted count, no row lost or duplicated, and the swap is
@@ -12,7 +13,7 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("compactParquet merges a small-file tail and preserves every row") {
-    val dir = s"${Files.createTempDirectory("graft_compact").toString}/t"
+    val dir = s"${tempDir("graft_compact").toString}/t"
     // 20 single-file appends — the streaming-sink shape.
     (0 until 20).foreach { i =>
       Seq.tabulate(50)(j => (i.toLong * 50 + j, s"row_${i}_$j"))
@@ -42,14 +43,14 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
       Maintenance.compactParquet(spark, "hdfs://nn/warehouse/t")
     }
     // Partitioned root (non-underscore subdir).
-    val root = s"${Files.createTempDirectory("graft_compact_root").toString}/t"
+    val root = s"${tempDir("graft_compact_root").toString}/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "p")
       .write.partitionBy("p").parquet(root)
     intercept[IllegalArgumentException] {
       Maintenance.compactParquet(spark, root)
     }
     // Stale aside from a crashed previous rewrite.
-    val dir = s"${Files.createTempDirectory("graft_compact_aside").toString}/t"
+    val dir = s"${tempDir("graft_compact_aside").toString}/t"
     Seq((1L, "a")).toDF("id", "payload").write.parquet(dir)
     Files.createDirectory(java.nio.file.Paths.get(s"${dir}_pre_compact"))
     intercept[IllegalArgumentException] {
@@ -58,7 +59,7 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("target smaller than total bytes yields multiple evenly-counted files") {
-    val dir = s"${Files.createTempDirectory("graft_compact2").toString}/t"
+    val dir = s"${tempDir("graft_compact2").toString}/t"
     (0 until 8).foreach { i =>
       Seq.tabulate(500)(j => (i.toLong * 500 + j, "x" * 100))
         .toDF("id", "payload").repartition(1)

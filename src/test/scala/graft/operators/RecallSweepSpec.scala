@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.TestDirs.tempDir
 
 /** Round-13 one-pass sweep kernel: `ivfRecallSweep` computes the
   * recall-vs-probe-width curve by probing ONCE at max(width) and deriving
@@ -37,7 +37,7 @@ class RecallSweepSpec extends AnyFunSuite with SparkSpec {
   test("sweep kernel == per-width serve path (in-corpus, self-excluding)") {
     val emb = Tables.embeddings(spark, dir)
     val qs = emb.filter(col("vec_id") < 8)
-    val path = Files.createTempDirectory("graft_sweep_spec").toString + "/idx"
+    val path = tempDir("graft_sweep_spec").toString + "/idx"
     Similarity.writeIvfIndex(emb, nCells = 8, iters = 2, path)
     val bf = Similarity.bruteForceTopK(emb, qs, k = 3)
       .select(col("qid"), col("nid"))
@@ -58,7 +58,7 @@ class RecallSweepSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.embeddings(spark, dir)
     val img = graft.multimodal.Multimodal.alignedImageEmbeddings(emb)
       .filter(col("vec_id") < 8)
-    val path = Files.createTempDirectory("graft_sweep_spec").toString + "/idx"
+    val path = tempDir("graft_sweep_spec").toString + "/idx"
     Similarity.writeIvfIndex(emb, nCells = 8, iters = 2, path)
     val bf = Similarity.crossModalExactTopK(emb, img, k = 3)
       .select(col("qid"), col("nid"))

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model._
 import graft.streaming.DepositStreams
+import graft.TestDirs.tempDir
 
 /** O12 wire serde: golden-byte checks against the public proto3 wire
   * format (so the codec is byte-compatible with the reference's Go
@@ -193,7 +194,7 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
     val deposits = Seq(
       TimedDeposit("w-1", 12.5, 100, 1), TimedDeposit("w-2", 0.01, 150, 2),
       TimedDeposit("ütf-∂", 99999.99, 200, 3), TimedDeposit("w-4", 1e9, 250, 4))
-    val dir = java.nio.file.Files.createTempDirectory("proto_feed_edge").toString
+    val dir = tempDir("proto_feed_edge").toString
     deposits.toDF()
       .select(call_function("proto_encode_deposit", col("walletId"), col("amount"))
         .as("value"), col("tsUnix"), col("seq"))

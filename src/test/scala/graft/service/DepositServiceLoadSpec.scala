@@ -6,6 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** The serving edge under SUSTAINED CONCURRENT LOAD — the scenario the
   * reference's chi router lives in: N parallel clients mixing POST
@@ -46,7 +47,7 @@ class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
     else sorted(math.min(sorted.size - 1, (p * sorted.size).toInt))
 
   test("concurrent writers+readers: read-your-writes holds, p50/p99 measured") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_load").toString
+    val dir = tempDir("svc_load").toString
     val svc = new DepositService(spark, changelogDir = Some(dir))
     val port = svc.boundPort
     val writers = 3; val postsPerWriter = 8
@@ -106,7 +107,7 @@ class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("restart under load: every ACKed deposit survives, exactly once per key") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_load_restart").toString
+    val dir = tempDir("svc_load_restart").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     val portA = a.boundPort
     val acked = new ConcurrentLinkedQueue[(String, Double, String)]()

@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.streaming.DetectorLogic
+import graft.TestDirs.tempDir
 
 /** Drives the HTTP surface end-to-end: the FIXTURES.md §B scenarios
   * through real POST/GET requests against the running service. */
@@ -41,6 +42,31 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       """{"wallet_id":"bob","balance":0.0,"above_threshold":false}""")
   }
 
+  // Jackson's asDouble/asLong read these as NaN, Infinity, 1.0 and 0.
+  Seq(""""NaN"""", "1e400", """"Infinity"""", "true").zipWithIndex.foreach { case (amount, i) =>
+    test(s"amount $amount is rejected with 422 and nothing is ingested") {
+      val resp = post(s"""{"wallet_id":"odd_amount$i","amount":$amount,"ts_unix":1000}""")
+      assert(resp.statusCode() == 422, resp.body())
+      assert(check(s"odd_amount$i") ==
+        s"""{"wallet_id":"odd_amount$i","balance":0.0,"above_threshold":false}""")
+    }
+  }
+
+  test("a null wallet_id is rejected with 400, not stored as wallet \"null\"") {
+    assert(post("""{"wallet_id":null,"amount":5}""").statusCode() == 400)
+    assert(check("null") ==
+      """{"wallet_id":"null","balance":0.0,"above_threshold":false}""")
+  }
+
+  Seq(""""abc"""", "12.5").zipWithIndex.foreach { case (ts, i) =>
+    test(s"ts_unix $ts is rejected with 400 and nothing is ingested") {
+      val resp = post(s"""{"wallet_id":"odd_ts$i","amount":5,"ts_unix":$ts}""")
+      assert(resp.statusCode() == 400, resp.body())
+      assert(check(s"odd_ts$i") ==
+        s"""{"wallet_id":"odd_ts$i","balance":0.0,"above_threshold":false}""")
+    }
+  }
+
   test("unknown wallet returns zero values with HTTP 200 (SURVEY §2.3.6)") {
     assert(check("ghost") ==
       """{"wallet_id":"ghost","balance":0.0,"above_threshold":false}""")
@@ -64,7 +90,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("restart rebuilds the serving views from the retained log " +
     "with zero mismatches (service.go:43-53)") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_changelog").toString
+    val dir = tempDir("svc_changelog").toString
     def checkOn(s: DepositService, wallet: String): String =
       client.send(HttpRequest.newBuilder(
           URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
@@ -98,7 +124,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("a torn trailing log line (crash mid-append) is skipped at boot, " +
     "truncated, and mid-file corruption still fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_torn").toString
+    val dir = tempDir("svc_torn").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     def postOn(s: DepositService, body: String): Int =
       client.send(HttpRequest.newBuilder(
@@ -139,7 +165,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("a tear inside a multi-byte UTF-8 character still recovers " +
     "(REPLACE codec reaches the line handler, no MalformedInput crash)") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_torn_utf8").toString
+    val dir = tempDir("svc_torn_utf8").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     def postOn(s: DepositService, body: String): Int =
       client.send(HttpRequest.newBuilder(
@@ -167,7 +193,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("idempotency key: a retried POST neither double-logs nor " +
     "double-counts, in-process and across restart") {
-    val dir = java.nio.file.Files.createTempDirectory("svc_idem").toString
+    val dir = tempDir("svc_idem").toString
     def postOn(s: DepositService, body: String): HttpResponse[String] =
       client.send(HttpRequest.newBuilder(
           URI.create(s"http://localhost:${s.boundPort}/deposit"))
@@ -209,9 +235,6 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
         URI.create(s"http://localhost:${s.boundPort}/check/$wallet")).GET().build(),
       HttpResponse.BodyHandlers.ofString()).body()
 
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Changelog lines that carry idempotency key `key`. */
   private def loggedWithKey(dir: String, key: String): Int = {
     val src = scala.io.Source.fromFile(new java.io.File(dir, "deposits.jsonl"))
@@ -238,7 +261,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("group commit: concurrent POSTs of one idempotency key count once") {
-    val dir = tempDir("svc_group_idem")
+    val dir = tempDir("svc_group_idem").toString
     val s = new DepositService(spark, changelogDir = Some(dir))
     try {
       val body = """{"wallet_id":"ivy","amount":40,"ts_unix":1000,"idem":"same"}"""
@@ -275,7 +298,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("a group holding out-of-order deposits of one wallet flags as " +
     "DetectorLogic in (ts, seq) order, live and after a restart") {
-    val dir = tempDir("svc_group_order")
+    val dir = tempDir("svc_group_order").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     // The later seq carries the earlier timestamp. Folded in (ts, seq)
     // order the wallet ends flagged; the verdict of the highest seq alone
@@ -337,7 +360,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("a stopped serving query turns POSTs into prompt 500s; the writer " +
     "survives and a retry on a fresh boot counts once") {
-    val dir = tempDir("svc_dead_query")
+    val dir = tempDir("svc_dead_query").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     val dep = """{"wallet_id":"lee","amount":12,"ts_unix":1000,"idem":"k-dead"}"""
     try {

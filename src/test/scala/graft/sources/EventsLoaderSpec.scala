@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** Regression guard for the events loader (round-7 postmortem): the driver
   * has regenerated `/root/testdata` with a DIFFERENT parquet physical type
@@ -23,7 +23,7 @@ import graft.SparkSpec
   */
 class EventsLoaderSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_events_forms").toString
+  private lazy val tmp = tempDir("graft_events_forms").toString
 
   // Micros instants, one of them with sub-microsecond nanos in the nanos
   // form (+999 ns) to pin the truncation semantics (same as DuckDB's

@@ -1,15 +1,15 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** Source/sink format coverage (SURVEY §2.2 scans/sinks): the same rows
   * must survive parquet → {csv, json, orc} round trips. */
 class FormatsSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_formats").toString
+  private lazy val tmp = tempDir("graft_formats").toString
   private lazy val base = Tables.customer(spark, "/root/testdata/sf0.001")
     .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
 

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.TestDirs.tempDir
 
 /** The lakehouse layout contract at 100 TB: facts are written
   * hive-partitioned by a low-cardinality column (here: event day) so a
@@ -16,8 +16,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft_prune").toFile
-    d.deleteOnExit()
+    val d = tempDir("graft_prune").toFile
     val events = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", to_date(col("ts")))
     events.write.mode("overwrite").partitionBy("day").parquet(d.getAbsolutePath)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.replay.ReplayLog
+import graft.TestDirs.tempDir
 
 /** The `graft-replay` TableCatalog: logs addressed as catalog tables,
   * Spark's own `VERSION AS OF` / `TIMESTAMP AS OF` syntax resolving
@@ -13,8 +14,7 @@ import graft.sources.replay.ReplayLog
 class ReplayCatalogSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private val root =
-    java.nio.file.Files.createTempDirectory("replay_cat").toString
+  private val root = tempDir("replay_cat").toString
   private val cat = "graft_cat_test"
 
   spark.conf.set(s"spark.sql.catalog.$cat",
@@ -89,7 +89,7 @@ class ReplayCatalogSpec extends AnyFunSuite with SparkSpec {
       .where(col("amount") >= 15.0)
       .writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cat_sink_cp").toString)
+        tempDir("cat_sink_cp").toString)
       .toTable(s"$cat.st.sunk")
     try q.processAllAvailable() finally q.stop()
     // 30 frames, amount = offset*1.5 >= 15 -> offsets 10..30 = 21 rows,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.replay.ReplayLog
+import graft.TestDirs.tempDir
 
 /** DELETE FROM on replay logs: copy-on-write with bounds-planned I/O
   * (untouched segments keep their files, covered segments drop with
@@ -12,8 +13,7 @@ import graft.sources.replay.ReplayLog
 class ReplayDeleteSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private val root =
-    java.nio.file.Files.createTempDirectory("replay_del").toString
+  private val root = tempDir("replay_del").toString
   private val cat = "graft_del_test"
   spark.conf.set(s"spark.sql.catalog.$cat",
     "graft.sources.replay.ReplayCatalog")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.replay.{ReplayAggScan, ReplayLog, ReplayScan,
   ReplaySegmentCommit, ReplayStreamingWrite}
+import graft.TestDirs.tempDir
 
 /** Round-16 optimizer/sink integration of the `graft-replay` connector:
   * runtime (DPP-analog) segment filtering, partial aggregate pushdown
@@ -13,9 +14,6 @@ import graft.sources.replay.{ReplayAggScan, ReplayLog, ReplayScan,
   * streaming sink. */
 class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
-
-  private def freshDir(prefix: String = "replay_opt") =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   // Same corpus as ReplaySourceSpec: offsets 1..40 in 4 range segments.
   private def sample = (1L to 40L).map { i =>
@@ -31,7 +29,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
     }.get
 
   test("runtime join-key filter reaches the scan and re-prunes segments") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_opt").toString; writeLog(dir)
     // The dim's predicate must be on a NON-key column: a key predicate
     // (k >= 31) would be inferred onto offset statically by constraint
     // propagation, pre-pruning the scan and leaving nothing dynamic.
@@ -39,7 +37,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
     // the dim filter — exactly DPP's territory. The dim side must also
     // be a filtered FILE scan: a filter over a local relation
     // constant-folds away and DPP sees no selective predicate.
-    val dimPath = freshDir("replay_dim")
+    val dimPath = tempDir("replay_dim").toString
     sample.where(col("offset") >= 31L)
       .select(col("offset").as("k"), col("wallet_id").as("w"))
       .write.mode("overwrite").parquet(dimPath)
@@ -63,7 +61,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("count/min/max push down as per-segment partials (no frame decode)") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_opt").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .agg(count(lit(1)).as("n"),
         min(col("offset")).as("min_off"), max(col("offset")).as("max_off"),
@@ -76,12 +74,12 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bare count() uses the pushed-aggregate path") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_opt").toString; writeLog(dir)
     assert(spark.read.format("graft-replay").load(dir).count() == 40L)
   }
 
   test("aggregate pushdown declines under pushed data filters") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_opt").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .where(col("offset") >= 31L)
       .agg(count(lit(1)).as("n"), min(col("offset")).as("min_off"))
@@ -92,7 +90,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("aggregate over an empty log returns count 0 and null bounds") {
-    val dir = freshDir() // no segments at all
+    val dir = tempDir("replay_opt").toString // no segments at all
     val df = spark.read.format("graft-replay").load(dir)
       .agg(count(lit(1)).as("n"), min(col("offset")).as("min_off"))
     val row = df.head()
@@ -101,9 +99,9 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streaming V2 sink round-trips through the commit protocol") {
-    val src = freshDir(); writeLog(src)
-    val out = freshDir("replay_sink")
-    val cp = freshDir("replay_sink_cp")
+    val src = tempDir("replay_opt").toString; writeLog(src)
+    val out = tempDir("replay_sink").toString
+    val cp = tempDir("replay_sink_cp").toString
     val q = spark.readStream.format("graft-replay")
       .option("maxSegmentsPerTrigger", "1").load(src)
       .writeStream.format("graft-replay")
@@ -120,9 +118,9 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a replayed epoch publishes nothing twice (restart idempotence)") {
-    val src = freshDir(); writeLog(src)
-    val out = freshDir("replay_sink2")
-    val cp = freshDir("replay_sink2_cp")
+    val src = tempDir("replay_opt").toString; writeLog(src)
+    val out = tempDir("replay_sink2").toString
+    val cp = tempDir("replay_sink2_cp").toString
     def start() = spark.readStream.format("graft-replay")
       .option("maxSegmentsPerTrigger", "1").load(src)
       .writeStream.format("graft-replay")
@@ -150,13 +148,13 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("direct double-commit of one epoch drops the second stage") {
-    val out = freshDir("replay_sink3")
+    val out = tempDir("replay_sink3").toString
     def staged(offset: Long): ReplaySegmentCommit = {
       val df = Seq((offset, 1000L + offset, "w0", 1.0))
         .toDF("offset", "ts_unix", "wallet_id", "amount")
       // Stage a real frame file via the batch writer's format by writing
       // a one-segment log elsewhere and moving its segment to a temp.
-      val tmpLog = freshDir("replay_stage")
+      val tmpLog = tempDir("replay_stage").toString
       ReplayLog.writeSegments(df, tmpLog, 1)
       val seg = new java.io.File(tmpLog).listFiles()
         .filter(_.getName.endsWith(ReplayLog.Extension)).head
@@ -183,7 +181,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("offset top-n prunes to n segments and results are exact") {
-    val dir = freshDir(); writeLog(dir) // 4 disjoint range segments
+    val dir = tempDir("replay_opt").toString; writeLog(dir) // 4 disjoint range segments
     val df = spark.read.format("graft-replay").load(dir)
       .orderBy(col("offset").desc).limit(3)
     val scan = scanOf(df).asInstanceOf[ReplayScan]
@@ -207,7 +205,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
     // ORDER BY offset ASC LIMIT 1 would read only segment 1, find zero
     // matches, and return EMPTY instead of offset 39 — the bug class
     // this test exists for. The cut must fire only on filterless reads.
-    val dir = freshDir()
+    val dir = tempDir("replay_opt").toString
     val docs = (1L to 40L).map { i =>
       (i, 1000L + (i - 1) * 10, if (i >= 39) "w_rare" else s"w${i % 4}", i * 1.5)
     }.toDF("offset", "ts_unix", "wallet_id", "amount")
@@ -224,7 +222,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ts top-n keeps all segments (overlap-safe) but bounds the emit") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_opt").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .orderBy(col("ts_unix").desc).limit(2)
     val scan = scanOf(df).asInstanceOf[ReplayScan]
@@ -236,7 +234,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("_segment metadata column reports frame provenance") {
-    val dir = freshDir(); writeLog(dir) // 4 disjoint range segments
+    val dir = tempDir("replay_opt").toString; writeLog(dir) // 4 disjoint range segments
     val df = spark.read.format("graft-replay").load(dir)
       .select(col("offset"), col("_segment"))
     // One segment name per disjoint offset quartile; offsets 1..10 in
@@ -256,7 +254,7 @@ class ReplayOptimizerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the writer rejects null columns loudly") {
-    val dir = freshDir()
+    val dir = tempDir("replay_opt").toString
     val withNull = Seq((Some(1L), 1000L, Option.empty[String], 1.0),
       (Some(2L), 1010L, Some("w1"), 2.0))
       .toDF("offset", "ts_unix", "wallet_id", "amount")

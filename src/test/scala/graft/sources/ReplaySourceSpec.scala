@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.sources.replay.{ReplayLog, ReplayScan}
+import graft.TestDirs.tempDir
 
 /** The `graft-replay` DataSource V2 connector: frame round trip,
   * filter pushdown REACHING the custom scan (not just accepted by the
@@ -12,9 +13,6 @@ import graft.sources.replay.{ReplayLog, ReplayScan}
   * down to the envelope, and log-recovery behavior on a torn tail. */
 class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
-
-  private def freshDir() =
-    java.nio.file.Files.createTempDirectory("replay_spec").toString
 
   // 40 deposits, offsets 1..40, ts 1000..1390, wallets w0..w3.
   private def sample = (1L to 40L).map { i =>
@@ -30,7 +28,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
     }.get.asInstanceOf[ReplayScan]
 
   test("full read round-trips every frame through the proto value") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val back = spark.read.format("graft-replay").load(dir)
     assert(back.schema.fieldNames.toSeq ==
       Seq("offset", "ts_unix", "wallet_id", "amount"))
@@ -40,7 +38,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("offset range filter is pushed to the scan AND prunes segments") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .where(col("offset") >= 31L)
     val scan = scanOf(df)
@@ -56,7 +54,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ts_unix bounds prune by the name-carried time index") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .where(col("ts_unix") < 1100L) // first 10 frames
     val scan = scanOf(df)
@@ -65,7 +63,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("wallet_id equality is pushed and applied per frame") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .where(col("wallet_id") === "w1")
     val scan = scanOf(df)
@@ -74,7 +72,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("column pruning reaches the reader schema (envelope-only read)") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir).select(col("offset"))
     val scan = scanOf(df)
     assert(scan.readSchema().fieldNames.toSeq == Seq("offset"),
@@ -83,7 +81,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("unsupported filters stay Spark-side and results are exact") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir)
       .where(col("amount") > 30.0) // amount predicates are not pushed
     val scan = scanOf(df)
@@ -95,7 +93,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a torn trailing frame truncates to the last complete record") {
-    val dir = freshDir(); writeLog(dir, nSegments = 1)
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 1)
     val seg = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(ReplayLog.Extension)).head
     val full = seg.length()
@@ -108,8 +106,8 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streaming read: one segment per trigger, content equals the batch read") {
-    val dir = freshDir(); writeLog(dir, nSegments = 4)
-    val cp = java.nio.file.Files.createTempDirectory("replay_cp").toString
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 4)
+    val cp = tempDir("replay_cp").toString
     val q = spark.readStream.format("graft-replay")
       .option("maxSegmentsPerTrigger", "1").load(dir)
       .writeStream.format("memory").queryName("replay_stream")
@@ -128,9 +126,9 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streaming restart resumes after the committed offset (no reprocessing)") {
-    val dir = freshDir(); writeLog(dir, nSegments = 4)
-    val cp = java.nio.file.Files.createTempDirectory("replay_cp2").toString
-    val out = java.nio.file.Files.createTempDirectory("replay_out").toString
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 4)
+    val cp = tempDir("replay_cp2").toString
+    val out = tempDir("replay_out").toString
     // File sink (memory sink cannot recover from a checkpoint): rows land
     // exactly once across the two incarnations of the query.
     def start() = spark.readStream.format("graft-replay")
@@ -152,7 +150,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("V2 write path: append publishes at job commit, overwrite truncates") {
-    val dir = freshDir()
+    val dir = tempDir("replay_spec").toString
     sample.repartitionByRange(4, col("offset"))
       .sortWithinPartitions(col("offset"))
       .write.format("graft-replay").mode("append").save(dir)
@@ -180,7 +178,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("limit pushdown reaches the reader (scan stops early, result exact)") {
-    val dir = freshDir(); writeLog(dir)
+    val dir = tempDir("replay_spec").toString; writeLog(dir)
     val df = spark.read.format("graft-replay").load(dir).limit(3)
     val scan = scanOf(df)
     assert(scan.description().contains("PushedLimit: 3"),
@@ -195,7 +193,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
 
   test("manifest is the commit point: unlisted strays are invisible, " +
     "a listed-but-missing segment fails loudly") {
-    val dir = freshDir(); writeLog(dir, nSegments = 2)
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 2)
     assert(new java.io.File(dir, ReplayLog.ManifestName).isFile)
     // A stray .rlog (crash between segment rename and manifest replace)
     // is ignored by reads — the old layout stays the truth.
@@ -211,7 +209,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("segment compaction: fewer files, identical content, bounds kept") {
-    val dir = freshDir(); writeLog(dir, nSegments = 8)
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 8)
     assert(ReplayLog.segments(dir).size == 8)
     val (before, after) = ReplayLog.compactSegments(spark, dir, target = 2)
     assert(before == 8 && after == 2, s"compaction $before -> $after")
@@ -225,7 +223,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("segment names are unparseable -> loud failure, not partial read") {
-    val dir = freshDir(); writeLog(dir, nSegments = 1)
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 1)
     val seg = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(ReplayLog.Extension)).head
     assert(seg.renameTo(new java.io.File(dir, "garbage.rlog")))
@@ -234,7 +232,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
 
   test("snapshots: every commit is time-travel readable; overwrite retains " +
     "history until expireSnapshots reclaims it") {
-    val dir = freshDir()
+    val dir = tempDir("replay_spec").toString
     // v1: first 20 offsets. v2: append the rest. v3: compaction overwrite.
     ReplayLog.writeSegments(sample.where(col("offset") <= 20L), dir, 2)
     ReplayLog.writeSegments(sample.where(col("offset") > 20L), dir, 2)
@@ -269,7 +267,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an overwrite reproducing identical bounds cannot mutate snapshot history") {
-    val dir = freshDir(); writeLog(dir) // v1: 4 segments, offsets 1..40
+    val dir = tempDir("replay_spec").toString; writeLog(dir) // v1: 4 segments, offsets 1..40
     val origSum = sample.agg(sum(col("amount"))).head().getDouble(0)
     // Same offsets/ts, DIFFERENT content: the corrected-overwrite shape.
     // Bare bounds names would collide with v1's files — the commit must
@@ -290,7 +288,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("snapshot chain heals a crash between commit and snapshot write") {
-    val dir = freshDir()
+    val dir = tempDir("replay_spec").toString
     ReplayLog.writeSegments(sample.where(col("offset") <= 20L), dir, 1)
     ReplayLog.writeSegments(sample
       .where(col("offset") > 20L && col("offset") <= 30L), dir, 1)
@@ -311,7 +309,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("time travel is read-only and batch-only; unknown versions fail loudly") {
-    val dir = freshDir(); writeLog(dir, nSegments = 2)
+    val dir = tempDir("replay_spec").toString; writeLog(dir, nSegments = 2)
     val e1 = intercept[Exception] {
       sample.limit(3).write.format("graft-replay")
         .option("asOfVersion", "1").mode("append").save(dir)
@@ -323,7 +321,7 @@ class ReplaySourceSpec extends AnyFunSuite with SparkSpec {
       spark.readStream.format("graft-replay")
         .option("asOfVersion", "1").load(dir)
         .writeStream.format("memory").queryName("tt_stream")
-        .option("checkpointLocation", freshDir()).start()
+        .option("checkpointLocation", tempDir("replay_spec").toString).start()
         .processAllAvailable()
     }
     assert(e2.getMessage != null)

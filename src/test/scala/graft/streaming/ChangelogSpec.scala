@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model.TimedDeposit
+import graft.TestDirs.tempDir
 
 /** The KafkaTopology changelog pattern, actually exercised: collector
   * updates append to a parquet changelog via foreachBatch; readers take
@@ -16,7 +16,7 @@ class ChangelogSpec extends AnyFunSuite with SparkSpec {
   private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("foreachBatch parquet changelog: latest row per wallet wins") {
-    val dir = Files.createTempDirectory("graft_changelog").toString
+    val dir = tempDir("graft_changelog").toString
     val path = s"$dir/balance-table"
     val input = MemoryStream[TimedDeposit]
     val q = DepositStreams.collector(spark, input.toDS())

@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model.TimedDeposit
+import graft.TestDirs.tempDir
 
 /** The engine's checkpoint file manager ([[CheckpointFiles]]): which of
   * Spark's managers it picks, and that a streaming query on a local
@@ -28,7 +29,7 @@ class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the session's checkpoints get CheckpointFiles, on the file-system manager locally") {
-    val dir = new Path(Files.createTempDirectory("graft_ckpt_fm").toUri)
+    val dir = new Path(tempDir("graft_ckpt_fm").toUri)
     CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf()) match {
       case fm: CheckpointFiles =>
         assert(fm.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager], fm.delegate)
@@ -37,7 +38,7 @@ class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an atomic write replaces an existing local file and its checksum") {
-    val dir = Files.createTempDirectory("graft_ckpt_overwrite")
+    val dir = tempDir("graft_ckpt_overwrite")
     val file = new Path(dir.resolve("2.changelog").toUri)
     val fm = CheckpointFileManager.create(file.getParent, spark.sessionState.newHadoopConf())
     def write(bytes: Array[Byte], overwrite: Boolean): Unit = {
@@ -64,7 +65,7 @@ class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a local checkpoint starts no process per rename") {
-    val ckpt = Files.createTempDirectory("graft_ckpt_fork").toString
+    val ckpt = tempDir("graft_ckpt_fork").toString
     val input = MemoryStream[TimedDeposit]
     val q = DepositStreams.detector(spark, input.toDS())
       .writeStream.format("memory").queryName("ckpt_fork")
@@ -73,7 +74,7 @@ class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
       input.addData((1 to 20).map(k => TimedDeposit(s"w${k % 5}", 700.0, 1000L + 10 * i, 100L * i + k)))
       q.processAllAvailable()
     }
-    val jfr = Files.createTempFile("graft_ckpt_fork", ".jfr")
+    val jfr = tempDir("graft_ckpt_fork").resolve("process_starts.jfr")
     val rec = new Recording()
     try {
       batch(0) // warm-up: the first batch creates the checkpoint layout

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model.{KeyedFlagEvent, TimedDeposit}
+import graft.TestDirs.tempDir
 
 /** Checkpoint recovery = the engine's upgrade over Goka's at-least-once
   * (SURVEY §2.2 delivery row): a NEW query incarnation resuming from the
@@ -15,7 +15,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("detector state and offsets survive a query restart") {
-    val root = Files.createTempDirectory("graft_ckpt").toString
+    val root = tempDir("graft_ckpt").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
 
     // Append mode drops new part files into the watched directory — the
@@ -61,7 +61,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkSpec {
     * re-folded (an at-least-once replay would double the balance).
     */
   test("collector count and running balance survive a query restart") {
-    val root = Files.createTempDirectory("graft_ckpt_collector").toString
+    val root = tempDir("graft_ckpt_collector").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
 
     def writeBatch(rows: Seq[TimedDeposit]): Unit =

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model.{KeyedFlagEvent, TimedDeposit}
 import graft.sources.Tables
+import graft.TestDirs.tempDir
 
 /** The stream_check harness replays its file-backed feed in ONE
   * micro-batch (StreamQueries class doc); production replay is CHUNKED —
@@ -37,8 +37,8 @@ class ChunkedReplaySpec extends AnyFunSuite with SparkSpec {
     val all = deposits
     val Array(t1, t2) = all.stat.approxQuantile("tsUnix", Array(0.33, 0.66), 0.0)
 
-    val feedDir = Files.createTempDirectory("graft_chunked_feed").toString
-    val work = Files.createTempDirectory("graft_chunked_work").toString
+    val feedDir = tempDir("graft_chunked_feed").toString
+    val work = tempDir("graft_chunked_work").toString
 
     // Slice 1 seeds the directory so the source has a schema-bearing file.
     all.filter(col("tsUnix") <= t1.toLong)

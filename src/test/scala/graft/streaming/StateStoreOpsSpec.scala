@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftSession, SparkSpec}
 import graft.model.{KeyedFlagEvent, TimedDeposit}
+import graft.TestDirs.tempDir
 
 /** State-store OPERATIONAL edges — the production lifecycle behaviors a
   * 100-TB streaming deployment leans on beyond plain recovery
@@ -79,7 +80,7 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("changelog checkpointing: state survives restart and changelogs are written") {
-    val root = Files.createTempDirectory("graft_ckpt_cl").toString
+    val root = tempDir("graft_ckpt_cl").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     // No conf set here: the session default (GraftSession.stateStore) must
     // engage the mode.
@@ -97,7 +98,7 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
   test("a checkpoint written in snapshot mode resumes in changelog mode") {
     // The deploy path of every existing processor checkpoint: written
     // before the engine turned changelog checkpointing on, restarted after.
-    val root = Files.createTempDirectory("graft_ckpt_upgrade").toString
+    val root = tempDir("graft_ckpt_upgrade").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
@@ -116,7 +117,7 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
     // The deploy path of every existing checkpoint: written before the
     // engine set its own checkpoint file manager, restarted after, with
     // the last batch re-run because its commit never landed.
-    val root = Files.createTempDirectory("graft_ckpt_fm_upgrade").toString
+    val root = tempDir("graft_ckpt_fm_upgrade").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     writeBatch(in, Seq(TimedDeposit("w1", 6000.0, 1000L, 1L)))
@@ -150,7 +151,7 @@ class StateStoreOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("stateful shuffle partitioning is pinned by the first checkpoint") {
-    val root = Files.createTempDirectory("graft_ckpt_rescale").toString
+    val root = tempDir("graft_ckpt_rescale").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     try {

@@ -25,7 +25,10 @@ Classification rules, in order:
     (small bases are pure jitter). With a clean calib block and a clean
     median, localized spikes are REGRESSIONS (the repo's triage rule:
     uniform drift => host, localized => regression); with a dirty calib
-    they are unattributable.
+    they are unattributable. When both files carry graft.Bench's
+    "ledger", each flagged query also shows its job count and
+    task-seconds, baseline -> draw, so a spike reads as more Spark work
+    (jobs, task-seconds up) or as waiting (both flat).
  4. BUILDS: any in-sweep `.build`/`.train` forensic event means an
     artifact retrained inside the measured sweep — the draw measured a
     cold build, not the serve path; rebuild the cache and redraw.
@@ -68,6 +71,18 @@ DEFAULT_CPUS = 32
 def load(p):
     with open(p) as f:
         return json.load(f)
+
+
+def ledger_note(draw, base, k):
+    """The query's Spark cost, baseline -> draw, when both files carry a
+    ledger entry for it (graft.Bench's per-query median jobs and
+    task-seconds); empty otherwise. Informational: no rule reads it."""
+    d = (draw.get("ledger") or {}).get(k)
+    b = (base.get("ledger") or {}).get(k)
+    if not d or not b:
+        return ""
+    return (f"; jobs {b['jobs']:g} -> {d['jobs']:g}, "
+            f"task_s {b['task_s']:.2f} -> {d['task_s']:.2f}")
 
 
 def main():
@@ -136,7 +151,8 @@ def main():
          and dq[k] - bq[k] > SPIKE_DELTA),
         key=lambda kv: -kv[1])
     for k, r in spikes:
-        notes.append(f"spike {k}: {bq[k]:.2f} -> {dq[k]:.2f} s ({r:.2f}x)")
+        notes.append(f"spike {k}: {bq[k]:.2f} -> {dq[k]:.2f} s ({r:.2f}x)"
+                     + ledger_note(draw, base, k))
 
     # 4. in-sweep builds
     builds = []
@@ -178,7 +194,8 @@ def main():
             if r > BUDGET_RATIO and dq[k] - budgets[k] > SPIKE_DELTA:
                 budget_spikes.append((k, r))
                 notes.append(
-                    f"budget breach {k}: pin {budgets[k]:.2f} -> {dq[k]:.2f} s ({r:.2f}x)")
+                    f"budget breach {k}: pin {budgets[k]:.2f} -> {dq[k]:.2f} s ({r:.2f}x)"
+                    + ledger_note(draw, base, k))
         elif k in new_qs:
             unbudgeted.append(k)
     if dq and budgets:

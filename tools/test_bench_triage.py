@@ -1,4 +1,4 @@
-"""Self-tests for the core-count rule in bench_triage.py.
+"""Self-tests for the core-count rule and the ledger notes in bench_triage.py.
 
 Run: python3 -m unittest tools/test_bench_triage.py
 """
@@ -55,6 +55,35 @@ class CoreCountTest(unittest.TestCase):
         self.assertIn("baseline 32 cpus", out)
         code, out = triage(draw(cpus=32), draw())
         self.assertEqual(code, 0, out)
+
+
+def spiked(ledger):
+    """A draw whose q_a doubled against a clean baseline: one localized
+    spike, median ratio 1.0."""
+    base = {"metric": "total", "value": 4.0, "unit": "sec", "runs": 3, "cpus": 4,
+            "queries": {"q_a": 1.0, "q_b": 2.0, "q_c": 1.0}, "calib": CALIB}
+    drawn = dict(base, value=5.0, queries={"q_a": 2.0, "q_b": 2.0, "q_c": 1.0})
+    if ledger:
+        cost = {"stages": 4, "tasks": 8, "cpu_s": 0.1, "deser_s": 0.01, "gc_s": 0.0}
+        base["ledger"] = {"q_a": dict(cost, jobs=3, task_s=0.5)}
+        drawn["ledger"] = {"q_a": dict(cost, jobs=7, task_s=1.25)}
+    return drawn, base
+
+
+class LedgerTest(unittest.TestCase):
+    def test_a_spike_shows_its_jobs_and_task_seconds_when_both_carry_a_ledger(self):
+        code, out = triage(*spiked(ledger=True))
+        self.assertEqual(code, 2, out)
+        self.assertIn("VERDICT: REGRESSION (clean host, localized spikes: q_a)", out)
+        spike = [l for l in out.splitlines() if "spike q_a" in l][0]
+        self.assertIn("(2.00x); jobs 3 -> 7, task_s 0.50 -> 1.25", spike)
+
+    def test_a_draw_without_a_ledger_gets_the_same_verdict(self):
+        code, out = triage(*spiked(ledger=False))
+        self.assertEqual(code, 2, out)
+        self.assertIn("VERDICT: REGRESSION (clean host, localized spikes: q_a)", out)
+        spike = [l for l in out.splitlines() if "spike q_a" in l][0]
+        self.assertNotIn("jobs", spike)
 
 
 if __name__ == "__main__":
