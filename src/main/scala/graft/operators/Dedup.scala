@@ -235,22 +235,28 @@ object Dedup {
         sum(when(col("jac") >= threshold, 1L).otherwise(0L)).as("n_verified"))
   }
 
-  def minhashLshPairs(docs: DataFrame, k: Int = 12, bands: Int = 4,
-                      rows: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val mh = swapCached(minhashed(docs, k, bands, rows))
+  /** The banded-MinHash candidate pairs of `mh` (doc_id, bands): each
+    * (id_a < id_b) document pair that collides on at least one band's
+    * (band_idx, band_hash) key, once. */
+  private def bandCandidates(mh: DataFrame): DataFrame = {
     val bandRows = mh.select(col("doc_id"),
       posexplode(col("bands")).as(Seq("pos", "band")))
       .select(col("doc_id"), col("band.band_idx").as("band_idx"),
         col("band.band_hash").as("band_hash"))
-    val cands = bandRows.as("a")
+    bandRows.as("a")
       .join(bandRows.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
+  }
+
+  def minhashLshPairs(docs: DataFrame, k: Int = 12, bands: Int = 4,
+                      rows: Int = 3, threshold: Double = 0.5): DataFrame = {
+    val mh = swapCached(minhashed(docs, k, bands, rows))
     val sh = mh.select(col("doc_id"), col("sh"))
-    cands
+    bandCandidates(mh)
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -274,19 +280,8 @@ object Dedup {
   def containmentPairs(docs: DataFrame, k: Int = 12, bands: Int = 4,
                        rows: Int = 3, threshold: Double = 0.7): DataFrame = {
     val mh = swapCached(minhashed(docs, k, bands, rows))
-    val bandRows = mh.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("pos", "band")))
-      .select(col("doc_id"), col("band.band_idx").as("band_idx"),
-        col("band.band_hash").as("band_hash"))
-    val cands = bandRows.as("a")
-      .join(bandRows.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
     val sh = mh.select(col("doc_id"), col("sh"))
-    cands
+    bandCandidates(mh)
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .where(size(col("sh_a")) > 0 && size(col("sh_b")) > 0)
@@ -613,19 +608,8 @@ object Dedup {
   def minhashEstimatedPairs(docs: DataFrame, kHashes: Int = 12, bands: Int = 4,
                             rows: Int = 3, threshold: Double = 0.5): DataFrame = {
     val mh = swapCached(minhashed(docs, kHashes, bands, rows))
-    val bandRows = mh.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("pos", "band")))
-      .select(col("doc_id"), col("band.band_idx").as("band_idx"),
-        col("band.band_hash").as("band_hash"))
-    val cands = bandRows.as("a")
-      .join(bandRows.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
     val sigs = mh.select(col("doc_id"), col("sig"), col("sh"))
-    cands
+    bandCandidates(mh)
       .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a"),
         col("sh").as("sh_a")), "id_a")
       .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b"),
@@ -934,7 +918,7 @@ object Dedup {
     * order-independent — so the relational DuckDB oracle computes the same
     * signature. No shuffle: the whole signature is computed where the
     * document row lives. */
-  def simhashSignatures(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def simhashSignatures(docs: DataFrame): DataFrame = {
     // One row per (doc, shingle-md5, hex-digit): 16 light rows per shingle,
     // then 4 bit-vote sums per digit position as codegen'd aggregates with
     // LITERAL shift amounts (keeps everything in whole-stage codegen — a
@@ -985,8 +969,8 @@ object Dedup {
     * (16 md5-digit rows per shingle, two corpus-wide aggregations), so it
     * builds once per corpus fingerprint and every later run serves the
     * (doc_id, simhash) scan — the banding + Hamming verify stay per-run. */
-  def simhashIndex(spark: SparkSession, docs: DataFrame): DataFrame =
-    cachedDocIndex(docs, "simhash_sigs", "w3")(simhashSignatures(spark, docs))
+  def simhashIndex(docs: DataFrame): DataFrame =
+    cachedDocIndex(docs, "simhash_sigs", "w3")(simhashSignatures(docs))
 
   /** SimHash near-dup pairs: 4×16-bit band blocking (near-identical docs
     * agree on at least one band with high probability), Hamming verify. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
@@ -47,29 +47,66 @@ object Similarity {
   private def resolveBits(emb: DataFrame, bucketBits: Int): Int =
     if (bucketBits > 0) bucketBits else lshBitsFor(emb.count())
 
-  private def prep(emb: DataFrame): DataFrame =
+  /** (vec_id, v): the embedding widened to doubles. */
+  private def vecs(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v"))) // once per vector, not per pair
 
-  /** Deterministic rank-and-keep over scored (qid, nid, cosine) rows. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid"))
+  private def prep(emb: DataFrame): DataFrame =
+    vecs(emb).withColumn("nrm", l2Norm(col("v"))) // once per vector, not per pair
+
+  /** The rows of `df` whose vec_id is one of the query ids. */
+  private def ofQueries(df: DataFrame, queries: DataFrame): DataFrame =
+    df.join(queries.select(col("vec_id")), "vec_id")
+
+  /** The score every cosine path ranks by: the dot product over the norm
+    * product, rounded onto the 6-dp grid so the (cosine desc, nid) order
+    * replays identically in any engine. */
+  private def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6).as("cosine")
+
+  /** (qid, nid, cosine) of query rows (qid, qv, qn) paired with prep'd
+    * corpus rows (vec_id, v, nrm). */
+  private def scorePairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("qid"), col("vec_id").as("nid"),
+      cosine(col("qv"), col("v"), col("qn"), col("nrm")))
+
+  /** A pair is not a vector matched with itself. */
+  private def notSelf: Column = col("nid") =!= col("qid")
+
+  /** Deterministic rank-and-keep over scored (qid, nid, `score`) rows: the
+    * `k` best per qid, ties broken by nid. `cosine` ranks highest first;
+    * every other score here is a distance and ranks lowest first. */
+  private def rankTopK(scored: DataFrame, k: Int,
+                       score: String = "cosine"): DataFrame = {
+    val best = if (score == "cosine") col(score).desc else col(score)
+    val w = Window.partitionBy(col("qid")).orderBy(best, col("nid"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("cosine"))
+      .select(col("qid"), col("rank"), col("nid"), col(score))
+  }
+
+  /** The `n`-deep shortlist per qid by an approximate `score` order, ties
+    * broken by nid; rows keep every column. */
+  private def shortlistOf(df: DataFrame, score: Column, n: Int): DataFrame =
+    df.withColumn("srank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(score, col("nid"))))
+      .where(col("srank") <= n)
+
+  /** Exact cosine of every corpus vector against every query: the query
+    * side is broadcast (it is tiny) and the corpus streams through in one
+    * pass. `selfExclude` drops the pair of a query with its own vector. */
+  private def exactScores(emb: DataFrame, queries: DataFrame,
+                          selfExclude: Boolean): DataFrame = {
+    val q = broadcast(prep(queries).select(col("vec_id").as("qid"),
+      col("v").as("qv"), col("nrm").as("qn")))
+    val c = prep(emb)
+    scorePairs(if (selfExclude) c.join(q, col("vec_id") =!= col("qid"))
+               else c.crossJoin(q))
   }
 
   /** Exact top-k neighbors (by cosine) for each query vector. */
-  def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = prep(queries).select(col("vec_id").as("qid"), col("v").as("qv"),
-      col("nrm").as("qn"))
-    val c = prep(emb)
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
-    rankTopK(scored, k)
-  }
+  def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(exactScores(emb, queries, selfExclude = true), k)
 
   /** Exact radius (range) search: every neighbor with cosine ≥
     * `minCosine` — the "all sufficiently-similar" API next to top-k
@@ -79,14 +116,9 @@ object Similarity {
     * the predicate applied inside the scan, and NOTHING shuffles — the
     * output is bounded by the threshold's selectivity, not the corpus. */
   def rangeSearch(emb: DataFrame, queries: DataFrame,
-                  minCosine: Double): DataFrame = {
-    val q = prep(queries).select(col("vec_id").as("qid"), col("v").as("qv"),
-      col("nrm").as("qn"))
-    prep(emb).join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
+                  minCosine: Double): DataFrame =
+    exactScores(emb, queries, selfExclude = true)
       .where(col("cosine") >= minCosine)
-  }
 
   /** Semantic benchmark-contamination census — the EMBEDDING-level
     * complement to the lexical n-gram sweep (`Corpus.contaminationPairs`):
@@ -108,20 +140,10 @@ object Similarity {
   def semanticContamination(emb: DataFrame, benchMod: Int, minCosine: Double,
                             nProbe: Int, indexPath: String): DataFrame = {
     val (cents, model) = servedIvf(emb, indexPath)
-    val n = prep(emb)
     val cells = cellsFor(emb, cents, model)
-    val bench = n.where(col("vec_id") % benchMod === 0)
-    val probes = bench.crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"),
-        col("qv"), col("qn"))
-      .select(col("qid"), col("pc.cid").as("cid"), col("qv"), col("qn"))
-    val hits = cells.where(col("nid") % benchMod =!= 0)
-      .join(broadcast(probes), "cid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
+    val bench = prep(emb).where(col("vec_id") % benchMod === 0)
+    val hits = scoreCells(cells.where(col("nid") % benchMod =!= 0),
+        probeCells(bench, model, nProbe), keep = None)
       .where(col("cosine") >= minCosine)
       // localCheckpoint trade (every call in this file): lineage is cut
       // to executor-local storage, so losing an executor fails the query
@@ -288,14 +310,10 @@ object Similarity {
     * measured against the same metric, not cosine). */
   def bruteForceL2TopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = prep(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    val c = prep(emb)
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("qid"))
+    val scored = prep(emb).join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         round(dist2(col("qv"), col("v")), 6).as("dist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("dist"))
+    rankTopK(scored, k, "dist")
   }
 
   /** The query bucket plus every bucket at Hamming distance 1 (one sign
@@ -318,15 +336,19 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         explode(multiProbeBuckets(signBucket(col("v"), bits), bits))
           .as("bucket"))
-    val c = prep(emb)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
+    val scored = bucketScores(bucketed(emb, bits), broadcast(q))
       .distinct() // a candidate can only match one bucket, but stay safe
     rankTopK(scored, k)
   }
+
+  /** prep'd rows plus their `bits`-wide sign bucket. */
+  private def bucketed(df: DataFrame, bits: Int): DataFrame =
+    prep(df).withColumn("bucket", signBucket(col("v"), bits))
+
+  /** Cosine of every corpus row against every query row of its bucket,
+    * the bucket key being the equi-join key. */
+  private def bucketScores(c: DataFrame, q: DataFrame): DataFrame =
+    scorePairs(c.join(q, Seq("bucket")).where(col("vec_id") =!= col("qid")))
 
   /** kNN-GRAPH construction: top-k cosine neighbors for EVERY corpus
     * vector via a sign-bucket SELF-join — the candidate edge set for
@@ -340,15 +362,10 @@ object Similarity {
     * recall trade ([[multiProbeBuckets]] recovers them at probe-set cost;
     * `sim_recall_eval` quantifies it). */
   def knnGraph(emb: DataFrame, k: Int, bucketBits: Int = 0): DataFrame = {
-    val bits = resolveBits(emb, bucketBits)
-    val c = prep(emb).withColumn("bucket", signBucket(col("v"), bits))
+    val c = bucketed(emb, resolveBits(emb, bucketBits))
     val q = c.select(col("bucket"), col("vec_id").as("qid"),
       col("v").as("qv"), col("nrm").as("qn"))
-    val scored = c.join(q, Seq("bucket"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
-    rankTopK(scored, k)
+    rankTopK(bucketScores(c, q), k)
   }
 
   /** Large × large ANN join (entity matching / linkage): top-k corpus
@@ -363,15 +380,10 @@ object Similarity {
   def annJoin(corpus: DataFrame, queries: DataFrame, k: Int,
               bucketBits: Int = 0): DataFrame = {
     val bits = resolveBits(corpus, bucketBits)
-    val c = prep(corpus).withColumn("bucket", signBucket(col("v"), bits))
-    val q = prep(queries).withColumn("bucket", signBucket(col("v"), bits))
+    val q = bucketed(queries, bits)
       .select(col("bucket"), col("vec_id").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"))
-    val scored = c.join(q, Seq("bucket"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
-    rankTopK(scored, k)
+    rankTopK(bucketScores(bucketed(corpus, bits), q), k)
   }
 
   // ---------------------------------------------------------------------
@@ -454,11 +466,31 @@ object Similarity {
   /** First-`nCells` seed centroids (vec_id < nCells), the deterministic
     * Lloyd seeding — a bounded k·d model artifact, collected like one. */
   private def seedCentroids(emb: DataFrame, nCells: Int): Array[Centroid] =
-    emb.filter(col("vec_id") < nCells)
+    centroids(emb.filter(col("vec_id") < nCells)
       .select(col("vec_id").cast("long"), asDouble(col("embedding")))
-      .collect()
-      .map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray))
+      .collect())
+
+  /** (cid, cv) rows as a cid-ordered model. */
+  private def centroids(rows: Array[Row]): Array[Centroid] =
+    rows.map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_.cid)
+
+  /** One Lloyd update over `assigned` rows (`outer` keys, `mc.cid`, vector
+    * `v`): per cell, the per-dimension mean of its vectors rounded onto
+    * the 6-dp grid, as (outer keys, cid, cv) rows. The only real shuffle
+    * is the per-(cell, dim) partial-aggregated mean. */
+  private def lloydMeans(assigned: DataFrame, outer: Seq[String],
+                         v: String): Array[Row] = {
+    val keys = outer.map(col) :+ col("cid")
+    assigned.select(outer.map(col) ++ Seq(col("mc.cid").as("cid"),
+        posexplode(col(v)).as(Seq("pos", "val"))): _*)
+      .groupBy(keys :+ col("pos"): _*)
+      .agg(round(avg(col("val")), 6).as("val"))
+      .groupBy(keys: _*)
+      .agg(expr("transform(array_sort(collect_list(struct(pos, val))), s -> s.val)")
+        .as("cv"))
+      .collect()
+  }
 
   /** Fixed-iteration, seeded Lloyd k-means over the embedding column —
     * the IVF centroid trainer. Deterministic and oracle-replayable by
@@ -479,22 +511,13 @@ object Similarity {
                              iters: Int): Array[Centroid] =
     cachedModel[Array[Centroid]](s"ivf", emb, s"$nCells|$iters",
       read = p => readCentroidArray(emb.sparkSession, p),
-      write = (p, m) => centroidDf(emb.sparkSession, m.toSeq)
+      write = (p, m) => centroidDf(emb.sparkSession, m)
         .coalesce(1).write.mode("overwrite").parquet(p)) {
-      val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val e = vecs(emb)
       var cents = seedCentroids(emb, nCells)
-      for (_ <- 1 to iters) {
-        cents = assignNearest(e, centroidDf(emb.sparkSession, cents), Seq("v"))
-          .select(col("mc.cid").as("cid"), posexplode(col("v")).as(Seq("pos", "val")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(round(avg(col("val")), 6).as("val"))
-          .groupBy(col("cid"))
-          .agg(expr("transform(array_sort(collect_list(struct(pos, val))), s -> s.val)")
-            .as("cv"))
-          .collect()
-          .map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_.cid)
-      }
+      for (_ <- 1 to iters)
+        cents = centroids(lloydMeans(
+          assignNearest(e, centroidDf(emb.sparkSession, cents), Seq("v")), Nil, "v"))
       cents
     }
 
@@ -506,26 +529,23 @@ object Similarity {
         org.apache.spark.sql.types.DoubleType), nullable = false)))
 
   private def centroidDf(spark: SparkSession,
-                         cents: Seq[Centroid]): DataFrame = {
+                         cents: Array[Centroid]): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
-      cents.map(c => org.apache.spark.sql.Row(c.cid, c.cv.toSeq)).asJava,
-      centroidSchema)
+      cents.map(c => Row(c.cid, c.cv.toSeq)).toSeq.asJava, centroidSchema)
   }
 
   /** Load a persisted centroid-model artifact (the read side of
     * [[cachedModel]]'s disk tier). */
   private def readCentroidArray(spark: SparkSession,
                                 path: String): Array[Centroid] =
-    spark.read.parquet(path).select(col("cid"), col("cv")).collect()
-      .map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_.cid)
+    centroids(spark.read.parquet(path).select(col("cid"), col("cv")).collect())
 
   /** Deterministic content digest of a centroid model — keys the persisted
     * inverted-file artifact independently of how the model was obtained
     * (trained, seeded, or read back from a named index). FNV-1a over the
     * exact double bits, so bit-identical models share one artifact. */
-  private def centsDigest(cents: Seq[Centroid]): String = {
+  private def centsDigest(cents: Array[Centroid]): String = {
     var h = 1469598103934665603L
     cents.foreach { c =>
       h = h * 1099511628211L + c.cid
@@ -565,15 +585,9 @@ object Similarity {
     IndexCache.memoByListing("ivf_index_read", path) {
       val rows = spark.read.parquet(path)
         .select(col("cid"), col("cv"), col("fingerprint")).collect()
-      (rows.map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_.cid),
-        rows.headOption.map(_.getString(2)).getOrElse(""))
+      (centroids(rows), rows.headOption.map(_.getString(2)).getOrElse(""))
     }
 
-  /** Serve IVF top-k from an already-built centroid model: map-side
-    * assignment pass over the corpus ([[assignNearest]]), probe expansion
-    * over the (tiny) query set, then one broadcast equi-join on the cell
-    * id — the corpus is never shuffled. */
   /** The inverted file — (vector → cell) plus the vector payload the
     * rerank reads — as a persisted artifact keyed by the centroid digest
     * + corpus fingerprint: serving scans it instead of re-running the
@@ -583,7 +597,7 @@ object Similarity {
   private def cellsFor(emb: DataFrame, cents: Array[Centroid],
                        model: DataFrame): DataFrame =
     IndexCache.cachedFrame(emb.sparkSession, "ivf_cells",
-        centsDigest(cents.toSeq), corpusFp(emb)) {
+        centsDigest(cents), corpusFp(emb)) {
       cellsOf(prep(emb), model)
     }
 
@@ -605,26 +619,52 @@ object Similarity {
     (cents, centroidDf(spark, cents))
   }
 
+  /** The IVF probe: the `nProbe` nearest cells of each query row
+    * (vec_id, v) under the broadcast `model`, one (qid, `cell`) row per
+    * probed cell. The query side is tiny, so a collect_list + array_sort
+    * per query replaces any window. `carry` columns (source → name) ride
+    * along, constant per query, so `first` is deterministic. `ranked` adds
+    * the 1-based probe rank `cell_rn` before the cell: the top-p cells of
+    * the sorted max-P prefix ARE the top-p probe. */
+  private def probeCells(q: DataFrame, model: DataFrame, nProbe: Int,
+                         carry: Seq[(String, String)] = Seq("v" -> "qv", "nrm" -> "qn"),
+                         cell: String = "cid", ranked: Boolean = false): DataFrame = {
+    val aggs = slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs") +:
+      carry.map { case (c, name) => first(col(c)).as(name) }
+    val out = carry.map(c => col(c._2))
+    val (probed, rank) =
+      if (ranked) (posexplode(col("pcs")).as(Seq("pi", "pc")),
+                   Seq((col("pi") + 1).cast("long").as("cell_rn")))
+      else (explode(col("pcs")).as("pc"), Nil)
+    q.crossJoin(broadcast(model))
+      .groupBy(col("vec_id"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(Seq(col("vec_id").as("qid"), probed) ++ out: _*)
+      .select((col("qid") +: rank) ++ (col("pc.cid").as(cell) +: out): _*)
+  }
+
+  /** Cosine of each query against every vector of its probed cells: the
+    * inverted file `cells` (nid, cid, nv, nn) equi-joined on the cell id to
+    * the broadcast `probes` (qid, cid, qv, qn, ...), so the corpus is never
+    * shuffled. `keep` filters pairs before scoring (self-exclusion, a
+    * metadata filter); `by` probe columns ride along after qid. */
+  private def scoreCells(cells: DataFrame, probes: DataFrame, keep: Option[Column],
+                         by: Seq[String] = Nil): DataFrame = {
+    val pairs = cells.join(broadcast(probes), "cid")
+    keep.fold(pairs)(c => pairs.where(c))
+      .select((col("qid") +: by.map(col)) ++ Seq(col("nid"),
+        cosine(col("qv"), col("nv"), col("qn"), col("nn"))): _*)
+  }
+
+  /** Serve IVF top-k from an already-built centroid model: the probe over
+    * the (tiny) query set, then the cell scan ([[scoreCells]]) of the
+    * persisted inverted file. */
   private def ivfServe(emb: DataFrame, queries: DataFrame, k: Int,
                        nProbe: Int, cents: Array[Centroid]): DataFrame = {
     val model = centroidDf(emb.sparkSession, cents)
-    val n = prep(emb)
     val cells = cellsFor(emb, cents, model)
-    // nProbe nearest cells per query: the query side is tiny, so a
-    // collect_list + array_sort per query replaces any window.
-    val probes = n.join(queries.select(col("vec_id")), "vec_id")
-      .crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"),
-        col("qv"), col("qn"))
-      .select(col("qid"), col("pc.cid").as("cid"), col("qv"), col("qn"))
-    val scored = cells.join(broadcast(probes), "cid")
-      .where(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
-    rankTopK(scored, k)
+    val probes = probeCells(ofQueries(prep(emb), queries), model, nProbe)
+    rankTopK(scoreCells(cells, probes, Some(notSelf)), k)
   }
 
   /** IVF (inverted-file) top-k: vectors are assigned to their nearest
@@ -689,21 +729,10 @@ object Similarity {
                          indexPath: String): DataFrame = {
     val (cents, model) = servedIvf(history, indexPath,
       role = " vs the history corpus")
-    val histCells = cellsFor(history, cents, model)
-    val cells = histCells.unionByName(cellsOf(prep(batch), model))
-    val q = prep(queries)
-    val probes = q.crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"),
-        col("qv"), col("qn"))
-      .select(col("qid"), col("pc.cid").as("cid"), col("qv"), col("qn"))
-    val scored = cells.join(broadcast(probes), "cid")
-      .where(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
-    rankTopK(scored, k)
+    val cells = cellsFor(history, cents, model)
+      .unionByName(cellsOf(prep(batch), model))
+    rankTopK(scoreCells(cells, probeCells(prep(queries), model, nProbe),
+      Some(notSelf)), k)
   }
 
   /** FILTERED ANN — metadata-constrained vector search, the production
@@ -715,7 +744,7 @@ object Similarity {
     * PAYLOAD COLUMN of the persisted inverted file (its own `ivf_cells_lab`
     * artifact), which is how a production index serves filters without a
     * corpus join at query time. Everything else is the [[ivfTopKServed]]
-    * cell-probe shape. */
+    * cell-probe shape ([[probeCells]], [[scoreCells]]). */
   def ivfTopKServedSameLabel(emb: DataFrame, queries: DataFrame, k: Int,
                              nProbe: Int, indexPath: String): DataFrame = {
     val spark = emb.sparkSession
@@ -725,26 +754,16 @@ object Similarity {
     // cache, or filtered ANN silently serves results under the old labels.
     val labFp = IndexCache.tableFp(emb, Seq("vec_id", "label"))
     val cells = IndexCache.cachedFrame(spark, "ivf_cells_lab",
-        s"${centsDigest(cents.toSeq)}_$labFp", corpusFp(emb)) {
+        s"${centsDigest(cents)}_$labFp", corpusFp(emb)) {
       cellsOf(prep(emb), model)
         .join(emb.select(col("vec_id").as("nid"), col("label").as("nlab")), "nid")
     }
     val q = prep(queries)
       .join(queries.select(col("vec_id"), col("label").as("qlab")), "vec_id")
-    val probes = q.crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"),
-        first(col("qlab")).as("qlab"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"),
-        col("qv"), col("qn"), col("qlab"))
-      .select(col("qid"), col("pc.cid").as("cid"), col("qv"), col("qn"),
-        col("qlab"))
-    val scored = cells.join(broadcast(probes), "cid")
-      .where(col("nid") =!= col("qid") && col("nlab") === col("qlab"))
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
-    rankTopK(scored, k)
+    val probes = probeCells(q, model, nProbe,
+      Seq("v" -> "qv", "nrm" -> "qn", "qlab" -> "qlab"))
+    rankTopK(scoreCells(cells, probes,
+      Some(notSelf && col("nlab") === col("qlab"))), k)
   }
 
   /** CROSS-MODAL top-k through the persisted IVF index — the CLIP
@@ -760,17 +779,8 @@ object Similarity {
                         nProbe: Int, indexPath: String): DataFrame = {
     val (cents, model) = servedIvf(emb, indexPath)
     val cells = cellsFor(emb, cents, model)
-    val probes = prep(queries).crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"),
-        col("qv"), col("qn"))
-      .select(col("qid"), col("pc.cid").as("cid"), col("qv"), col("qn"))
-    val scored = cells.join(broadcast(probes), "cid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
-    rankTopK(scored, k)
+    rankTopK(scoreCells(cells, probeCells(prep(queries), model, nProbe),
+      keep = None), k)
   }
 
   /** The persisted IVF ASSIGNMENT table, (vec_id, cid) — cluster
@@ -793,31 +803,17 @@ object Similarity {
     * this is one). `groundTruth` is the exact (qid, nid) top-k set the
     * caller computed (brute force, with or without self-exclusion to
     * match the probe side). Per-width ranking is identical to the
-    * serve path's: the top-p cells of the sorted max-P prefix ARE the
-    * top-p probe, and scoring/tie-break expressions are shared. */
+    * serve path's: the probe is the serve path's [[probeCells]] (its
+    * ranked form) and the scoring is its [[scoreCells]]. */
   def ivfRecallSweep(emb: DataFrame, queries: DataFrame,
                      groundTruth: DataFrame, k: Int, probes: Seq[Int],
                      indexPath: String, selfExclude: Boolean,
                      queriesInCorpus: Boolean): DataFrame = {
     val (cents, model) = servedIvf(emb, indexPath)
     val cells = cellsFor(emb, cents, model)
-    val maxP = probes.max
-    val q =
-      if (queriesInCorpus) prep(emb).join(queries.select(col("vec_id")), "vec_id")
-      else prep(queries)
-    val ranked = q.crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, maxP).as("pcs"),
-        first(col("v")).as("qv"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("qid"), posexplode(col("pcs")).as(Seq("pi", "pc")),
-        col("qv"), col("qn"))
-      .select(col("qid"), (col("pi") + 1).cast("long").as("cell_rn"),
-        col("pc.cid").as("cid"), col("qv"), col("qn"))
-    val scoredAll = cells.join(broadcast(ranked), "cid")
-    val scored = (if (selfExclude) scoredAll.where(col("nid") =!= col("qid"))
-                  else scoredAll)
-      .select(col("qid"), col("cell_rn"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("cosine"))
+    val q = if (queriesInCorpus) ofQueries(prep(emb), queries) else prep(queries)
+    val scored = scoreCells(cells, probeCells(q, model, probes.max, ranked = true),
+      if (selfExclude) Some(notSelf) else None, by = Seq("cell_rn"))
     def widths: Column =
       explode(array(probes.map(p => lit(p.toLong)): _*)).as("n_probe")
     val w = Window.partitionBy(col("n_probe"), col("qid"))
@@ -886,14 +882,8 @@ object Similarity {
 
   /** Exact cross-modal top-k (brute force, no self-exclusion) — the
     * recall denominator for [[ivfCrossModalTopK]]. */
-  def crossModalExactTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = prep(queries).select(col("vec_id").as("qid"), col("v").as("qv"),
-      col("nrm").as("qn"))
-    val scored = prep(emb).crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
-    rankTopK(scored, k)
-  }
+  def crossModalExactTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(exactScores(emb, queries, selfExclude = false), k)
 
   /** The inverted-file row shape: (nid, cid, vector payload, norm). */
   private def cellsOf(vecs: DataFrame, model: DataFrame): DataFrame =
@@ -913,21 +903,14 @@ object Similarity {
     * centroid RE-TRAINING remains a separate, rarer build step. */
   def compactIvfIndex(history: DataFrame, batch: DataFrame,
                       oldPath: String, newPath: String): Unit = {
-    val spark = history.sparkSession
-    val (cents, recordedFp) = readIvfIndex(spark, oldPath)
-    val histFp = corpusFp(history)
-    if (recordedFp != histFp)
-      throw new IllegalStateException(
-        s"IVF index at $oldPath is stale vs the history corpus " +
-          s"(recorded $recordedFp, live $histFp); rebuild with writeIvfIndex")
-    val model = centroidDf(spark, cents)
+    val (cents, model) = servedIvf(history, oldPath,
+      role = " vs the history corpus")
     val mergedFp = corpusFp(history.unionByName(batch))
-    val histCells = IndexCache.cachedFrame(spark, "ivf_cells",
-        centsDigest(cents.toSeq), histFp) { cellsOf(prep(history), model) }
+    val histCells = cellsFor(history, cents, model)
     // Persist the merged inverted file under the merged fingerprint; the
     // build reads history's artifact + assigns ONLY the batch.
-    IndexCache.cachedFrame(spark, "ivf_cells",
-        centsDigest(cents.toSeq), mergedFp) {
+    IndexCache.cachedFrame(history.sparkSession, "ivf_cells",
+        centsDigest(cents), mergedFp) {
       histCells.unionByName(cellsOf(prep(batch), model))
     }
     model.withColumn("fingerprint", lit(mergedFp))
@@ -946,29 +929,31 @@ object Similarity {
     * map-side and only one pre-aggregated row per (vector, sub) moves. */
   private def assignCodes(sv: DataFrame, cbDf: DataFrame,
                           carry: Seq[String] = Seq.empty): DataFrame = {
-    val aggs = min(struct(round(dist2(col("sv"), col("cv")), 6).as("dist"),
-      col("cid"))).as("mc") +: carry.map(c => first(col(c)).as(c))
+    val aggs = min(distEntry(col("sv"))).as("mc") +:
+      carry.map(c => first(col(c)).as(c))
     sv.join(broadcast(cbDf), "sub")
       .groupBy(col("vec_id"), col("sub"))
       .agg(aggs.head, aggs.tail: _*)
   }
 
   private def pqCodebookDf(spark: SparkSession,
-                           cbs: Seq[SubCentroid]): DataFrame = {
+                           cbs: Array[SubCentroid]): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
-      cbs.map(c => org.apache.spark.sql.Row(c.sub, c.cid, c.cv.toSeq)).asJava,
-      pqCodebookSchema)
+      cbs.map(c => Row(c.sub, c.cid, c.cv.toSeq)).toSeq.asJava, pqCodebookSchema)
   }
+
+  /** (sub, cid, cv) rows as a (sub, cid)-ordered codebook. */
+  private def subCentroids(rows: Array[Row]): Array[SubCentroid] =
+    rows.map(r => SubCentroid(r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+      .sortBy(c => (c.sub, c.cid))
 
   /** Load a persisted PQ-codebook artifact (the read side of
     * [[cachedModel]]'s disk tier). */
   private def readPqCodebookArray(spark: SparkSession,
                                   path: String): Array[SubCentroid] =
-    spark.read.parquet(path).select(col("sub"), col("cid"), col("cv"))
-      .collect()
-      .map(r => SubCentroid(r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      .sortBy(c => (c.sub, c.cid))
+    subCentroids(spark.read.parquet(path).select(col("sub"), col("cid"), col("cv"))
+      .collect())
 
   /** PQ codebook training — the same seeded, grid-rounded Lloyd as
     * [[trainIvfCentroidsArray]] run once per subspace (`sub` is just
@@ -982,28 +967,71 @@ object Similarity {
                                     variant: String = ""): Array[SubCentroid] =
     cachedModel[Array[SubCentroid]](s"pq$variant", emb, s"$m|$nCodes|$iters",
       read = p => readPqCodebookArray(emb.sparkSession, p),
-      write = (p, cb) => pqCodebookDf(emb.sparkSession, cb.toSeq)
+      write = (p, cb) => pqCodebookDf(emb.sparkSession, cb)
         .coalesce(1).write.mode("overwrite").parquet(p)) {
-      var cents = sv.where(col("vec_id") < nCodes)
+      var cents = subCentroids(sv.where(col("vec_id") < nCodes)
         .select(col("sub"), col("vec_id").cast("long").as("cid"), col("sv"))
-        .collect()
-        .map(r => SubCentroid(r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-        .sortBy(c => (c.sub, c.cid))
-      for (_ <- 1 to iters) {
-        cents = assignCodes(sv, pqCodebookDf(emb.sparkSession, cents), Seq("sv"))
-          .select(col("sub"), col("mc.cid").as("cid"),
-            posexplode(col("sv")).as(Seq("pos", "val")))
-          .groupBy(col("sub"), col("cid"), col("pos"))
-          .agg(round(avg(col("val")), 6).as("val"))
-          .groupBy(col("sub"), col("cid"))
-          .agg(expr("transform(array_sort(collect_list(struct(pos, val))), s -> s.val)")
-            .as("cv"))
-          .collect()
-          .map(r => SubCentroid(r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-          .sortBy(c => (c.sub, c.cid))
-      }
+        .collect())
+      for (_ <- 1 to iters)
+        cents = subCentroids(lloydMeans(
+          assignCodes(sv, pqCodebookDf(emb.sparkSession, cents), Seq("sv")),
+          Seq("sub"), "sv"))
       cents
     }
+
+  /** PQ sub-vector explode: `m` rows per row of `df`, (keys, sub, sv = the
+    * sub-th of `m` equal slices of vector `v`). The subvectors of one
+    * vector explode from its own row, so nothing is shuffled. */
+  private def subVectors(df: DataFrame, keys: Seq[String], v: String,
+                         m: Int): DataFrame = {
+    val subLen = (size(col(v)) / m).cast("int")
+    df.select(keys.map(col) ++ Seq(explode(sequence(lit(0), lit(m - 1))).as("sub"),
+        col(v)): _*)
+      .select(keys.map(col) ++ Seq(col("sub"),
+        slice(col(v), col("sub") * subLen + 1, subLen).as("sv")): _*)
+  }
+
+  /** Per-query ADC table: the distance from each query subvector (rows of
+    * `qsv`: `keys`, sub, sv) to EVERY code of its subspace, not just the
+    * nearest — |q|·m·nCodes rows (× nProbe when keyed by cell), small
+    * enough that every reader broadcasts it. */
+  private def adcTable(qsv: DataFrame, cbDf: DataFrame, keys: Column*): DataFrame =
+    qsv.join(broadcast(cbDf), "sub")
+      .select(keys ++ Seq(col("sub"), col("cid"),
+        round(dist2(col("sv"), col("cv")), 6).as("d")): _*)
+
+  /** Per-(qid, nid) ADC distance over joined (code, table-entry) rows. The
+    * sum of m grid-rounded doubles is on the 1e-6 grid and its FP error is
+    * far below half the grid, so round(6) is engine-portable. */
+  private def adcSum(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("qid"), col("nid")).agg(round(sum(col("d")), 6).as("adist"))
+
+  /** Exact L2 rerank of a (qid, nid) shortlist: only the shortlisted
+    * vectors are fetched. The candidate set is tiny (|q|·shortlist ids),
+    * so it is broadcast against the full vector table `e`, which is never
+    * shuffled. */
+  private def l2Rerank(e: DataFrame, queries: DataFrame, cand: DataFrame,
+                       k: Int): DataFrame = {
+    val q = ofQueries(e, queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+    val exact = broadcast(cand.join(broadcast(q), "qid"))
+      .join(e.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
+      .select(col("qid"), col("nid"),
+        round(dist2(col("qv"), col("nv")), 6).as("dist"))
+    rankTopK(exact, k, "dist")
+  }
+
+  /** The IVF-PQ serve tail of the raw and the residual variant: ADC over
+    * the vectors of each query's probed cells only (the cell join prunes
+    * candidates BEFORE any distance math), the `shortlist` best by ADC,
+    * then [[l2Rerank]]. `dtab` joins on every column but its distance. */
+  private def ivfPqServe(e: DataFrame, queries: DataFrame, codes: DataFrame,
+                         probes: DataFrame, dtab: DataFrame, k: Int,
+                         shortlist: Int): DataFrame = {
+    val scored = adcSum(codes.join(broadcast(probes), "cell").where(notSelf)
+      .join(broadcast(dtab), dtab.columns.filterNot(_ == "d").toSeq))
+    l2Rerank(e, queries,
+      shortlistOf(scored, col("adist"), shortlist).select(col("qid"), col("nid")), k)
+  }
 
   private val pqCodebookSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("sub",
@@ -1030,12 +1058,7 @@ object Similarity {
     */
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
              nCodes: Int = 16, iters: Int = 2): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val subLen = (size(col("v")) / m).cast("int")
-    val sv = e.select(col("vec_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("v"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("v"), col("sub") * subLen + 1, subLen).as("sv"))
+    val sv = subVectors(vecs(emb), Seq("vec_id"), "v", m)
     val cbs = trainPqCodebooksArray(emb, sv, m, nCodes, iters)
     val cbDf = pqCodebookDf(emb.sparkSession, cbs)
     // The PQ index: m small ints per vector — the only per-vector state
@@ -1047,22 +1070,9 @@ object Similarity {
       assignCodes(sv, cbDf)
         .select(col("vec_id").as("nid"), col("sub"), col("mc.cid").as("cid"))
     }
-    // Per-query ADC table: distance from each query subvector to EVERY
-    // code of its subspace (not just the nearest) — tiny, broadcast.
-    val dtab = sv.join(queries.select(col("vec_id")), "vec_id")
-      .join(broadcast(cbDf), "sub")
-      .select(col("vec_id").as("qid"), col("sub"), col("cid"),
-        round(dist2(col("sv"), col("cv")), 6).as("d"))
-    val scored = codes.join(broadcast(dtab), Seq("sub", "cid"))
-      .where(col("nid") =!= col("qid"))
-      .groupBy(col("qid"), col("nid"))
-      // Sum of m grid-rounded doubles: true value is ON the 1e-6 grid, FP
-      // error << half-grid, so round(6) is engine-portable.
-      .agg(round(sum(col("d")), 6).as("adist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist"), col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("adist"))
+    val dtab = adcTable(ofQueries(sv, queries), cbDf, col("vec_id").as("qid"))
+    rankTopK(adcSum(codes.join(broadcast(dtab), Seq("sub", "cid")).where(notSelf)),
+      k, "adist")
   }
 
   /** PQ shortlist + exact re-rank — how PQ is actually served: the
@@ -1078,17 +1088,7 @@ object Similarity {
                    m: Int = 8, nCodes: Int = 16, iters: Int = 2): DataFrame = {
     val cand = pqTopK(emb, queries, shortlist, m, nCodes, iters)
       .select(col("qid"), col("nid"))
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val q = e.join(queries.select(col("vec_id")), "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val scored = broadcast(cand.join(broadcast(q), "qid"))
-      .join(e.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        round(dist2(col("qv"), col("nv")), 6).as("dist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("dist"))
+    l2Rerank(vecs(emb), queries, cand, k)
   }
 
   /** IVF-PQ composite serve — the FAISS-style 100-TB ANN shape: a coarse
@@ -1113,18 +1113,14 @@ object Similarity {
                       m: Int = 8, nCodes: Int = 16, pqIters: Int = 2,
                       shortlist: Int = 30): DataFrame = {
     val spark = emb.sparkSession
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = vecs(emb)
     // Coarse quantizer: cell per corpus vector (map-side assign against
     // the broadcast centroid model).
     val model = centroidDf(spark, trainIvfCentroidsArray(emb, nCells, ivfIters))
     // PQ index: m small ints per vector + its coarse cell, encoded in-scan
     // ONCE and persisted read-through — the stored IVF-PQ index a serve
     // fleet reads; per-query work starts at the probe, not the encode.
-    val subLen = (size(col("v")) / m).cast("int")
-    val sv = e.select(col("vec_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("v"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("v"), col("sub") * subLen + 1, subLen).as("sv"))
+    val sv = subVectors(e, Seq("vec_id"), "v", m)
     val cbDf = pqCodebookDf(spark, trainPqCodebooksArray(emb, sv, m, nCodes, pqIters))
     val codes = IndexCache.cachedFrame(spark, "ivfpq_codes",
         s"$nCells|$ivfIters|$m|$nCodes|$pqIters", corpusFp(emb)) {
@@ -1134,42 +1130,10 @@ object Similarity {
         .select(col("vec_id").as("nid"), col("sub"), col("mc.cid").as("cid"))
         .join(cells, "nid")
     }
-    // nProbe nearest cells per query (tiny: collect_list over the
-    // broadcast model, no window).
-    val probes = e.join(queries.select(col("vec_id")), "vec_id")
-      .crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"))
-      .select(col("qid"), col("pc.cid").as("cell"))
-    // Per-query ADC table (|q|·m·nCodes rows, broadcast).
-    val dtab = sv.join(queries.select(col("vec_id")), "vec_id")
-      .join(broadcast(cbDf), "sub")
-      .select(col("vec_id").as("qid"), col("sub"), col("cid"),
-        round(dist2(col("sv"), col("cv")), 6).as("d"))
-    // ADC restricted to probed cells: the cell join prunes candidates
-    // BEFORE any distance math; sum of m grid-rounded doubles is on the
-    // 1e-6 grid, so round(6) is engine-portable.
-    val scored = codes.join(broadcast(probes), "cell")
-      .where(col("nid") =!= col("qid"))
-      .join(broadcast(dtab), Seq("qid", "sub", "cid"))
-      .groupBy(col("qid"), col("nid"))
-      .agg(round(sum(col("d")), 6).as("adist"))
-    val ws = Window.partitionBy(col("qid")).orderBy(col("adist"), col("nid"))
-    val cand = scored.withColumn("srank", row_number().over(ws))
-      .where(col("srank") <= shortlist)
-      .select(col("qid"), col("nid"))
-    // Exact L2 rerank on the shortlist survivors only.
-    val q = e.join(queries.select(col("vec_id")), "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val exact = broadcast(cand.join(broadcast(q), "qid"))
-      .join(e.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        round(dist2(col("qv"), col("nv")), 6).as("dist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("dist"))
+    val probes = probeCells(ofQueries(e, queries), model, nProbe, carry = Nil,
+      cell = "cell")
+    val dtab = adcTable(ofQueries(sv, queries), cbDf, col("vec_id").as("qid"))
+    ivfPqServe(e, queries, codes, probes, dtab, k, shortlist)
   }
 
   /** RESIDUAL IVF-PQ — the FAISS-default refinement of
@@ -1187,7 +1151,7 @@ object Similarity {
                               nProbe: Int = 2, m: Int = 8, nCodes: Int = 16,
                               pqIters: Int = 2, shortlist: Int = 30): DataFrame = {
     val spark = emb.sparkSession
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = vecs(emb)
     val model = centroidDf(spark, trainIvfCentroidsArray(emb, nCells, ivfIters))
     val cellCv = broadcast(model.select(col("cid").as("cell"), col("cv")))
     // Residual per corpus vector: assigned cell + v − centroid.
@@ -1196,11 +1160,7 @@ object Similarity {
       .join(cellCv, "cell")
       .select(col("vec_id"), col("cell"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
-    val subLen = (size(col("r")) / m).cast("int")
-    val sv = cells.select(col("vec_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("r"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("r"), col("sub") * subLen + 1, subLen).as("sv"))
+    val sv = subVectors(cells, Seq("vec_id"), "r", m)
     val cbDf = pqCodebookDf(spark,
       trainPqCodebooksArray(emb, sv, m, nCodes, pqIters, variant = "res"))
     // Residual code table + coarse cell, encoded once and persisted
@@ -1212,44 +1172,15 @@ object Similarity {
         .join(cells.select(col("vec_id").as("nid"), col("cell")), "nid")
     }
     // Query probes: nProbe nearest cells, one residual per probed cell.
-    val probes = e.join(queries.select(col("vec_id")), "vec_id")
-      .crossJoin(broadcast(model))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(distEntry(col("v")))), 1, nProbe).as("pcs"),
-        first(col("v")).as("qv"))
-      .select(col("vec_id").as("qid"), explode(col("pcs")).as("pc"), col("qv"))
-      .select(col("qid"), col("pc.cid").as("cell"), col("qv"))
+    val probes = probeCells(ofQueries(e, queries), model, nProbe,
+        carry = Seq("v" -> "qv"), cell = "cell")
       .join(cellCv, "cell")
       .select(col("qid"), col("cell"),
         zip_with(col("qv"), col("cv"), (a, b) => a - b).as("rq"))
-    val subLenQ = (size(col("rq")) / m).cast("int")
-    val qsv = probes.select(col("qid"), col("cell"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("rq"))
-      .select(col("qid"), col("cell"), col("sub"),
-        slice(col("rq"), col("sub") * subLenQ + 1, subLenQ).as("sv"))
-    val dtab = qsv.join(broadcast(cbDf), "sub")
-      .select(col("qid"), col("cell"), col("sub"), col("cid"),
-        round(dist2(col("sv"), col("cv")), 6).as("d"))
-    val scored = codes
-      .join(broadcast(probes.select(col("qid"), col("cell"))), "cell")
-      .where(col("nid") =!= col("qid"))
-      .join(broadcast(dtab), Seq("qid", "cell", "sub", "cid"))
-      .groupBy(col("qid"), col("nid"))
-      .agg(round(sum(col("d")), 6).as("adist"))
-    val ws = Window.partitionBy(col("qid")).orderBy(col("adist"), col("nid"))
-    val cand = scored.withColumn("srank", row_number().over(ws))
-      .where(col("srank") <= shortlist)
-      .select(col("qid"), col("nid"))
-    val q = e.join(queries.select(col("vec_id")), "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val exact = broadcast(cand.join(broadcast(q), "qid"))
-      .join(e.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        round(dist2(col("qv"), col("nv")), 6).as("dist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("dist"))
+    val dtab = adcTable(subVectors(probes, Seq("qid", "cell"), "rq", m), cbDf,
+      col("qid"), col("cell"))
+    ivfPqServe(e, queries, codes, probes.select(col("qid"), col("cell")), dtab,
+      k, shortlist)
   }
 
   /** LSH-bucketed top-k: only candidates sharing the query's sign bucket are
@@ -1260,13 +1191,7 @@ object Similarity {
     val q = prep(queries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         signBucket(col("v"), bits).as("bucket"))
-    val c = prep(emb)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cosine"))
-    rankTopK(scored, k)
+    rankTopK(bucketScores(bucketed(emb, bits), broadcast(q)), k)
   }
 
   /** Per-dimension int8 quantization codes for `v` against broadcast
@@ -1291,7 +1216,7 @@ object Similarity {
     * deterministic across engines, unlike a float approximate score. */
   def sqRerankTopK(emb: DataFrame, queries: DataFrame, k: Int,
                    shortlist: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = vecs(emb)
     // Per-dim [min, max] in ONE pass; zero-width dims quantize to a
     // constant code (every vector gets the same value for that dim, so
     // the dot contribution is equal and ranking is unaffected).
@@ -1307,7 +1232,7 @@ object Similarity {
     val coded = e.crossJoin(broadcast(bounds))
       .select(col("vec_id"), col("v"),
         sqCodes(col("v"), col("mns"), col("ws")).as("codes"))
-    val q = coded.join(queries.select(col("vec_id")), "vec_id")
+    val q = ofQueries(coded, queries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("codes").as("qcodes"))
     // Integer dot over int8 codes via the codegen'd vec_dot: every
@@ -1315,21 +1240,24 @@ object Similarity {
     // a double, so the cast back to long is the same integer the
     // interpreted HOF fold produced (measured ~6× on this hot path, the
     // same gap DotProduct's scaladoc records for the float path).
-    val approx = coded.join(broadcast(q), col("vec_id") =!= col("qid"))
+    shortlistRerank(coded, q,
+      dot(col("qcodes").cast("array<double>"), col("codes").cast("array<double>"))
+        .cast("long").as("iscore"), col("iscore").desc, shortlist, k)
+  }
+
+  /** Approximate shortlist + exact rerank: every row of `coded` (vec_id,
+    * v, codes) is scored by `approx` against each broadcast query row of
+    * `q` (qid, qv, query codes), self excluded; the `shortlist` best by
+    * `order` keep both full vectors, and the exact cosine reranks them,
+    * with norms computed on the ≤ shortlist×|queries| surviving rows, not
+    * the corpus. */
+  private def shortlistRerank(coded: DataFrame, q: DataFrame, approx: Column,
+                              order: Column, shortlist: Int, k: Int): DataFrame = {
+    val scored = coded.join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qv"), col("vec_id").as("nid"), col("v").as("nv"),
-        dot(col("qcodes").cast("array<double>"), col("codes").cast("array<double>"))
-          .cast("long").as("iscore"))
-    val ws = Window.partitionBy(col("qid"))
-      .orderBy(col("iscore").desc, col("nid"))
-    val cand = approx.withColumn("srank", row_number().over(ws))
-      .where(col("srank") <= shortlist)
-    // Exact rerank over the shortlist only — norms computed on the ≤
-    // shortlist×|queries| surviving rows, not the corpus.
-    val scored = cand
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (l2Norm(col("qv")) * l2Norm(col("nv"))), 6)
-          .as("cosine"))
-    rankTopK(scored, k)
+        approx)
+    rankTopK(shortlistOf(scored, order, shortlist).select(col("qid"), col("nid"),
+      cosine(col("qv"), col("nv"), l2Norm(col("qv")), l2Norm(col("nv")))), k)
   }
 
   /** Sign bits of `v` for dims [32·word, 32·word+32) packed into one long
@@ -1358,24 +1286,15 @@ object Similarity {
     * shortlist is deterministic across engines. */
   def binaryRerankTopK(emb: DataFrame, queries: DataFrame, k: Int,
                        shortlist: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val coded = e.select(col("vec_id"), col("v"),
+    val coded = vecs(emb).select(col("vec_id"), col("v"),
       signWord(col("v"), 0).as("w0"), signWord(col("v"), 1).as("w1"))
-    val q = coded.join(queries.select(col("vec_id")), "vec_id")
+    val q = ofQueries(coded, queries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("w0").as("qw0"), col("w1").as("qw1"))
-    val approx = coded.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("qv"), col("vec_id").as("nid"), col("v").as("nv"),
-        (bit_count(col("w0").bitwiseXOR(col("qw0"))) +
-          bit_count(col("w1").bitwiseXOR(col("qw1")))).as("ham"))
-    val ws = Window.partitionBy(col("qid")).orderBy(col("ham"), col("nid"))
-    val cand = approx.withColumn("srank", row_number().over(ws))
-      .where(col("srank") <= shortlist)
-    val scored = cand
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (l2Norm(col("qv")) * l2Norm(col("nv"))), 6)
-          .as("cosine"))
-    rankTopK(scored, k)
+    shortlistRerank(coded, q,
+      (bit_count(col("w0").bitwiseXOR(col("qw0"))) +
+        bit_count(col("w1").bitwiseXOR(col("qw1")))).as("ham"),
+      col("ham"), shortlist, k)
   }
 
   /** Top-principal-component projection — PCA as an aggregation-trained
@@ -1465,21 +1384,10 @@ object Similarity {
     * on nid), so the shortlist cannot differ across engines. */
   def prefixRerankTopK(emb: DataFrame, queries: DataFrame, k: Int,
                        shortlist: Int, prefixDims: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("p", slice(col("v"), 1, prefixDims))
-    val q = e.join(queries.select(col("vec_id")), "vec_id")
+    val e = vecs(emb).withColumn("p", slice(col("v"), 1, prefixDims))
+    val q = ofQueries(e, queries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("p").as("qp"))
-    val approx = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("qv"), col("vec_id").as("nid"), col("v").as("nv"),
-        round(dot(col("qp"), col("p")), 6).as("pscore"))
-    val ws = Window.partitionBy(col("qid"))
-      .orderBy(col("pscore").desc, col("nid"))
-    val cand = approx.withColumn("srank", row_number().over(ws))
-      .where(col("srank") <= shortlist)
-    val scored = cand
-      .select(col("qid"), col("nid"),
-        round(dot(col("qv"), col("nv")) / (l2Norm(col("qv")) * l2Norm(col("nv"))), 6)
-          .as("cosine"))
-    rankTopK(scored, k)
+    shortlistRerank(e, q, round(dot(col("qp"), col("p")), 6).as("pscore"),
+      col("pscore").desc, shortlist, k)
   }
 }

@@ -363,7 +363,7 @@ object DedupQueries {
         "SELECT id_a, id_b, hamming FROM hd WHERE hamming <= 8 ORDER BY id_a, id_b") {
       (s, d) =>
         Dedup.simhashPairs(
-            Dedup.simhashIndex(s, Tables.documents(s, d)), maxHamming = 8)
+            Dedup.simhashIndex(Tables.documents(s, d)), maxHamming = 8)
           .orderBy(col("id_a"), col("id_b"))
     },
 

@@ -965,57 +965,12 @@ object SimilarityQueries {
     * `nProbe` probed cells, shortlist by ADC distance, exact L2 rerank. */
   private def ivfPqSql(nCells: Int, ivfIters: Int, nProbe: Int, m: Int,
                        nCodes: Int, pqIters: Int, shortlist: Int, k: Int,
-                       nQueries: Int): String = {
-    def iDist(name: String, cent: String) =
-      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM e, $cent c)"
-    val iTrain = (1 to ivfIters).map { t =>
-      iDist(s"id$t", s"icent${t - 1}") + ", " +
-        s"ia$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM id$t) WHERE rn = 1), " +
-        s"is$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM ia$t a JOIN iu u USING (vec_id) GROUP BY a.cid, u.pos), " +
-        s"icent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM is$t GROUP BY cid)"
-    }.mkString(", ")
-    def pDist(name: String, cent: String) =
-      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(s.s) + 1), i -> (s.s[i] - c.cv[i]) * (s.s[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM sv s JOIN $cent c USING (sub))"
-    val pTrain = (1 to pqIters).map { t =>
-      pDist(s"pd$t", s"pcent${t - 1}") + ", " +
-        s"pa$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
-        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-        s"FROM pd$t) WHERE rn = 1), " +
-        s"ps$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM pa$t a JOIN pu u ON u.vec_id = a.vec_id AND u.sub = a.sub " +
-        "GROUP BY a.sub, a.cid, u.pos), " +
-        s"pcent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM ps$t " +
-        "GROUP BY sub, cid)"
-    }.mkString(", ")
-    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-      // IVF coarse quantizer.
-      "iu AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM e), " +
-      s"icent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM e WHERE vec_id < $nCells), " +
-      s"$iTrain, " +
-      iDist("idf", s"icent$ivfIters") + ", " +
-      "irf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM idf), " +
-      "cell AS (SELECT vec_id AS nid, cid AS cell FROM irf WHERE rn = 1), " +
-      s"probe AS (SELECT vec_id AS qid, cid AS cell FROM irf " +
-      s"WHERE rn <= $nProbe AND vec_id < $nQueries), " +
+                       nQueries: Int): String =
+    ivfPqProbeSql(nCells, ivfIters, nProbe, nQueries) +
       // PQ codebooks + codes.
       s"sv AS (SELECT vec_id, sub, list_slice(v, sub * (len(v) // $m) + 1, " +
       s"(sub + 1) * (len(v) // $m)) AS s FROM e, range(0, $m) r(sub)), " +
-      "pu AS (SELECT vec_id, sub, unnest(s) AS val, " +
-      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
-      s"pcent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
-      s"WHERE vec_id < $nCodes), " +
-      s"$pTrain, " +
-      pDist("pdf", s"pcent$pqIters") + ", " +
-      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
-      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-      "FROM pdf) WHERE rn = 1), " +
+      ivfPqCodesSql(nCodes, pqIters) +
       s"dtab AS (SELECT vec_id AS qid, sub, cid, dist AS d FROM pdf " +
       s"WHERE vec_id < $nQueries), " +
       // ADC over probed cells only, shortlist, exact rerank.
@@ -1023,17 +978,7 @@ object SimilarityQueries {
       "FROM codes c JOIN cell USING (nid) JOIN probe p USING (cell) " +
       "JOIN dtab t ON t.qid = p.qid AND t.sub = c.sub AND t.cid = c.cid " +
       "WHERE c.nid != p.qid GROUP BY p.qid, c.nid), " +
-      "r AS (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY adist, nid) AS srank FROM sc), " +
-      s"cand AS (SELECT qid, nid FROM r WHERE srank <= $shortlist), " +
-      "resc AS (SELECT c.qid, c.nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(a.v) + 1), i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) " +
-      "AS dist FROM cand c JOIN e a ON a.vec_id = c.qid " +
-      "JOIN e b ON b.vec_id = c.nid), " +
-      "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc) " +
-      s"SELECT qid, rank, nid, dist FROM rr WHERE rank <= $k ORDER BY qid, rank"
-  }
+      ivfPqRerankSql(shortlist, k)
 
   /** DuckDB replay of [[Similarity.ivfPqResidualRerankTopK]]: the same
     * i-/p-prefixed composition as [[ivfPqSql]], with PQ training, encoding
@@ -1042,59 +987,15 @@ object SimilarityQueries {
     * distance table keys on (qid, cell, sub, cid)). */
   private def ivfPqResidualSql(nCells: Int, ivfIters: Int, nProbe: Int,
                                m: Int, nCodes: Int, pqIters: Int,
-                               shortlist: Int, k: Int, nQueries: Int): String = {
-    def iDist(name: String, cent: String) =
-      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM e, $cent c)"
-    val iTrain = (1 to ivfIters).map { t =>
-      iDist(s"id$t", s"icent${t - 1}") + ", " +
-        s"ia$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM id$t) WHERE rn = 1), " +
-        s"is$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM ia$t a JOIN iu u USING (vec_id) GROUP BY a.cid, u.pos), " +
-        s"icent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM is$t GROUP BY cid)"
-    }.mkString(", ")
-    def pDist(name: String, cent: String) =
-      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(s.s) + 1), i -> (s.s[i] - c.cv[i]) * (s.s[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM sv s JOIN $cent c USING (sub))"
-    val pTrain = (1 to pqIters).map { t =>
-      pDist(s"pd$t", s"pcent${t - 1}") + ", " +
-        s"pa$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
-        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-        s"FROM pd$t) WHERE rn = 1), " +
-        s"ps$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM pa$t a JOIN pu u ON u.vec_id = a.vec_id AND u.sub = a.sub " +
-        "GROUP BY a.sub, a.cid, u.pos), " +
-        s"pcent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM ps$t " +
-        "GROUP BY sub, cid)"
-    }.mkString(", ")
-    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-      "iu AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM e), " +
-      s"icent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM e WHERE vec_id < $nCells), " +
-      s"$iTrain, " +
-      iDist("idf", s"icent$ivfIters") + ", " +
-      "irf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM idf), " +
-      "cell AS (SELECT vec_id AS nid, cid AS cell FROM irf WHERE rn = 1), " +
-      s"probe AS (SELECT vec_id AS qid, cid AS cell FROM irf " +
-      s"WHERE rn <= $nProbe AND vec_id < $nQueries), " +
+                               shortlist: Int, k: Int, nQueries: Int): String =
+    ivfPqProbeSql(nCells, ivfIters, nProbe, nQueries) +
       // Corpus residuals against the ASSIGNED cell centroid.
       s"rescv AS (SELECT c.nid AS vec_id, list_transform(range(1, len(e.v) + 1), " +
       s"i -> e.v[i] - ic.cv[i]) AS r FROM cell c JOIN e ON e.vec_id = c.nid " +
       s"JOIN icent$ivfIters ic ON ic.cid = c.cell), " +
       s"sv AS (SELECT vec_id, sub, list_slice(r, sub * (len(r) // $m) + 1, " +
       s"(sub + 1) * (len(r) // $m)) AS s FROM rescv, range(0, $m) r2(sub)), " +
-      "pu AS (SELECT vec_id, sub, unnest(s) AS val, " +
-      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
-      s"pcent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
-      s"WHERE vec_id < $nCodes), " +
-      s"$pTrain, " +
-      pDist("pdf", s"pcent$pqIters") + ", " +
-      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
-      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-      "FROM pdf) WHERE rn = 1), " +
+      ivfPqCodesSql(nCodes, pqIters) +
       // Query residual per PROBED cell; ADC table keyed by (qid, cell).
       s"qres AS (SELECT p.qid, p.cell, list_transform(range(1, len(e.v) + 1), " +
       s"i -> e.v[i] - ic.cv[i]) AS rq FROM probe p JOIN e ON e.vec_id = p.qid " +
@@ -1108,7 +1009,70 @@ object SimilarityQueries {
       "FROM codes c JOIN cell cl ON cl.nid = c.nid JOIN probe p ON p.cell = cl.cell " +
       "JOIN dtab t ON t.qid = p.qid AND t.cell = cl.cell AND t.sub = c.sub AND t.cid = c.cid " +
       "WHERE c.nid != p.qid GROUP BY 1, 2), " +
-      "r AS (SELECT qid, nid, ROW_NUMBER() OVER " +
+      ivfPqRerankSql(shortlist, k)
+
+  /** The IVF-PQ replays' coarse quantizer, through the `cell` (inverted
+    * file) and `probe` CTEs: the i-prefixed k-means over `e`. Ends in ", ". */
+  private def ivfPqProbeSql(nCells: Int, ivfIters: Int, nProbe: Int,
+                            nQueries: Int): String = {
+    def iDist(name: String, cent: String) =
+      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
+        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
+        s"AS dist FROM e, $cent c)"
+    val iTrain = (1 to ivfIters).map { t =>
+      iDist(s"id$t", s"icent${t - 1}") + ", " +
+        s"ia$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
+        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM id$t) WHERE rn = 1), " +
+        s"is$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
+        s"FROM ia$t a JOIN iu u USING (vec_id) GROUP BY a.cid, u.pos), " +
+        s"icent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM is$t GROUP BY cid)"
+    }.mkString(", ")
+    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+      "iu AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM e), " +
+      s"icent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM e WHERE vec_id < $nCells), " +
+      s"$iTrain, " +
+      iDist("idf", s"icent$ivfIters") + ", " +
+      "irf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
+      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM idf), " +
+      "cell AS (SELECT vec_id AS nid, cid AS cell FROM irf WHERE rn = 1), " +
+      s"probe AS (SELECT vec_id AS qid, cid AS cell FROM irf " +
+      s"WHERE rn <= $nProbe AND vec_id < $nQueries), "
+  }
+
+  /** The IVF-PQ replays' product quantizer over the subvector CTE `sv`:
+    * the p-prefixed codebook training, the final distance table `pdf` and
+    * the `codes` index. Ends in ", ". */
+  private def ivfPqCodesSql(nCodes: Int, pqIters: Int): String = {
+    def pDist(name: String, cent: String) =
+      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ROUND(list_sum(list_transform(" +
+        "range(1, len(s.s) + 1), i -> (s.s[i] - c.cv[i]) * (s.s[i] - c.cv[i]))), 6) " +
+        s"AS dist FROM sv s JOIN $cent c USING (sub))"
+    val pTrain = (1 to pqIters).map { t =>
+      pDist(s"pd$t", s"pcent${t - 1}") + ", " +
+        s"pa$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
+        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
+        s"FROM pd$t) WHERE rn = 1), " +
+        s"ps$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
+        s"FROM pa$t a JOIN pu u ON u.vec_id = a.vec_id AND u.sub = a.sub " +
+        "GROUP BY a.sub, a.cid, u.pos), " +
+        s"pcent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM ps$t " +
+        "GROUP BY sub, cid)"
+    }.mkString(", ")
+    "pu AS (SELECT vec_id, sub, unnest(s) AS val, " +
+      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
+      s"pcent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
+      s"WHERE vec_id < $nCodes), " +
+      s"$pTrain, " +
+      pDist("pdf", s"pcent$pqIters") + ", " +
+      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
+      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
+      "FROM pdf) WHERE rn = 1), "
+  }
+
+  /** The IVF-PQ replays' tail over their ADC scores `sc`: the ADC
+    * shortlist, then the exact L2 rerank of its survivors. */
+  private def ivfPqRerankSql(shortlist: Int, k: Int): String =
+    "r AS (SELECT qid, nid, ROW_NUMBER() OVER " +
       "(PARTITION BY qid ORDER BY adist, nid) AS srank FROM sc), " +
       s"cand AS (SELECT qid, nid FROM r WHERE srank <= $shortlist), " +
       "resc AS (SELECT c.qid, c.nid, ROUND(list_sum(list_transform(" +
@@ -1118,7 +1082,6 @@ object SimilarityQueries {
       "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
       "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc) " +
       s"SELECT qid, rank, nid, dist FROM rr WHERE rank <= $k ORDER BY qid, rank"
-  }
 
   /** DuckDB replay of [[Similarity.trainIvfCentroids]] + the IVF probe:
     * cent0 = first-`nCells` seeds; each iteration ranks the sequential

@@ -23,13 +23,17 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** (file name, line number) of every line of `files` that contains `needle`. */
-  private def hits(files: Seq[Path], needle: String): Seq[(String, Int)] =
+  /** (file name, line number) of every line of `files` that `p` accepts. */
+  private def hitsWhere(files: Seq[Path])(p: String => Boolean): Seq[(String, Int)] =
     files.flatMap { f =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains(needle) => (f.getFileName.toString, i + 1)
+        case (line, i) if p(line) => (f.getFileName.toString, i + 1)
       }
     }
+
+  /** (file name, line number) of every line of `files` that contains `needle`. */
+  private def hits(files: Seq[Path], needle: String): Seq[(String, Int)] =
+    hitsWhere(files)(_.contains(needle))
 
   private lazy val main = scalaFiles("src/main/scala")
 
@@ -109,6 +113,31 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     // false on an existing target instead of replacing it.
     val found = Seq("getFileSystem", "FileSystem.get").flatMap(hits(main, _))
     assert(found.nonEmpty && found.forall(_._1 == "CheckpointFiles.scala"), found)
+  }
+
+  private def operator(name: String): Seq[Path] = {
+    val f = scalaFiles("src/main/scala/graft/operators").filter(_.getFileName.toString == name)
+    assert(f.size == 1, f)
+    f
+  }
+
+  // The ANN and MinHash kernels: each repeated stage is one private helper,
+  // so a probe, scoring or candidate rule has one place to change. Needles
+  // spelled in two parts, so this file is no hit of its own scan.
+  test("Similarity writes the IVF probe (collect_list of distEntry) once") {
+    val found = hits(operator("Similarity.scala"), "collect_list(" + "distEntry(")
+    assert(found.size == 1, found)
+  }
+
+  test("Similarity writes the rounded cosine score once") {
+    val cosine = ("""round\(""" + """dot\(.*\) / \(.*, 6\)""").r
+    val found = hitsWhere(operator("Similarity.scala"))(cosine.findFirstIn(_).nonEmpty)
+    assert(found.size == 1, found)
+  }
+
+  test("Dedup writes the banded-MinHash candidate self-join once") {
+    val found = hits(operator("Dedup.scala"), "bandRows" + ".as(\"a\")")
+    assert(found.size == 1, found)
   }
 
   test("no spec makes a temp directory of its own; they come from TestDirs") {

@@ -121,7 +121,7 @@ class DedupEdgeSpec extends AnyFunSuite with SparkSpec {
     assert(cold == inline)
     assert(warm == inline)
     def simPairs(src: org.apache.spark.sql.DataFrame) =
-      Dedup.simhashPairs(Dedup.simhashIndex(spark, src))
+      Dedup.simhashPairs(Dedup.simhashIndex(src))
         .as[(Long, Long, Long)].collect().toSeq.sorted
     assert(simPairs(f) == simPairs(d))
     def edPairs(src: org.apache.spark.sql.DataFrame) =
