@@ -1,13 +1,10 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable Bloom filter for semi-join reduction — the runtime-filter
   * pattern made a first-class, storable value (Spark's own
@@ -24,13 +21,58 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~(1 − selectivity).
   *
   * Bits/hashes: standard double hashing (Kirsch–Mitzenmatcher) over the
-  * splitmix64 finalizer already used by the theta sketch; `m` is rounded
-  * up to a power of two so the modulo is a mask.
+  * hashed key form the theta sketch also uses ([[SketchKeys.hashed]]);
+  * `m` is rounded up to a power of two so the modulo is a mask.
+  *
+  * `bloom_agg(key, numBits, k)` builds one over a long or string key column
+  * (numBits a power of two ≥ 64, see [[Bloom.sizeFor]]; 1 ≤ k ≤ 16);
+  * partials OR-merge. It has no merge aggregate of its own.
   *
   * Wire format (`binary`): int32 numBits, int32 k, then numBits/64 int64
   * words.
   */
+case class Bloom(numBits: Int, k: Int) extends Sketch[BloomBuffer] {
+  require(Bloom.validBits(numBits),
+    s"bloom_agg numBits must be a power of two >= 64, got $numBits")
+  require(Bloom.validK(k), s"bloom_agg k must be in [1,16], got $k")
+
+  def name: String = "bloom_agg"
+  type Key = Long
+  def key(dt: DataType): Any => Long = SketchKeys.hashed(dt)
+
+  def empty: BloomBuffer = new BloomBuffer(numBits, k, new Array[Long](numBits / 64))
+  def add(b: BloomBuffer, h1: Long): Unit = Bloom.setBits(b.words, numBits, k, h1)
+
+  def merge(b: BloomBuffer, o: BloomBuffer): Unit = {
+    var i = 0
+    while (i < b.words.length) { b.words(i) |= o.words(i); i += 1 }
+  }
+
+  def partial(b: BloomBuffer): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 + 8 * b.words.length)
+    bb.putInt(b.numBits).putInt(b.k)
+    b.words.foreach(bb.putLong)
+    bb.array()
+  }
+
+  // The header carries the geometry, so any instance decodes any filter.
+  def decode(bytes: Array[Byte], fn: String): BloomBuffer = {
+    check(bytes.length >= 8, fn, s"${bytes.length} bytes, shorter than its header")
+    val bb = ByteBuffer.wrap(bytes)
+    val nb = bb.getInt; val kk = bb.getInt
+    check(Bloom.validBits(nb) && Bloom.validK(kk) && bytes.length == 8L + nb / 8, fn,
+      s"numBits = $nb, k = $kk in ${bytes.length} bytes")
+    val words = new Array[Long](nb / 64)
+    var i = 0
+    while (i < words.length) { words(i) = bb.getLong; i += 1 }
+    new BloomBuffer(nb, kk, words)
+  }
+}
+
 object Bloom {
+
+  def validBits(numBits: Int): Boolean = numBits >= 64 && (numBits & (numBits - 1)) == 0
+  def validK(k: Int): Boolean = k >= 1 && k <= 16
 
   /** Optimal sizing for `n` expected items at false-positive rate `fpp`,
     * numBits rounded up to a power of two (min 64). */
@@ -43,26 +85,14 @@ object Bloom {
     (m.toInt, math.min(k, 16))
   }
 
-  def encode(numBits: Int, k: Int, words: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 8 * words.length)
-    bb.putInt(numBits).putInt(k)
-    words.foreach(bb.putLong)
-    bb.array()
-  }
+  private val reader = Bloom(64, 1)
 
-  /** @return (numBits, k, words) */
-  def decode(bytes: Array[Byte]): (Int, Int, Array[Long]) = {
-    val bb = ByteBuffer.wrap(bytes)
-    val numBits = bb.getInt; val k = bb.getInt
-    val words = new Array[Long](numBits / 64)
-    var i = 0
-    while (i < words.length) { words(i) = bb.getLong; i += 1 }
-    (numBits, k, words)
-  }
+  /** A filter's wire value, checked; its header carries the geometry. */
+  def decode(bytes: Array[Byte], fn: String): BloomBuffer = reader.decode(bytes, fn)
 
   /** Second hash for double hashing — independent finalize, forced odd so
     * successive probes cycle the full power-of-two ring. */
-  def hash2(h1: Long): Long = ThetaSketch.hashLong(h1 ^ 0x9E3779B97F4A7C15L) | 1L
+  def hash2(h1: Long): Long = SketchKeys.hashLong(h1 ^ 0x9E3779B97F4A7C15L) | 1L
 
   def setBits(words: Array[Long], numBits: Int, k: Int, h1: Long): Unit = {
     val mask = numBits - 1
@@ -78,8 +108,8 @@ object Bloom {
   /** Per-row decode + probe — the non-foldable-bloom fallback, also
     * called from generated code. */
   def mightContainBytes(bytes: Array[Byte], h1: Long): Boolean = {
-    val (nb, k, words) = decode(bytes)
-    mightContain(words, nb, k, h1)
+    val b = decode(bytes, "bloom_might_contain")
+    mightContain(b.words, b.numBits, b.k, h1)
   }
 
   /** Membership probe over decoded words (also called from generated code —
@@ -98,74 +128,7 @@ object Bloom {
 }
 
 /** Mutable build buffer: the bit words plus the (numBits, k) geometry. */
-final class BloomBuffer(val numBits: Int, val k: Int) {
-  val words = new Array[Long](numBits / 64)
-  def or(other: BloomBuffer): Unit = {
-    var i = 0
-    while (i < words.length) { words(i) |= other.words(i); i += 1 }
-  }
-}
-
-/** `bloom_agg(key, numBits, k)`: build a Bloom filter over a long or
-  * string key column (numBits must be a power of two ≥ 64; see
-  * [[Bloom.sizeFor]]). Map-side partials OR-merge, so only bit arrays
-  * cross the shuffle. */
-case class BloomAgg(child: Expression, numBits: Int, k: Int,
-                    mutableAggBufferOffset: Int = 0,
-                    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BloomBuffer] {
-
-  require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
-    s"bloom_agg numBits must be a power of two >= 64, got $numBits")
-  require(k >= 1 && k <= 16, s"bloom_agg k must be in [1,16], got $k")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_agg requires an integral or string key, got $other")
-  }
-  override def prettyName: String = "bloom_agg"
-
-  private lazy val hashOne: Any => Long = child.dataType match {
-    case StringType => v => ThetaSketch.hashBytes(v.asInstanceOf[UTF8String].getBytes)
-    case LongType    => v => ThetaSketch.hashLong(v.asInstanceOf[Long])
-    case IntegerType => v => ThetaSketch.hashLong(v.asInstanceOf[Int].toLong)
-    case ShortType   => v => ThetaSketch.hashLong(v.asInstanceOf[Short].toLong)
-    case ByteType    => v => ThetaSketch.hashLong(v.asInstanceOf[Byte].toLong)
-    case other => throw new IllegalStateException(s"bloom_agg: unsupported $other")
-  }
-
-  override def createAggregationBuffer(): BloomBuffer = new BloomBuffer(numBits, k)
-  override def update(buffer: BloomBuffer, input: InternalRow): BloomBuffer = {
-    val v = child.eval(input)
-    if (v != null) Bloom.setBits(buffer.words, numBits, k, hashOne(v))
-    buffer
-  }
-  override def merge(buffer: BloomBuffer, input: BloomBuffer): BloomBuffer = {
-    buffer.or(input); buffer
-  }
-  override def eval(buffer: BloomBuffer): Any =
-    Bloom.encode(numBits, k, buffer.words)
-  override def serialize(buffer: BloomBuffer): Array[Byte] =
-    Bloom.encode(numBits, k, buffer.words)
-  override def deserialize(bytes: Array[Byte]): BloomBuffer = {
-    val (nb, kk, words) = Bloom.decode(bytes)
-    val buf = new BloomBuffer(nb, kk)
-    System.arraycopy(words, 0, buf.words, 0, words.length)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
+final class BloomBuffer(val numBits: Int, val k: Int, val words: Array[Long])
 
 /** `bloom_might_contain(bloom, key)`: membership probe. When the bloom
   * side is foldable (the broadcast-literal pattern: build → one driver
@@ -180,56 +143,37 @@ case class BloomMightContain(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure("bloom_might_contain requires (binary, key)")
-    else right.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"bloom_might_contain requires an integral or string key, got $other")
-    }
+    else SketchKeys.check(prettyName, right.dataType)
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_might_contain"
 
   /** Decoded-once filter when the bloom expression is foldable. */
-  private lazy val staticBloom: Option[(Int, Int, Array[Long])] =
+  private lazy val staticBloom: Option[BloomBuffer] =
     if (left.foldable) {
-      Option(left.eval(null)).map(b => Bloom.decode(b.asInstanceOf[Array[Byte]]))
+      Option(left.eval(null)).map(b => Bloom.decode(b.asInstanceOf[Array[Byte]], prettyName))
     } else None
 
-  private def hashKey(v: Any): Long = right.dataType match {
-    case StringType => ThetaSketch.hashBytes(v.asInstanceOf[UTF8String].getBytes)
-    case LongType   => ThetaSketch.hashLong(v.asInstanceOf[Long])
-    case IntegerType => ThetaSketch.hashLong(v.asInstanceOf[Int].toLong)
-    case ShortType  => ThetaSketch.hashLong(v.asInstanceOf[Short].toLong)
-    case ByteType   => ThetaSketch.hashLong(v.asInstanceOf[Byte].toLong)
-    case other => throw new IllegalStateException(s"bloom_might_contain: $other")
+  private lazy val key = SketchKeys.hashed(right.dataType)
+
+  override def nullSafeEval(bloom: Any, k: Any): Any = {
+    val b = staticBloom.getOrElse(Bloom.decode(bloom.asInstanceOf[Array[Byte]], prettyName))
+    Bloom.mightContain(b.words, b.numBits, b.k, key(k))
   }
 
-  override def nullSafeEval(bloom: Any, key: Any): Any = {
-    val (nb, k, words) = staticBloom.getOrElse(
-      Bloom.decode(bloom.asInstanceOf[Array[Byte]]))
-    Bloom.mightContain(words, nb, k, hashKey(key))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val hashCall = right.dataType match {
-      case StringType => (v: String) =>
-        s"graft.functions.ThetaSketch.hashBytes($v.getBytes())"
-      case _ => (v: String) => s"graft.functions.ThetaSketch.hashLong((long) $v)"
-    }
-    nullSafeCodeGen(ctx, ev, (bloom, key) => staticBloom match {
-      case Some((nb, k, wordArr)) =>
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (bloom, k) => staticBloom match {
+      case Some(b) =>
         // Bloom side is a compile-time constant: decoded once at codegen,
         // the long[] referenced directly; the literal child's eval is a
         // free object reference (no per-row decode).
-        val words = ctx.addReferenceObj("bloomWords", wordArr, "long[]")
+        val words = ctx.addReferenceObj("bloomWords", b.words, "long[]")
         s"${ev.value} = graft.functions.Bloom.mightContain(" +
-          s"$words, $nb, $k, ${hashCall(key)});"
+          s"$words, ${b.numBits}, ${b.k}, ${SketchKeys.hashedCode(right.dataType, k)});"
       case None =>
         s"${ev.value} = graft.functions.Bloom.mightContainBytes(" +
-          s"(byte[]) $bloom, ${hashCall(key)});"
+          s"(byte[]) $bloom, ${SketchKeys.hashedCode(right.dataType, k)});"
     })
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =

@@ -1,19 +1,14 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable count-min sketch — the frequency-estimation companion to the
-  * md5-HLL cardinality sketch ([[HllSketchAgg]]): d = 4 hash rows ×
+  * md5-HLL cardinality sketch ([[HllSketch]]): d = 4 hash rows ×
   * w = 4096 counters (128 KiB), element-wise-SUM merge, point-frequency
   * estimate = min over rows of the addressed counter. Overestimates only
   * (collisions add, never subtract): estimate ≥ true count always, and
@@ -32,18 +27,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reference scope note: the reference engine (depositaja) has no sketch
   * surface; this is part of the §2.2 extended analytics checklist.
   */
-object CountMinSketch {
+case object CountMinSketch extends Sketch[Array[Long]] {
   val D = 4
   val W = 4096
 
-  private val mdLocal = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
+  def name: String = "cms_sketch"
+  override def mergeName: String = "cms_merge_agg"
+  type Key = String
+  def key(dt: DataType): Any => String = SketchKeys.varchar(dt)
 
   /** Buckets for all d rows — nibbles [3i, 3i+3) of the digest, i.e. hex
     * chars [3i+1, 3i+3] in SQL's 1-based substr. */
   def buckets(key: String): Array[Int] = {
-    val d = mdLocal.get().digest(key.getBytes(StandardCharsets.UTF_8))
+    val d = SketchKeys.md5(key)
     def nib(j: Int): Int = {
       val b = d(j >> 1) & 0xFF
       if ((j & 1) == 0) b >>> 4 else b & 0xF
@@ -57,115 +53,37 @@ object CountMinSketch {
     out
   }
 
-  def encode(grid: Array[Long]): Array[Byte] = {
+  def empty: Array[Long] = new Array[Long](D * W)
+
+  def add(grid: Array[Long], key: String): Unit = {
+    val bs = buckets(key)
+    var i = 0
+    while (i < D) { grid(i * W + bs(i)) += 1L; i += 1 }
+  }
+
+  def merge(grid: Array[Long], o: Array[Long]): Unit = {
+    var i = 0
+    while (i < grid.length) { grid(i) += o(i); i += 1 }
+  }
+
+  /** Wire format: int32 d, int32 w, then the d·w int64 counters row-major. */
+  def partial(grid: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 + 8 * grid.length)
     bb.putInt(D).putInt(W)
     grid.foreach(bb.putLong)
     bb.array()
   }
 
-  def decode(bytes: Array[Byte]): Array[Long] = {
+  def decode(bytes: Array[Byte], fn: String): Array[Long] = {
+    check(bytes.length == 8 + 8 * D * W, fn, s"${bytes.length} bytes, not ${8 + 8 * D * W}")
     val bb = ByteBuffer.wrap(bytes)
     val d = bb.getInt; val w = bb.getInt
-    require(d == D && w == W, s"cms: unexpected geometry ${d}x$w")
-    val grid = new Array[Long](d * w)
+    check(d == D && w == W, fn, s"geometry ${d}x$w, not ${D}x$W")
+    val grid = new Array[Long](D * W)
     var i = 0
     while (i < grid.length) { grid(i) = bb.getLong; i += 1 }
     grid
   }
-
-  /** Canonical string form — must equal DuckDB `CAST(x AS VARCHAR)`. */
-  def stringify(dt: DataType): Any => String = dt match {
-    case StringType  => v => v.asInstanceOf[UTF8String].toString
-    case LongType    => v => String.valueOf(v.asInstanceOf[Long])
-    case IntegerType => v => String.valueOf(v.asInstanceOf[Int])
-    case ShortType   => v => String.valueOf(v.asInstanceOf[Short].toInt)
-    case ByteType    => v => String.valueOf(v.asInstanceOf[Byte].toInt)
-    case other => throw new IllegalStateException(s"cms: unsupported $other")
-  }
-}
-
-private[functions] trait CmsAggBase extends TypedImperativeAggregate[Array[Long]] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](CountMinSketch.D * CountMinSketch.W)
-  override def merge(buffer: Array[Long], input: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buffer.length) { buffer(i) += input(i); i += 1 }
-    buffer
-  }
-  override def eval(buffer: Array[Long]): Any = CountMinSketch.encode(buffer)
-  override def serialize(buffer: Array[Long]): Array[Byte] =
-    CountMinSketch.encode(buffer)
-  override def deserialize(bytes: Array[Byte]): Array[Long] =
-    CountMinSketch.decode(bytes)
-}
-
-/** `cms_sketch(key)`: build a count-min grid over an integral or string
-  * key column. */
-case class CmsSketchAgg(child: Expression,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-    extends CmsAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_sketch requires an integral or string key, got $other")
-  }
-  override def prettyName: String = "cms_sketch"
-
-  private lazy val str = CountMinSketch.stringify(child.dataType)
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bs = CountMinSketch.buckets(str(v))
-      var i = 0
-      while (i < bs.length) {
-        buffer(i * CountMinSketch.W + bs(i)) += 1L
-        i += 1
-      }
-    }
-    buffer
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `cms_merge_agg(sketch)`: element-wise sum of stored grids — the rollup
-  * path over per-day / per-partition sketches. */
-case class CmsMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends CmsAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("cms_merge_agg requires a binary sketch column")
-  override def prettyName: String = "cms_merge_agg"
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else merge(buffer, CountMinSketch.decode(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
 }
 
 /** `cms_estimate(sketch, key)`: point-frequency estimate — min over the
@@ -175,20 +93,15 @@ case class CmsEstimate(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure("cms_estimate requires a binary sketch")
-    else right.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"cms_estimate requires an integral or string key, got $other")
-    }
+    else SketchKeys.check(prettyName, right.dataType)
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_estimate"
 
-  private lazy val str = CountMinSketch.stringify(right.dataType)
+  private lazy val key = CountMinSketch.key(right.dataType)
 
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val grid = CountMinSketch.decode(sk.asInstanceOf[Array[Byte]])
-    val bs = CountMinSketch.buckets(str(key))
+  override def nullSafeEval(sk: Any, k: Any): Any = {
+    val grid = CountMinSketch.decode(sk.asInstanceOf[Array[Byte]], prettyName)
+    val bs = CountMinSketch.buckets(key(k))
     var mn = Long.MaxValue
     var i = 0
     while (i < bs.length) {

@@ -115,20 +115,20 @@ object GraftFunctions {
     // Mergeable KMV theta sketch (SURVEY §7.3 escalation): first-class
     // sketch values + set algebra (union/intersection) across tables.
     fn("theta_sketch") {
-      case Seq(child) => ThetaSketchAgg(child)
-      case Seq(child, k) => ThetaSketchAgg(child, intLiteral("theta_sketch", "k", k))
+      case Seq(child) => SketchAgg(ThetaSketch(), child)
+      case Seq(child, k) => SketchAgg(ThetaSketch(intLiteral("theta_sketch", "k", k)), child)
       case e => throw new IllegalArgumentException(
         s"theta_sketch expects (key[, k literal]), got ${e.size} args")
     },
-    fn("theta_kmv_union_agg")(e => ThetaUnionAgg(e(0))),
+    fn("theta_kmv_union_agg")(e => SketchAgg(ThetaSketch(), e(0), merging = true)),
     fn("theta_estimate")(e => ThetaEstimate(e(0))),
     fn("theta_kmv_union")(e => ThetaUnion(e(0), e(1))),
     fn("theta_intersect_estimate")(e => ThetaIntersectEstimate(e(0), e(1))),
     // Explicit Bloom-filter semi-join reduction (build + probe).
     fn("bloom_agg") {
       case Seq(child, m, k) =>
-        BloomAgg(child, intLiteral("bloom_agg", "numBits", m),
-          intLiteral("bloom_agg", "k", k))
+        SketchAgg(Bloom(intLiteral("bloom_agg", "numBits", m),
+          intLiteral("bloom_agg", "k", k)), child)
       case e => throw new IllegalArgumentException(
         s"bloom_agg expects (key, numBits literal, k literal), got ${e.size} args")
     },
@@ -137,24 +137,24 @@ object GraftFunctions {
     // merge; hash derivation defined on md5 hex so the DuckDB oracle
     // replays the estimate BY VALUE (see HllSketch scaladoc).
     fn("hll_md5_sketch") {
-      case Seq(child) => HllSketchAgg(child)
+      case Seq(child) => SketchAgg(HllSketch, child)
       case e => throw new IllegalArgumentException(
         s"hll_md5_sketch expects exactly (key) — only p = ${HllSketch.P} " +
           s"is wired (oracle-replayable split); got ${e.size} args")
     },
-    fn("hll_md5_merge_agg")(e => HllMergeAgg(e(0))),
+    fn("hll_md5_merge_agg")(e => SketchAgg(HllSketch, e(0), merging = true)),
     fn("hll_md5_union")(e => HllUnion(e(0), e(1))),
     fn("hll_md5_estimate")(e => HllEstimate(e(0))),
     // Count-min sketch — mergeable frequency grid; md5-chunk bucket
     // derivation, all-integer oracle replay (see CountMinSketch).
-    fn("cms_sketch")(e => CmsSketchAgg(e(0))),
-    fn("cms_merge_agg")(e => CmsMergeAgg(e(0))),
+    fn("cms_sketch")(e => SketchAgg(CountMinSketch, e(0))),
+    fn("cms_merge_agg")(e => SketchAgg(CountMinSketch, e(0), merging = true)),
     fn("cms_estimate")(e => CmsEstimate(e(0), e(1))),
     // Quantile sketch — mergeable HDR-style integer log grid; bucket
     // assignment and rank selection are all-integer, replayed by value
     // in DuckDB (see QuantileSketch).
-    fn("qsk_sketch")(e => QskSketchAgg(e(0))),
-    fn("qsk_merge_agg")(e => QskMergeAgg(e(0))),
+    fn("qsk_sketch")(e => SketchAgg(QuantileSketch, e(0))),
+    fn("qsk_merge_agg")(e => SketchAgg(QuantileSketch, e(0), merging = true)),
     fn("qsk_quantile")(e => QskQuantile(e(0), e(1))),
     fn("qsk_n")(e => QskN(e(0))))
 

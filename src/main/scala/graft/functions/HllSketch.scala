@@ -1,18 +1,12 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable HyperLogLog sketch — the fixed-size counterpart to the KMV
-  * theta sketch ([[ThetaSketchAgg]]): 2^p one-byte registers regardless of
+  * theta sketch ([[ThetaSketch]]): 2^p one-byte registers regardless of
   * cardinality (4 KiB at the default p = 12, vs theta's 32 KiB), register-
   * wise-max merge, relative standard error ≈ 1.04/√m (~1.6 % at p = 12).
   * Theta keeps set *intersection* algebra; HLL wins on sketch size and
@@ -39,26 +33,29 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * At 100 TB: partial aggregation folds each input partition into one 4 KiB
   * buffer map-side; only sketches cross the shuffle, and rollups
-  * (`hll_merge_agg` over stored sketches) never rescan raw data.
+  * (`hll_md5_merge_agg` over stored sketches) never rescan raw data.
+  *
+  * Only p = 12 is wired: a different p would change the register split and
+  * have no oracle, so `hll_md5_sketch` takes no p argument.
   *
   * Reference scope note: the reference engine (depositaja) has no sketch
   * surface; this is part of the §2.2 extended analytics checklist.
   */
-object HllSketch {
+case object HllSketch extends Sketch[HllBuffer] {
   val P = 12
   val M: Int = 1 << P
 
-  /** md5 is cheap but MessageDigest is stateful — one per thread. */
-  private val mdLocal = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
+  def name: String = "hll_md5_sketch"
+  override def mergeName: String = "hll_md5_merge_agg"
+  type Key = String
+  def key(dt: DataType): Any => String = SketchKeys.varchar(dt)
 
   def alphaFor(m: Int): Double = 0.7213 / (1.0 + 1.079 / m.toDouble)
 
   /** (register, rho) for p = 12 — byte-level equivalent of the hex-char
     * derivation above (hex char i is nibble i of the digest, high first). */
   def registerAndRho(key: String): (Int, Int) = {
-    val d = mdLocal.get().digest(key.getBytes(StandardCharsets.UTF_8))
+    val d = SketchKeys.md5(key)
     val reg = ((d(0) & 0xFF) << 4) | ((d(1) & 0xFF) >>> 4)
     var sfx = (d(1) & 0x0FL)
     var i = 2
@@ -89,152 +86,57 @@ object HllSketch {
     val eRaw = alphaFor(m) * mD * mD * 9007199254740992.0 / sd
     if (eRaw <= 2.5 * mD && v > 0) mD * math.log(mD / v) else eRaw
   }
-}
 
-/** Mutable register buffer. `regs == null` is the merge aggregate's
-  * "no width adopted yet" sentinel — the first merged sketch fixes m, so a
-  * rollup over stored sketches needs no p argument of its own. */
-final class HllBuffer(var regs: Array[Byte]) {
+  def empty: HllBuffer = new HllBuffer(new Array[Byte](M))
+  // No width adopted yet: the first merged sketch fixes m, so a rollup
+  // over stored sketches needs no p argument of its own.
+  override def identity: HllBuffer = new HllBuffer(null)
 
-  def add(reg: Int, rho: Int): Unit =
-    if ((regs(reg) & 0xFF) < rho) regs(reg) = rho.toByte
+  def add(b: HllBuffer, key: String): Unit = {
+    val (reg, rho) = registerAndRho(key)
+    if ((b.regs(reg) & 0xFF) < rho) b.regs(reg) = rho.toByte
+  }
 
-  def mergeFrom(o: HllBuffer): Unit =
+  def merge(b: HllBuffer, o: HllBuffer): Unit =
     if (o.regs != null) {
-      if (regs == null) regs = o.regs.clone()
+      if (b.regs == null) b.regs = o.regs.clone()
       else {
-        require(regs.length == o.regs.length,
-          s"hll merge: register counts differ (${regs.length} vs ${o.regs.length})")
+        require(b.regs.length == o.regs.length,
+          s"hll merge: register counts differ (${b.regs.length} vs ${o.regs.length})")
         var i = 0
-        while (i < regs.length) {
-          if ((o.regs(i) & 0xFF) > (regs(i) & 0xFF)) regs(i) = o.regs(i)
+        while (i < b.regs.length) {
+          if ((o.regs(i) & 0xFF) > (b.regs(i) & 0xFF)) b.regs(i) = o.regs(i)
           i += 1
         }
       }
     }
 
-  /** Wire format: 1 byte p, then the 2^p registers. */
-  def encode(defaultP: Int): Array[Byte] = {
-    val r = if (regs != null) regs else new Array[Byte](1 << defaultP)
+  /** Wire format: 1 byte p, then the 2^p registers; an identity partial
+    * (no width adopted) is the empty array. */
+  def partial(b: HllBuffer): Array[Byte] =
+    if (b.regs == null) Array.emptyByteArray else result(b)
+
+  override def result(b: HllBuffer): Array[Byte] = {
+    val r = if (b.regs != null) b.regs else new Array[Byte](M)
     val out = new Array[Byte](1 + r.length)
     out(0) = java.lang.Integer.numberOfTrailingZeros(r.length).toByte
     System.arraycopy(r, 0, out, 1, r.length)
     out
   }
 
-  def serialized: Array[Byte] =
-    if (regs == null) Array.emptyByteArray else encode(0)
-}
-
-object HllBuffer {
-  def decode(b: Array[Byte]): HllBuffer =
-    if (b.length == 0) new HllBuffer(null)
+  def decode(bytes: Array[Byte], fn: String): HllBuffer =
+    if (bytes.length == 0) identity
     else {
-      val r = new Array[Byte](b.length - 1)
-      System.arraycopy(b, 1, r, 0, r.length)
-      new HllBuffer(r)
+      val p = bytes(0)
+      check(p >= 0 && p < 31 && bytes.length - 1 == (1 << p), fn,
+        s"${bytes.length - 1} registers under header p = $p")
+      new HllBuffer(java.util.Arrays.copyOfRange(bytes, 1, bytes.length))
     }
-
-  /** Registers of an encoded sketch value. */
-  def registersOf(b: Array[Byte]): Array[Byte] = {
-    require(b.length > 1, s"not an hll sketch (${b.length} bytes)")
-    val r = new Array[Byte](b.length - 1)
-    System.arraycopy(b, 1, r, 0, r.length)
-    r
-  }
 }
 
-private[functions] trait HllAggBase extends TypedImperativeAggregate[HllBuffer] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def merge(buffer: HllBuffer, input: HllBuffer): HllBuffer = {
-    buffer.mergeFrom(input); buffer
-  }
-  override def eval(buffer: HllBuffer): Any = buffer.encode(HllSketch.P)
-  override def serialize(buffer: HllBuffer): Array[Byte] = buffer.serialized
-  override def deserialize(bytes: Array[Byte]): HllBuffer = HllBuffer.decode(bytes)
-}
-
-/** `hll_md5_sketch(key)`: build an HLL sketch over an integral or string
-  * key. Keys hash through md5 of their canonical string form so the DuckDB
-  * oracle replays registers exactly; only p = 12 is wired (the SQL
-  * registration rejects extra args — a different p would change the
-  * register split and have no oracle). */
-case class HllSketchAgg(child: Expression, p: Int = HllSketch.P,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-    extends HllAggBase {
-  require(p == HllSketch.P,
-    s"hll_sketch: only p = ${HllSketch.P} is wired (oracle-replayable split)")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hll_sketch requires an integral or string key, got $other")
-  }
-  override def prettyName: String = "hll_md5_sketch"
-
-  override def createAggregationBuffer(): HllBuffer =
-    new HllBuffer(new Array[Byte](1 << p))
-
-  /** Canonical string form — must equal DuckDB `CAST(x AS VARCHAR)`. */
-  private lazy val stringify: Any => String = child.dataType match {
-    case StringType  => v => v.asInstanceOf[UTF8String].toString
-    case LongType    => v => String.valueOf(v.asInstanceOf[Long])
-    case IntegerType => v => String.valueOf(v.asInstanceOf[Int])
-    case ShortType   => v => String.valueOf(v.asInstanceOf[Short].toInt)
-    case ByteType    => v => String.valueOf(v.asInstanceOf[Byte].toInt)
-    case other => throw new IllegalStateException(s"hll_sketch: unsupported $other")
-  }
-
-  override def update(buffer: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val (reg, rho) = HllSketch.registerAndRho(stringify(v))
-      buffer.add(reg, rho)
-    }
-    buffer
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `hll_merge_agg(sketch)`: merge a column of stored sketches into one —
-  * the rollup path; register width adopted from the inputs. */
-case class HllMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends HllAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("hll_merge_agg requires a binary sketch column")
-  override def prettyName: String = "hll_md5_merge_agg"
-
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer(null)
-
-  override def update(buffer: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.mergeFrom(new HllBuffer(HllBuffer.registersOf(v.asInstanceOf[Array[Byte]])))
-    buffer
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
+/** Mutable register buffer. `regs == null` is the merge aggregate's
+  * identity: no register width adopted yet. */
+final class HllBuffer(var regs: Array[Byte])
 
 /** `hll_union(a, b)`: register-wise max of two sketch values. */
 case class HllUnion(left: Expression, right: Expression)
@@ -247,9 +149,9 @@ case class HllUnion(left: Expression, right: Expression)
   override def prettyName: String = "hll_md5_union"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val buf = new HllBuffer(HllBuffer.registersOf(a.asInstanceOf[Array[Byte]]).clone())
-    buf.mergeFrom(new HllBuffer(HllBuffer.registersOf(b.asInstanceOf[Array[Byte]])))
-    buf.encode(HllSketch.P)
+    val buf = HllSketch.decode(a.asInstanceOf[Array[Byte]], prettyName)
+    HllSketch.merge(buf, HllSketch.decode(b.asInstanceOf[Array[Byte]], prettyName))
+    HllSketch.result(buf)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -265,8 +167,10 @@ case class HllEstimate(child: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "hll_md5_estimate"
 
-  override def nullSafeEval(v: Any): Any =
-    HllSketch.estimate(HllBuffer.registersOf(v.asInstanceOf[Array[Byte]]))
+  override def nullSafeEval(v: Any): Any = {
+    val regs = HllSketch.decode(v.asInstanceOf[Array[Byte]], prettyName).regs
+    HllSketch.estimate(if (regs != null) regs else new Array[Byte](HllSketch.M))
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -4,10 +4,8 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -37,9 +35,17 @@ import org.apache.spark.sql.types._
   * Reference scope note: the reference engine (depositaja) has no sketch
   * surface; this is part of the §2.2 extended analytics checklist.
   */
-object QuantileSketch {
+case object QuantileSketch extends Sketch[mutable.HashMap[Long, Long]] {
   /** Mantissa bits kept (beyond the leading 1): relative error ≤ 2^-P. */
   val P = 6
+
+  // `qsk_sketch(v)` takes a non-negative integral column: scale fixed-point
+  // values to integer units first (e.g. cents), exactly as the oracle does.
+  def name: String = "qsk_sketch"
+  override def mergeName: String = "qsk_merge_agg"
+  override def stringKeys: Boolean = false
+  type Key = Long
+  def key(dt: DataType): Any => Long = SketchKeys.integral(dt)
 
   /** Grid bucket for v ≥ 0: zero all but the top P+1 significant bits.
     * Equals DuckDB `(v >> s) << s`, `s = GREATEST(length(bin(v))-1-P, 0)`. */
@@ -50,9 +56,19 @@ object QuantileSketch {
     (v >>> shift) << shift
   }
 
-  /** Sorted (bucket, count) encoding — canonical, so byte-equal sketches
-    * iff equal content. */
-  def encode(m: mutable.HashMap[Long, Long]): Array[Byte] = {
+  def empty: mutable.HashMap[Long, Long] = new mutable.HashMap[Long, Long]()
+
+  def add(m: mutable.HashMap[Long, Long], v: Long): Unit = {
+    val b = bucket(v)
+    m.update(b, m.getOrElse(b, 0L) + 1L)
+  }
+
+  def merge(m: mutable.HashMap[Long, Long], o: mutable.HashMap[Long, Long]): Unit =
+    o.foreach { case (k, c) => m.update(k, m.getOrElse(k, 0L) + c) }
+
+  /** Wire format: int32 P, int32 n, then n (bucket, count) int64 pairs in
+    * bucket order — canonical, so byte-equal sketches iff equal content. */
+  def partial(m: mutable.HashMap[Long, Long]): Array[Byte] = {
     val ks = m.keysIterator.toArray.sorted
     val bb = ByteBuffer.allocate(8 + 16 * ks.length)
     bb.putInt(P).putInt(ks.length)
@@ -60,10 +76,12 @@ object QuantileSketch {
     bb.array()
   }
 
-  def decode(bytes: Array[Byte]): mutable.HashMap[Long, Long] = {
+  def decode(bytes: Array[Byte], fn: String): mutable.HashMap[Long, Long] = {
+    check(bytes.length >= 8, fn, s"${bytes.length} bytes, shorter than its header")
     val bb = ByteBuffer.wrap(bytes)
     val p = bb.getInt; val n = bb.getInt
-    require(p == P, s"qsk: unexpected precision $p")
+    check(p == P && n >= 0 && bytes.length == 8L + 16L * n, fn,
+      s"precision $p, n = $n in ${bytes.length} bytes")
     val m = new mutable.HashMap[Long, Long]()
     var i = 0
     while (i < n) { m.update(bb.getLong, bb.getLong); i += 1 }
@@ -90,96 +108,6 @@ object QuantileSketch {
   }
 }
 
-private[functions] trait QskAggBase
-    extends TypedImperativeAggregate[mutable.HashMap[Long, Long]] {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): mutable.HashMap[Long, Long] =
-    new mutable.HashMap[Long, Long]()
-  override def merge(buffer: mutable.HashMap[Long, Long],
-                     input: mutable.HashMap[Long, Long]): mutable.HashMap[Long, Long] = {
-    input.foreach { case (k, c) => buffer.update(k, buffer.getOrElse(k, 0L) + c) }
-    buffer
-  }
-  override def eval(buffer: mutable.HashMap[Long, Long]): Any =
-    QuantileSketch.encode(buffer)
-  override def serialize(buffer: mutable.HashMap[Long, Long]): Array[Byte] =
-    QuantileSketch.encode(buffer)
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[Long, Long] =
-    QuantileSketch.decode(bytes)
-}
-
-/** `qsk_sketch(v)`: build a quantile sketch over a non-negative integral
-  * column (scale fixed-point values to integer units first — e.g. cents —
-  * exactly as the oracle does). */
-case class QskSketchAgg(child: Expression,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-    extends QskAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"qsk_sketch requires an integral value, got $other")
-  }
-  override def prettyName: String = "qsk_sketch"
-
-  private lazy val toLong: Any => Long = child.dataType match {
-    case LongType    => v => v.asInstanceOf[Long]
-    case IntegerType => v => v.asInstanceOf[Int].toLong
-    case ShortType   => v => v.asInstanceOf[Short].toLong
-    case ByteType    => v => v.asInstanceOf[Byte].toLong
-  }
-
-  override def update(buffer: mutable.HashMap[Long, Long],
-                      input: InternalRow): mutable.HashMap[Long, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val b = QuantileSketch.bucket(toLong(v))
-      buffer.update(b, buffer.getOrElse(b, 0L) + 1L)
-    }
-    buffer
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `qsk_merge_agg(sketch)`: bucket-wise sum of stored sketches — the
-  * rollup path over per-day / per-group sketches. Exact: the merged
-  * sketch is identical to one built over the concatenated inputs. */
-case class QskMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends QskAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("qsk_merge_agg requires a binary sketch column")
-  override def prettyName: String = "qsk_merge_agg"
-
-  override def update(buffer: mutable.HashMap[Long, Long],
-                      input: InternalRow): mutable.HashMap[Long, Long] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else merge(buffer, QuantileSketch.decode(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
 /** `qsk_quantile(sketch, q)`: rank-ceil(q·N) estimate — the grid lower
   * bound of the selected bucket (≤ 2^-P relative below the true value). */
 case class QskQuantile(left: Expression, right: Expression)
@@ -196,7 +124,7 @@ case class QskQuantile(left: Expression, right: Expression)
 
   override def nullSafeEval(sk: Any, q: Any): Any =
     QuantileSketch.quantile(
-      QuantileSketch.decode(sk.asInstanceOf[Array[Byte]]),
+      QuantileSketch.decode(sk.asInstanceOf[Array[Byte]], prettyName),
       q.asInstanceOf[Double])
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -216,7 +144,7 @@ case class QskN(child: Expression)
   override def prettyName: String = "qsk_n"
 
   override def nullSafeEval(sk: Any): Any =
-    QuantileSketch.decode(sk.asInstanceOf[Array[Byte]]).valuesIterator.sum
+    QuantileSketch.decode(sk.asInstanceOf[Array[Byte]], prettyName).valuesIterator.sum
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,13 +1,10 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable KMV ("k minimum values") theta sketch for distinct counting —
   * the SURVEY §7.3 escalation: a `TypedImperativeAggregate` whose output is
@@ -30,26 +27,49 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Wire format (`binary`): int32 k, int32 n, then n int64 hash values in
   * unsigned-ascending order (stored sign-flipped so signed order == the
-  * unsigned hash order).
+  * unsigned hash order). Keys hash through [[SketchKeys.hashed]]; `k` must
+  * be at least 1.
   */
+case class ThetaSketch(k: Int = ThetaSketch.DefaultK) extends Sketch[ThetaBuffer] {
+  require(k >= 1, s"theta_sketch k must be >= 1, got $k")
+
+  def name: String = "theta_sketch"
+  override def mergeName: String = "theta_kmv_union_agg"
+  type Key = Long
+  def key(dt: DataType): Any => Long = SketchKeys.hashed(dt)
+
+  def empty: ThetaBuffer = new ThetaBuffer(k)
+  // Cap adopted from the merged sketches themselves (min of their k's).
+  override def identity: ThetaBuffer = new ThetaBuffer(Int.MaxValue)
+  def add(b: ThetaBuffer, hash: Long): Unit = b.add(hash ^ Long.MinValue)
+
+  def merge(b: ThetaBuffer, o: ThetaBuffer): Unit = {
+    b.shrinkTo(o.k)
+    val it = o.set.iterator()
+    while (it.hasNext) b.add(it.next())
+  }
+
+  def partial(b: ThetaBuffer): Array[Byte] = ThetaSketch.encode(b.k, b.toSortedArray)
+
+  // Never emit the identity's cap: an empty union aggregate encodes DefaultK.
+  override def result(b: ThetaBuffer): Array[Byte] =
+    ThetaSketch.encode(if (b.k == Int.MaxValue) ThetaSketch.DefaultK else b.k, b.toSortedArray)
+
+  def decode(bytes: Array[Byte], fn: String): ThetaBuffer = {
+    check(bytes.length >= 8, fn, s"${bytes.length} bytes, shorter than its header")
+    val bb = ByteBuffer.wrap(bytes)
+    val kk = bb.getInt; val n = bb.getInt
+    check(kk >= 1 && n >= 0 && n <= kk && bytes.length == 8L + 8L * n, fn,
+      s"k = $kk, n = $n in ${bytes.length} bytes")
+    val buf = new ThetaBuffer(kk)
+    var i = 0
+    while (i < n) { buf.add(bb.getLong); i += 1 }
+    buf
+  }
+}
+
 object ThetaSketch {
   val DefaultK = 4096
-
-  /** splitmix64 finalizer — deterministic avalanche hash for integral keys. */
-  def hashLong(x: Long): Long = {
-    var z = x + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** FNV-1a 64 then finalize — deterministic hash for string keys. */
-  def hashBytes(b: Array[Byte]): Long = {
-    var h = 0xCBF29CE484222325L
-    var i = 0
-    while (i < b.length) { h = (h ^ (b(i) & 0xFFL)) * 0x100000001B3L; i += 1 }
-    hashLong(h)
-  }
 
   /** Hash value (stored sign-flipped) as a fraction of the 2⁶⁴ hash space. */
   def frac(flipped: Long): Double =
@@ -57,12 +77,12 @@ object ThetaSketch {
 
   /** θ of a decoded sketch: 1.0 while lossless, else the k-th smallest
     * hash's position in [0,1). */
-  def theta(k: Int, sorted: Array[Long]): Double =
-    if (sorted.length < k) 1.0 else frac(sorted(sorted.length - 1))
+  def theta(b: ThetaBuffer): Double =
+    if (b.set.size < b.k) 1.0 else frac(b.set.last())
 
-  def estimate(k: Int, sorted: Array[Long]): Double =
-    if (sorted.length < k) sorted.length.toDouble
-    else (k - 1).toDouble / theta(k, sorted)
+  def estimate(b: ThetaBuffer): Double =
+    if (b.set.size < b.k) b.set.size.toDouble
+    else (b.k - 1).toDouble / theta(b)
 
   def encode(k: Int, sorted: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 + 8 * sorted.length)
@@ -70,33 +90,10 @@ object ThetaSketch {
     sorted.foreach(bb.putLong)
     bb.array()
   }
-
-  /** @return (k, hashes in ascending flipped order) */
-  def decode(bytes: Array[Byte]): (Int, Array[Long]) = {
-    val bb = ByteBuffer.wrap(bytes)
-    val k = bb.getInt; val n = bb.getInt
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = bb.getLong; i += 1 }
-    (k, arr)
-  }
-
-  /** Merge two ascending hash arrays, dropping duplicates, keeping ≤ k. */
-  def mergeSorted(k: Int, a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = new Array[Long](math.min(k, a.length + b.length))
-    var i = 0; var j = 0; var m = 0
-    while (m < k && (i < a.length || j < b.length)) {
-      val v =
-        if (j >= b.length || (i < a.length && a(i) <= b(j))) { val x = a(i); i += 1; x }
-        else { val x = b(j); j += 1; x }
-      if (m == 0 || out(m - 1) != v) { out(m) = v; m += 1 }
-    }
-    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
-  }
 }
 
 /** Mutable aggregation buffer: the k smallest distinct flipped hashes.
-  * `k = Int.MaxValue` is the union aggregate's "no cap yet" sentinel —
+  * `k = Int.MaxValue` is the union aggregate's "no cap yet" identity —
   * merging a sketch shrinks the cap to that sketch's k, so a rollup over
   * same-k sketches retains exactly the k smallest hashes of the combined
   * data (identical to a one-pass sketch, not merely close). */
@@ -115,103 +112,6 @@ final class ThetaBuffer(var k: Int) {
   }
 }
 
-private[functions] trait ThetaAggBase extends TypedImperativeAggregate[ThetaBuffer] {
-  /** Buffer cap at creation; Int.MaxValue = adopt k from merged inputs. */
-  def bufferK: Int
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): ThetaBuffer = new ThetaBuffer(bufferK)
-  override def merge(buffer: ThetaBuffer, input: ThetaBuffer): ThetaBuffer = {
-    buffer.shrinkTo(input.k)
-    val it = input.set.iterator()
-    while (it.hasNext) buffer.add(it.next())
-    buffer
-  }
-  override def eval(buffer: ThetaBuffer): Any = {
-    // Never emit the sentinel: an empty union aggregate encodes DefaultK.
-    val outK = if (buffer.k == Int.MaxValue) ThetaSketch.DefaultK else buffer.k
-    ThetaSketch.encode(outK, buffer.toSortedArray)
-  }
-  override def serialize(buffer: ThetaBuffer): Array[Byte] =
-    ThetaSketch.encode(buffer.k, buffer.toSortedArray)
-  override def deserialize(bytes: Array[Byte]): ThetaBuffer = {
-    val (kk, arr) = ThetaSketch.decode(bytes)
-    val buf = new ThetaBuffer(kk)
-    arr.foreach(buf.add)
-    buf
-  }
-}
-
-/** `theta_sketch(key[, k])`: build a KMV theta sketch over a long or string
-  * key column. Map-side partial aggregation folds each partition into one
-  * 32 KiB buffer, so only sketches cross the shuffle. */
-case class ThetaSketchAgg(child: Expression, k: Int = ThetaSketch.DefaultK,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends ThetaAggBase {
-
-  override def bufferK: Int = k
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_sketch requires an integral or string key, got $other")
-  }
-  override def prettyName: String = "theta_sketch"
-
-  private lazy val hashOne: Any => Long = child.dataType match {
-    case StringType => v => ThetaSketch.hashBytes(v.asInstanceOf[UTF8String].getBytes)
-    case LongType    => v => ThetaSketch.hashLong(v.asInstanceOf[Long])
-    case IntegerType => v => ThetaSketch.hashLong(v.asInstanceOf[Int].toLong)
-    case ShortType   => v => ThetaSketch.hashLong(v.asInstanceOf[Short].toLong)
-    case ByteType    => v => ThetaSketch.hashLong(v.asInstanceOf[Byte].toLong)
-    case other => throw new IllegalStateException(s"theta_sketch: unsupported $other")
-  }
-
-  override def update(buffer: ThetaBuffer, input: InternalRow): ThetaBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(hashOne(v) ^ Long.MinValue)
-    buffer
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `theta_kmv_union_agg(sketch)`: merge a column of sketches into one — the
-  * rollup path over stored per-day / per-partition sketches. */
-case class ThetaUnionAgg(child: Expression,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-    extends ThetaAggBase {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_kmv_union_agg requires a binary sketch column")
-  override def prettyName: String = "theta_kmv_union_agg"
-  // Cap adopted from the merged sketches themselves (min of their k's).
-  override def bufferK: Int = Int.MaxValue
-
-  override def update(buffer: ThetaBuffer, input: InternalRow): ThetaBuffer = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else merge(buffer, deserialize(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
 /** `theta_estimate(sketch)`: distinct-count estimate — exact while the
   * sketch is lossless (n < k), (k−1)/θ once saturated. */
 case class ThetaEstimate(child: Expression)
@@ -221,10 +121,8 @@ case class ThetaEstimate(child: Expression)
     else TypeCheckResult.TypeCheckFailure("theta_estimate requires a binary sketch")
   override def dataType: DataType = DoubleType
   override def prettyName: String = "theta_estimate"
-  override protected def nullSafeEval(v: Any): Any = {
-    val (k, arr) = ThetaSketch.decode(v.asInstanceOf[Array[Byte]])
-    ThetaSketch.estimate(k, arr)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    ThetaSketch.estimate(ThetaSketch().decode(v.asInstanceOf[Array[Byte]], prettyName))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -237,10 +135,10 @@ case class ThetaUnion(left: Expression, right: Expression)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "theta_kmv_union"
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ka, aa) = ThetaSketch.decode(a.asInstanceOf[Array[Byte]])
-    val (kb, bb) = ThetaSketch.decode(b.asInstanceOf[Array[Byte]])
-    val k = math.min(ka, kb)
-    ThetaSketch.encode(k, ThetaSketch.mergeSorted(k, aa, bb))
+    val family = ThetaSketch()
+    val buf = family.decode(a.asInstanceOf[Array[Byte]], prettyName)
+    family.merge(buf, family.decode(b.asInstanceOf[Array[Byte]], prettyName))
+    family.result(buf)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -258,9 +156,10 @@ case class ThetaIntersectEstimate(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "theta_intersect_estimate"
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ka, aa) = ThetaSketch.decode(a.asInstanceOf[Array[Byte]])
-    val (kb, bb) = ThetaSketch.decode(b.asInstanceOf[Array[Byte]])
-    val th = math.min(ThetaSketch.theta(ka, aa), ThetaSketch.theta(kb, bb))
+    val sa = ThetaSketch().decode(a.asInstanceOf[Array[Byte]], prettyName)
+    val sb = ThetaSketch().decode(b.asInstanceOf[Array[Byte]], prettyName)
+    val th = math.min(ThetaSketch.theta(sa), ThetaSketch.theta(sb))
+    val aa = sa.toSortedArray; val bb = sb.toSortedArray
     var i = 0; var j = 0; var common = 0L
     while (i < aa.length && j < bb.length) {
       if (aa(i) == bb(j)) {

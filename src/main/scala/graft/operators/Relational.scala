@@ -68,7 +68,7 @@ object Relational {
   }
 
   /** Explicit Bloom-filter semi-join reduction: build a Bloom filter over
-    * `dim`'s join keys ([[graft.functions.BloomAgg]] — map-side partials,
+    * `dim`'s join keys ([[graft.functions.Bloom]] — map-side partials,
     * OR-merge, one m/8-byte result row to the driver, same bounded round
     * trip as a broadcast variable) and pre-filter `fact` with the
     * codegen'd membership probe BEFORE its shuffle. False negatives are

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native single-pass counts for the corpus quality/language features —
@@ -15,10 +16,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle keeps the regex SQL, so every consumer query stays
   * oracle-checked end to end.
   *
-  * All three: NULL input → NULL (the session runs ANSI mode, where
+  * All four: NULL input → NULL (the session runs ANSI mode, where
   * size(split(...)) and regexp_count propagate NULL the same way).
   */
 object TextFeatureCounts {
+
+  /** The frame every counter shares: a string in, a long out, and the
+    * string's UTF-8 bytes handed to [[count]] as (base, offset, length),
+    * read with `Platform.getByte`. A counter writes only its own loop. */
+  abstract class ByteScanCount extends UnaryExpression with CodegenFallback {
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects string, got ${other.simpleString}")
+    }
+    override def dataType: DataType = LongType
+
+    /** The string the scan reads; the input itself unless overridden. */
+    protected def scanned(s: UTF8String): UTF8String = s
+
+    protected def count(base: AnyRef, off: Long, n: Int): Long
+
+    override def nullSafeEval(input: Any): Any = {
+      val s = scanned(input.asInstanceOf[UTF8String])
+      count(s.getBaseObject, s.getBaseOffset, s.numBytes())
+    }
+  }
 
   /** Java-regex \s is exactly these six ASCII chars (no Unicode flags). */
   @inline private def isWs(b: Byte): Boolean =
@@ -40,26 +63,16 @@ object TextFeatureCounts {
     * ASCII and UTF-8 multi-byte sequences contain no ASCII bytes, so a
     * byte scan is exact.
     */
-  case class WsTokenCount(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"ws_token_count expects string, got ${other.simpleString}")
-    }
-    override def dataType: DataType = LongType
+  case class WsTokenCount(child: Expression) extends ByteScanCount {
+    override protected def scanned(s: UTF8String): UTF8String = s.trim()
 
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].trim()
-      val n = s.numBytes()
+    override protected def count(base: AnyRef, off: Long, n: Int): Long = {
       if (n == 0) return 1L
-      val base = s.getBaseObject
-      val off = s.getBaseOffset
       var i = 0
       var runs = 0L
       var inWs = false
       while (i < n) {
-        val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+        val b = Platform.getByte(base, off + i)
         val ws = isWs(b)
         if (ws && !inWs) runs += 1
         inWs = ws
@@ -78,24 +91,12 @@ object TextFeatureCounts {
     * negated class once per code point, so each non-ASCII code point
     * (however many bytes) counts exactly once — the scan steps by UTF-8
     * sequence length for bytes ≥ 0x80. */
-  case class PunctCount(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"punct_count expects string, got ${other.simpleString}")
-    }
-    override def dataType: DataType = LongType
-
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String]
-      val n = s.numBytes()
-      val base = s.getBaseObject
-      val off = s.getBaseOffset
+  case class PunctCount(child: Expression) extends ByteScanCount {
+    override protected def count(base: AnyRef, off: Long, n: Int): Long = {
       var i = 0
       var cnt = 0L
       while (i < n) {
-        val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+        val b = Platform.getByte(base, off + i)
         if (b >= 0) { // ASCII
           if (!isWs(b) && !((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
               (b >= '0' && b <= '9'))) cnt += 1
@@ -119,32 +120,20 @@ object TextFeatureCounts {
     * code points, the replace removes exactly the set members, and ASCII
     * bytes never occur inside UTF-8 multi-byte sequences, so a byte scan
     * is exact. */
-  case class AsciiCount(child: Expression, chars: String)
-      extends UnaryExpression with CodegenFallback {
+  case class AsciiCount(child: Expression, chars: String) extends ByteScanCount {
     require(chars.nonEmpty && chars.forall(_ < 0x80),
       s"ascii_count set must be non-empty ASCII, got '$chars'")
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"ascii_count expects string, got ${other.simpleString}")
-    }
-    override def dataType: DataType = LongType
-
     private val member = {
       val m = new Array[Boolean](128)
       chars.foreach(c => m(c) = true)
       m
     }
 
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String]
-      val n = s.numBytes()
-      val base = s.getBaseObject
-      val off = s.getBaseOffset
+    override protected def count(base: AnyRef, off: Long, n: Int): Long = {
       var i = 0
       var cnt = 0L
       while (i < n) {
-        val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+        val b = Platform.getByte(base, off + i)
         if (b >= 0 && member(b)) cnt += 1
         i += 1
       }
@@ -165,18 +154,10 @@ object TextFeatureCounts {
     * applied to (the langScore path lowercases first, same as the regex
     * form). Non-ASCII bytes are non-word under Java's ASCII-only \w, so
     * a byte scan is exact. */
-  case class MarkerCount(child: Expression, words: Seq[String])
-      extends UnaryExpression with CodegenFallback {
+  case class MarkerCount(child: Expression, words: Seq[String]) extends ByteScanCount {
     require(words.nonEmpty && words.forall(w =>
       w.nonEmpty && w.getBytes("UTF-8").forall(isWord)),
       s"marker_count words must be non-empty \\w-only strings, got $words")
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"marker_count expects string, got ${other.simpleString}")
-    }
-    override def dataType: DataType = LongType
 
     // Group target words by length for O(1) length filtering per run.
     private val byLen: Map[Int, Array[Array[Byte]]] =
@@ -184,20 +165,15 @@ object TextFeatureCounts {
         .map { case (l, ws) => l -> ws.toArray }
     private val maxLen = byLen.keys.max
 
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String]
-      val n = s.numBytes()
-      val base = s.getBaseObject
-      val off = s.getBaseOffset
+    override protected def count(base: AnyRef, off: Long, n: Int): Long = {
       var i = 0
       var cnt = 0L
       while (i < n) {
-        val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+        val b = Platform.getByte(base, off + i)
         if (isWord(b)) {
           val start = i
           i += 1
-          while (i < n && isWord(
-              org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+          while (i < n && isWord(Platform.getByte(base, off + i))) i += 1
           val len = i - start
           if (len <= maxLen) byLen.get(len) match {
             case Some(cands) =>
@@ -206,8 +182,7 @@ object TextFeatureCounts {
               while (!matched && c < cands.length) {
                 val w = cands(c)
                 var j = 0
-                while (j < len && w(j) ==
-                    org.apache.spark.unsafe.Platform.getByte(base, off + start + j)) j += 1
+                while (j < len && w(j) == Platform.getByte(base, off + start + j)) j += 1
                 matched = j == len
                 c += 1
               }

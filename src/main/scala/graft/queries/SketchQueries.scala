@@ -5,7 +5,7 @@ import graft.Q
 import graft.sources.Tables
 
 /** Mergeable-sketch queries (SURVEY §7.3 escalation; VERDICT r2 item #9):
-  * the KMV theta sketch aggregate ([[graft.functions.ThetaSketchAgg]])
+  * the KMV theta sketch aggregate ([[graft.functions.ThetaSketch]])
   * exercised end-to-end — per-group sketches rolled up with
   * `theta_kmv_union_agg`, cross-table set algebra with `theta_kmv_union` /
   * `theta_intersect_estimate`.
@@ -173,7 +173,7 @@ object SketchQueries {
         .orderBy(col("n").desc, col("item"))
     },
 
-    // Custom md5-derived HLL ([[graft.functions.HllSketchAgg]]) — unlike
+    // Custom md5-derived HLL ([[graft.functions.HllSketch]]) — unlike
     // q_hll_union's tolerance booleans, the ESTIMATE ITSELF is the oracle
     // check: registers come from md5 hex of the key's string form, so
     // DuckDB replays register assignment, max-rho, the exact-integer
@@ -214,7 +214,7 @@ object SketchQueries {
         .orderBy("pri")
     },
 
-    // Count-min sketch ([[graft.functions.CmsSketchAgg]]) — mergeable
+    // Count-min sketch ([[graft.functions.CountMinSketch]]) — mergeable
     // frequency grid, md5-chunk buckets, ALL-INTEGER oracle: DuckDB
     // replays bucket membership per probe key and takes the same min over
     // 4 hash rows, so the estimate compares exactly with no float caveats.
@@ -244,7 +244,7 @@ object SketchQueries {
         .orderBy("suppkey")
     },
 
-    // Quantile sketch ([[graft.functions.QskSketchAgg]]) — mergeable
+    // Quantile sketch ([[graft.functions.QuantileSketch]]) — mergeable
     // HDR-style integer log grid, ALL-INTEGER oracle: DuckDB replays the
     // bucket assignment ((v >> s) << s) and the rank-ceil(q·N) selection
     // by value, so p50/p90/p99 compare exactly. Sketches build per

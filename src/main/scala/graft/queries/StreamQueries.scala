@@ -466,7 +466,7 @@ object StreamQueries {
   }
 
   /** Per-day deposit-amount quantiles maintained BY THE STREAM: the
-    * custom mergeable quantile sketch ([[graft.functions.QskSketchAgg]])
+    * custom mergeable quantile sketch ([[graft.functions.QuantileSketch]])
     * runs as the streaming aggregation's state — each micro-batch folds
     * its rows into the per-window sketch buffer exactly like sum/count
     * state, which is the point of a MERGEABLE sketch: the same aggregate

@@ -140,6 +140,25 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     assert(found.size == 1, found)
   }
 
+  // The sketch layer: one aggregate drives every family, and the key check
+  // is written once. Needles spelled in two parts, so this file is no hit
+  // of its own scan.
+  test("src/main sets an aggregate buffer offset once, in SketchAgg") {
+    val found = hits(main, "withNewMutable" + "AggBufferOffset")
+    assert(found.map(_._1) == Seq("Sketch.scala"), found)
+  }
+
+  test("src/main extends TypedImperativeAggregate once, in SketchAgg") {
+    val found = hits(main, "extends Typed" + "ImperativeAggregate")
+    assert(found.map(_._1) == Seq("Sketch.scala"), found)
+  }
+
+  test("the sketch layer writes the integral-or-string key check once") {
+    val found = hits(scalaFiles("src/main/scala/graft/functions"),
+      "LongType | IntegerType | " + "ShortType | ByteType")
+    assert(found.size == 1, found)
+  }
+
   test("no spec makes a temp directory of its own; they come from TestDirs") {
     // Needle spelled in two parts, so this file is no hit of its own scan.
     val found = hits(scalaFiles("src/test/scala"), "createTemp" + "Directory")

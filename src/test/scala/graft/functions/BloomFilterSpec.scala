@@ -16,16 +16,17 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
   test("no false negatives, distributed build == local build") {
     val keys = (0L until 5000L).map(_ * 7919L)
     val bytes = buildBloom(keys, numBits = 1 << 16, k = 5)
-    val (nb, k, words) = Bloom.decode(bytes)
+    val bf = Bloom.decode(bytes, "spec")
+    val (nb, k, words) = (bf.numBits, bf.k, bf.words)
     assert(nb == (1 << 16) && k == 5)
     keys.foreach { key =>
-      assert(Bloom.mightContain(words, nb, k, ThetaSketch.hashLong(key)),
+      assert(Bloom.mightContain(words, nb, k, SketchKeys.hashLong(key)),
         s"false negative for $key")
     }
     // Local single-threaded build must produce the identical bit array
     // (OR-merge of partials is order-independent).
     val local = new Array[Long](nb / 64)
-    keys.foreach(key => Bloom.setBits(local, nb, k, ThetaSketch.hashLong(key)))
+    keys.foreach(key => Bloom.setBits(local, nb, k, SketchKeys.hashLong(key)))
     assert(words.toSeq == local.toSeq)
   }
 
@@ -33,9 +34,9 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
     val n = 5000L
     val (nb, k) = Bloom.sizeFor(n, 0.01)
     val bytes = buildBloom((0L until n).map(_ * 7919L), nb, k)
-    val (nbD, kD, words) = Bloom.decode(bytes)
+    val bf = Bloom.decode(bytes, "spec")
     val probes = (1L to 20000L).map(_ * 7919L + 3L) // disjoint from keys
-    val fp = probes.count(p => Bloom.mightContain(words, nbD, kD, ThetaSketch.hashLong(p)))
+    val fp = probes.count(p => Bloom.mightContain(bf.words, bf.numBits, bf.k, SketchKeys.hashLong(p)))
     val rate = fp.toDouble / probes.size
     assert(rate < 0.05, s"fp rate $rate far above the 0.01 target")
   }

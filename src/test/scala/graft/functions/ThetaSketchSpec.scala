@@ -79,6 +79,15 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(approx.getDouble(1) - 1000.0) / 1000.0 <= 0.15)
   }
 
+  test("theta_sketch rejects k < 1 when the function is built") {
+    // With k = 0 the buffer has no room, and every row would fail in TreeSet.last().
+    val e = intercept[Exception](
+      (1L to 3L).toDF("k").select(call_function("theta_sketch", $"k", lit(0))).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case iae: IllegalArgumentException => iae.getMessage }.toList
+    assert(messages.exists(_.contains("theta_sketch k must be >= 1, got 0")), e.toString)
+  }
+
   test("within_tol predicate is falsifiable: a bad estimate flips it false") {
     // ADVICE r2: the oracle asserts literal TRUE for within_tol, so prove
     // here that the predicate itself can go false — feed an estimate that
