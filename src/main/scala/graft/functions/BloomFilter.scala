@@ -142,7 +142,7 @@ case class BloomMightContain(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure("bloom_might_contain requires (binary, key)")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires (binary, key)")
     else SketchKeys.check(prettyName, right.dataType)
 
   override def dataType: DataType = BooleanType

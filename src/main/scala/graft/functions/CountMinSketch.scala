@@ -92,7 +92,7 @@ case class CmsEstimate(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure("cms_estimate requires a binary sketch")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a binary sketch")
     else SketchKeys.check(prettyName, right.dataType)
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_estimate"

@@ -138,13 +138,13 @@ case object HllSketch extends Sketch[HllBuffer] {
   * identity: no register width adopted yet. */
 final class HllBuffer(var regs: Array[Byte])
 
-/** `hll_union(a, b)`: register-wise max of two sketch values. */
+/** `hll_md5_union(a, b)`: register-wise max of two sketch values. */
 case class HllUnion(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == BinaryType && right.dataType == BinaryType)
       TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("hll_union requires two binary sketches")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires two binary sketches")
   override def dataType: DataType = BinaryType
   override def prettyName: String = "hll_md5_union"
 
@@ -158,12 +158,12 @@ case class HllUnion(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** `hll_estimate(sketch)`: distinct-count estimate (double). */
+/** `hll_md5_estimate(sketch)`: distinct-count estimate (double). */
 case class HllEstimate(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("hll_estimate requires a binary sketch")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a binary sketch")
   override def dataType: DataType = DoubleType
   override def prettyName: String = "hll_md5_estimate"
 

@@ -114,9 +114,9 @@ case class QskQuantile(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure("qsk_quantile requires a binary sketch")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a binary sketch")
     else if (right.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure("qsk_quantile requires a double quantile")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a double quantile")
     else TypeCheckResult.TypeCheckSuccess
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -136,7 +136,7 @@ case class QskN(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("qsk_n requires a binary sketch")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a binary sketch")
   override def dataType: DataType = LongType
   // Inherited nullable (child.nullable): a null sketch input yields null
   // through nullSafeEval, so claiming non-null would let Catalyst fold

@@ -118,7 +118,7 @@ case class ThetaEstimate(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_estimate requires a binary sketch")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a binary sketch")
   override def dataType: DataType = DoubleType
   override def prettyName: String = "theta_estimate"
   override protected def nullSafeEval(v: Any): Any =
@@ -131,7 +131,7 @@ case class ThetaUnion(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_kmv_union requires two binary sketches")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires two binary sketches")
   override def dataType: DataType = BinaryType
   override def prettyName: String = "theta_kmv_union"
   override protected def nullSafeEval(a: Any, b: Any): Any = {
@@ -152,7 +152,7 @@ case class ThetaIntersectEstimate(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_intersect_estimate requires two binary sketches")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires two binary sketches")
   override def dataType: DataType = DoubleType
   override def prettyName: String = "theta_intersect_estimate"
   override protected def nullSafeEval(a: Any, b: Any): Any = {

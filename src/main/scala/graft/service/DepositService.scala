@@ -18,14 +18,20 @@ import graft.streaming.DepositStreams.WalletRow
   * over the streaming engine:
   *
   *  - `POST /deposit` `{"wallet_id": w, "amount": a}` — reject
-  *    `amount <= 0` with 422 (service.go:87-91), otherwise feed the deposit
-  *    stream and ACK only after the deposit is fsynced to the changelog
-  *    and its micro-batch has committed (the analog of the blocking
-  *    `EmitSync`, service.go:99). Test hook: an optional `ts_unix` field
+  *    `amount <= 0` with 422 (service.go:87-91), otherwise ACK once the
+  *    deposit is fsynced to the changelog and added to the deposit
+  *    stream: the analog of the blocking `EmitSync` (service.go:99),
+  *    which returns once the broker holds the message durably, while the
+  *    processors fold it later. Test hook: an optional `ts_unix` field
   *    pins processing time (the reference stamps wall clock,
   *    detector.go:57).
   *  - `GET /check/{wallet_id}` — balance and flag, with unknown-wallet →
   *    `{balance: 0, above_threshold: false}` and HTTP 200 (SURVEY §2.3.6).
+  *    A GET keeps read-your-writes through a per-wallet READ BARRIER: it
+  *    answers once the view has folded the wallet's last deposit ACKed
+  *    before the GET arrived, so a wallet with nothing in flight answers
+  *    at once and one with deposits in flight waits at most for the
+  *    micro-batch running now and the next one.
   *
   * Topology: ONE keyed stateful query, [[DepositStreams.wallet]], that
   * evaluates the collector and the detector together and feeds one KEYED
@@ -44,22 +50,26 @@ import graft.streaming.DepositStreams.WalletRow
   * keyed rows) is identical; only the map implementation changes.
   *
   * The query's stateful shuffle has ONE partition, whatever
-  * `spark.sql.shuffle.partitions` says. One writer thread already commits
+  * `spark.sql.shuffle.partitions` says. One writer thread already adds
   * one group at a time (the reference topic's per-partition order), a
-  * group holds a handful of deposits, and the state is a fraction of a
-  * MB; every further partition only adds a state-store load and commit to
-  * each micro-batch, so the commit cost grew with the core count, not the
-  * rows. The trade is the boot replay, which now folds the whole log in
-  * one task; set-up was still faster than at the session's width with a
-  * 20,000-deposit log (PERF.md, "Serving edge — one state partition").
+  * micro-batch holds about a thousand deposits under load, and the state
+  * is a fraction of a MB; every further partition only adds a state-store
+  * load and commit to each micro-batch, so the commit cost grew with the
+  * core count, not the rows. The trade is the boot replay, which now folds
+  * the whole log in one task; set-up was still faster than at the
+  * session's width with a 20,000-deposit log (PERF.md, "Serving edge — one
+  * state partition").
   *
   * Writes are GROUP-COMMITTED: HTTP threads parse and validate a deposit,
   * queue it, and block on its result; one writer thread takes everything
-  * that queued while the previous group was committing and commits it as
-  * one group — one fsync, one micro-batch — so the fixed cost of a
-  * micro-batch is shared by every deposit in flight (the D-Streams batch
-  * argument). A group is never held open to wait for more deposits. A
-  * JDK HttpServer stands in for the reference's chi router.
+  * that queued while the previous group was being written and makes it
+  * durable as one group — one fsync, one `addData` — then ACKs it. A
+  * group is never held open to wait for more deposits. The serving query
+  * runs its default trigger on its own thread, and each micro-batch
+  * folds everything added since the last one, so the fixed cost of a
+  * micro-batch is shared by every deposit ACKed while the previous one
+  * ran (the D-Streams batch argument) and is off the client's latency.
+  * A JDK HttpServer stands in for the reference's chi router.
   */
 final class DepositService(spark: SparkSession, port: Int = 0,
                            changelogDir: Option[String] = None) {
@@ -92,7 +102,19 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   // the streaming thread's batch commit.
   private val view = new ConcurrentHashMap[String, WalletRow]()
 
-  private val input = MemoryStream[TimedDeposit]
+  // Seq of each wallet's last ACKed deposit, put by the writer thread
+  // after the deposit is durable and added to the input, before its ACK.
+  // GET /check waits until the view row has folded it.
+  private val acked = new ConcurrentHashMap[String, Long]()
+
+  // Notified after every micro-batch's upserts; GETs behind the read
+  // barrier wait on it.
+  private val upserted = new Object
+
+  // One input partition per micro-batch: without a partition count, every
+  // `addData` since the last batch would become its own input partition,
+  // and a batch over hundreds of groups would plan hundreds of tasks.
+  private val input = MemoryStream[TimedDeposit](1)
 
   // One state partition (see the class doc). The width is set on the
   // caller's session only around `start()`: StreamExecution clones the
@@ -113,6 +135,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
           view.merge(r.walletId, r,
             (old, nw) => if (nw.nDeposits >= old.nDeposits) nw else old)
         }
+        upserted.synchronized(upserted.notifyAll())
       }
       .start()
     finally previous match {
@@ -127,15 +150,6 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   private def ensureRunning(): Unit =
     if (!query.isActive) throw new IllegalStateException(
       "DepositService: serving query is not running", query.exception.orNull)
-
-  /** Runs every deposit added so far through the serving query. On a
-    * stopped query `processAllAvailable` returns without running
-    * anything, so that case is turned into a failure here: returning
-    * normally means the view reflects every added deposit. */
-  private def commit(): Unit = {
-    query.processAllAvailable()
-    ensureRunning()
-  }
 
   // Client-supplied idempotency keys already absorbed (rebuilt from the
   // log at boot): a retried POST whose key is present ACKs without
@@ -232,7 +246,11 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     val replayed = fresh.map(_._1).sortBy(_.seq)
     if (replayed.nonEmpty) {
       input.addData(replayed)
-      commit()
+      // The one wait for a micro-batch: the port opens only once the
+      // replayed state is served. A stopped query returns from it without
+      // running anything, hence the check after it.
+      query.processAllAvailable()
+      ensureRunning()
       lastSeq = replayed.map(_.seq).max // seq order survives the restart
     }
   } catch {
@@ -267,19 +285,21 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     }
 
   /** Commits one group, in order: idempotency check (first occurrence of
-    * a key wins, against earlier groups and inside this group) → seq →
-    * fsynced append → one `addData` and one micro-batch → keys marked
-    * seen → every member completed. A key is marked seen only after the
-    * engine has absorbed its deposit: "seen" must mean "durably logged
-    * AND absorbed this boot", or a retry after a failure between append
-    * and commit would be ACKed as duplicate while the view never ingests
-    * the deposit until a restart. A failure therefore leaves the group's
-    * keys unseen and completes EVERY member with it, duplicates included
-    * — a retry re-appends, and the boot replay dedupes on first
-    * occurrence per key, keeping the view exactly-once over an
-    * at-least-once log. Duplicates are answered only after the group
-    * commits, so a `duplicate` never precedes the durability of the
-    * deposit it refers to. */
+    * a key wins, against earlier groups and inside this group) → serving
+    * query checked alive → seq → fsynced append → one `addData` → each
+    * wallet's last ACKed seq recorded → keys marked seen → every member
+    * completed. No micro-batch runs here: the serving query folds the
+    * group on its own thread, and GET /check's read barrier waits for it.
+    * A key is marked seen only after the input holds its deposit: "seen"
+    * must mean "durably logged AND absorbed this boot", or a retry after
+    * a failure between append and `addData` would be ACKed as duplicate
+    * while the view never ingests the deposit until a restart. A failure
+    * therefore leaves the group's keys unseen and completes EVERY member
+    * with it, duplicates included — a retry re-appends, and the boot
+    * replay dedupes on first occurrence per key, keeping the view
+    * exactly-once over an at-least-once log. Duplicates are answered only
+    * after the group is durable, so a `duplicate` never precedes the
+    * durability of the deposit it refers to. */
   private def commitGroup(group: Seq[Pending]): Unit =
     try {
       val inGroup = mutable.HashSet.empty[String]
@@ -293,7 +313,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
         }
         appendToLog(events.zip(fresh.map(_.idem))) // log-then-absorb: a crash after this replays it
         input.addData(events)
-        commit()
+        events.foreach(d => acked.put(d.walletId, d.seq)) // seqs rise, so the last put wins
         fresh.foreach(_.idem.foreach(seenIdem.add))
       }
       fresh.foreach(_.result.complete("ok"))
@@ -309,7 +329,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   @volatile private var stopping = false
 
   /** The single writer: a group is whatever queued while the previous
-    * group was committing. A failed group is completed with its failure
+    * group was being written. A failed group is completed with its failure
     * inside [[commitGroup]], so the thread outlives it; only [[stop]]
     * ends it. */
   private def writeLoop(): Unit =
@@ -325,17 +345,17 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   writer.start()
 
   /** Queues deposits that must commit in one group; each member's
-    * `result` completes once that group has committed or failed. */
+    * `result` completes once that group is durable or has failed. */
   private[service] def enqueue(group: Seq[Pending]): Unit = queue.put(group)
 
   /** Write-admission bound: at most this many pool threads may be inside
     * (or queued on) the write path at once; excess POSTs are REJECTED
     * with 503 instead of consuming a thread. Without it, concurrent
-    * writers would occupy the whole pool waiting on group commits and
-    * GETs would queue behind write latency again — the regression the
-    * pool exists to prevent. 503 + retry is safe for keyed clients
-    * (idempotency) and honest backpressure for keyless ones (the deposit
-    * was NOT accepted). Declared (like every field the handlers touch)
+    * writers would occupy the whole pool waiting on group commits (an
+    * fsync each) and GETs would queue behind write latency again — the
+    * regression the pool exists to prevent. 503 + retry is safe for
+    * keyed clients (idempotency) and honest backpressure for keyless ones
+    * (the deposit was NOT accepted). Declared (like every field the handlers touch)
     * BEFORE `server.start()` below — a request racing the constructor
     * tail must never observe a null field through the already-open
     * port. */
@@ -346,14 +366,14 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   server.createContext("/deposit", (ex: HttpExchange) => handleDeposit(ex))
   server.createContext("/check/", (ex: HttpExchange) => handleCheck(ex))
   // Reads must not queue behind the write path: GET /check is one
-  // lock-free ConcurrentHashMap read, so a small pool serves reads in
-  // parallel while POST threads wait on their group commit (one writer
-  // at a time = the reference topic's per-partition ordering; parallel
-  // lock-free reads = its local view), with [[writePermits]] keeping
-  // half the pool free for reads under any write load. Measured under
-  // concurrent load (DepositServiceLoadSpec): with the single-dispatcher
-  // default, GET p99 sat BEHIND in-flight micro-batch commits at ~10 s;
-  // with the pool it is decoupled from write latency entirely.
+  // ConcurrentHashMap read (plus, for a wallet with deposits in flight,
+  // the read barrier's wait), so a small pool serves reads in parallel
+  // while POST threads wait on their group commit (one writer at a time
+  // = the reference topic's per-partition ordering; parallel reads = its
+  // local view), with [[writePermits]] keeping half the pool free for
+  // reads under any write load. Measured under concurrent load
+  // (DepositServiceLoadSpec): with the single-dispatcher default, GET p99
+  // sat BEHIND in-flight micro-batch commits at ~10 s.
   private val httpPool = java.util.concurrent.Executors.newFixedThreadPool(8)
   server.setExecutor(httpPool)
   server.start()
@@ -425,9 +445,9 @@ final class DepositService(spark: SparkSession, port: Int = 0,
       .map(_.asText()).filter(_.nonEmpty)
     val pending = new Pending(wallet, amount, ts, idem)
     enqueue(Seq(pending))
-    // EmitSync analog: the group commit completes this only once the
-    // deposit is fsynced and the view reflects it (read-your-writes for
-    // the ACK).
+    // EmitSync analog: the group commit completes this once the deposit
+    // is fsynced and in the serving query's input. The view may not have
+    // folded it yet; GET /check's read barrier keeps read-your-writes.
     val status = pending.result.get()
     (200, mapper.writeValueAsString(
       mapper.createObjectNode().put("wallet_id", wallet).put("status", status)))
@@ -438,7 +458,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
   private def handleCheck(ex: HttpExchange): Unit =
     try {
       val wallet = ex.getRequestURI.getPath.stripPrefix("/check/")
-      val row = Option(view.get(wallet))
+      val row = folded(wallet, acked.getOrDefault(wallet, 0L))
       respond(ex, 200, mapper.writeValueAsString(mapper.createObjectNode()
         .put("wallet_id", wallet)
         .put("balance", row.map(_.balance).getOrElse(0.0))
@@ -446,6 +466,21 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     } catch {
       case t: Throwable => fail(ex, "GET /check", t)
     }
+
+  /** The view row of `wallet` once it has folded seq `need`, the wallet's
+    * last ACKed seq when the GET arrived. `need` is read once, at arrival:
+    * a wait that re-read it would never end on a wallet written faster
+    * than a micro-batch folds. A wallet with nothing in flight returns at
+    * once. While the wait lasts, a stopped serving query fails the GET
+    * instead of serving a stale row; the timed wait notices the stop
+    * within 100 ms, since no batch will notify. */
+  private def folded(wallet: String, need: Long): Option[WalletRow] = {
+    def caughtUp = Option(view.get(wallet)).exists(_.seq >= need)
+    if (need > 0 && !caughtUp) upserted.synchronized {
+      while (!caughtUp) { ensureRunning(); upserted.wait(100) }
+    }
+    Option(view.get(wallet))
+  }
 
   def stop(): Unit = {
     server.stop(0)
@@ -460,7 +495,8 @@ final class DepositService(spark: SparkSession, port: Int = 0,
 
 object DepositService {
   /** An admitted deposit waiting for its group to commit. `result`
-    * completes with "ok" or "duplicate", or with the group's failure. */
+    * completes with "ok" or "duplicate" once the group is durable, or
+    * with the group's failure. */
   private[service] final class Pending(val walletId: String, val amount: Double,
                                        val tsUnix: Long, val idem: Option[String]) {
     val result = new CompletableFuture[String]()

@@ -31,9 +31,11 @@ object DepositStreams {
   final case class BalanceRow(walletId: String, nDeposits: Long, balance: Double)
 
   /** Serving-view row of [[wallet]]: the wallet's deposit count and
-    * balance, and the detector verdict of the last deposit folded. */
+    * balance, the detector verdict of the last deposit folded, and the
+    * highest seq the batch folded for the wallet (the serving edge's
+    * read barrier compares it with the wallet's last ACKed seq). */
   final case class WalletRow(walletId: String, nDeposits: Long, balance: Double,
-                             flagged: Boolean)
+                             flagged: Boolean, seq: Long)
 
   /** Per-wallet state of [[wallet]]: the collector's count and running
     * balance beside the detector's counter. */
@@ -95,7 +97,9 @@ object DepositStreams {
     * Each batch folds a wallet's deposits in the order [[collector]] and
     * [[detector]] use, `(tsUnix, seq)`, through [[DetectorLogic.step]];
     * the running balance is the collector's, and the emitted flag is the
-    * detector's verdict on the last deposit folded.
+    * detector's verdict on the last deposit folded. The row's seq comes
+    * from the batch's events, not the state, so [[WalletState]] and its
+    * checkpoint schema carry no seq.
     * Update output — one row per touched wallet. */
   def wallet(spark: SparkSession, deposits: Dataset[TimedDeposit]): Dataset[WalletRow] = {
     import spark.implicits._
@@ -112,7 +116,7 @@ object DepositStreams {
             (WalletState(s.nDeposits + 1, s.balance + d.amount, next), !ev.flagRemoved)
           }
           state.update(st)
-          WalletRow(key, st.nDeposits, st.balance, flagged)
+          WalletRow(key, st.nDeposits, st.balance, flagged, sorted.iterator.map(_.seq).max)
       }
   }
 

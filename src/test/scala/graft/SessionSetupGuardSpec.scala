@@ -159,6 +159,20 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     assert(found.size == 1, found)
   }
 
+  // The serving edge ACKs at durability: DepositService waits for a
+  // micro-batch only where the boot replay does, so no change can put the
+  // micro-batch back on the ACK path. Needle spelled in two parts, so this
+  // file is no hit of its own scan.
+  test("DepositService waits for a micro-batch only in the boot replay") {
+    val svc = main.filter(_.getFileName.toString == "DepositService.scala")
+    assert(svc.size == 1, svc)
+    val found = hits(svc, "processAll" + "Available")
+    val lines = Files.readAllLines(svc.head).asScala
+    assert(found.size == 1, found)
+    val replay = lines.slice(found.head._2 - 6, found.head._2 - 1)
+    assert(replay.exists(_.contains("input.addData(replayed)")), (found, replay))
+  }
+
   test("no spec makes a temp directory of its own; they come from TestDirs") {
     // Needle spelled in two parts, so this file is no hit of its own scan.
     val found = hits(scalaFiles("src/test/scala"), "createTemp" + "Directory")

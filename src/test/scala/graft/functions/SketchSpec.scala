@@ -60,6 +60,13 @@ class SketchSpec extends AnyFunSuite with SparkSpec {
     refusedBy("hll_md5_estimate")(applied("hll_md5_estimate", sketchOf("theta_sketch")))
   }
 
+  test("hll_md5_estimate over a string column fails its type check under its own name") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq("a").toDF("s").select(call_function("hll_md5_estimate", $"s")).collect()
+    }
+    assert(e.getMessage.contains("hll_md5_estimate requires a binary sketch"), e.getMessage)
+  }
+
   test("bloom_might_contain over an HLL sketch throws") {
     val hll = sketchOf("hll_md5_sketch")
     refusedBy("bloom_might_contain") {

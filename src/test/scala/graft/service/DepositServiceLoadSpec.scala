@@ -10,14 +10,16 @@ import graft.TestDirs.tempDir
 
 /** The serving edge under SUSTAINED CONCURRENT LOAD — the scenario the
   * reference's chi router lives in: N parallel clients mixing POST
-  * /deposit (each ACKed only after the group commit that carries it —
-  * one fsync and one micro-batch of the fused wallet query) and GET
-  * /check (keyed map reads) against one service process, then a
-  * RESTART UNDER LOAD with durability accounting.
+  * /deposit (each ACKed once the group that carries it is durable — one
+  * fsync and one `addData`; the fused wallet query folds it on its own
+  * trigger) and GET /check (keyed map reads behind a per-wallet read
+  * barrier) against one service process, then a RESTART UNDER LOAD with
+  * durability accounting.
   *
   * What is asserted (correctness) and what is measured (latency):
   *  - every ACKed deposit is visible to a subsequent GET (read-your-
-  *    writes survives concurrency — the views commit before the ACK);
+  *    writes survives concurrency — a GET waits until the view has
+  *    folded the wallet's last deposit ACKed before it arrived);
   *  - after a restart mid-workload, the rebuilt views account for EVERY
   *    ACKed deposit exactly once (ACK ⇒ fsynced log ⇒ replay), while
   *    un-ACKed in-flight requests may simply be absent — at-least-once
@@ -25,8 +27,9 @@ import graft.TestDirs.tempDir
   *  - per-request wall latencies are collected and the p50/p95/p99
   *    table is printed for PERF.md (one writer thread commits the POSTs
   *    group by group, so a POST's latency under load ≈ waiting for the
-  *    group in flight plus its own group's commit — the measured trade
-  *    of ACK-after-commit; GETs never wait on the writer).
+  *    group in flight plus its own group's fsync; a GET waits at most for
+  *    the micro-batch running and the next one, and only on a wallet
+  *    with deposits in flight).
   */
 class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
 
@@ -90,7 +93,7 @@ class DepositServiceLoadSpec extends AnyFunSuite with SparkSpec {
     assert(failures.isEmpty, s"request failures: ${failures.asScala.toList}")
     assert(acked.size == writers * postsPerWriter)
     // Read-your-writes after the storm: each wallet's balance equals the
-    // sum of its ACKed amounts (ACK-after-commit ⇒ nothing in flight).
+    // sum of its ACKed amounts (the read barrier waits for any in flight).
     val expected = acked.asScala.groupBy(_._1).view.mapValues(_.map(_._2).sum)
     expected.foreach { case (w, sum) =>
       assert(check(port, w).contains(s""""balance":$sum"""),

@@ -3,6 +3,7 @@ package graft.service
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
@@ -324,6 +325,7 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
       assert(spark.streams.active.exists(_.id == s.servingQuery.id))
       assert(postTo(s, """{"wallet_id":"mae","amount":5,"ts_unix":1000}""").statusCode() == 200)
+      s.servingQuery.processAllAvailable()
       val op = s.servingQuery.lastProgress.stateOperators.head
       assert(op.numShufflePartitions == 1)
       assert(op.numStateStoreInstances == 1)
@@ -380,7 +382,119 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
     } finally b.stop()
   }
 
+  /** Changelog lines written so far. */
+  private def logLines(dir: String): Int = {
+    val src = scala.io.Source.fromFile(new java.io.File(dir, "deposits.jsonl"))
+    try src.getLines().size finally src.close()
+  }
+
+  /** Runs `body` while a job holds every core of the local session, so no
+    * micro-batch task can run: an ACKed deposit stays unapplied. */
+  private def withCoresHeld[T](body: => T): T = {
+    import DepositServiceSpec.Cores
+    Cores.running.set(0)
+    Cores.release = new CountDownLatch(1)
+    val cores = spark.sparkContext.defaultParallelism
+    val holder = new Thread(() => spark.sparkContext.parallelize(0 until cores, cores)
+      .foreach { _ => Cores.running.incrementAndGet(); Cores.release.await() })
+    holder.start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (Cores.running.get < cores) {
+        assert(System.currentTimeMillis() < deadline, s"${Cores.running.get} of $cores cores held")
+        Thread.sleep(5)
+      }
+      body
+    } finally { Cores.release.countDown(); holder.join(60000) }
+  }
+
+  test("a serving query stopped after an ACK it has not applied: GET and " +
+    "POST answer 500 promptly, and a fresh boot serves the deposit once") {
+    val dir = tempDir("svc_unapplied").toString
+    val a = new DepositService(spark, changelogDir = Some(dir))
+    val dep = """{"wallet_id":"nia","amount":17,"ts_unix":1000,"idem":"k-unapplied"}"""
+    try withCoresHeld {
+      val ack = postTo(a, dep)
+      assert(ack.statusCode() == 200 && ack.body().contains("\"ok\""), ack.body())
+      a.servingQuery.stop()
+      // The barrier needs a batch that will never run: 500, not a stale row.
+      val t0 = System.nanoTime()
+      val get = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${a.boundPort}/check/nia"))
+        .timeout(java.time.Duration.ofSeconds(10)).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(get.statusCode() == 500, get.body())
+      assert((System.nanoTime() - t0) / 1e6 < 1000)
+      // A wallet with nothing in flight needs no batch and answers at once.
+      assert(checkAt(a, "nobody") ==
+        """{"wallet_id":"nobody","balance":0.0,"above_threshold":false}""")
+      val logged = logLines(dir)
+      assert(postTo(a, """{"wallet_id":"nia","amount":5,"ts_unix":1100}""").statusCode() == 500)
+      assert(logLines(dir) == logged)
+    } finally a.stop()
+    val b = new DepositService(spark, changelogDir = Some(dir))
+    try {
+      assert(checkAt(b, "nia") ==
+        """{"wallet_id":"nia","balance":17.0,"above_threshold":false}""")
+      assert(postTo(b, dep).body().contains("duplicate"))
+      assert(checkAt(b, "nia") ==
+        """{"wallet_id":"nia","balance":17.0,"above_threshold":false}""")
+    } finally b.stop()
+  }
+
+  test("a GET on a wallet written continuously returns within two " +
+    "micro-batches and reads every deposit ACKed before it was sent") {
+    val s = new DepositService(spark)
+    val ackedN = new AtomicLong
+    @volatile var writing = true
+    val statuses = new ConcurrentLinkedQueue[Int]()
+    val writer = new Thread(() => {
+      var k = 0
+      while (writing) {
+        val st = postTo(s, s"""{"wallet_id":"hot","amount":1,"ts_unix":${1000 + k}}""").statusCode()
+        statuses.add(st)
+        if (st == 200) ackedN.incrementAndGet()
+        k += 1
+      }
+    })
+    try {
+      writer.start()
+      while (ackedN.get < 50 && writer.isAlive) Thread.sleep(5)
+      // (latency ms, deposits ACKed before the GET was sent, balance read)
+      val reads = (0 until 40).map { _ =>
+        val before = ackedN.get
+        val t0 = System.nanoTime()
+        val body = client.send(HttpRequest.newBuilder(
+            URI.create(s"http://localhost:${s.boundPort}/check/hot"))
+          .timeout(java.time.Duration.ofSeconds(20)).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).body()
+        ((System.nanoTime() - t0) / 1e6, before, mapper.readTree(body).get("balance").asDouble())
+      }
+      writing = false
+      writer.join(60000)
+      assert(statuses.asScala.forall(_ == 200))
+      reads.foreach { case (_, before, balance) => assert(balance >= before, reads) }
+      val batchMs = s.servingQuery.recentProgress.toSeq
+        .filter(_.numInputRows > 0).map(_.durationMs.get("triggerExecution").longValue)
+      assert(batchMs.size >= 2, batchMs)
+      // Two micro-batches: the one running when the GET arrived, then the
+      // one that folds the deposits ACKed before it; plus the round trip.
+      val bound = 2 * batchMs.max + 250.0
+      reads.foreach { case (ms, _, _) => assert(ms <= bound, (ms, bound, batchMs)) }
+      info(f"GET ms: max ${reads.map(_._1).max}%.1f, bound $bound%.0f " +
+        s"over ${batchMs.size} micro-batches")
+    } finally { writing = false; writer.join(60000); s.stop() }
+  }
+
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
     finally if (test.name.contains("malformed")) svc.stop()
+}
+
+object DepositServiceSpec {
+  /** The core-holding job's gate; tasks run in this JVM (local mode). */
+  object Cores {
+    val running = new AtomicInteger
+    @volatile var release = new CountDownLatch(0)
+  }
 }
