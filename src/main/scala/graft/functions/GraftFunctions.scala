@@ -96,22 +96,6 @@ object GraftFunctions {
       case e => throw new IllegalArgumentException(
         s"ascii_count expects (text, chars literal), got ${e.size} args")
     },
-    // O12 wire serde — the reference's five protobuf message types as
-    // codegen'd encode/decode expressions (graft.serde.ProtoWire).
-    fn("proto_encode_deposit")(e => ProtoEncodeDeposit(e(0), e(1))),
-    fn("proto_decode_deposit")(e => ProtoDecodeDeposit(e(0))),
-    fn("proto_encode_history")(e => ProtoEncodeHistory(e(0), e(1))),
-    fn("proto_decode_history")(e => ProtoDecodeHistory(e(0))),
-    fn("proto_encode_counter")(e => ProtoEncodeCounter(e(0), e(1))),
-    fn("proto_decode_counter")(e => ProtoDecodeCounter(e(0))),
-    fn("proto_encode_flag_event")(e =>
-      ProtoEncodeBoolInt64(e(0), e(1), "proto_encode_flag_event")),
-    fn("proto_decode_flag_event")(e =>
-      ProtoDecodeBoolInt64(e(0), ProtoSchemas.flagEvent, "proto_decode_flag_event")),
-    fn("proto_encode_flag_value")(e =>
-      ProtoEncodeBoolInt64(e(0), e(1), "proto_encode_flag_value")),
-    fn("proto_decode_flag_value")(e =>
-      ProtoDecodeBoolInt64(e(0), ProtoSchemas.flagValue, "proto_decode_flag_value")),
     // Mergeable KMV theta sketch (SURVEY §7.3 escalation): first-class
     // sketch values + set algebra (union/intersection) across tables.
     fn("theta_sketch") {
@@ -156,7 +140,18 @@ object GraftFunctions {
     fn("qsk_sketch")(e => SketchAgg(QuantileSketch, e(0))),
     fn("qsk_merge_agg")(e => SketchAgg(QuantileSketch, e(0), merging = true)),
     fn("qsk_quantile")(e => QskQuantile(e(0), e(1))),
-    fn("qsk_n")(e => QskN(e(0))))
+    fn("qsk_n")(e => QskN(e(0)))) ++
+    // O12 wire serde: proto_encode_<message>(field, …) → binary and
+    // proto_decode_<message>(binary) → struct for each of the reference's
+    // five protobuf messages (graft.serde.ProtoWire).
+    ProtoWire.messages.flatMap { m => Seq(
+      fn(s"proto_encode_${m.name}")(e => ProtoEncode(m, e)),
+      fn(s"proto_decode_${m.name}") {
+        case Seq(bytes) => ProtoDecode(m, bytes)
+        case e => throw new IllegalArgumentException(
+          s"proto_decode_${m.name} expects (bytes), got ${e.size} args")
+      })
+    }
 
   /** Register every entry of [[functions]] that `spark`'s registry lacks —
     * the fallback for a session created without

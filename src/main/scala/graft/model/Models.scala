@@ -1,13 +1,13 @@
 package graft.model
 
-/** Typed records mirroring the reference's five protobuf messages
-  * (/root/reference/proto/wallet.proto:14-22, detector.proto:14-17,
-  * flagger.proto:15-23). Money stays Double on purpose — the reference sums
-  * IEEE-754 floats (/root/reference/service/service.go:138); see SURVEY §2.3.7.
+/** Typed records of the streaming layer. [[Counter]], [[FlagEvent]] and
+  * [[FlagValue]] are the processors' state and event types, and mirror
+  * three of the reference's five protobuf messages (detector.proto:14-17,
+  * flagger.proto:15-23); the wire layout of all five is described once in
+  * [[graft.serde.ProtoWire]]. Money stays Double on purpose — the
+  * reference sums IEEE-754 floats (service/service.go:138); see SURVEY
+  * §2.3.7.
   */
-final case class Deposit(walletId: String, amount: Double)
-
-final case class DepositHistory(walletId: String, deposits: Seq[Deposit])
 
 /** Detector state: rolling-window start (unix secs; 0 = no window open) and
   * the running sum received inside the window

@@ -9,8 +9,10 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
+import graft.model.Counter
+import graft.streaming.DetectorLogic
 
-/** The reference detector state machine (detector.go:50-71, replicated in
+/** The reference detector state machine (detector.go:50-71,
   * [[graft.streaming.DetectorLogic.step]]) as a CUSTOM WHOLE-OPERATOR plan:
   * logical node → planner strategy → physical exec — the (c)-tier extension
   * path for semantics the relational operators cannot express (the
@@ -94,22 +96,16 @@ case class DetectorFoldExec(windowSec: Long, threshold: Double,
 
         override def next(): InternalRow = {
           val wallet = pWallet
-          var st = 0L; var rc = 0.0; var flagged = false
+          var state = Counter(0L, 0.0); var flagged = false
           var cont = true
           while (cont) {
-            // DetectorLogic.step inlined: add first, then the window
-            // branch order that discards the current deposit on expiry.
-            var received = rc + pAmt
-            var start = st
-            if (start == 0L) start = pTs
-            else if (pTs - start > w) { start = 0L; received = 0.0 }
-            st = start; rc = received
-            flagged = rc >= t && st != 0L
+            val (next, event) = DetectorLogic.step(state, pAmt, pTs, w, t)
+            state = next; flagged = !event.flagRemoved
             advance()
             cont = has && pWallet == wallet
           }
           out.setLong(0, wallet)
-          out.setDouble(1, rc)
+          out.setDouble(1, state.received)
           out.setBoolean(2, flagged)
           proj(out)
         }

@@ -2,163 +2,74 @@ package graft.serde
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions over [[ProtoWire]] — the engine's O12 wire
-  * serde as codegen'd column functions (`proto_encode_*` / `proto_decode_*`
-  * in the session registry, see [[graft.functions.GraftFunctions]]). Each
-  * `doGenCode` is a single static call into [[ProtoWire]], so encode/decode
-  * stays inside whole-stage codegen with no UDF serialization overhead.
-  */
-object ProtoSchemas {
-  val deposit: StructType = StructType(Seq(
-    StructField("wallet_id", StringType, nullable = false),
-    StructField("amount", DoubleType, nullable = false)))
-  val history: StructType = StructType(Seq(
-    StructField("wallet_id", StringType, nullable = false),
-    StructField("deposits", ArrayType(deposit, containsNull = false), nullable = false)))
-  val counter: StructType = StructType(Seq(
-    StructField("rolling_period_start_unix", LongType, nullable = false),
-    StructField("received", DoubleType, nullable = false)))
-  val flagEvent: StructType = StructType(Seq(
-    StructField("flag_removed", BooleanType, nullable = false),
-    StructField("rolling_period_start_unix", LongType, nullable = false)))
-  val flagValue: StructType = StructType(Seq(
-    StructField("flagged", BooleanType, nullable = false),
-    StructField("rolling_period_start_unix", LongType, nullable = false)))
-
-  private[serde] def check(name: String, actual: Seq[DataType],
-                           expected: Seq[DataType]): TypeCheckResult =
-    if (actual == expected) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name expects (${expected.map(_.simpleString).mkString(", ")}), got " +
-        s"(${actual.map(_.simpleString).mkString(", ")})")
-}
-
-/** proto_encode_deposit(wallet_id string, amount double) → binary. */
-case class ProtoEncodeDeposit(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(left.dataType, right.dataType),
-      Seq(StringType, DoubleType))
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(w: Any, a: Any): Any =
-    ProtoWire.encDeposit(w.asInstanceOf[UTF8String], a.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, a) => s"graft.serde.ProtoWire.encDeposit($w, $a)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "proto_encode_deposit"
-}
-
-/** proto_decode_deposit(binary) → struct<wallet_id, amount>. */
-case class ProtoDecodeDeposit(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(child.dataType), Seq(BinaryType))
-  override def dataType: DataType = ProtoSchemas.deposit
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.decDepositRow(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.serde.ProtoWire.decDepositRow($b)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "proto_decode_deposit"
-}
-
-/** proto_encode_history(wallet_id string, deposits array<struct>) → binary. */
-case class ProtoEncodeHistory(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, ArrayType(s: StructType, _))
-        if s.fields.length == 2 && s.fields(0).dataType == StringType &&
-          s.fields(1).dataType == DoubleType =>
+/** `proto_encode_<message>(field, …)` → binary: the message's wire bytes
+  * ([[ProtoWire.encode]]) from its fields, which [[ProtoEncode.apply]]
+  * packs into one struct. NULL when any field is NULL. `doGenCode` is one
+  * static call into [[ProtoWire]], so the encode stays inside whole-stage
+  * codegen. */
+case class ProtoEncode(msg: ProtoWire.Message, child: Expression) extends UnaryExpression {
+  override def prettyName: String = s"proto_encode_${msg.name}"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    // Field by field the kind's type, names and nullability aside.
+    case s: StructType if DataType.equalsStructurally(s, msg.schema, ignoreNullability = true) =>
       TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<struct<string,double>>), got " +
-        s"(${l.simpleString}, ${r.simpleString})")
+    case s: StructType =>
+      ProtoEncode.mismatch(prettyName, msg.schema.map(_.dataType), s.map(_.dataType))
+    case t => ProtoEncode.mismatch(prettyName, msg.schema.map(_.dataType), Seq(t))
   }
   override def dataType: DataType = BinaryType
-  override def nullSafeEval(w: Any, ds: Any): Any =
-    ProtoWire.encHistory(w.asInstanceOf[UTF8String],
-      ds.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, ds) => s"graft.serde.ProtoWire.encHistory($w, $ds)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "proto_encode_history"
-}
-
-/** proto_decode_history(binary) → struct<wallet_id, deposits>. */
-case class ProtoDecodeHistory(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(child.dataType), Seq(BinaryType))
-  override def dataType: DataType = ProtoSchemas.history
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.decHistoryRow(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.serde.ProtoWire.decHistoryRow($b)")
+  override def nullable: Boolean = true
+  override def nullSafeEval(row: Any): Any =
+    ProtoWire.encode(msg, row.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("protoMsg", msg)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      byte[] ${ev.value} = ${c.isNull} ? null : graft.serde.ProtoWire.encode($m, ${c.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "proto_decode_history"
 }
 
-/** proto_encode_counter(start bigint, received double) → binary. */
-case class ProtoEncodeCounter(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(left.dataType, right.dataType),
-      Seq(LongType, DoubleType))
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(s: Any, r: Any): Any =
-    ProtoWire.encCounter(s.asInstanceOf[Long], r.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, r) => s"graft.serde.ProtoWire.encCounter($s, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "proto_encode_counter"
+object ProtoEncode {
+  /** `proto_encode_<msg.name>(args)`: one argument per field, in order. */
+  def apply(msg: ProtoWire.Message, args: Seq[Expression]): ProtoEncode = {
+    if (args.size != msg.fields.size) throw new IllegalArgumentException(
+      s"proto_encode_${msg.name} expects (${msg.fields.map(_.name).mkString(", ")}), " +
+        s"got ${args.size} args")
+    ProtoEncode(msg, CreateNamedStruct(msg.fields.zip(args).flatMap {
+      case (f, a) => Seq(Literal(f.name), a)
+    }))
+  }
+
+  private[serde] def mismatch(name: String, expected: Seq[DataType],
+                              actual: Seq[DataType]): TypeCheckResult =
+    TypeCheckResult.TypeCheckFailure(
+      s"$name expects (${expected.map(_.simpleString).mkString(", ")}), " +
+        s"got (${actual.map(_.simpleString).mkString(", ")})")
 }
 
-/** proto_decode_counter(binary) → struct<rolling_period_start_unix, received>. */
-case class ProtoDecodeCounter(child: Expression) extends UnaryExpression {
+/** `proto_decode_<message>(binary)` → the message's struct
+  * ([[ProtoWire.decode]]), one static call into [[ProtoWire]] under
+  * codegen. */
+case class ProtoDecode(msg: ProtoWire.Message, child: Expression) extends UnaryExpression {
+  override def prettyName: String = s"proto_decode_${msg.name}"
   override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(child.dataType), Seq(BinaryType))
-  override def dataType: DataType = ProtoSchemas.counter
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.decCounterRow(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.serde.ProtoWire.decCounterRow($b)")
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else ProtoEncode.mismatch(prettyName, Seq(BinaryType), Seq(child.dataType))
+  override def dataType: DataType = msg.schema
+  override def nullSafeEval(bytes: Any): Any =
+    ProtoWire.decode(msg, bytes.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("protoMsg", msg)
+    defineCodeGen(ctx, ev, b => s"graft.serde.ProtoWire.decode($m, $b)")
+  }
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "proto_decode_counter"
-}
-
-/** proto_encode_flag_event / proto_encode_flag_value share a wire shape
-  * (bool @1, int64 @2); `prettyName` distinguishes the registry entries. */
-case class ProtoEncodeBoolInt64(left: Expression, right: Expression, name: String)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(left.dataType, right.dataType),
-      Seq(BooleanType, LongType))
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(b: Any, v: Any): Any =
-    ProtoWire.encodeBoolInt64(b.asInstanceOf[Boolean], v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, v) => s"graft.serde.ProtoWire.encodeBoolInt64($b, $v)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = name
-}
-
-/** Decoder for the shared bool@1/int64@2 shape, parameterized on the
-  * output struct's field names (FlagEvent vs FlagValue). */
-case class ProtoDecodeBoolInt64(child: Expression, schema: StructType, name: String)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProtoSchemas.check(prettyName, Seq(child.dataType), Seq(BinaryType))
-  override def dataType: DataType = schema
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.decBoolInt64Row(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.serde.ProtoWire.decBoolInt64Row($b)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = name
 }

@@ -1,31 +1,36 @@
 package graft.serde
 
 import java.io.ByteArrayOutputStream
+import java.lang.Double.{doubleToLongBits, longBitsToDouble}
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model._
-
 /** Dependency-free protobuf (proto3) wire codec for the reference's five
-  * message types (/root/reference/proto/wallet.proto:14-22,
-  * detector.proto:14-17, flagger.proto:15-23), implementing the public
-  * wire-format spec (varint, 64-bit fixed, length-delimited) so the
-  * streaming topology is wire-compatible with the reference's Go
-  * producers/consumers without needing the spark-protobuf connector jar
-  * (not shipped in this container).
+  * message types (proto/wallet.proto:14-22, detector.proto:14-17,
+  * flagger.proto:15-23), implementing the public wire-format spec (varint,
+  * 64-bit fixed, length-delimited) so the streaming topology is
+  * wire-compatible with the reference's Go producers/consumers without
+  * needing the spark-protobuf connector jar.
+  *
+  * Each message is described once, as a [[Message]]: its fields in
+  * field-number order, each with a name, a number and a [[Kind]]. Its
+  * Catalyst `schema`, the one [[encode]] and [[decode]] that walk it, and
+  * the `proto_encode_*`/`proto_decode_*` SQL functions
+  * ([[ProtoEncode]], [[ProtoDecode]], registered per message by
+  * [[graft.functions.GraftFunctions]]) all derive from that description.
+  * A row of a message is an `InternalRow` of its schema, field i at
+  * ordinal i.
   *
   * Encoding matches Go `proto.Marshal` canonical output: fields in
   * field-number order, scalar zero values omitted (proto3 implicit
   * presence), repeated message elements always emitted. Decoding is
   * order-independent and skips unknown fields, per spec.
-  *
-  * Two layers: plain-JVM codecs over the [[graft.model]] case classes for
-  * the typed streaming layer, and Catalyst-typed helpers (`UTF8String`,
-  * `InternalRow`, `ArrayData`) that the codegen'd expressions in
-  * [[ProtoExpressions]] call via this object's static forwarders.
   */
 object ProtoWire {
 
@@ -85,9 +90,8 @@ object ProtoWire {
     def readBytes(): Array[Byte] = {
       val n = readVarint().toInt
       require(n >= 0 && pos + n <= buf.length, "truncated length-delimited field")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n)
       pos += n
-      out
+      java.util.Arrays.copyOfRange(buf, pos - n, pos)
     }
     /** Skip a field of the given wire type (unknown-field tolerance). */
     def skip(wire: Int): Unit = wire match {
@@ -100,179 +104,122 @@ object ProtoWire {
     }
   }
 
-  private val Empty = Array.empty[Byte]
+  // ---- message descriptions ---------------------------------------------
 
-  // ---- Deposit { string wallet_id = 1; double amount = 2; } -------------
+  /** A field's proto3 type: its wire type, its Catalyst type and the
+    * value an absent field decodes to. */
+  sealed abstract class Kind(val wire: Int, val dataType: DataType, val zero: Any)
+      extends Serializable
+  case object Str extends Kind(WireLen, StringType, UTF8String.EMPTY_UTF8)
+  case object F64 extends Kind(WireFixed64, DoubleType, 0.0)
+  case object I64 extends Kind(WireVarint, LongType, 0L)
+  case object Bool extends Kind(WireVarint, BooleanType, false)
+  final case class Repeated(msg: Message) extends Kind(WireLen,
+    ArrayType(msg.schema, containsNull = false), new GenericArrayData(Array.empty[Any]))
 
-  def encodeDepositBytes(walletUtf8: Array[Byte], amount: Double): Array[Byte] = {
-    val out = new ByteArrayOutputStream(2 + walletUtf8.length + 9)
-    if (walletUtf8.nonEmpty) { writeTag(out, 1, WireLen); writeLenDelim(out, walletUtf8) }
-    if (amount != 0.0) { writeTag(out, 2, WireFixed64); writeFixed64(out, java.lang.Double.doubleToLongBits(amount)) }
-    out.toByteArray
+  final case class Field(name: String, number: Int, kind: Kind)
+
+  /** One message: `name` is the suffix of its SQL functions, `fields` are
+    * in field-number order (the order [[encode]] writes them). */
+  final case class Message(name: String, fields: Field*) {
+    require(fields.map(_.number) == fields.map(_.number).distinct.sorted &&
+      fields.forall(_.number > 0), s"message $name: field numbers must be positive and ascending")
+
+    val schema: StructType = StructType(fields.map(f =>
+      StructField(f.name, f.kind.dataType, nullable = false)))
   }
 
-  /** Decode → (wallet_id utf8 bytes, amount). */
-  def decodeDepositBytes(bytes: Array[Byte]): (Array[Byte], Double) = {
-    val r = new Reader(bytes)
-    var wallet = Empty
-    var amount = 0.0
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val field = (tag >>> 3).toInt
-      val wire = (tag & 0x7).toInt
-      (field, wire) match {
-        case (1, WireLen)     => wallet = r.readBytes()
-        case (2, WireFixed64) => amount = java.lang.Double.longBitsToDouble(r.readFixed64())
-        case _                => r.skip(wire)
-      }
-    }
-    (wallet, amount)
-  }
+  /** Deposit { string wallet_id = 1; double amount = 2; } (wallet.proto:14-17) */
+  val Deposit: Message = Message("deposit",
+    Field("wallet_id", 1, Str), Field("amount", 2, F64))
+  /** DepositHistory { string wallet_id = 1; repeated Deposit deposits = 2; }
+    * (wallet.proto:19-22) */
+  val DepositHistory: Message = Message("history",
+    Field("wallet_id", 1, Str), Field("deposits", 2, Repeated(Deposit)))
+  /** Counter { int64 rolling_period_start_unix = 1; double received = 2; }
+    * (detector.proto:14-17) */
+  val Counter: Message = Message("counter",
+    Field("rolling_period_start_unix", 1, I64), Field("received", 2, F64))
+  /** FlagEvent { bool flag_removed = 1; int64 rolling_period_start_unix = 2; }
+    * (flagger.proto:15-18) */
+  val FlagEvent: Message = Message("flag_event",
+    Field("flag_removed", 1, Bool), Field("rolling_period_start_unix", 2, I64))
+  /** FlagValue { bool flagged = 1; int64 rolling_period_start_unix = 2; }
+    * (flagger.proto:20-23) */
+  val FlagValue: Message = Message("flag_value",
+    Field("flagged", 1, Bool), Field("rolling_period_start_unix", 2, I64))
 
-  def encode(d: Deposit): Array[Byte] =
-    encodeDepositBytes(d.walletId.getBytes("UTF-8"), d.amount)
+  val messages: Seq[Message] = Seq(Deposit, DepositHistory, Counter, FlagEvent, FlagValue)
 
-  def decodeDeposit(bytes: Array[Byte]): Deposit = {
-    val (w, a) = decodeDepositBytes(bytes)
-    Deposit(new String(w, "UTF-8"), a)
-  }
+  // ---- the codec ----------------------------------------------------------
 
-  // ---- DepositHistory { string wallet_id = 1; repeated Deposit deposits = 2; }
-
-  def encode(h: DepositHistory): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val w = h.walletId.getBytes("UTF-8")
-    if (w.nonEmpty) { writeTag(out, 1, WireLen); writeLenDelim(out, w) }
-    h.deposits.foreach { d =>
-      writeTag(out, 2, WireLen); writeLenDelim(out, encode(d))
-    }
-    out.toByteArray
-  }
-
-  def decodeDepositHistory(bytes: Array[Byte]): DepositHistory = {
-    val r = new Reader(bytes)
-    var wallet = ""
-    val deposits = Vector.newBuilder[Deposit]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val field = (tag >>> 3).toInt
-      val wire = (tag & 0x7).toInt
-      (field, wire) match {
-        case (1, WireLen) => wallet = new String(r.readBytes(), "UTF-8")
-        case (2, WireLen) => deposits += decodeDeposit(r.readBytes())
-        case _            => r.skip(wire)
-      }
-    }
-    DepositHistory(wallet, deposits.result())
-  }
-
-  // ---- Counter { int64 rolling_period_start_unix = 1; double received = 2; }
-
-  def encode(c: Counter): Array[Byte] = {
-    val out = new ByteArrayOutputStream(21)
-    if (c.rollingPeriodStartUnix != 0L) { writeTag(out, 1, WireVarint); writeVarint(out, c.rollingPeriodStartUnix) }
-    if (c.received != 0.0) { writeTag(out, 2, WireFixed64); writeFixed64(out, java.lang.Double.doubleToLongBits(c.received)) }
-    out.toByteArray
-  }
-
-  def decodeCounter(bytes: Array[Byte]): Counter = {
-    val r = new Reader(bytes)
-    var start = 0L
-    var received = 0.0
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val field = (tag >>> 3).toInt
-      val wire = (tag & 0x7).toInt
-      (field, wire) match {
-        case (1, WireVarint)  => start = r.readVarint()
-        case (2, WireFixed64) => received = java.lang.Double.longBitsToDouble(r.readFixed64())
-        case _                => r.skip(wire)
-      }
-    }
-    Counter(start, received)
-  }
-
-  // ---- FlagEvent { bool flag_removed = 1; int64 rolling_period_start_unix = 2; }
-  // ---- FlagValue { bool flagged = 1; int64 rolling_period_start_unix = 2; }
-  // Identical wire shape (bool @1, int64 @2); shared helpers.
-
-  def encodeBoolInt64(b: Boolean, v: Long): Array[Byte] = {
-    val out = new ByteArrayOutputStream(13)
-    if (b) { writeTag(out, 1, WireVarint); writeVarint(out, 1L) }
-    if (v != 0L) { writeTag(out, 2, WireVarint); writeVarint(out, v) }
-    out.toByteArray
-  }
-
-  def decodeBoolInt64(bytes: Array[Byte]): (Boolean, Long) = {
-    val r = new Reader(bytes)
-    var b = false
-    var v = 0L
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val field = (tag >>> 3).toInt
-      val wire = (tag & 0x7).toInt
-      (field, wire) match {
-        case (1, WireVarint) => b = r.readVarint() != 0L
-        case (2, WireVarint) => v = r.readVarint()
-        case _               => r.skip(wire)
-      }
-    }
-    (b, v)
-  }
-
-  def encode(e: FlagEvent): Array[Byte] = encodeBoolInt64(e.flagRemoved, e.rollingPeriodStartUnix)
-  def decodeFlagEvent(bytes: Array[Byte]): FlagEvent = {
-    val (b, v) = decodeBoolInt64(bytes); FlagEvent(b, v)
-  }
-  def encode(v: FlagValue): Array[Byte] = encodeBoolInt64(v.flagged, v.rollingPeriodStartUnix)
-  def decodeFlagValue(bytes: Array[Byte]): FlagValue = {
-    val (b, v2) = decodeBoolInt64(bytes); FlagValue(b, v2)
-  }
-
-  // ---- Catalyst-typed helpers (called from codegen via static forwarders)
-
-  def encDeposit(walletId: UTF8String, amount: Double): Array[Byte] =
-    encodeDepositBytes(walletId.getBytes, amount)
-
-  def decDepositRow(bytes: Array[Byte]): InternalRow = {
-    val (w, a) = decodeDepositBytes(bytes)
-    new GenericInternalRow(Array[Any](UTF8String.fromBytes(w), a))
-  }
-
-  def encHistory(walletId: UTF8String, deposits: ArrayData): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val w = walletId.getBytes
-    if (w.nonEmpty) { writeTag(out, 1, WireLen); writeLenDelim(out, w) }
+  /** `row`'s wire bytes, or null when a field of `row` is null (proto3 has
+    * no null). Zero values (0, 0.0 and -0.0, false, "") are omitted; every
+    * element of a repeated field is written. */
+  def encode(msg: Message, row: InternalRow): Array[Byte] = {
+    if (msg.fields.indices.exists(row.isNullAt)) return null
+    val out = new ByteArrayOutputStream(32)
     var i = 0
-    val n = deposits.numElements()
-    while (i < n) {
-      val row = deposits.getStruct(i, 2)
-      writeTag(out, 2, WireLen)
-      writeLenDelim(out, encDeposit(row.getUTF8String(0), row.getDouble(1)))
+    while (i < msg.fields.length) {
+      val f = msg.fields(i)
+      f.kind match {
+        case Str =>
+          val b = row.getUTF8String(i).getBytes
+          if (b.nonEmpty) { writeTag(out, f.number, WireLen); writeLenDelim(out, b) }
+        case F64 =>
+          val d = row.getDouble(i)
+          if (d != 0.0) { writeTag(out, f.number, WireFixed64); writeFixed64(out, doubleToLongBits(d)) }
+        case I64 =>
+          val v = row.getLong(i)
+          if (v != 0L) { writeTag(out, f.number, WireVarint); writeVarint(out, v) }
+        case Bool =>
+          if (row.getBoolean(i)) { writeTag(out, f.number, WireVarint); writeVarint(out, 1L) }
+        case Repeated(m) =>
+          val elems = row.getArray(i)
+          var j = 0
+          while (j < elems.numElements()) {
+            writeTag(out, f.number, WireLen)
+            writeLenDelim(out, encode(m, elems.getStruct(j, m.fields.length)))
+            j += 1
+          }
+      }
       i += 1
     }
     out.toByteArray
   }
 
-  def decHistoryRow(bytes: Array[Byte]): InternalRow = {
-    val h = decodeDepositHistory(bytes)
-    val rows: Array[Any] = h.deposits.map { d =>
-      new GenericInternalRow(Array[Any](UTF8String.fromString(d.walletId), d.amount))
-    }.toArray
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(h.walletId), new GenericArrayData(rows)))
-  }
-
-  def encCounter(start: Long, received: Double): Array[Byte] =
-    encode(Counter(start, received))
-
-  def decCounterRow(bytes: Array[Byte]): InternalRow = {
-    val c = decodeCounter(bytes)
-    new GenericInternalRow(Array[Any](c.rollingPeriodStartUnix, c.received))
-  }
-
-  def decBoolInt64Row(bytes: Array[Byte]): InternalRow = {
-    val (b, v) = decodeBoolInt64(bytes)
-    new GenericInternalRow(Array[Any](b, v))
+  /** The row `bytes` encode. Fields may come in any order; an unknown
+    * field number, or a known one with another wire type, is skipped; an
+    * absent field reads as its zero value. */
+  def decode(msg: Message, bytes: Array[Byte]): InternalRow = {
+    val n = msg.fields.length
+    val values = new Array[Any](n)
+    val r = new Reader(bytes)
+    while (r.hasMore) {
+      val tag = r.readVarint()
+      val wire = (tag & 0x7).toInt
+      var k = 0
+      while (k < n && msg.fields(k).number != tag >>> 3) k += 1
+      if (k == n || msg.fields(k).kind.wire != wire) r.skip(wire)
+      else msg.fields(k).kind match {
+        case Str => values(k) = UTF8String.fromBytes(r.readBytes())
+        case F64 => values(k) = longBitsToDouble(r.readFixed64())
+        case I64 => values(k) = r.readVarint()
+        case Bool => values(k) = r.readVarint() != 0L
+        case Repeated(m) =>
+          if (values(k) == null) values(k) = new ArrayBuffer[Any]()
+          values(k).asInstanceOf[ArrayBuffer[Any]] += decode(m, r.readBytes())
+      }
+    }
+    var i = 0
+    while (i < n) {
+      values(i) = values(i) match {
+        case null => msg.fields(i).kind.zero
+        case elems: ArrayBuffer[_] => new GenericArrayData(elems.toArray[Any])
+        case v => v
+      }
+      i += 1
+    }
+    new GenericInternalRow(values)
   }
 }

@@ -212,34 +212,14 @@ final class DepositService(spark: SparkSession, port: Int = 0,
               "(mid-file, ACKed history) — refusing to boot on a damaged ledger", e)
       }
     }
-    if (parsed.lastOption.contains(None) && nonEmpty.nonEmpty) {
+    if (parsed.lastOption.contains(None) && nonEmpty.nonEmpty)
       // Truncate the torn tail so the appended log stays line-parseable.
-      // Stage the kept lines in a temp file, fsync, and atomically rename
-      // over the log (the ReplayLog.writeManifest pattern): an in-place
-      // rewrite would destroy ACKed history if this process died
-      // mid-write, and the next boot would refuse to start on what it
-      // reads as mid-file corruption.
-      val keep = lines.take(nonEmpty.last._2)
-      val tmp = java.io.File.createTempFile("changelog-", ".tmp", f.getParentFile)
-      try {
-        val out = new java.io.FileOutputStream(tmp)
-        try {
-          val w = new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8)
-          keep.foreach { l => w.write(l); w.write("\n") }
-          w.flush()
-          out.getFD.sync() // the rename must not publish an unflushed tail
-        } finally out.close()
-        java.nio.file.Files.move(tmp.toPath, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case t: Throwable =>
-          // The boot still fails (correct — the log is torn and could
-          // not be repaired), but don't leave staged temp debris to
-          // accumulate across a crash-looping service.
-          tmp.delete()
-          throw t
-      }
-    }
+      // The kept lines are staged, fsynced and renamed over the log
+      // atomically: an in-place rewrite would destroy ACKed history if
+      // this process died mid-write, and the next boot would refuse to
+      // start on what it reads as mid-file corruption. A failed repair
+      // still fails the boot, and leaves no staged temp behind.
+      graft.DurableFile.replace(f, lines.take(nonEmpty.last._2))
     val fresh = parsed.flatten.filter { case (_, idem) =>
       idem.forall(seenIdem.add) // first occurrence per key wins
     }

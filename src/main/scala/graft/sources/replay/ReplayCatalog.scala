@@ -125,7 +125,7 @@ class ReplayCatalog extends TableCatalog with SupportsNamespaces {
         s"cannot create table ${ident.name()}: $dir exists and is not empty")
     if (!dir.isDirectory && !dir.mkdir())
       throw new IllegalStateException(s"cannot create $dir")
-    ReplayLog.writeAtomic(dir.getPath, ReplayLog.ManifestName,
+    graft.DurableFile.replace(new File(dir, ReplayLog.ManifestName),
       Seq(ReplayLog.committedHeader(System.currentTimeMillis())))
     loadTable(ident)
   }

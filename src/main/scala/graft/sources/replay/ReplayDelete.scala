@@ -59,10 +59,6 @@ private[replay] object ReplayDelete {
     }
   }
 
-  /** One rewritten segment: staged temp + its new bounds. */
-  private final case class Rewrite(tmpPath: String, base: Long, last: Long,
-                                   minTs: Long, maxTs: Long)
-
   def run(spark: SparkSession, path: String, filters: Array[Filter]): Unit = {
     ReplayLog.snapshotCurrentIfUnversioned(path)
     val all = ReplayLog.segments(path)
@@ -75,7 +71,7 @@ private[replay] object ReplayDelete {
       filters.forall(segmentAllMatch(_, seg))).toSet
     val partial = affected.filterNot(fully)
 
-    val rewrites: Seq[Rewrite] =
+    val rewrites: Seq[ReplaySegmentCommit] =
       if (partial.isEmpty) Seq.empty
       else {
         val fs = filters // Filters are serializable case classes
@@ -95,7 +91,7 @@ private[replay] object ReplayDelete {
     def names(g: Long) =
       rewrites.map(r => ReplayLog.segmentName(r.base, r.last, r.minTs, r.maxTs, g))
     while (names(gen).exists(n => new File(dir, n).exists())) gen += 1
-    val rewritten: Seq[(String, Rewrite)] = names(gen).zip(rewrites)
+    val rewritten: Seq[(String, ReplaySegmentCommit)] = names(gen).zip(rewrites)
     // Same crash-safe order as ReplayCommit.publish: (1) rename staged
     // temps (unlisted = invisible), (2) atomic manifest replace = the
     // commit point, (3) snapshot. A crash before (2) leaves the
@@ -120,45 +116,22 @@ private[replay] object ReplayDelete {
     * truncates to the last complete frame — the same log-recovery rule
     * as every reader. */
   private def rewriteSegment(segPath: String,
-                             filters: Array[Filter]): Option[Rewrite] = {
-    val dir = new File(segPath).getParentFile
+                             filters: Array[Filter]): Option[ReplaySegmentCommit] = {
     val it = ReplayLog.readSegment(segPath, decodeValue = true)
-    var out: java.io.DataOutputStream = null
-    var tmp: File = null
-    var base = Long.MaxValue; var last = Long.MinValue
-    var minTs = Long.MaxValue; var maxTs = Long.MinValue
+    val segment = new ReplayLog.SegmentWriter(new File(segPath).getParentFile)
     try {
       while (it.hasNext) {
         val fr = it.next()
         lazy val wallet = new String(fr.wallet, java.nio.charset.StandardCharsets.UTF_8)
         val deleted = filters.forall(f =>
           ReplayFilters.frameMatches(f, fr, () => wallet))
-        if (!deleted) {
-          if (out == null) {
-            tmp = File.createTempFile("seg-", ".inprogress", dir)
-            out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(tmp), 1 << 16))
-          }
-          val value = graft.serde.ProtoWire.encodeDepositBytes(fr.wallet, fr.amount)
-          out.writeInt(8 + 8 + 2 + fr.wallet.length + value.length)
-          out.writeLong(fr.offset); out.writeLong(fr.tsUnix)
-          out.writeShort(fr.wallet.length)
-          out.write(fr.wallet); out.write(value)
-          if (fr.offset < base) base = fr.offset
-          if (fr.offset > last) last = fr.offset
-          if (fr.tsUnix < minTs) minTs = fr.tsUnix
-          if (fr.tsUnix > maxTs) maxTs = fr.tsUnix
-        }
+        if (!deleted) segment.write(fr.offset, fr.tsUnix, fr.wallet, fr.amount)
       }
-      if (out == null) None
-      else { out.close(); out = null; Some(Rewrite(tmp.getPath, base, last, minTs, maxTs)) }
+      segment.finish()
     } catch {
       case e: Throwable =>
-        if (tmp != null) tmp.delete()
+        segment.abort()
         throw e
-    } finally {
-      if (out != null) { try out.close() catch { case _: Throwable => () } }
-      it.close()
-    }
+    } finally it.close()
   }
 }

@@ -1,9 +1,13 @@
 package graft.sources.replay
 
-import java.io.{BufferedInputStream, DataInputStream, EOFException, File,
-  FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, EOFException, File, FileInputStream, FileOutputStream}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.DurableFile
+import graft.serde.ProtoWire
 
 /** The replay-log SEGMENT format — the engine's file-backed stand-in for
   * a Kafka topic partition's on-disk log (the reference's deposit topic,
@@ -64,9 +68,10 @@ object ReplayLog {
     else f"seg-$baseOffset%020d-$lastOffset%020d-$minTs%d-$maxTs%d-g$gen%d$Extension"
 
   /** The log's MANIFEST: one line per live segment file name, replaced
-    * atomically (tmp + POSIX rename) by every commit. It is what makes
-    * OVERWRITE crash-safe: readers resolve the live set through the
-    * manifest, so a layout swap is a single atomic file replacement —
+    * atomically (tmp + fsync + POSIX rename, [[graft.DurableFile]]) by
+    * every commit. It is what makes OVERWRITE crash-safe: readers
+    * resolve the live set through the manifest, so a layout swap is a
+    * single atomic file replacement —
     * old and new segments can coexist on disk through the commit window
     * without readers ever seeing a mix (the Iceberg/Delta snapshot
     * pattern scaled down to one file). Single-writer per log directory,
@@ -151,22 +156,6 @@ object ReplayLog {
     eligible.max
   }
 
-  /** Atomically (tmp + POSIX rename) publish `lines` as `dir/name`. */
-  private[replay] def writeAtomic(dir: String, name: String,
-                                  lines: Seq[String]): Unit = {
-    val tmp = File.createTempFile("manifest-", ".inprogress", new File(dir))
-    val w = new java.io.OutputStreamWriter(
-      new FileOutputStream(tmp), "UTF-8")
-    try lines.foreach { l => w.write(l); w.write("\n") } finally w.close()
-    val dest = new File(dir, name)
-    if (!tmp.renameTo(dest)) {
-      // POSIX rename replaces atomically; a refused rename on a local FS
-      // means something is genuinely wrong — fail the commit loudly.
-      tmp.delete()
-      throw new IllegalStateException(s"cannot publish $name in $dir")
-    }
-  }
-
   /** Publish `names` (+ the epoch ledger) as the new CURRENT manifest
     * and record the same content as the next numbered snapshot — the
     * single shared commit tail for the batch/streaming writers and
@@ -184,9 +173,9 @@ object ReplayLog {
                                       epochs: Map[String, Long]): Unit = {
     val lines = committedHeader(System.currentTimeMillis()) +:
       manifestLines(names, epochs)
-    writeAtomic(dir, ManifestName, lines)
+    DurableFile.replace(new File(dir, ManifestName), lines)
     val nextV = versions(dir).lastOption.getOrElse(0L) + 1
-    writeAtomic(dir, versionFileName(nextV), lines)
+    DurableFile.replace(new File(dir, versionFileName(nextV)), lines)
   }
 
   /** Heal the snapshot chain: if the CURRENT manifest's content is not
@@ -201,7 +190,8 @@ object ReplayLog {
     val vs = versions(dir)
     val latest = vs.lastOption.map(v => readLines(new File(dir, versionFileName(v))))
     if (!latest.contains(current))
-      writeAtomic(dir, versionFileName(vs.lastOption.getOrElse(0L) + 1), current)
+      DurableFile.replace(
+        new File(dir, versionFileName(vs.lastOption.getOrElse(0L) + 1)), current)
   }
 
   /** Segment names referenced by ANY retained snapshot (the set a
@@ -359,6 +349,56 @@ object ReplayLog {
     (before, segments(dir).size)
   }
 
+  /** Stages one segment: frames stream into a hidden `.inprogress` temp
+    * in `dir` while the segment's offset and ts bounds are tracked.
+    * [[finish]] forces the temp to disk before it reports it, so a
+    * manifest that later names the segment cannot name frames a power
+    * loss takes back. The one frame writer of the V2 write path and of
+    * DELETE's copy-on-write rewrite. */
+  final class SegmentWriter(dir: File) {
+    private var tmp: File = _
+    private var file: FileOutputStream = _
+    private var out: DataOutputStream = _
+    private var base = Long.MaxValue; private var last = Long.MinValue
+    private var minTs = Long.MaxValue; private var maxTs = Long.MinValue
+
+    /** Append one frame; its value is the proto `Deposit(wallet, amount)`. */
+    def write(offset: Long, ts: Long, wallet: Array[Byte], amount: Double): Unit = {
+      if (out == null) {
+        dir.mkdirs()
+        tmp = File.createTempFile("seg-", ".inprogress", dir)
+        file = new FileOutputStream(tmp)
+        out = new DataOutputStream(new BufferedOutputStream(file, 1 << 16))
+      }
+      val value = ProtoWire.encode(ProtoWire.Deposit,
+        new GenericInternalRow(Array[Any](UTF8String.fromBytes(wallet), amount)))
+      out.writeInt(8 + 8 + 2 + wallet.length + value.length)
+      out.writeLong(offset); out.writeLong(ts)
+      out.writeShort(wallet.length)
+      out.write(wallet); out.write(value)
+      if (offset < base) base = offset
+      if (offset > last) last = offset
+      if (ts < minTs) minTs = ts
+      if (ts > maxTs) maxTs = ts
+    }
+
+    /** The staged segment, on disk, or None when no frame was written. */
+    def finish(): Option[ReplaySegmentCommit] =
+      if (out == null) None
+      else {
+        out.flush(); file.getFD.sync(); out.close(); out = null
+        Some(ReplaySegmentCommit(tmp.getPath, base, last, minTs, maxTs))
+      }
+
+    /** Close and delete an unfinished temp. */
+    def abort(): Unit =
+      if (out != null) {
+        try out.close() catch { case _: Throwable => () }
+        out = null
+        tmp.delete()
+      }
+  }
+
   /** Count a segment's frames via the envelope-only reader — no key
     * copy, no proto decode. This is the executor-side leg of COUNT(*)
     * aggregate pushdown: per-segment counts fold in Spark's final
@@ -417,9 +457,8 @@ object ReplayLog {
             skipFully(keyLen) // wallet also rides in the proto value
             val value = new Array[Byte](valueLen)
             in.readFully(value)
-            val (wallet, amount) =
-              graft.serde.ProtoWire.decodeDepositBytes(value)
-            nextFrame = Frame(offset, ts, wallet, amount)
+            val d = ProtoWire.decode(ProtoWire.Deposit, value)
+            nextFrame = Frame(offset, ts, d.getUTF8String(0).getBytes, d.getDouble(1))
           } else {
             skipFully(keyLen + valueLen)
             nextFrame = Frame(offset, ts, null, 0.0)

@@ -184,7 +184,8 @@ final case class ReplaySegmentCommit(tmpPath: String, base: Long, last: Long,
 /** The commit protocol shared by the batch and streaming write legs. */
 private[replay] object ReplayCommit {
   /** Publication order makes the commit crash-safe at every cut point:
-    * (1) rename the staged temps to their segment names — still
+    * (1) rename the staged temps, which [[ReplayLog.SegmentWriter]]
+    * forced to disk before reporting them, to their segment names — still
     * invisible, the manifest doesn't list them; (2) REPLACE the manifest
     * atomically (append: prior ∪ new; overwrite: new only; the epoch
     * ledger rides in the same file, so a streaming epoch is recorded in
@@ -324,22 +325,13 @@ final class ReplayDataWriterFactory(path: String) extends DataWriterFactory {
     new ReplayDataWriter(path)
 }
 
-/** Streams frames to a hidden temp; bounds ride the commit message so
-  * the driver can name the segment. An empty partition commits nothing. */
+/** Streams frames to a hidden temp ([[ReplayLog.SegmentWriter]]); bounds
+  * ride the commit message so the driver can name the segment. An empty
+  * partition commits nothing. */
 final class ReplayDataWriter(path: String) extends DataWriter[InternalRow] {
-  private var tmp: java.io.File = _
-  private var out: java.io.DataOutputStream = _
-  private var base = Long.MaxValue; private var last = Long.MinValue
-  private var minTs = Long.MaxValue; private var maxTs = Long.MinValue
+  private val segment = new ReplayLog.SegmentWriter(new java.io.File(path))
 
   override def write(row: InternalRow): Unit = {
-    if (out == null) {
-      new java.io.File(path).mkdirs()
-      tmp = java.io.File.createTempFile("seg-", ".inprogress",
-        new java.io.File(path))
-      out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(tmp), 1 << 16))
-    }
     // The table schema is declared nullable only so V2 append accepts
     // parquet-sourced (declared-nullable) input; the wire format has no
     // null representation. Unguarded getLong would silently encode a null
@@ -353,26 +345,13 @@ final class ReplayDataWriter(path: String) extends DataWriter[InternalRow] {
             "offset/ts_unix/wallet_id/amount is null)")
       i += 1
     }
-    val offset = row.getLong(0); val ts = row.getLong(1)
-    val key = row.getUTF8String(2).getBytes
-    val value = graft.serde.ProtoWire.encodeDepositBytes(key, row.getDouble(3))
-    out.writeInt(8 + 8 + 2 + key.length + value.length)
-    out.writeLong(offset); out.writeLong(ts)
-    out.writeShort(key.length)
-    out.write(key); out.write(value)
-    if (offset < base) base = offset
-    if (offset > last) last = offset
-    if (ts < minTs) minTs = ts
-    if (ts > maxTs) maxTs = ts
+    segment.write(row.getLong(0), row.getLong(1),
+      row.getUTF8String(2).getBytes, row.getDouble(3))
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (out == null) ReplayEmptyCommit
-    else { out.close(); ReplaySegmentCommit(tmp.getPath, base, last, minTs, maxTs) }
-  }
-  override def abort(): Unit = {
-    if (out != null) { try out.close() catch { case _: Throwable => () }; tmp.delete() }
-  }
+  override def commit(): WriterCommitMessage =
+    segment.finish().getOrElse(ReplayEmptyCommit)
+  override def abort(): Unit = segment.abort()
   override def close(): Unit = ()
 }
 

@@ -10,14 +10,15 @@ import graft.model.{KeyedFlagEvent, TimedDeposit}
   * `deposit` → collector + detector (independent consumer groups, i.e. two
   * streaming queries on the same source), detector → topic `flag_wallet` →
   * flagger. Serde is the reference's protobuf wire format
-  * (depositaja.go:14-34), implemented natively in [[graft.serde.ProtoWire]]
-  * and applied here as codegen'd `proto_encode_*`/`proto_decode_*`
-  * expressions — byte-for-byte compatible with the Go producers/consumers
-  * (this container ships neither the Kafka connector nor spark-protobuf,
-  * so the topology resolves its source/sink format at runtime and is
-  * exercised on a cluster, while [[DepositStreams]] + MemoryStream cover
-  * the operator semantics and [[graft.serde.ProtoWire]] has golden-byte
-  * wire tests under test).
+  * (depositaja.go:14-34): each message is described once in
+  * [[graft.serde.ProtoWire]], and its codegen'd `proto_decode_deposit`,
+  * `proto_encode_flag_event` and `proto_decode_flag_event` functions,
+  * applied here, are derived from that description — byte-for-byte
+  * compatible with the Go producers/consumers. The build ships neither
+  * the Kafka connector nor spark-protobuf, so the topology resolves its
+  * source/sink format at runtime and is exercised on a cluster, while
+  * [[DepositStreams]] + MemoryStream cover the operator semantics and
+  * `ProtoWireSpec` pins the wire bytes against golden hex.
   */
 object KafkaTopology {
 

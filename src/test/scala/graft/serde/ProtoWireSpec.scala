@@ -1,5 +1,7 @@
 package graft.serde
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,6 +9,8 @@ import graft.SparkSpec
 import graft.model._
 import graft.streaming.DepositStreams
 import graft.TestDirs.tempDir
+import org.apache.spark.unsafe.types.UTF8String
+import ProtoWire.{decode, encode}
 
 /** O12 wire serde: golden-byte checks against the public proto3 wire
   * format (so the codec is byte-compatible with the reference's Go
@@ -18,52 +22,60 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
   private def hex(bytes: Array[Byte]): String =
     bytes.map(b => f"${b & 0xFF}%02x").mkString(" ")
 
+  // Rows of the five message descriptions, field i at ordinal i.
+  private def deposit(walletId: String, amount: Double): InternalRow =
+    InternalRow(UTF8String.fromString(walletId), amount)
+  private def history(walletId: String, deposits: Seq[InternalRow]): InternalRow =
+    InternalRow(UTF8String.fromString(walletId), new GenericArrayData(deposits.toArray[Any]))
+  private def counter(start: Long, received: Double): InternalRow = InternalRow(start, received)
+  private def flag(b: Boolean, start: Long): InternalRow = InternalRow(b, start)
+
   // -- golden wire bytes (hand-derived from the protobuf encoding spec) --
 
   test("Deposit golden bytes: field1 len-delimited utf8, field2 fixed64 LE") {
     // tag(1,LEN)=0x0A len=2 'w''1'  tag(2,I64)=0x11  2.5d LE = 00..04 40
-    assert(hex(ProtoWire.encode(Deposit("w1", 2.5))) ==
+    assert(hex(encode(ProtoWire.Deposit, deposit("w1", 2.5))) ==
       "0a 02 77 31 11 00 00 00 00 00 00 04 40")
   }
 
   test("FlagEvent golden bytes: bool varint + int64 varint") {
     // tag(1,VARINT)=0x08 true=01  tag(2,VARINT)=0x10  300 = AC 02
-    assert(hex(ProtoWire.encode(FlagEvent(flagRemoved = true, 300L))) ==
+    assert(hex(encode(ProtoWire.FlagEvent, flag(true, 300L))) ==
       "08 01 10 ac 02")
   }
 
   test("Counter golden bytes: int64 varint + double fixed64") {
     // 1700000000 varint = 80 e2 cf aa 06 ; 1.0d LE = 00.. f0 3f
-    assert(hex(ProtoWire.encode(Counter(1700000000L, 1.0))) ==
+    assert(hex(encode(ProtoWire.Counter, counter(1700000000L, 1.0))) ==
       "08 80 e2 cf aa 06 11 00 00 00 00 00 00 f0 3f")
   }
 
   test("DepositHistory golden bytes: repeated nested messages") {
-    val h = DepositHistory("w", Seq(Deposit("w", 1.0), Deposit("w", 0.0)))
+    val h = history("w", Seq(deposit("w", 1.0), deposit("w", 0.0)))
     // field1 "w"; field2: nested(wallet "w" + 1.0) then nested(wallet "w",
     // amount 0 omitted per proto3 implicit presence)
-    assert(hex(ProtoWire.encode(h)) ==
+    assert(hex(encode(ProtoWire.DepositHistory, h)) ==
       "0a 01 77 " +                                  // wallet_id = "w"
       "12 0c 0a 01 77 11 00 00 00 00 00 00 f0 3f " + // Deposit("w", 1.0)
       "12 03 0a 01 77")                              // Deposit("w", 0.0)
   }
 
   test("proto3 zero values are omitted: all-default messages encode empty") {
-    assert(ProtoWire.encode(Deposit("", 0.0)).isEmpty)
-    assert(ProtoWire.encode(DepositHistory("", Nil)).isEmpty)
-    assert(ProtoWire.encode(Counter(0L, 0.0)).isEmpty)
-    assert(ProtoWire.encode(FlagEvent(flagRemoved = false, 0L)).isEmpty)
-    assert(ProtoWire.encode(FlagValue(flagged = false, 0L)).isEmpty)
+    assert(encode(ProtoWire.Deposit, deposit("", 0.0)).isEmpty)
+    assert(encode(ProtoWire.DepositHistory, history("", Nil)).isEmpty)
+    assert(encode(ProtoWire.Counter, counter(0L, 0.0)).isEmpty)
+    assert(encode(ProtoWire.FlagEvent, flag(false, 0L)).isEmpty)
+    assert(encode(ProtoWire.FlagValue, flag(false, 0L)).isEmpty)
     // And decode of empty bytes yields the defaults back.
-    assert(ProtoWire.decodeDeposit(Array.empty) == Deposit("", 0.0))
-    assert(ProtoWire.decodeFlagValue(Array.empty) == FlagValue(false, 0L))
+    assert(decode(ProtoWire.Deposit, Array.empty) == deposit("", 0.0))
+    assert(decode(ProtoWire.FlagValue, Array.empty) == flag(false, 0L))
   }
 
   test("negative int64 encodes as 10-byte two's-complement varint") {
-    val bytes = ProtoWire.encode(Counter(-1L, 0.0))
+    val bytes = encode(ProtoWire.Counter, counter(-1L, 0.0))
     // 64 one-bits = nine 0xFF continuation bytes + final 0x01.
     assert(hex(bytes) == "08 ff ff ff ff ff ff ff ff ff 01")
-    assert(ProtoWire.decodeCounter(bytes) == Counter(-1L, 0.0))
+    assert(decode(ProtoWire.Counter, bytes) == counter(-1L, 0.0))
   }
 
   test("decoder skips unknown fields and accepts any field order") {
@@ -75,31 +87,32 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
       0x0A, 0x02, 0x77, 0x31,             // wallet_id = "w1"
       0x22, 0x03, 0x01, 0x02, 0x03        // field 4 len (unknown)
     ).map(_.toByte)
-    assert(ProtoWire.decodeDeposit(bytes) == Deposit("w1", 1.0))
+    assert(decode(ProtoWire.Deposit, bytes) == deposit("w1", 1.0))
   }
 
   test("round-trip all five message types over a value matrix") {
-    val deposits = Seq(Deposit("", 0.0), Deposit("w", -3.25),
-      Deposit("héllo-wörld", 1.7976931348623157e308), Deposit("x" * 300, 1e-300))
-    deposits.foreach(d => assert(ProtoWire.decodeDeposit(ProtoWire.encode(d)) == d))
+    val deposits = Seq(deposit("", 0.0), deposit("w", -3.25),
+      deposit("héllo-wörld", 1.7976931348623157e308), deposit("x" * 300, 1e-300))
+    deposits.foreach(d => assert(decode(ProtoWire.Deposit, encode(ProtoWire.Deposit, d)) == d))
     // NaN round-trips bit-exactly (equality fails on NaN; compare bits).
-    val nan = ProtoWire.decodeDeposit(ProtoWire.encode(Deposit("n", Double.NaN)))
-    assert(java.lang.Double.doubleToLongBits(nan.amount) ==
+    val nan = decode(ProtoWire.Deposit, encode(ProtoWire.Deposit, deposit("n", Double.NaN)))
+    assert(java.lang.Double.doubleToLongBits(nan.getDouble(1)) ==
       java.lang.Double.doubleToLongBits(Double.NaN))
-    val hists = Seq(DepositHistory("w", Nil),
-      DepositHistory("w", (1 to 50).map(i => Deposit("w", i * 0.5))))
-    hists.foreach(h => assert(ProtoWire.decodeDepositHistory(ProtoWire.encode(h)) == h))
-    val counters = Seq(Counter(0, 0), Counter(Long.MaxValue, 0.1),
-      Counter(Long.MinValue, -0.0))
+    val hists = Seq(history("w", Nil),
+      history("w", (1 to 50).map(i => deposit("w", i * 0.5))))
+    hists.foreach(h =>
+      assert(decode(ProtoWire.DepositHistory, encode(ProtoWire.DepositHistory, h)) == h))
+    val counters = Seq(counter(0, 0), counter(Long.MaxValue, 0.1),
+      counter(Long.MinValue, -0.0))
     counters.foreach { c =>
-      val back = ProtoWire.decodeCounter(ProtoWire.encode(c))
-      assert(back.rollingPeriodStartUnix == c.rollingPeriodStartUnix)
-      assert(java.lang.Double.doubleToLongBits(back.received) ==
-        java.lang.Double.doubleToLongBits(if (c.received == 0.0) 0.0 else c.received))
+      val back = decode(ProtoWire.Counter, encode(ProtoWire.Counter, c))
+      assert(back.getLong(0) == c.getLong(0))
+      assert(java.lang.Double.doubleToLongBits(back.getDouble(1)) ==
+        java.lang.Double.doubleToLongBits(if (c.getDouble(1) == 0.0) 0.0 else c.getDouble(1)))
     }
     for (b <- Seq(true, false); v <- Seq(0L, 1L, 127L, 128L, 1L << 40)) {
-      assert(ProtoWire.decodeFlagEvent(ProtoWire.encode(FlagEvent(b, v))) == FlagEvent(b, v))
-      assert(ProtoWire.decodeFlagValue(ProtoWire.encode(FlagValue(b, v))) == FlagValue(b, v))
+      assert(decode(ProtoWire.FlagEvent, encode(ProtoWire.FlagEvent, flag(b, v))) == flag(b, v))
+      assert(decode(ProtoWire.FlagValue, encode(ProtoWire.FlagValue, flag(b, v))) == flag(b, v))
     }
   }
 
@@ -161,7 +174,8 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
 
     // Wire shape: (proto Deposit bytes, broker ts, offset) — what the Kafka
     // source delivers; decode exactly as KafkaTopology.depositSource does.
-    val wire = deposits.map(d => (ProtoWire.encode(Deposit(d.walletId, d.amount)), d.tsUnix, d.seq))
+    val wire = deposits.map(d =>
+      (encode(ProtoWire.Deposit, deposit(d.walletId, d.amount)), d.tsUnix, d.seq))
 
     def run(in: Seq[TimedDeposit], name: String): Seq[KeyedFlagEvent] = {
       val input = MemoryStream[TimedDeposit]
@@ -203,7 +217,7 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
       .select(col("seq"), col("value")).as[(Long, Array[Byte])]
       .collect().toMap
     deposits.foreach { d =>
-      val expected = ProtoWire.encode(Deposit(d.walletId, d.amount))
+      val expected = encode(ProtoWire.Deposit, deposit(d.walletId, d.amount))
       assert(java.util.Arrays.equals(read(d.seq), expected),
         s"seq=${d.seq}: framed bytes differ from the reference wire encoding")
     }
