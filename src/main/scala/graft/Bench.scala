@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   * session ran on (SPARK_GRAFT_CPUS), since per-query medians taken at
   * different core counts do not compare. The full line (and
   * bench_full.json) also carries the "ledger": per query, the median Spark
-  * cost of its successful runs, as recorded by [[Bench.Ledger]].
+  * cost of its successful runs, as recorded by [[Bench.Ledger]], and under
+  * "min" their minimum — one slow warm-up run can set the median of a
+  * sub-100 ms query when there are only 3 runs.
   */
 object Bench {
   /** Wall time and Spark cost of each timed run. One listener counts the
@@ -104,9 +106,26 @@ object Bench {
 
     /** Per key of [[samples]], the median over the successful runs of
       * `query`; empty when none succeeded. */
-    def medians(query: String): Map[String, Double] = {
+    def medians(query: String): Map[String, Double] = summary(query)(median)
+
+    /** Per key of [[samples]], the minimum over the successful runs of
+      * `query`; empty when none succeeded. */
+    def minima(query: String): Map[String, Double] = summary(query)(_.min)
+
+    private def summary(query: String)(f: Seq[Double] => Double): Map[String, Double] = {
       val ss = samples(query)
-      if (ss.isEmpty) Map.empty else ss.head.keys.map(k => k -> median(ss.map(_(k)))).toMap
+      if (ss.isEmpty) Map.empty else ss.head.keys.map(k => k -> f(ss.map(_(k)))).toMap
+    }
+
+    /** The `"ledger"` JSON member: per query of `queries` with a successful
+      * run, the median of each of [[Ledger.Fields]] and, under `"min"`,
+      * their minimum. */
+    def json(queries: Seq[String]): String = {
+      def fields(m: Map[String, Double]) =
+        Fields.map(k => "\"" + k + "\":" + num(m(k))).mkString(",")
+      queries.filter(samples(_).nonEmpty).map { n =>
+        "\"" + n + "\":{" + fields(medians(n)) + ",\"min\":{" + fields(minima(n)) + "}}"
+      }.mkString("\"ledger\":{", ",", "}")
     }
   }
 
@@ -118,6 +137,10 @@ object Bench {
       * counter (counts, ms, ns) to its reported unit (counts, seconds). */
     val Fields = Seq("jobs", "stages", "tasks", "task_s", "cpu_s", "deser_s", "gc_s")
     private val Scale = Seq(1.0, 1.0, 1.0, 1e3, 1e9, 1e3, 1e3)
+    // Counts are whole unless a median of an even number of runs halves them.
+    private def num(x: Double): String =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+        .bigDecimal.stripTrailingZeros.toPlainString
   }
 
   private def median(xs: Seq[Double]): Double = {
@@ -260,15 +283,7 @@ object Bench {
         "\"" + k + "\":" + v
       }.mkString("{", ",", "}")
     }.mkString("\"forensics\":{", ",", "}")
-    // Counts are whole unless a median of an even number of runs halves them.
-    def num(x: Double): String =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.stripTrailingZeros.toPlainString
-    val ledgerJson = names.map(n => n -> ledger.medians(n)).filter(_._2.nonEmpty)
-      .map { case (n, m) =>
-        "\"" + n + "\":" + Ledger.Fields.map(k => "\"" + k + "\":" + num(m(k)))
-          .mkString("{", ",", "}")
-      }.mkString("\"ledger\":{", ",", "}")
+    val ledgerJson = ledger.json(names)
     val fullLine =
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs":$runs,"cpus":$cpus,${failedJson}"queries":$qs,$forensicsJson,$ledgerJson,$calib,"sf":"$sfDir"}"""
     println(fullLine)

@@ -9,6 +9,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Queries end with a total ORDER BY and round any reassociation-sensitive
   * double aggregate to a fixed scale, so Spark's partial-aggregation order
   * vs DuckDB's scan order cannot flip a bit (SURVEY §7.4.2).
+  *
+  * An oracle fragment that more than one query uses lives once, in the
+  * pack that owns the concept, as a `private[queries]` `val` or `def`
+  * (`DedupQueries.lshPairCtes`, `SimilarityQueries.cosineSql`,
+  * `CoreQueries.detectorFoldCte`); every query calls it. A fragment is
+  * shared only where its text is identical or differs by a value (a
+  * table, CTE or column name, a threshold, a bound); a one-off variant
+  * stays written out in its query. `SessionSetupGuardSpec` pins the
+  * largest fragments to one copy each.
   */
 final case class Q(
     name: String,

@@ -27,6 +27,35 @@ object CoreQueries {
       s"PARTITION BY wallet_id ORDER BY epoch_us(ts) " +
       s"RANGE BETWEEN ${windowSec * 1000000L} PRECEDING AND CURRENT ROW), 2) " +
       "AS win_sum FROM d)"
+  /** The detector replay's deposits `dd`, with event time in whole
+    * seconds (`tsec`). */
+  private[queries] val detectorDepositsCte =
+    "dd AS (SELECT user_id AS wallet_id, epoch_us(ts) // 1000000 AS tsec, " +
+      "event_id AS seq, value AS amount FROM events WHERE value > 0)"
+
+  /** Each wallet's deposits `d` numbered `rn` in (tsec, seq) order, with
+    * the wallet's deposit count `n`. */
+  private[queries] val detectorStepsCte =
+    "d AS (SELECT wallet_id, tsec, amount, " +
+      "ROW_NUMBER() OVER (PARTITION BY wallet_id ORDER BY tsec, seq) AS rn, " +
+      "COUNT(*) OVER (PARTITION BY wallet_id) AS n FROM dd)"
+
+  /** The detector state machine as the recursive CTE `s`: step rn folds
+    * each wallet's rn-th deposit of `d` into its window start `st`,
+    * running sum `rc` and flag-removed bit `fr`. `reset` is the sum a
+    * window expiry restarts from. */
+  private[queries] def detectorFoldCte(windowSec: Long, threshold: Double,
+                                       reset: String): String = {
+    val next = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
+    val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN $reset ELSE s.rc + d.amount END"
+    "s AS (SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
+      "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
+      "UNION ALL " +
+      s"SELECT s.wallet_id, CAST($next AS BIGINT), $recv, " +
+      s"NOT (($recv) >= $threshold AND ($next) <> 0), s.rn + 1, s.n " +
+      "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1)"
+  }
+
   private def checkSql(windowSec: Long, threshold: Double) =
     s"WITH $depositsCte, ${winCte(windowSec)}, " +
       "b AS (SELECT wallet_id, ROUND(SUM(amount), 2) AS balance FROM d GROUP BY wallet_id), " +
@@ -169,24 +198,11 @@ object CoreQueries {
     // history, no per-wallet array row, no recursion cap. Tuned
     // constants; the oracle replays the fold as an unbounded-depth
     // recursive CTE.
-    Q("o4_fold_exec", {
-      val w = TunedWindowSec; val th = TunedThreshold
-      val nxt = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $w THEN 0 ELSE s.st END"
-      val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $w THEN CAST(0.0 AS DOUBLE) ELSE s.rc + d.amount END"
-      "WITH RECURSIVE dd AS (SELECT user_id AS wallet_id, epoch_us(ts) // 1000000 AS tsec, " +
-        "event_id AS seq, value AS amount FROM events WHERE value > 0), " +
-        "d AS (SELECT wallet_id, tsec, amount, " +
-        "ROW_NUMBER() OVER (PARTITION BY wallet_id ORDER BY tsec, seq) AS rn, " +
-        "COUNT(*) OVER (PARTITION BY wallet_id) AS n FROM dd), " +
-        "s AS (SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
-        "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
-        "UNION ALL " +
-        s"SELECT s.wallet_id, CAST($nxt AS BIGINT), $recv, " +
-        s"NOT (($recv) >= $th AND ($nxt) <> 0), s.rn + 1, s.n " +
-        "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1) " +
-        "SELECT wallet_id, ROUND(rc, 2) AS win_sum, NOT fr AS above_threshold " +
-        "FROM s WHERE rn = n ORDER BY wallet_id"
-    }) { (s, d) =>
+    Q("o4_fold_exec",
+      s"WITH RECURSIVE $detectorDepositsCte, $detectorStepsCte, " +
+        detectorFoldCte(TunedWindowSec, TunedThreshold, "CAST(0.0 AS DOUBLE)") +
+        " SELECT wallet_id, ROUND(rc, 2) AS win_sum, NOT fr AS above_threshold " +
+        "FROM s WHERE rn = n ORDER BY wallet_id") { (s, d) =>
       val dep = Tables.events(s, d).filter(col("value") > 0)
         .select(col("user_id").as("wallet_id"),
           expr("unix_micros(ts) div 1000000").as("tsec"),

@@ -12,9 +12,16 @@ import graft.sources.Tables
   * exactly (integer-count ratios unrounded; ln-derived values on the 6-dp
   * grid). */
 object CorpusQueries {
+  import SimilarityQueries.{cosineSql, rankedCte, vectorNormsCte}
+  import TextQueries.toksCte
 
-  private val toksCte =
-    "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents)"
+  /** Distinct word 4-grams digested per doc, with the bench split flag
+    * (the contamination join's key table); reads `toks`. */
+  private[queries] def gram4Cte(name: String): String =
+    s"$name AS (SELECT doc_id, doc_id % 20 = 0 AS is_bench, substr(md5(ng), 1, 16) AS gh " +
+      "FROM (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
+      "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS ng " +
+      "FROM toks WHERE len(t) >= 4))"
   private val tokCte =
     "tok1 AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM documents)"
 
@@ -38,8 +45,18 @@ object CorpusQueries {
       "ROUND(SUM(q.w * c.w), 6) AS dot FROM wn q JOIN pr c USING (tok) " +
       "WHERE q.doc_id < 10 AND c.doc_id != q.doc_id GROUP BY 1, 2, 3, 4), " +
       "r AS (SELECT qid, nid, ROUND(dot / (nq * nc), 6) AS cosine FROM sc), " +
-      "t AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM r)"
+      rankedCte("t", "r")
+
+  /** Reciprocal-rank fusion of the sparse ranks `sr` of `sp` and the dense
+    * ranks `dr` of `dn`: 1/(60 + rank) summed per (qid, nid) as `f`,
+    * re-ranked as `rr`. */
+  private def rrfFuseCtes(sp: String, dn: String, f: String, rr: String): String =
+    s"$f AS (SELECT COALESCE(s.qid, d.qid) AS qid, COALESCE(s.nid, d.nid) AS nid, " +
+      "ROUND(COALESCE(CAST(1 AS DOUBLE) / (60 + s.sr), 0) " +
+      "+ COALESCE(CAST(1 AS DOUBLE) / (60 + d.dr), 0), 6) AS rrf " +
+      s"FROM $sp s FULL OUTER JOIN $dn d ON s.qid = d.qid AND s.nid = d.nid), " +
+      s"$rr AS (SELECT qid, nid, rrf, ROW_NUMBER() OVER " +
+      s"(PARTITION BY qid ORDER BY rrf DESC, nid) AS rank FROM $f)"
 
   // RRF fusion chain (shared by sim_hybrid_rrf and pipeline_rag_pack):
   // sparse top-20 (the chain above) FULL OUTER dense top-20, fused score
@@ -47,22 +64,31 @@ object CorpusQueries {
   private val hybridRrfCtes =
     s"$tokCte, $sparseRankChain, " +
       "sp AS (SELECT qid, nid, rank AS sr FROM t WHERE rank <= 20), " +
-      "e2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-      "n2 AS (SELECT vec_id, v, sqrt(list_sum(list_transform(range(1, len(v) + 1), " +
-      "i -> v[i] * v[i]))) AS nrm2 FROM e2), " +
+      s"${vectorNormsCte("e2", "n2", "nrm2")}, " +
       "q2 AS (SELECT vec_id AS qid, v AS qv, nrm2 AS qn FROM n2 WHERE vec_id < 10), " +
       "ds AS (SELECT qid, c.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-      "/ (qn * c.nrm2), 6) AS cosine FROM q2, n2 c WHERE c.vec_id != qid), " +
-      "dr_ AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM ds), " +
+      s"${cosineSql("qv", "c.v", "qn", "c.nrm2")} AS cosine FROM q2, n2 c WHERE c.vec_id != qid), " +
+      s"${rankedCte("dr_", "ds")}, " +
       "dn AS (SELECT qid, nid, rank AS dr FROM dr_ WHERE rank <= 20), " +
-      "f AS (SELECT COALESCE(s.qid, d.qid) AS qid, COALESCE(s.nid, d.nid) AS nid, " +
-      "ROUND(COALESCE(CAST(1 AS DOUBLE) / (60 + s.sr), 0) " +
-      "+ COALESCE(CAST(1 AS DOUBLE) / (60 + d.dr), 0), 6) AS rrf " +
-      "FROM sp s FULL OUTER JOIN dn d ON s.qid = d.qid AND s.nid = d.nid), " +
-      "rr AS (SELECT qid, nid, rrf, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY rrf DESC, nid) AS rank FROM f)"
+      rrfFuseCtes("sp", "dn", "f", "rr")
+
+  /** Bigram-LM holdout scoring (add-1 smoothing, train = doc_id % 5 !=
+    * 0): mean −ln p per holdout doc. */
+  private val bigramNllSql =
+    s"WITH $toksCte, " +
+      "bg AS (SELECT doc_id, " +
+      "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS big, " +
+      "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i])) AS w1 " +
+      "FROM toks WHERE len(t) >= 2), " +
+      "train AS (SELECT big, w1, COUNT(*)::BIGINT AS c2 FROM bg WHERE doc_id % 5 != 0 GROUP BY 1, 2), " +
+      "uni AS (SELECT w1, SUM(c2)::BIGINT AS c1 FROM train GROUP BY 1), " +
+      "v AS (SELECT COUNT(DISTINCT w1)::BIGINT AS vsize FROM bg), " +
+      "hold AS (SELECT doc_id, big, w1 FROM bg WHERE doc_id % 5 = 0) " +
+      "SELECT h.doc_id, " +
+      "ROUND(AVG(-ln((COALESCE(t.c2, 0) + 1) / (COALESCE(u.c1, 0) + vsize)::DOUBLE)), 6) AS nll, " +
+      "COUNT(*) AS n_bigrams " +
+      "FROM hold h LEFT JOIN train t ON h.big = t.big AND h.w1 = t.w1 " +
+      "LEFT JOIN uni u ON h.w1 = u.w1, v GROUP BY 1 ORDER BY 1"
 
   /** The fused RRF ranking `(qid, nid, rrf, rank)` — the Spark mirror of
     * [[hybridRrfCtes]]'s `rr`. */
@@ -117,11 +143,7 @@ object CorpusQueries {
     // with the held-out set (doc_id % 20 = 0 stands in for the eval suite).
     // 4 words in this tiny synthetic vocabulary ~ an 8-13-gram in real text.
     Q("contamination_ngram",
-      s"WITH $toksCte, " +
-        "g AS (SELECT doc_id, doc_id % 20 = 0 AS is_bench, substr(md5(ng), 1, 16) AS gh " +
-        "FROM (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS ng " +
-        "FROM toks WHERE len(t) >= 4)), " +
+      s"WITH $toksCte, ${gram4Cte("g")}, " +
         "b AS (SELECT doc_id AS bench_id, gh FROM g WHERE is_bench), " +
         "tr AS (SELECT doc_id AS train_id, gh FROM g WHERE NOT is_bench) " +
         "SELECT train_id, bench_id, COUNT(DISTINCT gh) AS n_shared " +
@@ -210,20 +232,7 @@ object CorpusQueries {
     // aggregations, scoring is a (bigram, w1)-keyed join. Mean −ln p per
     // holdout doc, the step up from text_surprisal's unigram fluency proxy.
     Q("corpus_bigram_nll",
-      s"WITH $toksCte, " +
-        "bg AS (SELECT doc_id, " +
-        "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS big, " +
-        "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i])) AS w1 " +
-        "FROM toks WHERE len(t) >= 2), " +
-        "train AS (SELECT big, w1, COUNT(*)::BIGINT AS c2 FROM bg WHERE doc_id % 5 != 0 GROUP BY 1, 2), " +
-        "uni AS (SELECT w1, SUM(c2)::BIGINT AS c1 FROM train GROUP BY 1), " +
-        "v AS (SELECT COUNT(DISTINCT w1)::BIGINT AS vsize FROM bg), " +
-        "hold AS (SELECT doc_id, big, w1 FROM bg WHERE doc_id % 5 = 0) " +
-        "SELECT h.doc_id, " +
-        "ROUND(AVG(-ln((COALESCE(t.c2, 0) + 1) / (COALESCE(u.c1, 0) + vsize)::DOUBLE)), 6) AS nll, " +
-        "COUNT(*) AS n_bigrams " +
-        "FROM hold h LEFT JOIN train t ON h.big = t.big AND h.w1 = t.w1 " +
-        "LEFT JOIN uni u ON h.w1 = u.w1, v GROUP BY 1 ORDER BY 1") { (s, d) =>
+      bigramNllSql) { (s, d) =>
       Corpus.bigramNll(Tables.documents(s, d), holdoutMod = 5)
         .orderBy(col("doc_id"))
     },
@@ -236,20 +245,7 @@ object CorpusQueries {
     // result-invisible, the dedup/IVF served-variant contract applied to
     // a language model.
     Q("corpus_nll_served",
-      s"WITH $toksCte, " +
-        "bg AS (SELECT doc_id, " +
-        "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS big, " +
-        "unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i])) AS w1 " +
-        "FROM toks WHERE len(t) >= 2), " +
-        "train AS (SELECT big, w1, COUNT(*)::BIGINT AS c2 FROM bg WHERE doc_id % 5 != 0 GROUP BY 1, 2), " +
-        "uni AS (SELECT w1, SUM(c2)::BIGINT AS c1 FROM train GROUP BY 1), " +
-        "v AS (SELECT COUNT(DISTINCT w1)::BIGINT AS vsize FROM bg), " +
-        "hold AS (SELECT doc_id, big, w1 FROM bg WHERE doc_id % 5 = 0) " +
-        "SELECT h.doc_id, " +
-        "ROUND(AVG(-ln((COALESCE(t.c2, 0) + 1) / (COALESCE(u.c1, 0) + vsize)::DOUBLE)), 6) AS nll, " +
-        "COUNT(*) AS n_bigrams " +
-        "FROM hold h LEFT JOIN train t ON h.big = t.big AND h.w1 = t.w1 " +
-        "LEFT JOIN uni u ON h.w1 = u.w1, v GROUP BY 1 ORDER BY 1") { (s, d) =>
+      bigramNllSql) { (s, d) =>
       Corpus.bigramNllServed(Tables.documents(s, d), holdoutMod = 5)
         .orderBy(col("doc_id"))
     },
@@ -535,12 +531,7 @@ object CorpusQueries {
       s", $tokCte, $sparseRankChain, " +
       "hsp AS (SELECT qid, nid, rank AS sr FROM t WHERE rank <= 20), " +
       "hdn AS (SELECT qid, nid, rank AS dr FROM r2 WHERE rank <= 20), " +
-      "hf AS (SELECT COALESCE(s.qid, d.qid) AS qid, COALESCE(s.nid, d.nid) AS nid, " +
-      "ROUND(COALESCE(CAST(1 AS DOUBLE) / (60 + s.sr), 0) " +
-      "+ COALESCE(CAST(1 AS DOUBLE) / (60 + d.dr), 0), 6) AS rrf " +
-      "FROM hsp s FULL OUTER JOIN hdn d ON s.qid = d.qid AND s.nid = d.nid), " +
-      "hr AS (SELECT qid, nid, rrf, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY rrf DESC, nid) AS rank FROM hf) " +
+      s"${rrfFuseCtes("hsp", "hdn", "hf", "hr")} " +
       "SELECT qid, rank, nid, rrf FROM hr WHERE rank <= 10 ORDER BY qid, rank"
 
   /** Oracle for the STREAMING ingest scorer: the served chain over the

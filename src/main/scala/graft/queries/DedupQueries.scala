@@ -15,13 +15,65 @@ import graft.sources.Tables
   * generation and verification agree exactly across engines.
   */
 object DedupQueries {
+  import SimilarityQueries.{cosineSql, dotSql, embCte, signBucketSql}
 
   /** Shared oracle CTEs: whitespace tokens → distinct 3-gram shingles. */
   private val shinglesCte =
-    "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents), " +
+    s"${TextQueries.toksCte}, " +
       "sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN " +
       "list_distinct(list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) " +
       "ELSE CAST([] AS VARCHAR[]) END AS s FROM toks)"
+
+  /** The MinHash signature `sig` (k = 12 keyed-md5 minima) of each
+    * shingle set in `from`. */
+  private def sigCte(from: String = "sh"): String =
+    "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
+      "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig " +
+      s"FROM $from)"
+
+  /** Shingles → signatures → 4 × 3 band digests `bandrows` → the banded
+    * candidate self-join `cand` (columns `a`, `b`): every pair sharing a
+    * band digest that `pair` admits. */
+  private def lshCandCtes(a: String, b: String, pair: String): String =
+    s"$shinglesCte, ${sigCte()}, " +
+      "bandrows AS (SELECT doc_id, j, md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh " +
+      "FROM sig, range(0, 4) r(j)), " +
+      s"cand AS (SELECT DISTINCT a.doc_id AS $a, b.doc_id AS $b FROM bandrows a " +
+      s"JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND $pair)"
+
+  /** The symmetric candidate pairs (id_a < id_b) of the k12/b4/r3 chain
+    * of Dedup.lshVerifiedPairs. */
+  private[queries] val lshPairCtes = lshCandCtes("id_a", "id_b", "a.doc_id < b.doc_id")
+
+  /** Exact Jaccard of the shingle sets of aliases `a` and `b` (raw
+    * integer-count ratio — bit-identical in any engine, no rounding). */
+  private[queries] def jaccardSql(a: String, b: String): String =
+    s"len(list_intersect($a.s, $b.s))::DOUBLE / len(list_distinct(list_concat($a.s, $b.s)))"
+
+  /** Each candidate pair joined to its two shingle sets `sa` and `sb`. */
+  private[queries] def candShinglesSql(a: String, b: String): String =
+    s"FROM cand JOIN sh sa ON sa.doc_id = $a JOIN sh sb ON sb.doc_id = $b"
+
+  /** The verified-pair table `v`: each candidate pair with its Jaccard. */
+  private def jaccardCte(a: String, b: String): String =
+    s"v AS (SELECT $a, $b, ${jaccardSql("sa", "sb")} AS jaccard ${candShinglesSql(a, b)})"
+
+  /** Shingles digested to 16-hex md5 prefixes (`hsh`, mirroring the Spark
+    * pipeline's fixed-width set elements) with each doc's length (`dd`). */
+  private val digestedShinglesCtes =
+    "hsh AS (SELECT doc_id, list_transform(s, x -> substr(md5(x), 1, 16)) AS s FROM sh), " +
+      "dd AS (SELECT hsh.doc_id, hsh.s, documents.n_chars FROM hsh JOIN documents USING (doc_id))"
+
+  /** Near-dup clustering over [[lshPairCtes]]: the verified pairs `p`
+    * (Jaccard >= 0.5) as an undirected edge list `e`, and `reach`, the
+    * recursive reachability that labels each component by its min id. */
+  private val componentCtes =
+    s"p AS (SELECT id_a, id_b ${candShinglesSql("id_a", "id_b")} " +
+      s"WHERE ${jaccardSql("sa", "sb")} >= 0.5), " +
+      "e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p), " +
+      "nodes AS (SELECT DISTINCT src AS id FROM e), " +
+      "reach AS (SELECT id AS a, id AS b FROM nodes " +
+      "UNION SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src)"
 
   /** Shared oracle for BOTH incremental-dedup paths (inline and served
     * from the persisted index — the artifact is transparent to results):
@@ -34,17 +86,8 @@ object DedupQueries {
     * (the same one-source-of-truth rule as PipelineQueries' shared
     * cleaning-stage CTEs). */
   private[queries] val incrementalCtes =
-    s"$shinglesCte, " +
-      "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-      "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-      "bandrows AS (SELECT doc_id, j, " +
-      "md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh FROM sig, range(0, 4) r(j)), " +
-      "cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS dup_of FROM bandrows a " +
-      "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh " +
-      "AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0), " +
-      "v AS (SELECT new_id, dup_of, len(list_intersect(sa.s, sb.s))::DOUBLE / " +
-      "len(list_distinct(list_concat(sa.s, sb.s))) AS jaccard " +
-      "FROM cand JOIN sh sa ON sa.doc_id = new_id JOIN sh sb ON sb.doc_id = dup_of)"
+    lshCandCtes("new_id", "dup_of", "a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0") + ", " +
+      jaccardCte("new_id", "dup_of")
 
   private[queries] val incrementalSql =
     s"WITH $incrementalCtes " +
@@ -144,16 +187,7 @@ object DedupQueries {
     // verified at tau=0.5. The oracle replays the identical pipeline: same
     // keyed-md5 hash family, same banding, same verify.
     Q("dedup_minhash_lsh",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, " +
-        "md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
-        "v AS (SELECT id_a, id_b, len(list_intersect(sa.s, sb.s))::DOUBLE / " +
-        "len(list_distinct(list_concat(sa.s, sb.s))) AS jaccard " +
-        "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b) " +
+      s"WITH $lshPairCtes, ${jaccardCte("id_a", "id_b")} " +
         "SELECT id_a, id_b, jaccard FROM v WHERE jaccard >= 0.5 ORDER BY id_a, id_b") {
       (s, d) =>
         Dedup.minhashLshPairs(Tables.documents(s, d), k = 12, bands = 4,
@@ -175,16 +209,7 @@ object DedupQueries {
     // from the τ list), so an over-aggressive threshold reads as an
     // explicit zero, not a missing row.
     Q("dedup_threshold_sweep",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, " +
-        "md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
-        "v AS (SELECT id_a, id_b, len(list_intersect(sa.s, sb.s))::DOUBLE / " +
-        "len(list_distinct(list_concat(sa.s, sb.s))) AS jaccard " +
-        "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b), " +
+      s"WITH $lshPairCtes, ${jaccardCte("id_a", "id_b")}, " +
         "p AS (SELECT * FROM v WHERE jaccard >= 0.5), " +
         "tv AS (SELECT unnest([0.5, 0.9, 0.95, 0.97, 0.99]::DOUBLE[]) AS tau) " +
         "SELECT tau, CAST(COUNT(p.id_a) AS BIGINT) AS n_pairs, " +
@@ -211,10 +236,7 @@ object DedupQueries {
     // (minhash_sigs; the live signing representative stays
     // dedup_minhash_lsh).
     Q("dedup_band_sweep",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig " +
-        "FROM sh WHERE len(s) > 0), " +
+      s"WITH $shinglesCte, ${sigCte("sh WHERE len(s) > 0")}, " +
         "cfg AS (SELECT unnest([2, 3, 4, 6]) AS nb, unnest([6, 4, 3, 2]) AS rw), " +
         "br AS (SELECT doc_id, nb, rw, j, " +
         "md5(array_to_string(sig[(j*rw+1):(j*rw+rw)], '|')) AS bh " +
@@ -224,7 +246,7 @@ object DedupQueries {
         "AND a.doc_id < b.doc_id), " +
         "v AS (SELECT nb, rw, COALESCE(len(list_intersect(sa.s, sb.s))::DOUBLE / " +
         "NULLIF(len(list_distinct(list_concat(sa.s, sb.s))), 0), 0) AS jac " +
-        "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b) " +
+        s"${candShinglesSql("id_a", "id_b")}) " +
         "SELECT CAST(nb AS BIGINT) AS bands, CAST(rw AS BIGINT) AS rows_per_band, " +
         "CAST(COUNT(*) AS BIGINT) AS n_candidates, " +
         "CAST(SUM(CASE WHEN jac >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_verified " +
@@ -240,14 +262,8 @@ object DedupQueries {
     // 10). The Spark plan generates candidates with the explode-bucket trick
     // (equi join); the oracle's theta join yields the same pair set.
     Q("dedup_ngram_jaccard",
-      s"WITH $shinglesCte, " +
-        // Shingles are digested to 16-hex md5 prefixes (mirrors the Spark
-        // pipeline's cheap fixed-width set elements).
-        "hsh AS (SELECT doc_id, list_transform(s, x -> substr(md5(x), 1, 16)) AS s FROM sh), " +
-        "dd AS (SELECT hsh.doc_id, hsh.s, documents.n_chars FROM hsh JOIN documents USING (doc_id)), " +
-        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-        "len(list_intersect(a.s, b.s))::DOUBLE / " +
-        "len(list_distinct(list_concat(a.s, b.s))) AS jaccard " +
+      s"WITH $shinglesCte, $digestedShinglesCtes, " +
+        s"p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, ${jaccardSql("a", "b")} AS jaccard " +
         "FROM dd a JOIN dd b ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 10) " +
         "SELECT id_a, id_b, jaccard FROM p WHERE jaccard >= 0.3 ORDER BY id_a, id_b") {
       (s, d) =>
@@ -268,24 +284,13 @@ object DedupQueries {
     // itself length-banded — recall is measured against the pairs the
     // exact pipeline can see, the honest denominator at any scale.)
     Q("dedup_lsh_recall",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, " +
-        "md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
-        "lshv AS (SELECT id_a, id_b FROM (SELECT id_a, id_b, " +
-        "len(list_intersect(sa.s, sb.s))::DOUBLE / " +
-        "len(list_distinct(list_concat(sa.s, sb.s))) AS j " +
-        "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b) " +
-        "WHERE j >= 0.5), " +
-        "hsh AS (SELECT doc_id, list_transform(s, x -> substr(md5(x), 1, 16)) AS s FROM sh), " +
-        "dd AS (SELECT hsh.doc_id, hsh.s, documents.n_chars FROM hsh JOIN documents USING (doc_id)), " +
+      s"WITH $lshPairCtes, " +
+        s"lshv AS (SELECT id_a, id_b FROM (SELECT id_a, id_b, ${jaccardSql("sa", "sb")} AS j " +
+        s"${candShinglesSql("id_a", "id_b")}) WHERE j >= 0.5), " +
+        s"$digestedShinglesCtes, " +
         "ex AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM dd a JOIN dd b " +
         "ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 10 " +
-        "AND len(list_intersect(a.s, b.s))::DOUBLE / " +
-        "len(list_distinct(list_concat(a.s, b.s))) >= 0.5) " +
+        s"AND ${jaccardSql("a", "b")} >= 0.5) " +
         "SELECT COUNT(*) AS n_exact, CAST(COUNT(l.id_a) AS BIGINT) AS n_caught, " +
         "ROUND(COUNT(l.id_a) / COUNT(*)::DOUBLE, 4) AS recall " +
         "FROM ex LEFT JOIN lshv l ON l.id_a = ex.id_a AND l.id_b = ex.id_b") {
@@ -315,7 +320,7 @@ object DedupQueries {
         "ELSE CAST([] AS VARCHAR[]) END AS s FROM nrm), " +
         "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
         "CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN NULL " +
-        "ELSE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(list_concat(a.s, b.s))) END AS jaccard " +
+        s"ELSE ${jaccardSql("a", "b")} END AS jaccard " +
         "FROM cs a JOIN cs b ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 10) " +
         "SELECT id_a, id_b, jaccard FROM p WHERE jaccard >= 0.4 ORDER BY id_a, id_b") {
       (s, d) =>
@@ -327,16 +332,10 @@ object DedupQueries {
     // MinHash similarity estimation: jaccard from signature agreement alone
     // (the sub-linear path), reported next to the exact value.
     Q("dedup_minhash_estimate",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh " +
-        "FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
+      s"WITH $lshPairCtes, " +
         "v AS (SELECT id_a, id_b, " +
         "len(list_filter(list_transform(range(1, 13), i -> sa.sig[i] = sb.sig[i]), x -> x))::DOUBLE / 12 AS est_jaccard, " +
-        "len(list_intersect(sa.s, sb.s))::DOUBLE / len(list_distinct(list_concat(sa.s, sb.s))) AS jaccard " +
+        s"${jaccardSql("sa", "sb")} AS jaccard " +
         "FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b) " +
         "SELECT id_a, id_b, est_jaccard, jaccard FROM v WHERE jaccard >= 0.5 ORDER BY id_a, id_b") {
       (s, d) =>
@@ -370,20 +369,7 @@ object DedupQueries {
     // Connected components over the MinHash near-dup graph: canonical
     // keeper per duplicate cluster (handles chained pairs a~b~c).
     Q("dedup_components",
-      s"WITH RECURSIVE $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh " +
-        "FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
-        "p AS (SELECT id_a, id_b FROM cand JOIN sh sa ON sa.doc_id = id_a " +
-        "JOIN sh sb ON sb.doc_id = id_b " +
-        "WHERE len(list_intersect(sa.s, sb.s))::DOUBLE / len(list_distinct(list_concat(sa.s, sb.s))) >= 0.5), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id AS a, id AS b FROM nodes " +
-        "UNION SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src) " +
+      s"WITH RECURSIVE $lshPairCtes, $componentCtes " +
         "SELECT a AS doc_id, MIN(b) AS comp FROM reach GROUP BY a ORDER BY doc_id") {
       (s, d) =>
         // Pairs come from the persisted edge-list artifact (built once
@@ -403,35 +389,16 @@ object DedupQueries {
     // the oracle replays LSH → verify → reachability → the same quality
     // arithmetic (bit-identical doubles — the pipeline_quality_gate
     // precedent) → FIRST_VALUE per component.
-    Q("dedup_canonical", {
-      val enPat = langMarkers.toMap.apply("en")
-      s"WITH RECURSIVE $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh " +
-        "FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
-        "p AS (SELECT id_a, id_b FROM cand JOIN sh sa ON sa.doc_id = id_a " +
-        "JOIN sh sb ON sb.doc_id = id_b " +
-        "WHERE len(list_intersect(sa.s, sb.s))::DOUBLE / len(list_distinct(list_concat(sa.s, sb.s))) >= 0.5), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id AS a, id AS b FROM nodes " +
-        "UNION SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src), " +
+    Q("dedup_canonical",
+      s"WITH RECURSIVE $lshPairCtes, $componentCtes, " +
         "comp AS (SELECT a AS doc_id, MIN(b) AS comp FROM reach GROUP BY a), " +
-        "q AS (SELECT doc_id, " +
-        s"0.4 * (len(regexp_extract_all(lower(text), '$enPat'))::BIGINT " +
-        "/ len(string_split_regex(trim(text), '\\s+'))::DOUBLE) " +
-        "+ 0.3 * LEAST(1.0, len(string_split_regex(trim(text), '\\s+'))::BIGINT / 100.0) " +
-        "+ 0.3 * (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT " +
-        "/ length(text)::DOUBLE) AS quality FROM documents WHERE length(text) > 0), " +
+        s"q AS (SELECT doc_id, ${TextQueries.qualityTextSql} AS quality " +
+        "FROM documents WHERE length(text) > 0), " +
         "ranked AS (SELECT c.doc_id, c.comp, " +
         "ROW_NUMBER() OVER (PARTITION BY c.comp ORDER BY q.quality DESC, c.doc_id) AS rn, " +
         "FIRST_VALUE(c.doc_id) OVER (PARTITION BY c.comp ORDER BY q.quality DESC, c.doc_id) AS keep_id " +
         "FROM comp c JOIN q USING (doc_id)) " +
-        "SELECT doc_id, comp, keep_id FROM ranked WHERE rn > 1 ORDER BY doc_id"
-    }) { (s, d) =>
+        "SELECT doc_id, comp, keep_id FROM ranked WHERE rn > 1 ORDER BY doc_id") { (s, d) =>
       val enPat = langMarkers.toMap.apply("en")
       val docs = Tables.documents(s, d)
       val pairs = Dedup.lshVerifiedPairs(docs, k = 12, bands = 4, rows = 3,
@@ -518,18 +485,13 @@ object DedupQueries {
     },
 
     // Embedding-cosine near-dup over sign-bucket LSH candidates.
-    Q("dedup_embedding_cosine", {
-      val bucket = (1 to 4).map(i =>
-        s"(CASE WHEN v[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-        s"eb AS (SELECT vec_id, v, $bucket AS bucket, " +
-        "sqrt(list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]))) AS nrm FROM e), " +
+    Q("dedup_embedding_cosine",
+      s"WITH ${embCte("e")}, " +
+        s"eb AS (SELECT vec_id, v, $signBucketSql AS bucket, sqrt(${dotSql("v", "v")}) AS nrm FROM e), " +
         "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-        "ROUND(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) " +
-        "/ (a.nrm * b.nrm), 6) AS cosine " +
+        s"${cosineSql("a.v", "b.v", "a.nrm", "b.nrm")} AS cosine " +
         "FROM eb a JOIN eb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) " +
-        "SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3 ORDER BY id_a, id_b"
-    }) { (s, d) =>
+        "SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3 ORDER BY id_a, id_b") { (s, d) =>
       Dedup.embeddingNearDupPairs(Tables.embeddings(s, d), threshold = 0.3,
           bucketBits = 4)
         .orderBy(col("id_a"), col("id_b"))
@@ -539,7 +501,7 @@ object DedupQueries {
     // with a lower-id cluster-mate at cosine >= 0.3. The oracle replays
     // the identical assignment (grid-rounded L2², cid tie-break).
     Q("dedup_semantic",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+      s"WITH ${embCte("e")}, " +
         "c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8), " +
         "dd AS (SELECT e.vec_id, e.v, c.cid, " +
         "ROUND(list_sum(list_transform(range(1, len(e.v)+1), " +
@@ -629,18 +591,11 @@ object DedupQueries {
     // both-direction containment verify, raw integer-count ratios (no
     // rounding boundary).
     Q("dedup_containment",
-      s"WITH $shinglesCte, " +
-        "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-        "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-        "bandrows AS (SELECT doc_id, j, " +
-        "md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh FROM sig, range(0, 4) r(j)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-        "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id), " +
+      s"WITH $lshPairCtes, " +
         "v AS (SELECT id_a, id_b, " +
         "len(list_intersect(sa.s, sb.s))::DOUBLE / len(sa.s) AS cont_ab, " +
         "len(list_intersect(sa.s, sb.s))::DOUBLE / len(sb.s) AS cont_ba, " +
-        "len(list_intersect(sa.s, sb.s))::DOUBLE / len(list_distinct(list_concat(sa.s, sb.s))) AS jaccard " +
-        "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b " +
+        s"${jaccardSql("sa", "sb")} AS jaccard ${candShinglesSql("id_a", "id_b")} " +
         "WHERE len(sa.s) > 0 AND len(sb.s) > 0) " +
         "SELECT id_a, id_b, cont_ab, cont_ba, jaccard FROM v " +
         "WHERE GREATEST(cont_ab, cont_ba) >= 0.7 ORDER BY id_a, id_b") { (s, d) =>

@@ -46,6 +46,17 @@ object GraphQueries {
     // partitions per run, same finding as mm_video_dedup's catalog.)
   }
 
+  /** Oracle side of [[coEdges]]: the distinct (order, part) pairs `lp`
+    * shipped from `from` to `to`, and their co-occurrence edges `ed`. */
+  private def coEdgesCtes(from: String, to: String): String =
+    "lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
+      s"WHERE l_shipdate BETWEEN DATE '$from' AND DATE '$to'), " +
+      "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
+      "JOIN lp b ON a.o = b.o AND a.p <> b.p)"
+
+  /** Each edge source's out-degree. */
+  private val degCte = "deg AS (SELECT src, COUNT(*) AS deg FROM ed GROUP BY 1)"
+
   val all: Seq[Q] = Seq(
 
     // PageRank, 3 unrolled fixed-point iterations over one half-year's
@@ -63,24 +74,17 @@ object GraphQueries {
     // boundary, so the fixed point is engine-portable. Output: top-100
     // parts by rank (ranks identical ⇒ (r DESC, node) is a total,
     // portable order).
-    Q("q_pagerank",
-      "WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
-        "WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-06-30'), " +
-        "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
-        "JOIN lp b ON a.o = b.o AND a.p <> b.p), " +
-        "deg AS (SELECT src, COUNT(*) AS deg FROM ed GROUP BY 1), " +
+    Q("q_pagerank", {
+      val iters = (1 to 3).map(t =>
+        s"r$t AS (SELECT e.dst AS node, ROUND(0.15 / (SELECT n FROM n) + " +
+          "0.85 * SUM(r.r / d.deg), 9) AS r FROM ed e " +
+          s"JOIN r${t - 1} r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1)")
+      s"WITH ${coEdgesCtes("1995-01-01", "1995-06-30")}, $degCte, " +
         "n AS (SELECT COUNT(*) AS n FROM deg), " +
         "r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM n) AS r FROM deg), " +
-        "r1 AS (SELECT e.dst AS node, ROUND(0.15 / (SELECT n FROM n) + " +
-        "0.85 * SUM(r.r / d.deg), 9) AS r FROM ed e " +
-        "JOIN r0 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1), " +
-        "r2 AS (SELECT e.dst AS node, ROUND(0.15 / (SELECT n FROM n) + " +
-        "0.85 * SUM(r.r / d.deg), 9) AS r FROM ed e " +
-        "JOIN r1 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1), " +
-        "r3 AS (SELECT e.dst AS node, ROUND(0.15 / (SELECT n FROM n) + " +
-        "0.85 * SUM(r.r / d.deg), 9) AS r FROM ed e " +
-        "JOIN r2 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1) " +
-        "SELECT node, r FROM r3 ORDER BY r DESC, node LIMIT 100") { (s, d) =>
+        s"${iters.mkString(", ")} " +
+        "SELECT node, r FROM r3 ORDER BY r DESC, node LIMIT 100"
+    }) { (s, d) =>
       val ed = coEdges(s, d, "1995-01-01", "1995-06-30")
       // deg is read by every iteration (multi-consumer) — checkpoint it;
       // each rank table has exactly ONE consumer (the next iteration), so
@@ -120,11 +124,7 @@ object GraphQueries {
     // explodes on a hot node. Output: one row (wedges examined,
     // triangles closed).
     Q("q_triangle_count",
-      "WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
-        "WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'), " +
-        "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
-        "JOIN lp b ON a.o = b.o AND a.p <> b.p), " +
-        "deg AS (SELECT src, COUNT(*) AS deg FROM ed GROUP BY 1), " +
+      s"WITH ${coEdgesCtes("1995-01-01", "1995-03-31")}, $degCte, " +
         "o AS (SELECT e.src, e.dst FROM ed e " +
         "JOIN deg da ON e.src = da.src JOIN deg db ON e.dst = db.src " +
         "WHERE (da.deg, e.src) < (db.deg, e.dst)), " +
@@ -166,10 +166,7 @@ object GraphQueries {
     // truncation, as in PageRank/components). All outputs are exact
     // integer counts — nothing float-sensitive.
     Q("q_khop_reach",
-      "WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
-        "WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-06-30'), " +
-        "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
-        "JOIN lp b ON a.o = b.o AND a.p <> b.p), " +
+      s"WITH ${coEdgesCtes("1995-01-01", "1995-06-30")}, " +
         "s0 AS (SELECT DISTINCT src AS node FROM ed WHERE src % 1000 = 0), " +
         "h1 AS (SELECT DISTINCT e.dst AS node FROM ed e JOIN s0 ON e.src = s0.node), " +
         "f1 AS (SELECT node FROM s0 UNION SELECT node FROM h1), " +
@@ -220,11 +217,7 @@ object GraphQueries {
     // Top-20 by (jaccard, cn, pair) — a fully deterministic order. The
     // same one-month co-occurrence window as the other graph kernels.
     Q("q_link_prediction",
-      "WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
-        "WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-06-30'), " +
-        "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
-        "JOIN lp b ON a.o = b.o AND a.p <> b.p), " +
-        "deg AS (SELECT src, COUNT(*) AS deg FROM ed GROUP BY 1), " +
+      s"WITH ${coEdgesCtes("1995-01-01", "1995-06-30")}, $degCte, " +
         "w AS (SELECT e1.dst AS a, e2.dst AS b, COUNT(*) AS cn " +
         "FROM ed e1 JOIN ed e2 ON e1.src = e2.src AND e1.dst < e2.dst " +
         "GROUP BY 1, 2), " +
@@ -264,10 +257,7 @@ object GraphQueries {
           s"FROM ed e JOIN l${t - 1} l ON e.src = l.node GROUP BY 1, 2), " +
           s"l$t AS (SELECT node, lab FROM (SELECT node, lab, ROW_NUMBER() OVER " +
           s"(PARTITION BY node ORDER BY cnt DESC, lab) AS rn FROM c$t) WHERE rn = 1)"
-      "WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem " +
-        "WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-06-30'), " +
-        "ed AS (SELECT DISTINCT a.p AS src, b.p AS dst FROM lp a " +
-        "JOIN lp b ON a.o = b.o AND a.p <> b.p), " +
+      s"WITH ${coEdgesCtes("1995-01-01", "1995-06-30")}, " +
         "l0 AS (SELECT DISTINCT src AS node, src AS lab FROM ed), " +
         s"${iter(1)}, ${iter(2)}, ${iter(3)} " +
         "SELECT lab AS community, CAST(COUNT(*) AS BIGINT) AS n_members FROM l3 " +

@@ -36,7 +36,7 @@ object LambdaQueries {
   val all: Seq[Q] = Seq(
 
     Q("q_higher_order",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) " +
+      s"WITH ${SimilarityQueries.embCte("e")} " +
         "SELECT vec_id, " +
         "len(list_filter(v, x -> x > 0)) AS n_pos, " +
         "ROUND(list_sum(list_transform(v, x -> abs(x))), 6) AS l1_norm, " +
@@ -115,24 +115,14 @@ object LambdaQueries {
     // step is one equi-join round, so depth — not data volume — is the
     // iteration count, and the streaming path (stream_check*) remains the
     // unbounded-history form.
-    Q("q_recursive_machine", {
-      val windowSec = 86400L; val threshold = 300.0
-      val nxt = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
-      val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN CAST(0.0 AS DOUBLE) ELSE s.rc + d.amount END"
-      "WITH RECURSIVE dd AS (SELECT user_id AS wallet_id, epoch_us(ts) // 1000000 AS tsec, " +
-        "event_id AS seq, value AS amount FROM events WHERE value > 0), " +
+    Q("q_recursive_machine",
+      s"WITH RECURSIVE ${CoreQueries.detectorDepositsCte}, " +
         "d0 AS (SELECT wallet_id, tsec, amount, " +
         "ROW_NUMBER() OVER (PARTITION BY wallet_id ORDER BY tsec, seq) AS rn FROM dd), " +
         "d AS (SELECT wallet_id, tsec, amount, rn, 10 AS n FROM d0 WHERE rn <= 10), " +
-        "s AS (SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
-        "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
-        "UNION ALL " +
-        s"SELECT s.wallet_id, CAST($nxt AS BIGINT), $recv, " +
-        s"NOT (($recv) >= $threshold AND ($nxt) <> 0), s.rn + 1, s.n " +
-        "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1) " +
-        "SELECT wallet_id, ROUND(rc, 2) AS win_sum_10, NOT fr AS above_threshold " +
-        "FROM s WHERE rn = n ORDER BY wallet_id"
-    }) { (s, d) =>
+        CoreQueries.detectorFoldCte(86400L, 300.0, "CAST(0.0 AS DOUBLE)") +
+        " SELECT wallet_id, ROUND(rc, 2) AS win_sum_10, NOT fr AS above_threshold " +
+        "FROM s WHERE rn = n ORDER BY wallet_id") { (s, d) =>
       val windowSec = 86400L; val threshold = 300.0
       val nxt = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
       val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN CAST(0.0 AS DOUBLE) ELSE s.rc + d.amount END"

@@ -277,10 +277,31 @@ object MultimodalQueries {
 private object PhashOracle {
   /** CTE chain through per-doc `bits` and 16-bit `bands` — shared by the
     * all-pairs and served (batch-probes-history) variants. */
-  val coreSql: String =
-    "ids AS (SELECT doc_id, " +
+  /** `name`: each doc's pixel source id `src` — a planted copy (doc_id %
+    * 10 = 1) renders its predecessor's image — and the copy flag `pert`. */
+  private def sourcesCte(name: String): String =
+    s"$name AS (SELECT doc_id, " +
       "CASE WHEN doc_id % 10 = 1 THEN doc_id - 1 ELSE doc_id END AS src, " +
-      "doc_id % 10 = 1 AS pert FROM documents), " +
+      "doc_id % 10 = 1 AS pert FROM documents)"
+
+  /** Band candidates and their exact Hamming distance over the per-doc
+    * `bits` and 16-bit `bands` tables: pairs (`a`, `b`) sharing a band
+    * that `pair` admits, kept at Hamming <= `maxHamming`. */
+  private def bandHammingSql(a: String, b: String, pair: String,
+                             maxHamming: Int): String =
+    s"cand AS (SELECT DISTINCT a.doc_id AS $a, b.doc_id AS $b " +
+      "FROM bands a JOIN bands b ON a.band_idx = b.band_idx " +
+      s"AND a.band = b.band AND $pair), " +
+      s"ham AS (SELECT $a, $b, " +
+      "CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) AS BIGINT) " +
+      "AS hamming FROM cand " +
+      s"JOIN bits ba ON ba.doc_id = $a " +
+      s"JOIN bits bb ON bb.doc_id = $b AND bb.k = ba.k GROUP BY 1, 2) " +
+      s"SELECT $a, $b, hamming FROM ham WHERE hamming <= $maxHamming " +
+      s"ORDER BY $a, $b"
+
+  val coreSql: String =
+    s"${sourcesCte("ids")}, " +
     "dim AS (SELECT doc_id, src, pert, 4 + src % 13 AS w, 3 + src % 11 AS h " +
       "FROM ids), " +
     "samp AS (SELECT doc_id, src, pert, (j * 8 + i) AS k, " +
@@ -299,31 +320,12 @@ private object PhashOracle {
       "CAST(SUM(bit << (k % 16)) AS BIGINT) AS band FROM bits GROUP BY 1, 2)"
 
   val sql: String =
-    s"WITH $coreSql, " +
-    "cand AS (SELECT DISTINCT a.doc_id AS dup_a, b.doc_id AS dup_b " +
-      "FROM bands a JOIN bands b ON a.band_idx = b.band_idx " +
-      "AND a.band = b.band AND a.doc_id < b.doc_id), " +
-    "ham AS (SELECT dup_a, dup_b, " +
-      "CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) AS BIGINT) " +
-      "AS hamming FROM cand " +
-      "JOIN bits ba ON ba.doc_id = dup_a " +
-      "JOIN bits bb ON bb.doc_id = dup_b AND bb.k = ba.k GROUP BY 1, 2) " +
-    "SELECT dup_a, dup_b, hamming FROM ham WHERE hamming <= 10 " +
-    "ORDER BY dup_a, dup_b"
+    s"WITH $coreSql, " + bandHammingSql("dup_a", "dup_b", "a.doc_id < b.doc_id", 10)
 
   /** Served variant: batch (doc_id ≡ 0 mod 5) probes history only. */
   val servedSql: String =
     s"WITH $coreSql, " +
-    "cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS dup_of " +
-      "FROM bands a JOIN bands b ON a.band_idx = b.band_idx " +
-      "AND a.band = b.band AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0), " +
-    "ham AS (SELECT new_id, dup_of, " +
-      "CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) AS BIGINT) " +
-      "AS hamming FROM cand " +
-      "JOIN bits ba ON ba.doc_id = new_id " +
-      "JOIN bits bb ON bb.doc_id = dup_of AND bb.k = ba.k GROUP BY 1, 2) " +
-    "SELECT new_id, dup_of, hamming FROM ham WHERE hamming <= 10 " +
-    "ORDER BY new_id, dup_of"
+      bandHammingSql("new_id", "dup_of", "a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0", 10)
 
   /** Video near-dup replay (see
     * [[graft.multimodal.Multimodal.videoDupFrameDocs]]): per (doc, frame)
@@ -333,9 +335,7 @@ private object PhashOracle {
     * keyed by frame → candidate pairs from any aligned band match →
     * per-frame bit-mismatch counts → per-pair frame count + max. */
   val videoDupSql: String =
-    "WITH fr AS (SELECT doc_id, " +
-      "CASE WHEN doc_id % 10 = 1 THEN doc_id - 1 ELSE doc_id END AS src, " +
-      "doc_id % 10 = 1 AS pert FROM documents), " +
+    s"WITH ${sourcesCte("fr")}, " +
     "dm AS (SELECT doc_id, src, pert, 4 + src % 5 AS nf, " +
       "4 + src % 13 AS w, 3 + src % 11 AS h FROM fr), " +
     "fx AS (SELECT doc_id, src, pert, nf, w, h, unnest(range(0, nf)) AS f FROM dm), " +
@@ -380,9 +380,7 @@ private object PhashOracle {
     * digest-reduced to one md5 parity bit each → 16-bit bands →
     * candidates → exact bit-mismatch Hamming. */
   val audioDupSql: String =
-    "WITH cl AS (SELECT doc_id, " +
-      "CASE WHEN doc_id % 10 = 1 THEN doc_id - 1 ELSE doc_id END AS src, " +
-      "doc_id % 10 = 1 AS pert FROM documents), " +
+    s"WITH ${sourcesCte("cl")}, " +
     "dn AS (SELECT doc_id, src, pert, 512 + (src % 7) * 128 AS n FROM cl), " +
     "sm AS (SELECT doc_id, src, pert, n, unnest(range(0, n)) AS i FROM dn), " +
     "v0 AS (SELECT doc_id, pert, n, i, " +
@@ -396,16 +394,7 @@ private object PhashOracle {
       "('0x' || substr(md5(ws), 1, 1))::BIGINT % 2 AS bit FROM sw), " +
     "bands AS (SELECT doc_id, k // 16 AS band_idx, " +
       "CAST(SUM(bit << (k % 16)) AS BIGINT) AS band FROM bits GROUP BY 1, 2), " +
-    "cand AS (SELECT DISTINCT a.doc_id AS dup_a, b.doc_id AS dup_b " +
-      "FROM bands a JOIN bands b ON a.band_idx = b.band_idx " +
-      "AND a.band = b.band AND a.doc_id < b.doc_id), " +
-    "ham AS (SELECT dup_a, dup_b, " +
-      "CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) AS BIGINT) " +
-      "AS hamming FROM cand " +
-      "JOIN bits ba ON ba.doc_id = dup_a " +
-      "JOIN bits bb ON bb.doc_id = dup_b AND bb.k = ba.k GROUP BY 1, 2) " +
-    "SELECT dup_a, dup_b, hamming FROM ham WHERE hamming <= 6 " +
-      "ORDER BY dup_a, dup_b"
+    bandHammingSql("dup_a", "dup_b", "a.doc_id < b.doc_id", 6)
 
   /** Scene-cut replay (see [[graft.multimodal.Multimodal.videoFrameDocs]]):
     * per (doc, frame) the sampled 8×8 grid regenerates from the pixel

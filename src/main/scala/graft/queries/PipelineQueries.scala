@@ -14,6 +14,8 @@ import graft.sources.Tables
   * already-oracle-checked operators, and the composition is oracle-checked
   * end-to-end too. */
 object PipelineQueries {
+  import DedupQueries.{candShinglesSql, jaccardSql, lshPairCtes}
+  import TextQueries.{nPunctSql, nTokensSql, qualityTextSql, stopHitsSql, toksCte}
 
   private val enPat = langMarkers.toMap.apply("en")
 
@@ -22,38 +24,14 @@ object PipelineQueries {
     * and the provenance funnel that replays them: hand-copied replicas
     * drift silently (the funnel would fail its oracle when a stage
     * string changes but its copy doesn't, and someone must hand-diff
-    * two 15-line SQL blocks to find out why). */
-  private val toksCte =
-    "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents)"
-  /** toks → distinct 3-gram shingles → k=12 minhash → 4 bands → LSH
-    * candidate pairs (the k12/b4/r3 chain of Dedup.lshVerifiedPairs). */
-  private val lshCandCtes =
-    toksCte + ", " +
-      "sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN " +
-      "list_distinct(list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) " +
-      "ELSE CAST([] AS VARCHAR[]) END AS s FROM toks), " +
-      "sig AS (SELECT doc_id, s, list_transform(range(0, 12), " +
-      "i -> list_min(list_transform(s, x -> md5(i::VARCHAR || '|' || x)))) AS sig FROM sh), " +
-      "bandrows AS (SELECT doc_id, j, md5(array_to_string(sig[(j*3+1):(j*3+3)], '|')) AS bh " +
-      "FROM sig, range(0, 4) r(j)), " +
-      "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandrows a " +
-      "JOIN bandrows b ON a.j = b.j AND a.bh = b.bh AND a.doc_id < b.doc_id)"
-  /** Exact Jaccard over the candidate pair's shingle sets (raw
-    * integer-count ratio — bit-identical in any engine, no rounding). */
-  private val lshJac =
-    "len(list_intersect(sa.s, sb.s))::DOUBLE / len(list_distinct(list_concat(sa.s, sb.s)))"
-  /** Per-doc gate features (marker hits + token count). */
+    * two 15-line SQL blocks to find out why). This one holds the per-doc
+    * gate features (marker hits + token count). */
   private val gateCte =
-    "q AS (SELECT doc_id, lang, text, " +
-      s"len(regexp_extract_all(lower(text), '$enPat'))::BIGINT AS stop_hits, " +
-      "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens FROM documents)"
-  /** Distinct word 4-grams digested per doc with the bench split flag
-    * (the contamination join's key table); references `toks`. */
-  private val gram4Cte =
-    "g4 AS (SELECT doc_id, doc_id % 20 = 0 AS is_bench, substr(md5(ng), 1, 16) AS gh " +
-      "FROM (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
-      "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS ng " +
-      "FROM toks WHERE len(t) >= 4))"
+    s"q AS (SELECT doc_id, lang, text, $stopHitsSql AS stop_hits, $nTokensSql AS n_tokens FROM documents)"
+  /** Exact Jaccard of an LSH candidate pair's shingle sets. */
+  private val lshJac = jaccardSql("sa", "sb")
+  /** The contamination join's 4-gram key table. */
+  private val gram4Cte = CorpusQueries.gram4Cte("g4")
 
   val all: Seq[Q] = Seq(
 
@@ -61,9 +39,8 @@ object PipelineQueries {
     // (2) marker-language gate, (3) near-dup removal (keep-lowest-id rule
     // over MinHash+LSH verified pairs — drop every id_b).
     Q("pipeline_clean_corpus",
-      "WITH " + lshCandCtes + ", " +
-        "dup AS (SELECT DISTINCT id_b FROM cand JOIN sh sa ON sa.doc_id = id_a " +
-        "JOIN sh sb ON sb.doc_id = id_b " +
+      "WITH " + lshPairCtes + ", " +
+        s"dup AS (SELECT DISTINCT id_b ${candShinglesSql("id_a", "id_b")} " +
         s"WHERE $lshJac >= 0.5), " +
         gateCte + " " +
         "SELECT d.doc_id FROM documents d JOIN q USING (doc_id) " +
@@ -175,12 +152,8 @@ object PipelineQueries {
     // the q_percentiles precedent. One aggregate + one broadcast-size
     // join on lang — two passes over the corpus at any scale.
     Q("pipeline_quality_gate",
-      "WITH f AS (SELECT doc_id, lang, " +
-        "0.4 * (len(regexp_extract_all(lower(text), '" + enPat + "'))::BIGINT " +
-        "/ len(string_split_regex(trim(text), '\\s+'))::DOUBLE) " +
-        "+ 0.3 * LEAST(1.0, len(string_split_regex(trim(text), '\\s+'))::BIGINT / 100.0) " +
-        "+ 0.3 * (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT " +
-        "/ length(text)::DOUBLE) AS quality FROM documents WHERE length(text) > 0), " +
+      s"WITH f AS (SELECT doc_id, lang, $qualityTextSql AS quality " +
+        "FROM documents WHERE length(text) > 0), " +
         "th AS (SELECT lang, quantile_cont(quality, 0.25) AS p25 FROM f GROUP BY 1) " +
         "SELECT f.lang, COUNT(*) AS n_total, " +
         "CAST(SUM(CASE WHEN quality >= p25 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, " +
@@ -261,8 +234,7 @@ object PipelineQueries {
     // real scale W grows so the pass-2 window stays small (and composes
     // recursively if n/W itself ever gets big — it is the same operator).
     Q("pipeline_pack_sequences",
-      "WITH t AS (SELECT doc_id, lang, " +
-        "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tok " +
+      s"WITH t AS (SELECT doc_id, lang, $nTokensSql AS n_tok " +
         "FROM documents WHERE length(trim(text)) > 0), " +
         "c AS (SELECT lang, doc_id, n_tok, " +
         "SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id " +
@@ -338,8 +310,7 @@ object PipelineQueries {
     // floor(before/B) .. floor((before+n_tok-1)/B). Spans of one sequence
     // tile it disjointly, so (lang, seq_id, start_tok) is a total order.
     Q("pipeline_pack_spans",
-      "WITH t AS (SELECT doc_id, lang, " +
-        "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tok " +
+      s"WITH t AS (SELECT doc_id, lang, $nTokensSql AS n_tok " +
         "FROM documents WHERE length(trim(text)) > 0), " +
         "c AS (SELECT lang, doc_id, n_tok, " +
         "CAST(SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id " +
@@ -376,10 +347,8 @@ object PipelineQueries {
     // estimation swaps in approx_percentile/KLL, already certified by
     // q_approx_percentile, without touching the bucketing shape.
     Q("pipeline_quality_buckets",
-      "WITH f AS (SELECT doc_id, " +
-        "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens, " +
-        "len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT AS n_punct, " +
-        "length(text)::BIGINT AS n_len FROM documents), " +
+      s"WITH f AS (SELECT doc_id, $nTokensSql AS n_tokens, " +
+        s"$nPunctSql AS n_punct, length(text)::BIGINT AS n_len FROM documents), " +
         "s AS (SELECT doc_id, 0.5 * LEAST(1.0, n_tokens / 100.0) " +
         "+ 0.5 * (1.0 - n_punct / n_len::DOUBLE) AS q FROM f), " +
         "b AS (SELECT ROUND(quantile_cont(q, 0.25), 6) AS b1, " +
@@ -666,10 +635,9 @@ object PipelineQueries {
     * `pipeline_training_mix` (survivors ranked first inside each
     * text-hash group, so the gated rank needs no gated-only subquery). */
   private def provenanceCtes: String =
-    "WITH " + lshCandCtes + ", " +
+    "WITH " + lshPairCtes + ", " +
       s"nd AS (SELECT id_b AS doc_id, MAX($lshJac) AS nd_score " +
-      "FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b " +
-      s"WHERE $lshJac >= 0.5 " +
+      s"${candShinglesSql("id_a", "id_b")} WHERE $lshJac >= 0.5 " +
       "GROUP BY 1), " +
       gram4Cte + ", " +
       "ctp AS (SELECT g1.doc_id AS train_id, g2.doc_id AS bench_id, " +

@@ -95,22 +95,106 @@ object SimilarityQueries {
       .where(col("rank") <= k)
   }
 
-  private val normsCte =
-    "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-      "n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(range(1, len(v) + 1), " +
-      "i -> v[i] * v[i]))) AS nrm FROM e)"
+  /** Each embedding as a DOUBLE list `v`, in CTE `name`. */
+  private[queries] def embCte(name: String): String =
+    s"$name AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+  /** The dot product of lists `a` and `b` (lambda variable `i`). */
+  private[queries] def dotSql(a: String, b: String, i: String = "i"): String =
+    s"list_sum(list_transform(range(1, len($a) + 1), $i -> $a[$i] * $b[$i]))"
+
+  /** The cosine of lists `a` and `b`, whose norms are `na` and `nb`, on
+    * the 6-dp grid every cosine oracle ranks by. */
+  private[queries] def cosineSql(a: String, b: String, na: String, nb: String,
+                                 i: String = "i"): String =
+    s"ROUND(${dotSql(a, b, i)} / ($na * $nb), 6)"
+
+  /** The squared L2 distance of lists `a` and `b` on the 6-dp grid. */
+  private def l2Sql(a: String, b: String, i: String = "i"): String =
+    s"ROUND(list_sum(list_transform(range(1, len($a) + 1), $i -> ($a[$i] - $b[$i]) * ($a[$i] - $b[$i]))), 6)"
+
+  /** Embeddings `e` and their norms: `n` (vec_id, v, `nrm`). */
+  private[queries] def vectorNormsCte(e: String, n: String, nrm: String): String =
+    s"${embCte(e)}, $n AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS $nrm FROM $e)"
+
+  private val normsCte = vectorNormsCte("e", "n", "nrm")
+
+  /** The query vectors (vec_id < `nQueries`) as `q` (qid, qv, qn). */
+  private def queriesCte(nQueries: Int): String =
+    s"q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < $nQueries)"
+
+  /** `name`: every (query, other vector) pair of `q` × `n` with its cosine
+    * as column `score`. */
+  private def bruteScoredCte(name: String, score: String): String =
+    s"$name AS (SELECT qid, c.vec_id AS nid, ${cosineSql("qv", "c.v", "qn", "c.nrm")} " +
+      s"AS $score FROM q, n c WHERE c.vec_id != qid)"
+
+  /** Each query's neighbors by cosine, ties to the lower id. */
+  private val cosineRankSql =
+    "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid)"
+
+  /** `name`: the (qid, nid, cosine) rows of `from`, ranked `rank`. */
+  private[queries] def rankedCte(name: String, from: String): String =
+    s"$name AS (SELECT qid, nid, cosine, $cosineRankSql AS rank FROM $from)"
+
+  /** `name`: the `cols` of the rows of `from` whose cosine rank `r`
+    * satisfies `keep`. */
+  private def topCte(name: String, cols: String, from: String, keep: String,
+                     r: String = "rnk"): String =
+    s"$name AS (SELECT $cols FROM (SELECT qid, nid, $cosineRankSql AS $r FROM $from) WHERE $r $keep)"
+
+  /** The exact cosine ground truth: `bfs` scores every (query vec_id <
+    * `nQueries`, other vector) pair of `n`, and `name` keeps the `cols` of
+    * the ranks that `keep` admits. */
+  private def exactCosSql(nQueries: Int, name: String, cols: String, keep: String): String =
+    "bfs AS (SELECT q.vec_id AS qid, c.vec_id AS nid, " +
+      s"${cosineSql("q.v", "c.v", "q.nrm", "c.nrm")} AS cosine " +
+      s"FROM n q, n c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id), " +
+      topCte(name, cols, "bfs", keep)
+
+  /** recall@k per query: the hits of `hits` against the ground truth `bf`,
+    * from the select list on. */
+  private def recallSql(hits: String, k: Int): String =
+    s"bf.qid, CAST(COUNT($hits.hit) AS BIGINT) AS n_hit, " +
+      s"ROUND(COUNT($hits.hit) / $k.0, 4) AS recall " +
+      s"FROM bf LEFT JOIN $hits USING (qid, nid) GROUP BY bf.qid"
+
+  /** The 4-bit sign bucket of vector `v`. */
+  private[queries] val signBucketSql = (1 to 4).map(i =>
+    s"(CASE WHEN v[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
+
+  /** The vectors of `n` with their sign bucket, as `nb`. */
+  private val bucketsCte = s"nb AS (SELECT vec_id, v, nrm, $signBucketSql AS bucket FROM n)"
+
+  /** `b`: the bucket width whose 2^bits buckets hold about 32 vectors of
+    * `from` each, clamped to [2, 24] (Similarity.lshBitsFor). */
+  private def bitsCte(from: String): String =
+    "b AS (SELECT GREATEST(2, LEAST(24, CAST(CEIL(LN(COUNT(*) / 32.0) / LN(2)) AS INT))) " +
+      s"AS bits FROM $from)"
+
+  /** The `b.bits`-wide sign bucket of vector `v`. */
+  private val adaptiveBucketSql = "array_to_string(list_transform(" +
+    "range(1, (SELECT bits FROM b) + 1), " +
+    "i -> CASE WHEN v[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket"
+
+  /** Shortlist-then-rerank over the query/candidate table `a` (qid, nid,
+    * qv, nv, score columns): the first `shortlist` candidates by `order`
+    * are re-scored by exact cosine and the top `k` returned. */
+  private def shortlistRerankSql(order: String, shortlist: Int, k: Int): String =
+    "s AS (SELECT qid, nid, nv, qv, ROW_NUMBER() OVER " +
+      s"(PARTITION BY qid ORDER BY $order, nid) AS srank FROM a), " +
+      "r AS (SELECT qid, nid, " +
+      cosineSql("qv", "nv", s"sqrt(${dotSql("qv", "qv")})", s"sqrt(${dotSql("nv", "nv")})") +
+      s" AS cosine FROM s WHERE srank <= $shortlist), " +
+      rankedCte("t", "r") +
+      s" SELECT qid, rank, nid, cosine FROM t WHERE rank <= $k ORDER BY qid, rank"
 
   val all: Seq[Q] = Seq(
 
     // Exact top-5 cosine neighbors for query vectors vec_id < 10.
     Q("sim_topk_bruteforce",
-      s"WITH $normsCte, " +
-        "q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 10), " +
-        "scored AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM q, n c WHERE c.vec_id != qid), " +
-        "r AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
+      s"WITH $normsCte, ${queriesCte(10)}, ${bruteScoredCte("scored", "cosine")}, " +
+        s"${rankedCte("r", "scored")} " +
         "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 5 ORDER BY qid, rank") {
       (s, d) =>
         val embT = emb(s, d)
@@ -119,19 +203,13 @@ object SimilarityQueries {
     },
 
     // LSH-bucketed top-3: candidates restricted to the query's sign bucket.
-    Q("sim_lsh_topk", {
-      val bucket = (1 to 4).map(i =>
-        s"(CASE WHEN v[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
-      s"WITH $normsCte, " +
-        s"nb AS (SELECT vec_id, v, nrm, $bucket AS bucket FROM n), " +
+    Q("sim_lsh_topk",
+      s"WITH $normsCte, $bucketsCte, " +
         "q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id < 10), " +
         "scored AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM q JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
-        "r AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
-        "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank"
-    }) { (s, d) =>
+        s"${cosineSql("qv", "c.v", "qn", "c.nrm")} AS cosine FROM q JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
+        s"${rankedCte("r", "scored")} " +
+        "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank") { (s, d) =>
       val embT = emb(s, d)
       Similarity.lshBucketTopK(embT, embT.filter(col("vec_id") < 10), k = 3,
           bucketBits = 4)
@@ -140,22 +218,17 @@ object SimilarityQueries {
 
     // Multi-probe LSH top-3: query bucket + all 1-bit-flip neighbors.
     Q("sim_lsh_multiprobe", {
-      val bucket = (1 to 4).map(i =>
-        s"(CASE WHEN v[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
       // Probe i=0 keeps the bucket; i=1..4 flips bit i.
       val probes = "list_transform(range(0, 5), i -> CASE WHEN i = 0 THEN bucket " +
         "ELSE substr(bucket, 1, CAST(i - 1 AS INT)) || " +
         "(CASE WHEN substr(bucket, CAST(i AS INT), 1) = '1' THEN '0' ELSE '1' END) || " +
         "substr(bucket, CAST(i + 1 AS INT), CAST(4 - i AS INT)) END)"
-      s"WITH $normsCte, " +
-        s"nb AS (SELECT vec_id, v, nrm, $bucket AS bucket FROM n), " +
+      s"WITH $normsCte, $bucketsCte, " +
         s"q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, unnest($probes) AS bucket " +
         "FROM nb WHERE vec_id < 10), " +
         "scored AS (SELECT DISTINCT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM q JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
-        "r AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
+        s"${cosineSql("qv", "c.v", "qn", "c.nrm")} AS cosine FROM q JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
+        s"${rankedCte("r", "scored")} " +
         "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank"
     }) { (s, d) =>
       val embT = emb(s, d)
@@ -176,20 +249,14 @@ object SimilarityQueries {
     // engines could only disagree on a corpus whose n/32 lands exactly
     // on a power of two AND whose LN differs in the last ulp — not a
     // realistic corpus size, and the clamp bounds the blast radius.
-    Q("sim_knn_graph", {
-      s"WITH $normsCte, " +
-        "b AS (SELECT GREATEST(2, LEAST(24, CAST(CEIL(LN(COUNT(*) / 32.0) / LN(2)) AS INT))) AS bits FROM n), " +
-        "nb AS (SELECT vec_id, v, nrm, array_to_string(list_transform(" +
-        "range(1, (SELECT bits FROM b) + 1), " +
-        "i -> CASE WHEN v[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM n), " +
+    Q("sim_knn_graph",
+      s"WITH $normsCte, ${bitsCte("n")}, " +
+        s"nb AS (SELECT vec_id, v, nrm, $adaptiveBucketSql FROM n), " +
         "scored AS (SELECT a.vec_id AS qid, b.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) " +
-        "/ (a.nrm * b.nrm), 6) AS cosine " +
+        s"${cosineSql("a.v", "b.v", "a.nrm", "b.nrm")} AS cosine " +
         "FROM nb a JOIN nb b ON a.bucket = b.bucket AND a.vec_id != b.vec_id), " +
-        "r AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
-        "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank"
-    }) { (s, d) =>
+        s"${rankedCte("r", "scored")} " +
+        "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank") { (s, d) =>
       Similarity.knnGraph(emb(s, d), k = 3)
         .orderBy(col("qid"), col("rank"))
     },
@@ -202,27 +269,14 @@ object SimilarityQueries {
     // left join + per-query count, so its cost is O(queries·k) on top of
     // whatever the two kernels cost. The oracle replays both kernels and
     // the same join.
-    Q("sim_recall_eval", {
-      val bucket = (1 to 4).map(i =>
-        s"(CASE WHEN v[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
-      s"WITH $normsCte, " +
-        s"nb AS (SELECT vec_id, v, nrm, $bucket AS bucket FROM n), " +
-        "q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 10), " +
-        "bfs AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM q, n c WHERE c.vec_id != qid), " +
-        "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) WHERE rnk <= 3), " +
+    Q("sim_recall_eval",
+      s"WITH $normsCte, $bucketsCte, ${queriesCte(10)}, ${bruteScoredCte("bfs", "cosine")}, " +
+        s"${topCte("bf", "qid, nid", "bfs", "<= 3")}, " +
         "qb AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id < 10), " +
         "ls AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM qb JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
-        "lsh AS (SELECT qid, nid, 1 AS hit FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM ls) WHERE rnk <= 3) " +
-        "SELECT bf.qid, CAST(COUNT(lsh.hit) AS BIGINT) AS n_hit, " +
-        "ROUND(COUNT(lsh.hit) / 3.0, 4) AS recall " +
-        "FROM bf LEFT JOIN lsh USING (qid, nid) GROUP BY bf.qid ORDER BY qid"
-    }) { (s, d) =>
+        s"${cosineSql("qv", "c.v", "qn", "c.nrm")} AS cosine FROM qb JOIN nb c USING (bucket) WHERE c.vec_id != qid), " +
+        s"${topCte("lsh", "qid, nid, 1 AS hit", "ls", "<= 3")} " +
+        s"SELECT ${recallSql("lsh", 3)} ORDER BY qid") { (s, d) =>
       val embT = emb(s, d)
       val qs = embT.filter(col("vec_id") < 10)
       val bf = exactCosGt(s, d, k = 3).select(col("qid"), col("nid"))
@@ -459,7 +513,7 @@ object SimilarityQueries {
     // full-precision cosine. The memory-bandwidth ANN path: the big scan
     // touches codes, not floats.
     Q("sim_sq_rerank",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+      s"WITH ${embCte("e")}, " +
         "d AS (SELECT unnest(range(1, len(v) + 1)) AS i, unnest(v) AS x FROM e), " +
         "mm AS (SELECT i, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY i), " +
         "b AS (SELECT list(mn ORDER BY i) AS mns, " +
@@ -469,18 +523,8 @@ object SimilarityQueries {
         "AS codes FROM e, b), " +
         "q AS (SELECT vec_id AS qid, v AS qv, codes AS qcodes FROM c WHERE vec_id < 10), " +
         "a AS (SELECT qid, c.vec_id AS nid, c.v AS nv, qv, " +
-        "list_sum(list_transform(range(1, len(qcodes) + 1), " +
-        "i -> qcodes[i] * c.codes[i])) AS iscore FROM q, c WHERE c.vec_id != qid), " +
-        "s AS (SELECT qid, nid, nv, qv, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY iscore DESC, nid) AS srank FROM a), " +
-        "r AS (SELECT qid, nid, ROUND(" +
-        "list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * nv[i])) / " +
-        "(sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) * " +
-        "sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))), 6) " +
-        "AS cosine FROM s WHERE srank <= 50), " +
-        "t AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM r) " +
-        "SELECT qid, rank, nid, cosine FROM t WHERE rank <= 5 ORDER BY qid, rank") {
+        s"${dotSql("qcodes", "c.codes")} AS iscore FROM q, c WHERE c.vec_id != qid), " +
+        shortlistRerankSql("iscore DESC", shortlist = 50, k = 5)) {
       (s, d) =>
         val embT = emb(s, d)
         Similarity.sqRerankTopK(embT, embT.filter(col("vec_id") < 10),
@@ -508,7 +552,7 @@ object SimilarityQueries {
     },
 
     Q("sim_binary_rerank",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+      s"WITH ${embCte("e")}, " +
         "c AS (SELECT vec_id, v, " +
         "list_sum(list_transform(range(1, 33), " +
         "i -> CASE WHEN v[i] > 0 THEN (1::BIGINT << (i - 1)) ELSE 0 END)) AS w0, " +
@@ -520,16 +564,7 @@ object SimilarityQueries {
         "a AS (SELECT qid, c.vec_id AS nid, c.v AS nv, qv, " +
         "bit_count(xor(c.w0, qw0)) + bit_count(xor(c.w1, qw1)) AS ham " +
         "FROM q, c WHERE c.vec_id != qid), " +
-        "s AS (SELECT qid, nid, nv, qv, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY ham, nid) AS srank FROM a), " +
-        "r AS (SELECT qid, nid, ROUND(" +
-        "list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * nv[i])) / " +
-        "(sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) * " +
-        "sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))), 6) " +
-        "AS cosine FROM s WHERE srank <= 50), " +
-        "t AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM r) " +
-        "SELECT qid, rank, nid, cosine FROM t WHERE rank <= 5 ORDER BY qid, rank") {
+        shortlistRerankSql("ham", shortlist = 50, k = 5)) {
       (s, d) =>
         val embT = emb(s, d)
         Similarity.binaryRerankTopK(embT, embT.filter(col("vec_id") < 10),
@@ -572,21 +607,12 @@ object SimilarityQueries {
     // the scan arithmetic — rounded to 6 dp before ranking so the
     // shortlist is engine-portable; full cosine reranks the survivors.
     Q("sim_prefix_rerank",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+      s"WITH ${embCte("e")}, " +
         "q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10), " +
         "a AS (SELECT qid, c.vec_id AS nid, c.v AS nv, qv, " +
         "ROUND(list_sum(list_transform(range(1, 17), i -> qv[i] * c.v[i])), 6) " +
         "AS pscore FROM q, e c WHERE c.vec_id != qid), " +
-        "s AS (SELECT qid, nid, nv, qv, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY pscore DESC, nid) AS srank FROM a), " +
-        "r AS (SELECT qid, nid, ROUND(" +
-        "list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * nv[i])) / " +
-        "(sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) * " +
-        "sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))), 6) " +
-        "AS cosine FROM s WHERE srank <= 50), " +
-        "t AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM r) " +
-        "SELECT qid, rank, nid, cosine FROM t WHERE rank <= 5 ORDER BY qid, rank") {
+        shortlistRerankSql("pscore DESC", shortlist = 50, k = 5)) {
       (s, d) =>
         val embT = emb(s, d)
         Similarity.prefixRerankTopK(embT, embT.filter(col("vec_id") < 10),
@@ -610,18 +636,12 @@ object SimilarityQueries {
       s"WITH $normsCte, " +
         "csd AS (SELECT vec_id, v, nrm FROM n WHERE vec_id % 2 = 0), " +
         "qsd AS (SELECT vec_id, v, nrm FROM n WHERE vec_id % 2 = 1), " +
-        "b AS (SELECT GREATEST(2, LEAST(24, CAST(CEIL(LN(COUNT(*) / 32.0) / LN(2)) AS INT))) AS bits FROM csd), " +
-        "cb AS (SELECT vec_id, v, nrm, array_to_string(list_transform(" +
-        "range(1, (SELECT bits FROM b) + 1), " +
-        "i -> CASE WHEN v[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM csd), " +
-        "qb AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, array_to_string(list_transform(" +
-        "range(1, (SELECT bits FROM b) + 1), " +
-        "i -> CASE WHEN v[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM qsd), " +
+        s"${bitsCte("csd")}, " +
+        s"cb AS (SELECT vec_id, v, nrm, $adaptiveBucketSql FROM csd), " +
+        s"qb AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, $adaptiveBucketSql FROM qsd), " +
         "scored AS (SELECT q.qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM qb q JOIN cb c USING (bucket)), " +
-        "r AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-        "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
+        s"${cosineSql("qv", "c.v", "qn", "c.nrm")} AS cosine FROM qb q JOIN cb c USING (bucket)), " +
+        s"${rankedCte("r", "scored")} " +
         "SELECT qid, rank, nid, cosine FROM r WHERE rank <= 3 ORDER BY qid, rank") {
       (s, d) =>
         val embT = emb(s, d)
@@ -636,11 +656,7 @@ object SimilarityQueries {
     // and nothing shuffles. The 0.25 literal parses to the identical
     // double in both engines; cosine is on the 6-dp grid before the >=.
     Q("sim_range_search",
-      s"WITH $normsCte, " +
-        "q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 10), " +
-        "sc AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS cosine FROM q, n c WHERE c.vec_id != qid) " +
+      s"WITH $normsCte, ${queriesCte(10)}, ${bruteScoredCte("sc", "cosine")} " +
         "SELECT qid, nid, cosine FROM sc WHERE cosine >= 0.25 ORDER BY qid, nid") {
       (s, d) =>
         val embT = emb(s, d)
@@ -802,23 +818,29 @@ object SimilarityQueries {
       "img AS (SELECT vec_id, list_transform(v, (x, i) -> x + " +
       s"(((${hexDigit(1)} * 16 + ${hexDigit(2)}) % 41) - 20) / 100.0) AS qv " +
       s"FROM e WHERE vec_id < $nQueries), " +
-      "cmq AS (SELECT vec_id AS qid, qv, sqrt(list_sum(list_transform(" +
-      "range(1, len(qv) + 1), k -> qv[k] * qv[k]))) AS qn FROM img), " +
-      "cmd AS (SELECT q.qid, c.cid, ROUND(list_sum(list_transform(" +
-      "range(1, len(q.qv) + 1), k -> (q.qv[k] - c.cv[k]) * (q.qv[k] - c.cv[k]))), 6) " +
+      s"cmq AS (SELECT vec_id AS qid, qv, sqrt(${dotSql("qv", "qv", "k")}) AS qn FROM img), " +
+      s"cmd AS (SELECT q.qid, c.cid, ${l2Sql("q.qv", "c.cv", "k")} " +
       s"AS dist FROM cmq q, cent$iters c)"
   }
+
+  /** The image-side query's cosine to a probed cell member. */
+  private def crossModalCosineSql = cosineSql("q.qv", "cell.nv", "q.qn", "cell.nn", "k")
+
+  /** The cross-modal exact ground truth `bf`: each image query's top-`k`
+    * text vectors of `n` by cosine (no self-exclusion). */
+  private def crossModalGtSql(k: Int): String =
+    s"bfs AS (SELECT q.qid, c.vec_id AS nid, ${cosineSql("q.qv", "c.v", "q.qn", "c.nrm", "k")} " +
+      "AS cosine FROM cmq q, n c), " +
+      topCte("bf", "qid, nid", "bfs", s"<= $k")
 
   private def crossModalCoreSql(nCells: Int, iters: Int, nProbe: Int,
                                 nQueries: Int): String =
     crossModalBaseSql(nCells, iters, nQueries) + ", " +
       "cmp AS (SELECT qid, cid FROM (SELECT qid, cid, ROW_NUMBER() OVER " +
       s"(PARTITION BY qid ORDER BY dist, cid) AS rn FROM cmd) WHERE rn <= $nProbe), " +
-      "cmsc AS (SELECT q.qid, cell.nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(q.qv) + 1), k -> q.qv[k] * cell.nv[k])) / (q.qn * cell.nn), 6) " +
+      s"cmsc AS (SELECT q.qid, cell.nid, $crossModalCosineSql " +
       "AS cosine FROM cmq q JOIN cmp USING (qid) JOIN cell USING (cid)), " +
-      "cmr2 AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM cmsc)"
+      rankedCte("cmr2", "cmsc")
 
   /** The cross-modal nProbe tuning curve: recall@k of the image→text IVF
     * probe at each width, against the shared exact ground truth — the
@@ -827,29 +849,18 @@ object SimilarityQueries {
   private def crossModalSweepSql(nCells: Int, iters: Int, k: Int,
                                  probes: Seq[Int], nQueries: Int): String = {
     val perProbe = probes.map { p =>
-      s"cmsc$p AS (SELECT q.qid, cell.nid, ROUND(list_sum(list_transform(" +
-        "range(1, len(q.qv) + 1), k -> q.qv[k] * cell.nv[k])) / (q.qn * cell.nn), 6) " +
+      s"cmsc$p AS (SELECT q.qid, cell.nid, $crossModalCosineSql " +
         "AS cosine FROM cmq q JOIN (SELECT qid, cid FROM cmrf WHERE " +
         s"rn <= $p) pr ON pr.qid = q.qid JOIN cell USING (cid)), " +
-        s"cmivf$p AS (SELECT qid, nid, 1 AS hit FROM (SELECT qid, nid, " +
-        "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) " +
-        s"AS rank FROM cmsc$p) WHERE rank <= $k)"
+        topCte(s"cmivf$p", "qid, nid, 1 AS hit", s"cmsc$p", s"<= $k", "rank")
     }.mkString(", ")
-    val recalls = probes.map { p =>
-      s"SELECT CAST($p AS BIGINT) AS n_probe, bf.qid, " +
-        s"CAST(COUNT(cmivf$p.hit) AS BIGINT) AS n_hit, " +
-        s"ROUND(COUNT(cmivf$p.hit) / $k.0, 4) AS recall " +
-        s"FROM bf LEFT JOIN cmivf$p USING (qid, nid) GROUP BY bf.qid"
-    }.mkString(" UNION ALL ")
+    val recalls = probes.map(p =>
+      s"SELECT CAST($p AS BIGINT) AS n_probe, ${recallSql(s"cmivf$p", k)}"
+    ).mkString(" UNION ALL ")
     crossModalBaseSql(nCells, iters, nQueries) + ", " +
       "cmrf AS (SELECT qid, cid, ROW_NUMBER() OVER " +
       "(PARTITION BY qid ORDER BY dist, cid) AS rn FROM cmd), " +
-      s"$perProbe, " +
-      "bfs AS (SELECT q.qid, c.vec_id AS nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(q.qv) + 1), k -> q.qv[k] * c.v[k])) / (q.qn * c.nrm), 6) " +
-      "AS cosine FROM cmq q, n c), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      s"(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) WHERE rnk <= $k) " +
+      s"$perProbe, ${crossModalGtSql(k)} " +
       s"SELECT * FROM ($recalls) ORDER BY n_probe, qid"
   }
 
@@ -862,63 +873,89 @@ object SimilarityQueries {
                                   nProbe: Int, nQueries: Int): String =
     crossModalCoreSql(nCells, iters, nProbe, nQueries) +
       s", ivf AS (SELECT qid, nid, 1 AS hit FROM cmr2 WHERE rank <= $k), " +
-      "bfs AS (SELECT q.qid, c.vec_id AS nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(q.qv) + 1), k -> q.qv[k] * c.v[k])) / (q.qn * c.nrm), 6) " +
-      "AS cosine FROM cmq q, n c), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      s"(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) WHERE rnk <= $k), " +
-      "rec AS (SELECT bf.qid, CAST(COUNT(ivf.hit) AS BIGINT) AS n_hit, " +
-      s"ROUND(COUNT(ivf.hit) / $k.0, 4) AS recall " +
-      "FROM bf LEFT JOIN ivf USING (qid, nid) GROUP BY bf.qid), " +
+      s"${crossModalGtSql(k)}, rec AS (SELECT ${recallSql("ivf", k)}), " +
       "ah AS (SELECT qid, CAST(MAX(CASE WHEN nid = qid THEN 1 ELSE 0 END) AS BIGINT) " +
       "AS aligned_hit FROM ivf GROUP BY qid) " +
       "SELECT rec.qid, rec.n_hit, rec.recall, ah.aligned_hit " +
       "FROM rec JOIN ah USING (qid) ORDER BY qid"
 
+  /** `table` bound as `alias`: bare when the two names agree. */
+  private def aliased(table: String, alias: String): String =
+    if (table == alias) table else s"$table $alias"
+
+  /** Per-subspace seeded Lloyd codebooks over the subvector CTE `sv`:
+    * `${p}cent0` = the first `nCodes` subvectors, then `iters` rounds on
+    * the 6-dp grid with a cid tie-break, the final distance table `${p}df`
+    * and each subvector's nearest code, `codes`. */
+  private def pqCodebookSql(p: String, nCodes: Int, iters: Int): String = {
+    def dist(name: String, cent: String) =
+      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ${l2Sql("s.s", "c.cv")} " +
+        s"AS dist FROM sv s JOIN $cent c USING (sub))"
+    val train = (1 to iters).map { t =>
+      dist(s"${p}d$t", s"${p}cent${t - 1}") + ", " +
+        s"${p}a$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
+        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
+        s"FROM ${p}d$t) WHERE rn = 1), " +
+        s"${p}s$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
+        s"FROM ${p}a$t a JOIN ${aliased(s"${p}u", "u")} ON u.vec_id = a.vec_id AND u.sub = a.sub " +
+        "GROUP BY a.sub, a.cid, u.pos), " +
+        s"${p}cent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM ${p}s$t " +
+        "GROUP BY sub, cid)"
+    }.mkString(", ")
+    s"${p}u AS (SELECT vec_id, sub, unnest(s) AS val, " +
+      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
+      s"${p}cent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
+      s"WHERE vec_id < $nCodes), " +
+      s"$train, " +
+      dist(s"${p}df", s"${p}cent$iters") + ", " +
+      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
+      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
+      s"FROM ${p}df) WHERE rn = 1)"
+  }
+
   /** DuckDB replay of [[Similarity.pqTopK]] up to the ranked-ADC CTE `r`:
     * subvector split → per-subspace Lloyd (same 6-dp grids + cid tie-break,
     * subspace as a grouping key) → encode → ADC distance-table scoring. */
   private def pqCoreSql(m: Int, nCodes: Int, iters: Int,
-                        nQueries: Int): String = {
-    def distCte(name: String, cent: String) =
-      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(s.s) + 1), i -> (s.s[i] - c.cv[i]) * (s.s[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM sv s JOIN $cent c USING (sub))"
-    val train = (1 to iters).map { t =>
-      distCte(s"d$t", s"cent${t - 1}") + ", " +
-        s"a$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
-        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-        s"FROM d$t) WHERE rn = 1), " +
-        s"s$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM a$t a JOIN u ON u.vec_id = a.vec_id AND u.sub = a.sub " +
-        "GROUP BY a.sub, a.cid, u.pos), " +
-        s"cent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM s$t " +
-        "GROUP BY sub, cid)"
-    }.mkString(", ")
-    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
+                        nQueries: Int): String =
+    s"WITH ${embCte("e")}, " +
       s"sv AS (SELECT vec_id, sub, list_slice(v, sub * (len(v) // $m) + 1, " +
       s"(sub + 1) * (len(v) // $m)) AS s FROM e, range(0, $m) r(sub)), " +
-      "u AS (SELECT vec_id, sub, unnest(s) AS val, " +
-      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
-      s"cent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
-      s"WHERE vec_id < $nCodes), " +
-      s"$train, " +
-      distCte("df", s"cent$iters") + ", " +
-      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
-      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-      "FROM df) WHERE rn = 1), " +
+      pqCodebookSql("", nCodes, iters) + ", " +
       s"dtab AS (SELECT vec_id AS qid, sub, cid, dist AS d FROM df " +
       s"WHERE vec_id < $nQueries), " +
       "sc AS (SELECT qid, nid, ROUND(SUM(d), 6) AS adist FROM codes " +
       "JOIN dtab USING (sub, cid) WHERE nid != qid GROUP BY qid, nid), " +
       "r AS (SELECT qid, nid, adist, ROW_NUMBER() OVER " +
       "(PARTITION BY qid ORDER BY adist, nid) AS rank FROM sc)"
-  }
 
   private def pqSql(m: Int, nCodes: Int, iters: Int, k: Int,
                     nQueries: Int): String =
     pqCoreSql(m, nCodes, iters, nQueries) +
       s" SELECT qid, rank, nid, adist FROM r WHERE rank <= $k ORDER BY qid, rank"
+
+  /** The exact L2 rerank of the shortlist `cand` (qid, nid): `resc`
+    * re-scores it from the full vectors of `e` and `rr` ranks it. */
+  private def l2RerankCtes: String =
+    s"resc AS (SELECT c.qid, c.nid, ${l2Sql("a.v", "b.v")} " +
+      "AS dist FROM cand c JOIN e a ON a.vec_id = c.qid " +
+      "JOIN e b ON b.vec_id = c.nid), " +
+      "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
+      "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc)"
+
+  private def l2RerankTopSql(k: Int): String =
+    s"SELECT qid, rank, nid, dist FROM rr WHERE rank <= $k ORDER BY qid, rank"
+
+  /** recall@k of the hit table `pq` against the exact brute-force L2
+    * top-k of the queries vec_id < `nQueries`. */
+  private def pqRecallTailSql(k: Int, nQueries: Int): String =
+    "bfs AS (SELECT a.vec_id AS qid, b.vec_id AS nid, " +
+      s"${l2Sql("a.v", "b.v")} AS dist " +
+      s"FROM e a, e b WHERE a.vec_id < $nQueries AND b.vec_id != a.vec_id), " +
+      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
+      "(PARTITION BY qid ORDER BY dist, nid) AS rnk FROM bfs) " +
+      s"WHERE rnk <= $k) " +
+      s"SELECT ${recallSql("pq", k)} ORDER BY qid"
 
   /** [[pqSql]]'s ranking truncated at `shortlist`, then exact L2 re-scored
     * from the full vectors — mirrors [[Similarity.pqRerankTopK]]. */
@@ -926,13 +963,7 @@ object SimilarityQueries {
                           shortlist: Int, nQueries: Int): String =
     pqCoreSql(m, nCodes, iters, nQueries) +
       s", cand AS (SELECT qid, nid FROM r WHERE rank <= $shortlist), " +
-      "resc AS (SELECT c.qid, c.nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(a.v) + 1), i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) " +
-      "AS dist FROM cand c JOIN e a ON a.vec_id = c.qid " +
-      "JOIN e b ON b.vec_id = c.nid), " +
-      "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc) " +
-      s"SELECT qid, rank, nid, dist FROM rr WHERE rank <= $k ORDER BY qid, rank"
+      s"$l2RerankCtes ${l2RerankTopSql(k)}"
 
   /** Recall of the PQ rerank path: pqRerankSql's shortlist + exact-rerank
     * CTE chain, then the same recall-vs-brute-force accounting as
@@ -941,23 +972,9 @@ object SimilarityQueries {
                                 shortlist: Int, nQueries: Int): String =
     pqCoreSql(m, nCodes, iters, nQueries) +
       s", cand AS (SELECT qid, nid FROM r WHERE rank <= $shortlist), " +
-      "resc AS (SELECT c.qid, c.nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(a.v) + 1), i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) " +
-      "AS dist FROM cand c JOIN e a ON a.vec_id = c.qid " +
-      "JOIN e b ON b.vec_id = c.nid), " +
-      "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc), " +
+      s"$l2RerankCtes, " +
       s"pq AS (SELECT qid, nid, 1 AS hit FROM rr WHERE rank <= $k), " +
-      "bfs AS (SELECT a.vec_id AS qid, b.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(a.v) + 1), " +
-      "i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) AS dist " +
-      s"FROM e a, e b WHERE a.vec_id < $nQueries AND b.vec_id != a.vec_id), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rnk FROM bfs) " +
-      s"WHERE rnk <= $k) " +
-      "SELECT bf.qid, CAST(COUNT(pq.hit) AS BIGINT) AS n_hit, " +
-      s"ROUND(COUNT(pq.hit) / $k.0, 4) AS recall " +
-      "FROM bf LEFT JOIN pq USING (qid, nid) GROUP BY bf.qid ORDER BY qid"
+      pqRecallTailSql(k, nQueries)
 
   /** DuckDB replay of [[Similarity.ivfPqRerankTopK]]: the ivfKmeansSql
     * training pipeline (i-prefixed CTEs) and the pqCoreSql pipeline
@@ -970,7 +987,7 @@ object SimilarityQueries {
       // PQ codebooks + codes.
       s"sv AS (SELECT vec_id, sub, list_slice(v, sub * (len(v) // $m) + 1, " +
       s"(sub + 1) * (len(v) // $m)) AS s FROM e, range(0, $m) r(sub)), " +
-      ivfPqCodesSql(nCodes, pqIters) +
+      pqCodebookSql("p", nCodes, pqIters) + ", " +
       s"dtab AS (SELECT vec_id AS qid, sub, cid, dist AS d FROM pdf " +
       s"WHERE vec_id < $nQueries), " +
       // ADC over probed cells only, shortlist, exact rerank.
@@ -995,15 +1012,14 @@ object SimilarityQueries {
       s"JOIN icent$ivfIters ic ON ic.cid = c.cell), " +
       s"sv AS (SELECT vec_id, sub, list_slice(r, sub * (len(r) // $m) + 1, " +
       s"(sub + 1) * (len(r) // $m)) AS s FROM rescv, range(0, $m) r2(sub)), " +
-      ivfPqCodesSql(nCodes, pqIters) +
+      pqCodebookSql("p", nCodes, pqIters) + ", " +
       // Query residual per PROBED cell; ADC table keyed by (qid, cell).
       s"qres AS (SELECT p.qid, p.cell, list_transform(range(1, len(e.v) + 1), " +
       s"i -> e.v[i] - ic.cv[i]) AS rq FROM probe p JOIN e ON e.vec_id = p.qid " +
       s"JOIN icent$ivfIters ic ON ic.cid = p.cell), " +
       s"qsv AS (SELECT qid, cell, sub, list_slice(rq, sub * (len(rq) // $m) + 1, " +
       s"(sub + 1) * (len(rq) // $m)) AS s FROM qres, range(0, $m) r3(sub)), " +
-      s"dtab AS (SELECT q.qid, q.cell, q.sub, c.cid, ROUND(list_sum(list_transform(" +
-      "range(1, len(q.s) + 1), i -> (q.s[i] - c.cv[i]) * (q.s[i] - c.cv[i]))), 6) AS d " +
+      s"dtab AS (SELECT q.qid, q.cell, q.sub, c.cid, ${l2Sql("q.s", "c.cv")} AS d " +
       s"FROM qsv q JOIN pcent$pqIters c USING (sub)), " +
       "sc AS (SELECT p.qid, c.nid, ROUND(SUM(t.d), 6) AS adist " +
       "FROM codes c JOIN cell cl ON cl.nid = c.nid JOIN probe p ON p.cell = cl.cell " +
@@ -1014,60 +1030,11 @@ object SimilarityQueries {
   /** The IVF-PQ replays' coarse quantizer, through the `cell` (inverted
     * file) and `probe` CTEs: the i-prefixed k-means over `e`. Ends in ", ". */
   private def ivfPqProbeSql(nCells: Int, ivfIters: Int, nProbe: Int,
-                            nQueries: Int): String = {
-    def iDist(name: String, cent: String) =
-      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM e, $cent c)"
-    val iTrain = (1 to ivfIters).map { t =>
-      iDist(s"id$t", s"icent${t - 1}") + ", " +
-        s"ia$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM id$t) WHERE rn = 1), " +
-        s"is$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM ia$t a JOIN iu u USING (vec_id) GROUP BY a.cid, u.pos), " +
-        s"icent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM is$t GROUP BY cid)"
-    }.mkString(", ")
-    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-      "iu AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM e), " +
-      s"icent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM e WHERE vec_id < $nCells), " +
-      s"$iTrain, " +
-      iDist("idf", s"icent$ivfIters") + ", " +
-      "irf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM idf), " +
+                            nQueries: Int): String =
+    s"WITH ${embCte("e")}, ${kmeansSql("i", "e", "e", nCells, ivfIters)}, " +
       "cell AS (SELECT vec_id AS nid, cid AS cell FROM irf WHERE rn = 1), " +
       s"probe AS (SELECT vec_id AS qid, cid AS cell FROM irf " +
       s"WHERE rn <= $nProbe AND vec_id < $nQueries), "
-  }
-
-  /** The IVF-PQ replays' product quantizer over the subvector CTE `sv`:
-    * the p-prefixed codebook training, the final distance table `pdf` and
-    * the `codes` index. Ends in ", ". */
-  private def ivfPqCodesSql(nCodes: Int, pqIters: Int): String = {
-    def pDist(name: String, cent: String) =
-      s"$name AS (SELECT s.vec_id, s.sub, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(s.s) + 1), i -> (s.s[i] - c.cv[i]) * (s.s[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM sv s JOIN $cent c USING (sub))"
-    val pTrain = (1 to pqIters).map { t =>
-      pDist(s"pd$t", s"pcent${t - 1}") + ", " +
-        s"pa$t AS (SELECT vec_id, sub, cid FROM (SELECT vec_id, sub, cid, " +
-        "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-        s"FROM pd$t) WHERE rn = 1), " +
-        s"ps$t AS (SELECT a.sub, a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM pa$t a JOIN pu u ON u.vec_id = a.vec_id AND u.sub = a.sub " +
-        "GROUP BY a.sub, a.cid, u.pos), " +
-        s"pcent$t AS (SELECT sub, cid, list(val ORDER BY pos) AS cv FROM ps$t " +
-        "GROUP BY sub, cid)"
-    }.mkString(", ")
-    "pu AS (SELECT vec_id, sub, unnest(s) AS val, " +
-      "unnest(range(1, len(s) + 1)) AS pos FROM sv), " +
-      s"pcent0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, s AS cv FROM sv " +
-      s"WHERE vec_id < $nCodes), " +
-      s"$pTrain, " +
-      pDist("pdf", s"pcent$pqIters") + ", " +
-      "codes AS (SELECT vec_id AS nid, sub, cid FROM (SELECT vec_id, sub, cid, " +
-      "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn " +
-      "FROM pdf) WHERE rn = 1), "
-  }
 
   /** The IVF-PQ replays' tail over their ADC scores `sc`: the ADC
     * shortlist, then the exact L2 rerank of its survivors. */
@@ -1075,23 +1042,71 @@ object SimilarityQueries {
     "r AS (SELECT qid, nid, ROW_NUMBER() OVER " +
       "(PARTITION BY qid ORDER BY adist, nid) AS srank FROM sc), " +
       s"cand AS (SELECT qid, nid FROM r WHERE srank <= $shortlist), " +
-      "resc AS (SELECT c.qid, c.nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(a.v) + 1), i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) " +
-      "AS dist FROM cand c JOIN e a ON a.vec_id = c.qid " +
-      "JOIN e b ON b.vec_id = c.nid), " +
-      "rr AS (SELECT qid, nid, dist, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rank FROM resc) " +
-      s"SELECT qid, rank, nid, dist FROM rr WHERE rank <= $k ORDER BY qid, rank"
+      s"$l2RerankCtes ${l2RerankTopSql(k)}"
 
-  /** DuckDB replay of [[Similarity.trainIvfCentroids]] + the IVF probe:
-    * cent0 = first-`nCells` seeds; each iteration ranks the sequential
-    * (v[i]-cv[i])² distance (rounded to the 6-dp grid, cid tie-break) and
-    * re-averages per (cell, dimension) onto the same grid — exactly the
-    * Spark arithmetic, so assignments match bit-for-bit. */
+  /** `name`: the 6-dp L2 distance of each vector `e` of `from` to every
+    * centroid of `cent`. */
+  private def centroidDistCte(name: String, from: String, cent: String): String =
+    s"$name AS (SELECT e.vec_id, c.cid, ${l2Sql("e.v", "c.cv")} AS dist FROM $from, $cent c)"
+
+  /** DuckDB replay of [[Similarity.trainIvfCentroids]] over the vectors
+    * of `src`: `${p}cent0` = its first `nCells` vectors; each of `iters`
+    * iterations ranks the sequential (v[i]-cv[i])² distance (rounded to
+    * the 6-dp grid, cid tie-break) and re-averages per (cell, dimension)
+    * onto the same grid — exactly the Spark arithmetic, so assignments
+    * match bit-for-bit. Then every vector of `assign` (bound as `e`) is
+    * ranked against the final centroids, as `${p}rf`. */
+  private def kmeansSql(p: String, src: String, assign: String, nCells: Int,
+                        iters: Int): String = {
+    val train = (1 to iters).map { t =>
+      centroidDistCte(s"${p}d$t", aliased(src, "e"), s"${p}cent${t - 1}") + ", " +
+        s"${p}a$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
+        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM ${p}d$t) WHERE rn = 1), " +
+        s"${p}s$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
+        s"FROM ${p}a$t a JOIN ${aliased(s"${p}u", "u")} USING (vec_id) GROUP BY a.cid, u.pos), " +
+        s"${p}cent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM ${p}s$t GROUP BY cid)"
+    }.mkString(", ")
+    s"${p}u AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM $src), " +
+      s"${p}cent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM $src WHERE vec_id < $nCells), " +
+      s"$train, " +
+      centroidDistCte(s"${p}df", assign, s"${p}cent$iters") + ", " +
+      s"${p}rf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
+      s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM ${p}df)"
+  }
+
+  /** The inverted file `cell`: each vector's nearest cell (by `rf`),
+    * with the vector and its norm. */
+  private def ivfCellCte: String =
+    "cell AS (SELECT r.vec_id AS nid, r.cid, n.v AS nv, n.nrm AS nn " +
+      "FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn = 1)"
+
+  /** `name`: each query's probed cells — the `rf` ranks `where` admits —
+    * with the query vector and norm (qid, cid, qv, qn). */
+  private def probeCte(name: String, where: String): String =
+    s"$name AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn " +
+      s"FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE $where)"
+
+  /** `name`: every member of the cells probed in `probe`, scored by cosine
+    * against its query; `rest` joins or filters the pairs. */
+  private def cellScoredCte(name: String, probe: String, rest: String): String =
+    s"$name AS (SELECT qid, nid, ${cosineSql("qv", "nv", "qn", "nn")} AS cosine " +
+      s"FROM $probe JOIN cell USING (cid) $rest)"
+
+  /** The IVF probe over `cell`: queries vec_id < `nQueries` probe their
+    * `nProbe` nearest cells, ranked as `r2`. */
+  private def ivfProbeRankSql(nProbe: Int, nQueries: Int): String =
+    probeCte("probe", s"r.rn <= $nProbe AND r.vec_id < $nQueries") + ", " +
+      cellScoredCte("scored", "probe", "WHERE nid != qid") + ", " +
+      rankedCte("r2", "scored")
+
+  private def r2TopSql(k: Int): String =
+    s" SELECT qid, rank, nid, cosine FROM r2 WHERE rank <= $k ORDER BY qid, rank"
+
+  /** DuckDB replay of the trained IVF top-k: [[kmeansSql]] training plus
+    * the nProbe cell probe. */
   private def ivfKmeansSql(nCells: Int, iters: Int, k: Int, nProbe: Int,
                            nQueries: Int): String =
-    ivfKmeansCoreSql(nCells, iters, nProbe, nQueries) +
-      s" SELECT qid, rank, nid, cosine FROM r2 WHERE rank <= $k ORDER BY qid, rank"
+    ivfKmeansCoreSql(nCells, iters, nProbe, nQueries) + r2TopSql(k)
 
   /** The `sim_ivf_served` oracle, shared with the streaming serve query
     * (`stream_ann_serve`): the micro-batch split of the query stream must
@@ -1108,14 +1123,7 @@ object SimilarityQueries {
     * brute-force top-k computed in the same statement. */
   private[queries] def ivfKmeansCoreSql(nCells: Int, iters: Int, nProbe: Int,
                                nQueries: Int): String =
-    ivfTrainedCellSql(nCells, iters) + ", " +
-      "probe AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn " +
-      s"FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn <= $nProbe AND r.vec_id < $nQueries), " +
-      "scored AS (SELECT qid, nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(qv) + 1), i -> qv[i] * nv[i])) / (qn * nn), 6) AS cosine " +
-      "FROM probe JOIN cell USING (cid) WHERE nid != qid), " +
-      "r2 AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      s"(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored)"
+    ivfTrainedCellSql(nCells, iters) + ", " + ivfProbeRankSql(nProbe, nQueries)
 
   /** DuckDB replay of [[Similarity.semanticContamination]]: the shared
     * trained-cell chain, the % 37 benchmark probe at nProbe 2, the
@@ -1123,17 +1131,12 @@ object SimilarityQueries {
     * census with clean rows preserved through LEFT JOINs. */
   private def semanticContaminationSql: String =
     ivfTrainedCellSql(nCells = 16, iters = 3) + ", " +
-      "probe AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn " +
-      "FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn <= 2 AND r.vec_id % 37 = 0), " +
-      "sc AS (SELECT qid, nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(qv) + 1), i -> qv[i] * nv[i])) / (qn * nn), 6) AS cosine " +
-      "FROM probe JOIN cell USING (cid) WHERE nid % 37 != 0), " +
+      probeCte("probe", "r.rn <= 2 AND r.vec_id % 37 = 0") + ", " +
+      cellScoredCte("sc", "probe", "WHERE nid % 37 != 0") + ", " +
       "hits AS (SELECT * FROM sc WHERE cosine >= 0.35), " +
       "cnt AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_hits, " +
       "MAX(cosine) AS top_cosine FROM hits GROUP BY qid), " +
-      "top AS (SELECT qid, nid AS top_nid FROM (SELECT qid, nid, " +
-      "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn " +
-      "FROM hits) WHERE rn = 1), " +
+      topCte("top", "qid, nid AS top_nid", "hits", "= 1", "rn") + ", " +
       "b AS (SELECT vec_id AS qid FROM e WHERE vec_id % 37 = 0) " +
       "SELECT b.qid, COALESCE(cnt.n_hits, 0) AS n_hits, " +
       "cnt.n_hits IS NOT NULL AS contaminated, top.top_nid, cnt.top_cosine " +
@@ -1143,29 +1146,8 @@ object SimilarityQueries {
   /** The k-means training replay through `rf` (full-corpus assignment
     * ranks) and `cell` (the final inverted file) — the probe-independent
     * prefix shared by every trained-IVF oracle. */
-  private def ivfTrainedCellSql(nCells: Int, iters: Int): String = {
-    def distCte(name: String, cent: String) =
-      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM e, $cent c)"
-    val train = (1 to iters).map { t =>
-      distCte(s"d$t", s"cent${t - 1}") + ", " +
-        s"a$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d$t) WHERE rn = 1), " +
-        s"s$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM a$t a JOIN u USING (vec_id) GROUP BY a.cid, u.pos), " +
-        s"cent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM s$t GROUP BY cid)"
-    }.mkString(", ")
-    s"WITH $normsCte, " +
-      "u AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM e), " +
-      s"cent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM e WHERE vec_id < $nCells), " +
-      s"$train, " +
-      distCte("df", s"cent$iters") + ", " +
-      "rf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM df), " +
-      "cell AS (SELECT r.vec_id AS nid, r.cid, n.v AS nv, n.nrm AS nn " +
-      "FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn = 1)"
-  }
+  private def ivfTrainedCellSql(nCells: Int, iters: Int): String =
+    s"WITH $normsCte, ${kmeansSql("", "e", "e", nCells, iters)}, $ivfCellCte"
 
   /** Hard-negative replay: the IVF ranking (depth `listK`) joined to the
     * exact top-1, positives removed, first `nNeg` survivors kept. */
@@ -1173,13 +1155,7 @@ object SimilarityQueries {
                                nNeg: Int, nProbe: Int, nQueries: Int): String =
     ivfKmeansCoreSql(nCells, iters, nProbe, nQueries) +
       s", ivf AS (SELECT qid, nid, rank FROM r2 WHERE rank <= $listK), " +
-      "bfs AS (SELECT q.vec_id AS qid, c.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(q.v) + 1), " +
-      "i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 6) AS cosine " +
-      s"FROM n q, n c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id), " +
-      "bf1 AS (SELECT qid, nid AS pos_id FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) " +
-      "WHERE rnk = 1), " +
+      exactCosSql(nQueries, "bf1", "qid, nid AS pos_id", "= 1") + ", " +
       "negs AS (SELECT i.qid, b.pos_id, i.nid AS neg_id, ROW_NUMBER() OVER " +
       "(PARTITION BY i.qid ORDER BY i.rank) AS neg_rank " +
       "FROM ivf i JOIN bf1 b ON b.qid = i.qid WHERE i.nid != b.pos_id) " +
@@ -1196,13 +1172,9 @@ object SimilarityQueries {
       "probe AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn, lq.label AS qlab " +
       s"FROM rf r JOIN n ON n.vec_id = r.vec_id JOIN lab lq ON lq.vec_id = r.vec_id " +
       s"WHERE r.rn <= $nProbe AND r.vec_id < $nQueries), " +
-      "scored AS (SELECT qid, nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(qv) + 1), i -> qv[i] * nv[i])) / (qn * nn), 6) AS cosine " +
-      "FROM probe JOIN cell USING (cid) JOIN lab la ON la.vec_id = nid " +
-      "WHERE nid != qid AND la.label = qlab), " +
-      "r2 AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
-      s"SELECT qid, rank, nid, cosine FROM r2 WHERE rank <= $k ORDER BY qid, rank"
+      cellScoredCte("scored", "probe",
+        "JOIN lab la ON la.vec_id = nid WHERE nid != qid AND la.label = qlab") + ", " +
+      rankedCte("r2", "scored") + r2TopSql(k)
 
   /** Recall@k at SEVERAL probe widths in one statement — the tuning
     * curve an ANN deployment publishes (recall vs probe cost). Training
@@ -1211,29 +1183,16 @@ object SimilarityQueries {
   private def ivfProbeSweepSql(nCells: Int, iters: Int, k: Int,
                                probes: Seq[Int], nQueries: Int): String = {
     val perProbe = probes.map { p =>
-      s"probe$p AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn " +
-        s"FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn <= $p AND r.vec_id < $nQueries), " +
-        s"scored$p AS (SELECT qid, nid, ROUND(list_sum(list_transform(" +
-        "range(1, len(qv) + 1), i -> qv[i] * nv[i])) / (qn * nn), 6) AS cosine " +
-        s"FROM probe$p JOIN cell USING (cid) WHERE nid != qid), " +
-        s"ivf$p AS (SELECT qid, nid, 1 AS hit FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored$p) WHERE rank <= $k)"
+      probeCte(s"probe$p", s"r.rn <= $p AND r.vec_id < $nQueries") + ", " +
+        cellScoredCte(s"scored$p", s"probe$p", "WHERE nid != qid") + ", " +
+        topCte(s"ivf$p", "qid, nid, 1 AS hit", s"scored$p", s"<= $k", "rank")
     }.mkString(", ")
-    val recalls = probes.map { p =>
-      s"SELECT CAST($p AS BIGINT) AS n_probe, bf.qid, " +
-        s"CAST(COUNT(ivf$p.hit) AS BIGINT) AS n_hit, " +
-        s"ROUND(COUNT(ivf$p.hit) / $k.0, 4) AS recall " +
-        s"FROM bf LEFT JOIN ivf$p USING (qid, nid) GROUP BY bf.qid"
-    }.mkString(" UNION ALL ")
+    val recalls = probes.map(p =>
+      s"SELECT CAST($p AS BIGINT) AS n_probe, ${recallSql(s"ivf$p", k)}"
+    ).mkString(" UNION ALL ")
     ivfTrainedCellSql(nCells, iters) + s", $perProbe, " +
-      "bfs AS (SELECT q.vec_id AS qid, c.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(q.v) + 1), " +
-      "i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 6) AS cosine " +
-      s"FROM n q, n c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) " +
-      s"WHERE rnk <= $k) " +
-      s"SELECT * FROM ($recalls) ORDER BY n_probe, qid"
+      exactCosSql(nQueries, "bf", "qid, nid", s"<= $k") +
+      s" SELECT * FROM ($recalls) ORDER BY n_probe, qid"
   }
 
   /** DuckDB replay of [[Similarity.ivfTopKIncremental]]: k-means training
@@ -1243,38 +1202,11 @@ object SimilarityQueries {
     * history-trained centroids, which is exactly the merged inverted file
     * (persisted history cells ∪ batch delta) the serve path probes. */
   private def ivfIncrementalSql(nCells: Int, iters: Int, k: Int, nProbe: Int,
-                                nQueries: Int): String = {
-    def distCte(name: String, src: String, cent: String) =
-      s"$name AS (SELECT e.vec_id, c.cid, ROUND(list_sum(list_transform(" +
-        "range(1, len(e.v) + 1), i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6) " +
-        s"AS dist FROM $src e, $cent c)"
-    val train = (1 to iters).map { t =>
-      distCte(s"d$t", "h", s"cent${t - 1}") + ", " +
-        s"a$t AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-        s"(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d$t) WHERE rn = 1), " +
-        s"s$t AS (SELECT a.cid, u.pos, ROUND(AVG(u.val), 6) AS val " +
-        s"FROM a$t a JOIN u USING (vec_id) GROUP BY a.cid, u.pos), " +
-        s"cent$t AS (SELECT cid, list(val ORDER BY pos) AS cv FROM s$t GROUP BY cid)"
-    }.mkString(", ")
+                                nQueries: Int): String =
     s"WITH $normsCte, " +
       "h AS (SELECT vec_id, v FROM e WHERE vec_id % 10 < 8), " +
-      "u AS (SELECT vec_id, unnest(v) AS val, unnest(range(1, len(v) + 1)) AS pos FROM h), " +
-      s"cent0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS cv FROM h WHERE vec_id < $nCells), " +
-      s"$train, " +
-      distCte("df", "e", s"cent$iters") + ", " +
-      "rf AS (SELECT vec_id, cid, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM df), " +
-      "cell AS (SELECT r.vec_id AS nid, r.cid, n.v AS nv, n.nrm AS nn " +
-      "FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn = 1), " +
-      "probe AS (SELECT r.vec_id AS qid, r.cid, n.v AS qv, n.nrm AS qn " +
-      s"FROM rf r JOIN n ON n.vec_id = r.vec_id WHERE r.rn <= $nProbe AND r.vec_id < $nQueries), " +
-      "scored AS (SELECT qid, nid, ROUND(list_sum(list_transform(" +
-      "range(1, len(qv) + 1), i -> qv[i] * nv[i])) / (qn * nn), 6) AS cosine " +
-      "FROM probe JOIN cell USING (cid) WHERE nid != qid), " +
-      "r2 AS (SELECT qid, nid, cosine, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rank FROM scored) " +
-      s"SELECT qid, rank, nid, cosine FROM r2 WHERE rank <= $k ORDER BY qid, rank"
-  }
+      s"${kmeansSql("", "h", "e e", nCells, iters)}, $ivfCellCte, " +
+      ivfProbeRankSql(nProbe, nQueries) + r2TopSql(k)
 
   /** Recall@k of the trained-IVF probe against exact brute-force cosine
     * top-k, per query — both rankings computed in one statement. */
@@ -1282,16 +1214,8 @@ object SimilarityQueries {
                            nQueries: Int): String =
     ivfKmeansCoreSql(nCells, iters, nProbe, nQueries) +
       s", ivf AS (SELECT qid, nid, 1 AS hit FROM r2 WHERE rank <= $k), " +
-      "bfs AS (SELECT q.vec_id AS qid, c.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(q.v) + 1), " +
-      "i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 6) AS cosine " +
-      s"FROM n q, n c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) " +
-      s"WHERE rnk <= $k) " +
-      "SELECT bf.qid, CAST(COUNT(ivf.hit) AS BIGINT) AS n_hit, " +
-      s"ROUND(COUNT(ivf.hit) / $k.0, 4) AS recall " +
-      "FROM bf LEFT JOIN ivf USING (qid, nid) GROUP BY bf.qid ORDER BY qid"
+      exactCosSql(nQueries, "bf", "qid, nid", s"<= $k") +
+      s" SELECT ${recallSql("ivf", k)} ORDER BY qid"
 
   /** MRR replay: the IVF ranking (trained probe, list depth `listK`)
     * left-joined against each query's exact cosine top-1. */
@@ -1299,14 +1223,8 @@ object SimilarityQueries {
                         nQueries: Int): String =
     ivfKmeansCoreSql(nCells, iters, nProbe, nQueries) +
       s", ivf AS (SELECT qid, nid, rank FROM r2 WHERE rank <= $listK), " +
-      "bfs AS (SELECT q.vec_id AS qid, c.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(q.v) + 1), " +
-      "i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm), 6) AS cosine " +
-      s"FROM n q, n c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id), " +
-      "bf1 AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk FROM bfs) " +
-      "WHERE rnk = 1) " +
-      "SELECT bf1.qid, COALESCE(ivf.rank, 0) AS first_hit_rank, " +
+      exactCosSql(nQueries, "bf1", "qid, nid", "= 1") +
+      " SELECT bf1.qid, COALESCE(ivf.rank, 0) AS first_hit_rank, " +
       "CASE WHEN ivf.rank IS NULL THEN 0.0 ELSE ROUND(1.0 / ivf.rank, 4) END AS rr " +
       "FROM bf1 LEFT JOIN ivf USING (qid, nid) ORDER BY qid"
 
@@ -1317,16 +1235,7 @@ object SimilarityQueries {
                           nQueries: Int): String =
     pqCoreSql(m, nCodes, iters, nQueries) +
       s", pq AS (SELECT qid, nid, 1 AS hit FROM r WHERE rank <= $k), " +
-      "bfs AS (SELECT a.vec_id AS qid, b.vec_id AS nid, " +
-      "ROUND(list_sum(list_transform(range(1, len(a.v) + 1), " +
-      "i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))), 6) AS dist " +
-      s"FROM e a, e b WHERE a.vec_id < $nQueries AND b.vec_id != a.vec_id), " +
-      "bf AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER " +
-      "(PARTITION BY qid ORDER BY dist, nid) AS rnk FROM bfs) " +
-      s"WHERE rnk <= $k) " +
-      "SELECT bf.qid, CAST(COUNT(pq.hit) AS BIGINT) AS n_hit, " +
-      s"ROUND(COUNT(pq.hit) / $k.0, 4) AS recall " +
-      "FROM bf LEFT JOIN pq USING (qid, nid) GROUP BY bf.qid ORDER BY qid"
+      pqRecallTailSql(k, nQueries)
 
   /** DuckDB replay of [[Similarity.mmrRerank]]: shortlist + pairwise sims,
     * then the k greedy rounds UNROLLED (p1/s1 … pk) — each round scores
@@ -1335,22 +1244,15 @@ object SimilarityQueries {
   private def mmrSql(shortlist: Int, k: Int, nQueries: Int,
                      lamTenths: Int = 7, muTenths: Int = 3): String = {
     val base =
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
-        "n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(range(1, len(v) + 1), " +
-        "i -> v[i] * v[i]))) AS nrm FROM e), " +
-        s"q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < $nQueries), " +
-        "sc AS (SELECT qid, c.vec_id AS nid, " +
-        "ROUND(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) " +
-        "/ (qn * c.nrm), 6) AS rel FROM q, n c WHERE c.vec_id != qid), " +
+      s"WITH $normsCte, ${queriesCte(nQueries)}, ${bruteScoredCte("sc", "rel")}, " +
         "sl AS (SELECT qid, nid, CAST(ROUND(rel * 1000000) AS BIGINT) AS reli " +
         "FROM (SELECT qid, nid, rel, ROW_NUMBER() OVER " +
         "(PARTITION BY qid ORDER BY rel DESC, nid) AS rk FROM sc) " +
         s"WHERE rk <= $shortlist), " +
         "sv AS (SELECT s.qid, s.nid, n.v, n.nrm FROM sl s JOIN n ON s.nid = n.vec_id), " +
         "ps AS (SELECT a.qid, a.nid AS a, b.nid AS b, " +
-        "CAST(ROUND(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) " +
-        "/ (a.nrm * b.nrm) * 1000000) AS BIGINT) AS simi FROM sv a JOIN sv b " +
-        "ON a.qid = b.qid AND a.nid != b.nid), " +
+        s"CAST(ROUND(${dotSql("a.v", "b.v")} / (a.nrm * b.nrm) * 1000000) AS BIGINT) " +
+        "AS simi FROM sv a JOIN sv b ON a.qid = b.qid AND a.nid != b.nid), " +
         "p1 AS (SELECT qid, nid, mmri FROM (SELECT qid, nid, mmri, ROW_NUMBER() OVER " +
         "(PARTITION BY qid ORDER BY mmri DESC, nid) AS rn FROM " +
         s"(SELECT qid, nid, $lamTenths * reli AS mmri FROM sl)) WHERE rn = 1), " +

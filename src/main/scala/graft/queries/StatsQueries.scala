@@ -81,9 +81,9 @@ object StatsQueries {
     // Array statistics per embedding — vec_dot (the native expression) in
     // an oracle-checked query.
     Q("q_array_stats",
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) " +
+      s"WITH ${SimilarityQueries.embCte("e")} " +
         "SELECT vec_id, list_min(v) AS vmin, list_max(v) AS vmax, " +
-        "ROUND(list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * v[i])), 6) AS sq_norm, " +
+        s"ROUND(${SimilarityQueries.dotSql("v", "v")}, 6) AS sq_norm, " +
         "len(v) AS dim FROM e ORDER BY vec_id") { (s, d) =>
       Tables.embeddings(s, d)
         .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))

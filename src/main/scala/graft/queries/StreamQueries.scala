@@ -515,19 +515,21 @@ object StreamQueries {
     * batch table (all-integer oracle — the estimate compares exactly). */
   private def streamHeavyHitters(s: SparkSession, dir: String, feed: Feed): DataFrame = {
     val probes = (1L to 10L).toSeq
-    val out = runStream(s, feed.stream(s)
+    // The probe estimates are projected inside the stream, after the
+    // aggregation: the sink holds ten small rows per day, not the day's
+    // 4×4096 grid, so reading it back ships no grid inside a task.
+    val est = runStream(s, feed.stream(s)
       .withColumn("eventTime", timestamp_micros(col("tsUs")))
       .withWatermark("eventTime", "1 hour")
       .groupBy(window(col("eventTime"), "1 day").as("w"))
       .agg(call_function("cms_sketch", col("userId")).as("sk"))
-      .select(unix_timestamp(col("w.start")).as("day_start"), col("sk")))
-    val est = out.select(col("day_start"),
+      .select(unix_timestamp(col("w.start")).as("day_start"),
         explode(array(probes.map(p => struct(
           lit(p).as("user_id"),
           call_function("cms_estimate", col("sk"), lit(p)).as("cms_count"))): _*))
           .as("e"))
       .select(col("day_start"), col("e.user_id").as("user_id"),
-        col("e.cms_count").as("cms_count"))
+        col("e.cms_count").as("cms_count")))
     val exact = Tables.events(s, dir)
       .where(col("user_id").isin(probes: _*))
       .groupBy((floor(expr("unix_micros(ts) div 1000000") / 86400) * 86400)
@@ -679,28 +681,13 @@ object StreamQueries {
     * v1.0.0 miscomputes struct-state list_reduce when the query processes
     * many rows at once — verified: the same fold is correct on a
     * single-wallet slice and wrong multi-row — so the oracle avoids it.) */
-  private def checkSql(windowSec: Long, threshold: Double): String = {
-    val next =
-      s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
-    val recv =
-      s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN 0.0 ELSE s.rc + d.amount END"
-    "WITH RECURSIVE dd AS (SELECT user_id AS wallet_id, epoch_us(ts) // 1000000 AS tsec, " +
-      "event_id AS seq, value AS amount FROM events WHERE value > 0), " +
-      "d AS (SELECT wallet_id, tsec, amount, " +
-      "ROW_NUMBER() OVER (PARTITION BY wallet_id ORDER BY tsec, seq) AS rn, " +
-      "COUNT(*) OVER (PARTITION BY wallet_id) AS n FROM dd), " +
-      "s AS (" +
-      "SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
-      "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
-      "UNION ALL " +
-      s"SELECT s.wallet_id, CAST($next AS BIGINT), $recv, " +
-      s"NOT (($recv) >= $threshold AND ($next) <> 0), s.rn + 1, s.n " +
-      "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1), " +
+  private def checkSql(windowSec: Long, threshold: Double): String =
+    s"WITH RECURSIVE ${CoreQueries.detectorDepositsCte}, ${CoreQueries.detectorStepsCte}, " +
+      CoreQueries.detectorFoldCte(windowSec, threshold, "0.0") + ", " +
       "b AS (SELECT wallet_id, ROUND(SUM(amount), 2) AS balance FROM dd GROUP BY wallet_id), " +
       "f AS (SELECT wallet_id, NOT fr AS above_threshold FROM s WHERE rn = n) " +
       "SELECT b.wallet_id, b.balance, COALESCE(f.above_threshold, FALSE) AS above_threshold " +
       "FROM b LEFT JOIN f USING (wallet_id) ORDER BY wallet_id"
-  }
 
   // Tuned so verdicts vary on the synthetic feed (1-day window, 300).
   private val tuned = query("stream_check_tuned", checkSql(86400L, 300.0),

@@ -14,12 +14,18 @@ import graft.sources.Tables
   */
 object TextQueries {
 
+  /** Whitespace token count of `text`, before its cast. */
+  private val wsLen = "len(string_split_regex(trim(text), '\\s+'))"
+
+  /** Each document's whitespace tokens `t`: the oracles' one tokenizer. */
+  private[queries] val toksCte =
+    "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents)"
+
   /** Shared CDC oracle chain through the per-chunk table `ch` (see
     * [[graft.operators.Corpus.cdcChunks]]): tokens → digest-gated
     * boundaries → running chunk ids → per-chunk span + content digest. */
   private val cdcChunkCte: String =
-    "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t " +
-      "FROM documents), " +
+    s"$toksCte, " +
       "tp AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS q FROM toks), " +
       "f AS (SELECT doc_id, q, t[q] AS tok, CASE WHEN q >= 4 AND " +
       "substr(md5(t[q-3] || ' ' || t[q-2] || ' ' || t[q-1] || ' ' || t[q]), 1, 1) = '0' " +
@@ -42,6 +48,33 @@ object TextQueries {
       "FROM ch ORDER BY doc_id, chunk_id"
 
   private val enPat = langMarkers.toMap.apply("en")
+
+  /** The text-feature columns the quality oracles share: whitespace
+    * tokens, English marker hits and punctuation marks per document. */
+  private[queries] val nTokensSql = s"$wsLen::BIGINT"
+  private[queries] val stopHitsSql = s"len(regexp_extract_all(lower(text), '$enPat'))::BIGINT"
+  private[queries] val nPunctSql = "len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT"
+
+  /** The text_quality composite over its inputs — the formula
+    * [[qualityScored]] mirrors. */
+  private def qualitySql(stopHits: String, nTokens: String, nTokensD: String,
+                         nPunct: String, nLenD: String): String =
+    s"0.4 * ($stopHits / $nTokensD) + 0.3 * LEAST(1.0, $nTokens / 100.0) " +
+      s"+ 0.3 * (1.0 - $nPunct / $nLenD)"
+
+  /** The composite over the feature table `f`'s columns. */
+  private val qualityColsSql =
+    qualitySql("stop_hits", "n_tokens", "n_tokens::DOUBLE", "n_punct", "n_len::DOUBLE")
+
+  /** The composite over a `documents` row's text, with no feature table. */
+  private[queries] val qualityTextSql =
+    qualitySql(stopHitsSql, nTokensSql, s"$wsLen::DOUBLE", nPunctSql, "length(text)::DOUBLE")
+
+  /** Per-doc feature table `f` (n_tokens, stop_hits, n_punct, n_len) over
+    * the `documents` rows that `where` admits. */
+  private def featuresCte(where: String): String =
+    s"f AS (SELECT doc_id, $nTokensSql AS n_tokens, $stopHitsSql AS stop_hits, " +
+      s"$nPunctSql AS n_punct, length(text)::BIGINT AS n_len FROM documents$where)"
 
   /** Per-doc quality features + weighted composite — ONE implementation
     * shared by text_quality (the batch census) and stream_quality_gate
@@ -86,15 +119,8 @@ object TextQueries {
     * caveat in [[qualityScored]]: n_len = 0 divides to NULL in DuckDB,
     * which the Spark side mirrors explicitly). */
   private[queries] val qualityFeedCtes =
-    "f AS (SELECT doc_id, " +
-      "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens, " +
-      s"len(regexp_extract_all(lower(text), '$enPat'))::BIGINT AS stop_hits, " +
-      "len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT AS n_punct, " +
-      "length(text)::BIGINT AS n_len FROM documents WHERE doc_id % 5 = 0), " +
-      "q AS (SELECT doc_id, n_tokens, " +
-      "0.4 * (stop_hits / n_tokens::DOUBLE) " +
-      "+ 0.3 * LEAST(1.0, n_tokens / 100.0) " +
-      "+ 0.3 * (1.0 - n_punct / n_len::DOUBLE) AS quality FROM f)"
+    s"${featuresCte(" WHERE doc_id % 5 = 0")}, " +
+      s"q AS (SELECT doc_id, n_tokens, $qualityColsSql AS quality FROM f)"
 
   private[queries] def qualityGateStreamSql(tau: Double): String =
     s"WITH $qualityFeedCtes " +
@@ -135,26 +161,22 @@ object TextQueries {
     // Quality scoring: token stats, stopword ratio, punctuation ratio, and a
     // weighted composite — the classic pre-training corpus filter features.
     Q("text_quality",
-      "WITH f AS (SELECT doc_id, " +
-        "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens, " +
+      s"WITH f AS (SELECT doc_id, $nTokensSql AS n_tokens, " +
         "length(regexp_replace(text, '\\s', '', 'g'))::BIGINT AS n_nonspace, " +
-        s"len(regexp_extract_all(lower(text), '$enPat'))::BIGINT AS stop_hits, " +
-        "len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT AS n_punct, " +
+        s"$stopHitsSql AS stop_hits, $nPunctSql AS n_punct, " +
         "length(text)::BIGINT AS n_len FROM documents) " +
         "SELECT doc_id, n_tokens, " +
         "n_nonspace / n_tokens::DOUBLE AS avg_token_len, " +
         "stop_hits / n_tokens::DOUBLE AS stopword_ratio, " +
         "n_punct / n_len::DOUBLE AS punct_ratio, " +
-        "0.4 * (stop_hits / n_tokens::DOUBLE) " +
-        "+ 0.3 * LEAST(1.0, n_tokens / 100.0) " +
-        "+ 0.3 * (1.0 - n_punct / n_len::DOUBLE) AS quality " +
+        s"$qualityColsSql AS quality " +
         "FROM f ORDER BY doc_id") { (s, d) =>
       qualityScored(Tables.documents(s, d)).orderBy(col("doc_id"))
     },
 
     // Token counting: whitespace tokens vs a BPE-ish regex segmentation.
     Q("text_token_count",
-      "SELECT doc_id, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, " +
+      s"SELECT doc_id, $nTokensSql AS ws_tokens, " +
         "len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT AS bpe_tokens, " +
         "length(text)::BIGINT AS n_len FROM documents ORDER BY doc_id") { (s, d) =>
       Tables.documents(s, d).select(
@@ -387,11 +409,7 @@ object TextQueries {
     // The keep decision compares z against 0 EXACTLY (no transcendental
     // on the decision path); the sigmoid score is rounded to 6.
     Q("text_quality_model",
-      "WITH f AS (SELECT doc_id, " +
-        "len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens, " +
-        s"len(regexp_extract_all(lower(text), '$enPat'))::BIGINT AS stop_hits, " +
-        "len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::BIGINT AS n_punct, " +
-        "length(text)::BIGINT AS n_len FROM documents), " +
+      s"WITH ${featuresCte("")}, " +
         "z AS (SELECT doc_id, 4.0 * (stop_hits / n_tokens::DOUBLE) " +
         "- 6.0 * (n_punct / n_len::DOUBLE) + 0.02 * n_tokens::DOUBLE - 2.0 AS z FROM f) " +
         "SELECT doc_id, ROUND(1.0 / (1.0 + exp(-z)), 6) AS score, z >= 0.0 AS keep " +

@@ -19,6 +19,12 @@ import graft.sources.Tables
   */
 object WarehouseQueries {
 
+  /** Per-(event_type, day) totals `d`, rounded to 2 dp, over the events
+    * `e` bucketed by epoch day. */
+  private val dailyTotalsCtes =
+    "e AS (SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value FROM events), " +
+      "d AS (SELECT event_type, day, ROUND(SUM(value), 2) AS total FROM e GROUP BY 1, 2)"
+
   val all: Seq[Q] = Seq(
 
     // Gap-based sessionization (the batch counterpart of the streaming
@@ -385,8 +391,7 @@ object WarehouseQueries {
     // the frame fold sees identical values in both engines; the ordered
     // frame itself folds in the same row order everywhere.
     Q("q_gapfill_ma",
-      "WITH e AS (SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value FROM events), " +
-        "d AS (SELECT event_type, day, ROUND(SUM(value), 2) AS total FROM e GROUP BY 1, 2), " +
+      s"WITH $dailyTotalsCtes, " +
         "mm AS (SELECT event_type, MIN(day) AS mn, MAX(day) AS mx FROM d GROUP BY 1), " +
         "spine AS (SELECT event_type, unnest(range(mn, mx + 1)) AS day FROM mm), " +
         "f AS (SELECT s.event_type, s.day, COALESCE(d.total, 0.0) AS total " +
@@ -418,8 +423,7 @@ object WarehouseQueries {
     // average two rounded values, identical interpolation in both
     // engines. Same bounded (type, day) window partition as its siblings.
     Q("q_rolling_median",
-      "WITH e AS (SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value FROM events), " +
-        "d AS (SELECT event_type, day, ROUND(SUM(value), 2) AS total FROM e GROUP BY 1, 2) " +
+      s"WITH $dailyTotalsCtes " +
         "SELECT event_type, day, total, ROUND(MEDIAN(total) OVER " +
         "(PARTITION BY event_type ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS med7 " +
         "FROM d ORDER BY event_type, day") { (s, d) =>
@@ -442,8 +446,7 @@ object WarehouseQueries {
     // the ratio divides two 2-dp-rounded totals (NULLIF guards a zero
     // prior day identically in both engines) and rounds to 6.
     Q("q_period_over_period",
-      "WITH e AS (SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value FROM events), " +
-        "d AS (SELECT event_type, day, ROUND(SUM(value), 2) AS total FROM e GROUP BY 1, 2), " +
+      s"WITH $dailyTotalsCtes, " +
         "w AS (SELECT event_type, day, total, " +
         "LAG(total) OVER (PARTITION BY event_type ORDER BY day) AS prev FROM d) " +
         "SELECT event_type, day, total, prev, " +

@@ -4,8 +4,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bench.Ledger]]: every job a timed run submits, from its own thread or
-  * from one it starts, is charged to that run beside its wall time, and a
-  * run that throws leaves no sample. */
+  * from one it starts, is charged to that run beside its wall time, a run
+  * that throws leaves no sample, and each query reports the minimum of
+  * its runs beside their median. */
 class BenchLedgerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val ledger = new Bench.Ledger(spark)
@@ -36,6 +37,21 @@ class BenchLedgerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     assert(first("jobs") > second("jobs"), s"first $first, second $second")
   }
 
+  test("the minimum of each field is its least run, reported under \"min\"") {
+    val q = "o9_balance_from_history"
+    (1 to 3).foreach(_ => run(q))
+    ledger.drain()
+    val ss = ledger.samples(q)
+    val (min, med) = (ledger.minima(q), ledger.medians(q))
+    assert(ss.size == 3 && min.keySet == med.keySet, (ss, min, med))
+    min.foreach { case (k, v) =>
+      assert(v == ss.map(_(k)).min && v <= med(k), (k, ss, min, med))
+    }
+    val json = ledger.json(Seq(q, "never_ran"))
+    assert(json.startsWith("\"ledger\":{\"" + q + "\":{\"jobs\":"), json)
+    assert(json.contains(",\"min\":{\"jobs\":") && !json.contains("never_ran"), json)
+  }
+
   test("a run that throws records no sample") {
     intercept[Exception] {
       ledger.record("failing") {
@@ -47,5 +63,6 @@ class BenchLedgerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     ledger.drain()
     assert(ledger.samples("failing").isEmpty)
     assert(ledger.medians("failing").isEmpty)
+    assert(ledger.minima("failing").isEmpty)
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * forks, and the stream queries start through one harness. Persisted
   * indexes have one identity: one fingerprint and one root, both in
   * [[operators.IndexCache]]. Knobs are read by the mains alone, and specs
-  * take their scratch directories from [[TestDirs]]. */
+  * take their scratch directories from [[TestDirs]]. The query packs'
+  * DuckDB oracles write each shared fragment once. */
 class SessionSetupGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -138,6 +139,37 @@ class SessionSetupGuardSpec extends AnyFunSuite {
   test("Dedup writes the banded-MinHash candidate self-join once") {
     val found = hits(operator("Dedup.scala"), "bandRows" + ".as(\"a\")")
     assert(found.size == 1, found)
+  }
+
+  // The DuckDB oracles: a fragment more than one query uses is written
+  // once, in the pack that owns the concept, and every query calls it.
+  // Needles spelled in two parts, so this file is no hit of its own scan.
+  test("the query packs write the MinHash signature CTE once") {
+    val found = hits(queryPacks, "list_min(list_transform(s, x -> " + "md5(")
+    assert(found.map(_._1) == Seq("DedupQueries.scala"), found)
+  }
+
+  test("the query packs write the list dot product under every cosine once") {
+    val dot = ("""list_transform\(range\(1, len\(\S+\) \+ 1\), """ +
+      """\S+ -> \S+\[\S+\] \* \S+\[\S+\]\)\)""").r
+    val found = hitsWhere(queryPacks)(dot.findFirstIn(_).nonEmpty)
+    assert(found.map(_._1) == Seq("SimilarityQueries.scala"), found)
+  }
+
+  test("the query packs write the embeddings CTE once") {
+    val found = hits(queryPacks, "embedding::DOUBLE[] AS v " + "FROM embeddings")
+    assert(found.map(_._1) == Seq("SimilarityQueries.scala"), found)
+  }
+
+  test("the query packs write the detector replay's deposit CTE once") {
+    val found = hits(queryPacks, "epoch_us(ts) // 1000000 " + "AS tsec")
+    assert(found.map(_._1) == Seq("CoreQueries.scala"), found)
+  }
+
+  test("the query packs write the co-purchase graph's lp and ed CTEs once") {
+    val found = Seq("l_partkey AS p " + "FROM lineitem", "JOIN lp b ON a.o = b.o " + "AND a.p <> b.p")
+      .flatMap(hits(queryPacks, _))
+    assert(found.map(_._1) == Seq("GraphQueries.scala", "GraphQueries.scala"), found)
   }
 
   // The sketch layer: one aggregate drives every family, and the key check
