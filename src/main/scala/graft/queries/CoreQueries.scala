@@ -43,15 +43,16 @@ object CoreQueries {
   /** The detector state machine as the recursive CTE `s`: step rn folds
     * each wallet's rn-th deposit of `d` into its window start `st`,
     * running sum `rc` and flag-removed bit `fr`. `reset` is the sum a
-    * window expiry restarts from. */
+    * window expiry restarts from; `hint` (e.g. `/*+ BROADCAST(d) */ `)
+    * heads the recursive step's select list. */
   private[queries] def detectorFoldCte(windowSec: Long, threshold: Double,
-                                       reset: String): String = {
+                                       reset: String, hint: String = ""): String = {
     val next = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
     val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN $reset ELSE s.rc + d.amount END"
     "s AS (SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
       "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
       "UNION ALL " +
-      s"SELECT s.wallet_id, CAST($next AS BIGINT), $recv, " +
+      s"SELECT ${hint}s.wallet_id, CAST($next AS BIGINT), $recv, " +
       s"NOT (($recv) >= $threshold AND ($next) <> 0), s.rn + 1, s.n " +
       "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1)"
   }

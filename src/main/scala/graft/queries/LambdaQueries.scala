@@ -33,6 +33,14 @@ object LambdaQueries {
     */
   private val anchorSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** q_recursive_machine's detector fold (1-day window, threshold 300)
+    * and result, shared by its oracle and its Spark SQL. */
+  private def recursiveMachineFold(hint: String): String =
+    CoreQueries.detectorFoldCte(86400L, 300.0, "CAST(0.0 AS DOUBLE)", hint)
+  private def recursiveMachineResult: String =
+    " SELECT wallet_id, ROUND(rc, 2) AS win_sum_10, NOT fr AS above_threshold " +
+      "FROM s WHERE rn = n ORDER BY wallet_id"
+
   val all: Seq[Q] = Seq(
 
     Q("q_higher_order",
@@ -120,12 +128,7 @@ object LambdaQueries {
         "d0 AS (SELECT wallet_id, tsec, amount, " +
         "ROW_NUMBER() OVER (PARTITION BY wallet_id ORDER BY tsec, seq) AS rn FROM dd), " +
         "d AS (SELECT wallet_id, tsec, amount, rn, 10 AS n FROM d0 WHERE rn <= 10), " +
-        CoreQueries.detectorFoldCte(86400L, 300.0, "CAST(0.0 AS DOUBLE)") +
-        " SELECT wallet_id, ROUND(rc, 2) AS win_sum_10, NOT fr AS above_threshold " +
-        "FROM s WHERE rn = n ORDER BY wallet_id") { (s, d) =>
-      val windowSec = 86400L; val threshold = 300.0
-      val nxt = s"CASE WHEN s.st = 0 THEN d.tsec WHEN d.tsec - s.st > $windowSec THEN 0 ELSE s.st END"
-      val recv = s"CASE WHEN s.st <> 0 AND d.tsec - s.st > $windowSec THEN CAST(0.0 AS DOUBLE) ELSE s.rc + d.amount END"
+        recursiveMachineFold("") + recursiveMachineResult) { (s, d) =>
       Tables.registerAll(s, d)
       // Materialize the tiny anchor relation ONCE (scan + window + depth
       // cap ≈ 10 rows/wallet): each recursion round re-evaluates every
@@ -171,16 +174,8 @@ object LambdaQueries {
       // side never shuffles and the unrolled plan drops 10 exchange
       // pairs. At 100-TB wallet counts the hint comes off and the rounds
       // revert to keyed shuffles; depth still bounds the iteration count.
-      val out = s.sql(
-        s"WITH RECURSIVE d AS (SELECT * FROM $view), " +
-          "s AS (SELECT wallet_id, CAST(0 AS BIGINT) AS st, CAST(0.0 AS DOUBLE) AS rc, " +
-          "true AS fr, CAST(0 AS BIGINT) AS rn, n FROM (SELECT DISTINCT wallet_id, n FROM d) " +
-          "UNION ALL " +
-          s"SELECT /*+ BROADCAST(d) */ s.wallet_id, CAST($nxt AS BIGINT), $recv, " +
-          s"NOT (($recv) >= $threshold AND ($nxt) <> 0), s.rn + 1, s.n " +
-          "FROM s JOIN d ON d.wallet_id = s.wallet_id AND d.rn = s.rn + 1) " +
-          "SELECT wallet_id, ROUND(rc, 2) AS win_sum_10, NOT fr AS above_threshold " +
-          "FROM s WHERE rn = n ORDER BY wallet_id")
+      val out = s.sql(s"WITH RECURSIVE d AS (SELECT * FROM $view), " +
+        recursiveMachineFold("/*+ BROADCAST(d) */ ") + recursiveMachineResult)
       // sql() analyzes eagerly — the plan holds the resolved relation, so
       // the name can be retired immediately (no session-global leak).
       s.catalog.dropTempView(view)

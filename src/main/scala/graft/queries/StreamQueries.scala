@@ -6,20 +6,21 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.Q
 import graft.model.{KeyedFlagEvent, TimedDeposit}
-import graft.operators.{IndexCache, Maintenance}
+import graft.operators.{DepositOps, IndexCache, Maintenance}
 import graft.sources.Tables
-import graft.streaming.{DepositStreams, DetectorLogic}
+import graft.streaming.{DetectorLogic, KafkaTopology}
+import graft.streaming.DepositStreams.{BalanceRow, FlagRow}
 
-/** The REAL Structured Streaming pipeline (file-backed replay log →
-  * detector → flagger + collector, chained streaming queries exactly like
-  * the reference's Kafka-linked processors) run under the driver's
-  * correctness contract: the DuckDB oracle replays the same per-wallet
-  * sequential state machine as a recursive-CTE fold over the time-ordered
-  * deposit list.
+/** The REAL Structured Streaming pipeline under the driver's correctness
+  * contract: the `stream_check*` queries run the deployment's own
+  * processor topology ([[KafkaTopology.runProcessors]]: collector and
+  * detector over the deposits, detector → flag-event edge → flagger),
+  * and the DuckDB oracle replays the same per-wallet sequential state
+  * machine as a recursive-CTE fold over the time-ordered deposit list.
   *
   * Feed shape (reference: processors consume a replayable Kafka log,
   * cmd/processor/main.go — they are never handed an in-memory array):
@@ -27,24 +28,24 @@ import graft.streaming.{DepositStreams, DetectorLogic}
   *  - each feed is written ONCE per sf dir (a [[Feed]], built through
   *    [[Workspace.once]]) and consumed as a distributed stream source;
   *    nothing is collected to the driver;
-  *  - detector (hop 1) and collector both consume the deposit feed as
-  *    parallel consumer groups (reference runs them concurrently,
-  *    cmd/processor/main.go:30-41) — both queries are started before
-  *    either is awaited;
-  *  - the detector→flagger edge is a parquet file SINK that hop 2
-  *    `readStream`s — the stand-in for the `flag_wallet` topic, replacing
-  *    the former driver-side collect between hops. On a feed that lands in
-  *    one micro-batch, hop 2 is STARTED concurrently with hop 1 (its sink
-  *    metadata dir is pre-created so the file source reads only
-  *    sink-committed files) and awaited after hop 1 completes — query
-  *    start + state-store instantiation overlap hop 1's execution.
+  *  - the topology takes the feed's stream where a deployment takes the
+  *    `deposit` topic: detector and collector consume it as parallel
+  *    consumer groups (cmd/processor/main.go:30-41), all three queries
+  *    started before any is awaited;
+  *  - the detector→flagger edge is a parquet file SINK that the flagger
+  *    `readStream`s — the stand-in for the `flag_wallet` topic. The
+  *    flagger starts beside the detector (its sink metadata dir is
+  *    pre-created so the file source reads only sink-committed files)
+  *    and is drained after it; whatever micro-batches it takes, each
+  *    changelog row carries its batch id and the latest one per wallet
+  *    is the flag.
   *
   * One harness runs every stream: a [[Run]] starts each query of a
-  * topology with its checkpoint under one fresh work dir, memory sinks
-  * under fresh view names, and on the way out — finished or failed —
-  * stops every query it started, drops its views and deletes the dir.
-  * [[drain]] awaits a query and records its state and latency metrics.
-  * [[runStream]] is a one-query run into a memory sink,
+  * topology with its checkpoint under one fresh work dir (or tracks the
+  * queries a topology started itself), memory sinks under fresh view
+  * names, and on the way out — finished or failed — stops every query
+  * it started or tracks, drops its views and deletes the dir. [[drain]]
+  * awaits a query. [[runStream]] is a one-query run into a memory sink,
   * [[foreachBatchReplay]] a one-query run that probes each micro-batch,
   * and [[streamCheck]] the three-query processor topology.
   *
@@ -80,11 +81,9 @@ import graft.streaming.{DepositStreams, DetectorLogic}
 object StreamQueries {
 
   /** A feed written once per (JVM, sf dir): its directory (the
-    * materialized outputs are fingerprinted on its listing), how a stream
-    * reads it, and whether that stream takes the whole feed in its first
-    * micro-batch (`oneBatch`) or replays it over several. */
-  private final case class Feed(path: String, stream: SparkSession => DataFrame,
-                                oneBatch: Boolean)
+    * materialized outputs are fingerprinted on its listing) and how a
+    * stream reads it. */
+  private final case class Feed(path: String, stream: SparkSession => DataFrame)
 
   /** A parquet feed built once per (JVM, kind, sf dir): `write` fills a
     * fresh workspace path and returns the schema it wrote, which every
@@ -98,7 +97,7 @@ object StreamQueries {
       Feed(path, { s =>
         val r = s.readStream.schema(schema)
         (if (oneBatch) r else r.option("maxFilesPerTrigger", "1")).parquet(path)
-      }, oneBatch)
+      })
     }
 
   private def written(df: DataFrame, path: String): StructType = {
@@ -169,8 +168,7 @@ object StreamQueries {
         .option("maxSegmentsPerTrigger", "1")
         .load(path)
         .select(col("wallet_id").as("walletId"), col("amount"),
-          col("ts_unix").as("tsUnix"), col("offset").as("seq")),
-        oneBatch = false)
+          col("ts_unix").as("tsUnix"), col("offset").as("seq")))
     }
 
   /** Typed full-event feed (type column retained) for the event
@@ -244,8 +242,8 @@ object StreamQueries {
         .select(col("vec_id"), col("embedding"), col("label")).repartition(3), _))
 
   /** One stream run: every query it starts checkpoints under one fresh
-    * work dir, and [[close]] stops every query it started, drops its
-    * memory-sink views and deletes the dir — a failure must not orphan a
+    * work dir, and [[close]] stops every query it started or tracks,
+    * drops its memory-sink views and deletes the dir — a failure must not orphan a
     * running query (it would keep executing no-data batches against the
     * feed for the rest of the JVM) nor leak the view names or the dir. */
   private final class Run(s: SparkSession) {
@@ -253,11 +251,11 @@ object StreamQueries {
     private val started = ArrayBuffer.empty[StreamingQuery]
     private val views = ArrayBuffer.empty[String]
 
-    def start(w: DataStreamWriter[_]): StreamingQuery = {
-      val q = w.option("checkpointLocation", s"$work/cp${started.size}").start()
-      started += q
-      q
-    }
+    def start(w: DataStreamWriter[_]): StreamingQuery =
+      track(w.option("checkpointLocation", s"$work/cp${started.size}").start())
+
+    /** Stops `q`, started elsewhere, with the run's own queries. */
+    def track(q: StreamingQuery): StreamingQuery = { started += q; q }
 
     /** Starts `ds` into a memory sink; returns the query and its view. */
     def toMemory(ds: Dataset[_], outputMode: String): (StreamingQuery, String) = {
@@ -402,67 +400,42 @@ object StreamQueries {
       IndexCache.resolvedFrame(s, path).orderBy(order.map(col): _*)
     }
 
-  /** The processor topology over a deposit feed: detector → flag-event
-    * log → flagger, with the collector beside the detector. */
+  /** The deployment's processor topology ([[KafkaTopology.runProcessors]])
+    * over a deposit feed, its detector→flagger edge a parquet flag-event
+    * log (the flag_wallet topic stand-in), read as the serve path reads
+    * it: [[DepositOps.check]] over the latest row of each wallet in the
+    * two changelog tables. The topology's state dir lies outside the run's
+    * work dir, so its tables outlive the run's teardown. */
   private def streamCheck(s: SparkSession, feed: Feed, windowSec: Long,
                           threshold: Double): DataFrame = {
     import s.implicits._
-    def deposits = feed.stream(s).as[TimedDeposit]
+    val state = Workspace.fresh("topology")
+    val flagDir = s"$state/flag_events"
+    // Pre-create the sink's metadata dir so the flagger's file source,
+    // started beside the detector, classifies flagDir as sink output from
+    // the first poll and only ever reads sink-COMMITTED files (never a
+    // half-written part file).
+    new java.io.File(s"$flagDir/_spark_metadata").mkdirs()
+    // Spark's default trigger: the deployment's 5 s one would add seconds
+    // to every stand-up.
     inRun(s) { run =>
-      // Hop 1: deposits → detector → flag-event LOG (parquet sink = the
-      // flag_wallet topic stand-in; detector output is append by design).
-      val flagDir = s"${run.work}/flag_events"
-      // Pre-create the sink's metadata dir so hop 2's file source, started
-      // concurrently below, classifies flagDir as sink output from the
-      // first poll and only ever reads sink-COMMITTED files (never a
-      // half-written part file).
-      new java.io.File(s"$flagDir/_spark_metadata").mkdirs()
-      val q1 = run.start(DepositStreams.detector(s, deposits, windowSec, threshold)
-        .writeStream.format("parquet").option("path", flagDir).outputMode("append"))
-
-      // Collector: parallel consumer group over the SAME feed — started
-      // before hop 1 is awaited, so both run concurrently.
-      val (q3, balView) = run.toMemory(DepositStreams.collector(s, deposits), "update")
-
-      // Hop 2: flagger consumes the flag-event log (LWW state, update
-      // mode). When the feed lands in one micro-batch, hop 1 commits
-      // exactly once, so the flagger is started NOW — before hop 1 is
-      // awaited — so its query-start and state-store setup overlap hop 1's
-      // execution, and its single data batch still sees the whole
-      // committed log at once. A feed replayed over several micro-batches
-      // makes hop 1 commit per batch, so an early-started flagger could
-      // consume the log across several batches and leave one update-mode
-      // snapshot row per wallet per batch — with no batch id in the sink
-      // there is no deterministic "latest" to reduce to; there it starts
-      // after hop 1, reading everything in one batch.
-      def startFlagger() = run.toMemory(DepositStreams.flagger(s,
+      val Seq(collector, detector, flagger) = KafkaTopology.runProcessors(s,
+        feed.stream(s).as[TimedDeposit],
+        _.writeStream.format("parquet").option("path", flagDir).outputMode("append"),
         s.readStream.schema(Encoders.product[KeyedFlagEvent].schema)
-          .parquet(flagDir).as[KeyedFlagEvent]), "update")
-      val early = if (feed.oneBatch) Some(startFlagger()) else None
-
-      drain(q1)
-      drain(q3)
-      val (q2, flagView) = early.getOrElse(startFlagger())
-      drain(q2)
-      val flags = s.table(flagView)
-        .select(col("walletId").cast("long").as("wallet_id"),
-          col("flagged").as("above_threshold"))
-
-      // Update-mode memory sink APPENDS each batch's refreshed rows; with
-      // the chunked feed a wallet may carry one row per touched batch, the
-      // latest being the one with the largest (strictly increasing)
-      // deposit count — max_by collapses to it (identity when the feed is
-      // one batch and each wallet has exactly one row).
-      val balances = s.table(balView)
-        .groupBy(col("walletId").cast("long").as("wallet_id"))
-        .agg(round(max_by(col("balance"), col("nDeposits")), 2).as("balance"))
-
-      // Analyzed eagerly, so the plan holds the resolved memory-sink
-      // relations — the views and work dir can be retired at teardown.
-      balances.join(flags, Seq("wallet_id"), "left_outer")
-        .select(col("wallet_id"), col("balance"),
-          coalesce(col("above_threshold"), lit(false)).as("above_threshold"))
+          .parquet(flagDir).as[KeyedFlagEvent],
+        state, KafkaTopology.Processors.toSet, Trigger.ProcessingTime(0L),
+        windowSec, threshold).map(run.track)
+      drain(detector)
+      drain(collector)
+      drain(flagger)
     }
+    val walletId = col("walletId").cast("long").as("wallet_id")
+    DepositOps.check(
+      KafkaTopology.latest[BalanceRow](s, s"$state/balance-table")
+        .select(walletId, round(col("balance"), 2).as("balance")),
+      KafkaTopology.latest[FlagRow](s, s"$state/flagger-table")
+        .select(walletId, col("flagged")))
   }
 
   /** Per-day deposit-amount quantiles maintained BY THE STREAM: the

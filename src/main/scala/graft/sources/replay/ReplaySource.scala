@@ -403,7 +403,7 @@ final class ReplayScanBuilder(path: String, maxSegs: Option[Int],
     if (orders.length != 1) return false
     orders(0).expression() match {
       case r: NamedReference if r.fieldNames.length == 1 &&
-          isLongColName(r.fieldNames()(0)) =>
+          ReplayFilters.isLongCol(r.fieldNames()(0)) =>
         topN = Some(ReplayTopN(r.fieldNames()(0),
           orders(0).direction() == SortDirection.DESCENDING, n))
         true
@@ -411,7 +411,6 @@ final class ReplayScanBuilder(path: String, maxSegs: Option[Int],
     }
   }
   override def isPartiallyPushed(): Boolean = true
-  private def isLongColName(a: String) = a == "offset" || a == "ts_unix"
 
   /** AGGREGATE pushdown, PARTIAL by design: each segment answers
     * COUNT(*) / MIN / MAX(offset|ts_unix) locally — min/max straight
@@ -428,7 +427,7 @@ final class ReplayScanBuilder(path: String, maxSegs: Option[Int],
     def boundCol(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case r: NamedReference if r.fieldNames.length == 1 &&
-          (r.fieldNames()(0) == "offset" || r.fieldNames()(0) == "ts_unix") =>
+          ReplayFilters.isLongCol(r.fieldNames()(0)) =>
           Some(r.fieldNames()(0))
         case _ => None
       }
@@ -542,8 +541,8 @@ private[replay] object ReplayFilters {
     // here (trivially true per frame) instead of surviving as a
     // post-scan Filter node.
     case IsNotNull(a) if ReplaySource.Schema.fieldNames.contains(a) => true
-    case EqualTo(a, _: java.lang.Long) if a == "offset" || a == "ts_unix" => true
-    case EqualTo(a, _: java.lang.Integer) if a == "offset" || a == "ts_unix" => true
+    case EqualTo(a, _: java.lang.Long) if isLongCol(a) => true
+    case EqualTo(a, _: java.lang.Integer) if isLongCol(a) => true
     case GreaterThan(a, _) if isLongCol(a) => true
     case GreaterThanOrEqual(a, _) if isLongCol(a) => true
     case LessThan(a, _) if isLongCol(a) => true
@@ -555,7 +554,8 @@ private[replay] object ReplayFilters {
       vs.forall(v => v.isInstanceOf[java.lang.Long] || v.isInstanceOf[java.lang.Integer])
     case _ => false
   }
-  private def isLongCol(a: String) = a == "offset" || a == "ts_unix"
+  /** Whether `a` is one of the two long columns, offset and ts_unix. */
+  def isLongCol(a: String): Boolean = a == "offset" || a == "ts_unix"
 
   private def lv(v: Any): Long = v match {
     case l: java.lang.Long => l

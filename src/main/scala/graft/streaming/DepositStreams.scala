@@ -129,11 +129,10 @@ object DepositStreams {
       .groupByKey(_.walletId)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
         (key: String, events: Iterator[KeyedFlagEvent], state: GroupState[FlagValue]) =>
-          val sorted = events.toSeq.sortBy(_.seq)
-          val fv = sorted.foldLeft(state.getOption) { (st, e) =>
-            Some(FlaggerLogic.step(st,
-              FlagEvent(e.flagRemoved, e.rollingPeriodStartUnix)))
-          }.getOrElse(FlagValue(flagged = false, 0L))
+          // Without a timeout the function only runs for keys that have
+          // events in this batch; the last one by seq wins.
+          val last = events.toSeq.sortBy(_.seq).last
+          val fv = FlaggerLogic.step(FlagEvent(last.flagRemoved, last.rollingPeriodStartUnix))
           state.update(fv)
           FlagRow(key, fv.flagged, fv.rollingPeriodStartUnix)
       }

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
 import graft.model.{KeyedFlagEvent, TimedDeposit}
 
 /** Production wiring of the reference's Kafka topology
@@ -14,11 +18,14 @@ import graft.model.{KeyedFlagEvent, TimedDeposit}
   * [[graft.serde.ProtoWire]], and its codegen'd `proto_decode_deposit`,
   * `proto_encode_flag_event` and `proto_decode_flag_event` functions,
   * applied here, are derived from that description — byte-for-byte
-  * compatible with the Go producers/consumers. The build ships neither
-  * the Kafka connector nor spark-protobuf, so the topology resolves its
-  * source/sink format at runtime and is exercised on a cluster, while
-  * [[DepositStreams]] + MemoryStream cover the operator semantics and
-  * `ProtoWireSpec` pins the wire bytes against golden hex.
+  * compatible with the Go producers/consumers.
+  *
+  * [[runProcessors]] takes its deposit stream and its flag-event edge as
+  * parameters, so the wiring itself is oracle-checked: the `stream_check*`
+  * queries run it over replayable parquet and `graft-replay` feeds with a
+  * parquet edge. Only the Kafka source and sink formats stay cluster-only
+  * (the build ships no Kafka connector, so they resolve at runtime);
+  * `ProtoWireSpec` pins their wire bytes against golden hex.
   */
 object KafkaTopology {
 
@@ -75,15 +82,12 @@ object KafkaTopology {
 
   /** O6 sink: detector verdicts → flag_wallet topic, keyed by wallet (the
     * manual flag CLI, O11, produces to the same topic). */
-  def flagEventSink(events: Dataset[KeyedFlagEvent], brokers: String,
-                    checkpoint: String): DataStreamWriter[_] = {
+  def flagEventSink(events: Dataset[KeyedFlagEvent], brokers: String): DataStreamWriter[_] =
     flagRecords(events.toDF())
       .writeStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
       .option("topic", FlagTopic)
-      .option("checkpointLocation", checkpoint)
-  }
 
   /** O6 source side of the flagger (flagger.go:62). */
   def flagEventSource(spark: SparkSession, brokers: String): Dataset[KeyedFlagEvent] =
@@ -96,34 +100,62 @@ object KafkaTopology {
   /** The three keyed processors, by their command-line names. */
   val Processors: Seq[String] = Seq("collector", "detector", "flagger")
 
+  /** The column that records which micro-batch appended a changelog
+    * row. */
+  val BatchId = "batchId"
+
+  /** The latest row of each wallet of the changelog table at `path`, whose
+    * rows are `T`s: the row its greatest [[BatchId]] appended. A re-run
+    * batch appends identical rows under the same id, so a tie is between
+    * equal rows. The schema is given, so the read infers none. */
+  def latest[T <: Product : TypeTag](spark: SparkSession, path: String): DataFrame = {
+    val rows = spark.read.schema(Encoders.product[T].schema.add(BatchId, LongType)).parquet(path)
+    rows.groupBy(col("walletId"))
+      .agg(max_by(struct(rows.columns.map(col).toIndexedSeq: _*), col(BatchId)).as("r"))
+      .select("r.*")
+  }
+
   /** The processor group (cmd/processor/main.go:25-55): the `selected`
-    * processors as streaming queries under one session. Balance/flag tables
-    * land as parquet "changelog" directories that the serve path
-    * (DepositOps.check) reads. */
-  def runProcessors(spark: SparkSession, brokers: String, stateDir: String,
-                    selected: Set[String]): Seq[StreamingQuery] = {
-    lazy val deposits = depositSource(spark, brokers)
+    * processors as streaming queries under one session, each checkpointed
+    * at `$stateDir/ckpt/<name>`. The collector and the detector read
+    * `deposits`; the detector writes its flag events through `flagSink`,
+    * and the flagger reads them back from `flagSource` (in a deployment,
+    * the flag_wallet topic). Balance and flag tables land under `stateDir`
+    * as parquet "changelog" directories, appended on `trigger`, that the
+    * serve path ([[graft.operators.DepositOps.check]]) reads through
+    * [[latest]]. A failed stand-up stops the processors it started. */
+  def runProcessors(spark: SparkSession, deposits: => Dataset[TimedDeposit],
+                    flagSink: Dataset[KeyedFlagEvent] => DataStreamWriter[_],
+                    flagSource: => Dataset[KeyedFlagEvent], stateDir: String,
+                    selected: Set[String], trigger: Trigger,
+                    windowSec: Long = DetectorLogic.RollingPeriodSec,
+                    threshold: Double = DetectorLogic.MaxAmount): Seq[StreamingQuery] = {
     // State-table updates flow through foreachBatch as append-only
     // changelog rows (mapGroupsWithState is Update-mode; a parquet sink is
-    // append-only) — readers take the latest row per key, exactly like a
-    // compacted Kafka changelog topic.
-    def changelog[T](rows: Dataset[T], name: String, table: String): StreamingQuery =
+    // append-only), each tagged with its batch id — readers take the
+    // latest row per key (`latest`), exactly like a compacted Kafka
+    // changelog topic.
+    def changelog[T](rows: Dataset[T], table: String): DataStreamWriter[_] =
       rows.writeStream
-        .option("checkpointLocation", s"$stateDir/ckpt/$name")
-        .trigger(Trigger.ProcessingTime("5 seconds"))
+        .trigger(trigger)
         .outputMode("update")
-        .foreachBatch((batch: Dataset[T], _: Long) =>
-          batch.write.mode("append").parquet(s"$stateDir/$table"))
-        .start()
-    Processors.filter(selected).map {
+        .foreachBatch((batch: Dataset[T], id: Long) =>
+          batch.withColumn(BatchId, lit(id)).write.mode("append").parquet(s"$stateDir/$table"))
+    def writer(processor: String): DataStreamWriter[_] = processor match {
       case "collector" =>
-        changelog(DepositStreams.collector(spark, deposits), "collector", "balance-table")
+        changelog(DepositStreams.collector(spark, deposits), "balance-table")
       case "detector" =>
-        flagEventSink(DepositStreams.detector(spark, deposits),
-          brokers, s"$stateDir/ckpt/detector").start()
+        flagSink(DepositStreams.detector(spark, deposits, windowSec, threshold))
       case "flagger" =>
-        changelog(DepositStreams.flagger(spark, flagEventSource(spark, brokers)),
-          "flagger", "flagger-table")
+        changelog(DepositStreams.flagger(spark, flagSource), "flagger-table")
     }
+    val started = ArrayBuffer.empty[StreamingQuery]
+    try Processors.filter(selected).foreach { p =>
+      started += writer(p).option("checkpointLocation", s"$stateDir/ckpt/$p").start()
+    } catch { case NonFatal(e) =>
+      started.foreach(q => try q.stop() catch { case NonFatal(_) => () })
+      throw e
+    }
+    started.toSeq
   }
 }

@@ -61,7 +61,7 @@ object FlaggerLogic {
   /** Per-key LWW upsert (/root/reference/flagger/flagger.go:40-57): an
     * unflag event zeroes both fields; a flag event stores the window start.
     * Last event wins unconditionally. */
-  def step(state: Option[FlagValue], e: FlagEvent): FlagValue =
+  def step(e: FlagEvent): FlagValue =
     if (e.flagRemoved) FlagValue(flagged = false, 0L)
     else FlagValue(flagged = true, e.rollingPeriodStartUnix)
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.streaming.Trigger
+
 /** Processor launcher (O13 — /root/reference/cmd/processor/main.go:25-55):
   * runs the selected subset of {collector, detector, flagger} as streaming
   * queries under one session ([[KafkaTopology.runProcessors]]) and blocks
@@ -33,7 +35,9 @@ object ProcessorMain {
     val a = parse(args.toSeq)
     val spark = graft.GraftSession.builder("graft-processors").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    KafkaTopology.runProcessors(spark, a.brokers, a.stateDir, a.processors)
+    KafkaTopology.runProcessors(spark, KafkaTopology.depositSource(spark, a.brokers),
+      KafkaTopology.flagEventSink(_, a.brokers), KafkaTopology.flagEventSource(spark, a.brokers),
+      a.stateDir, a.processors, Trigger.ProcessingTime("5 seconds"))
     spark.streams.awaitAnyTermination()
   }
 }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the extension it installs, state-store and checkpoint settings live in
   * its one map, and loaders set no session conf. The query packs get the
   * same treatment: one workspace ([[queries.Workspace]]), no env-var
-  * forks, and the stream queries start through one harness. Persisted
+  * forks, and the stream queries start through one harness. One
+  * function wires the three keyed processors. Persisted
   * indexes have one identity: one fingerprint and one root, both in
   * [[operators.IndexCache]]. Knobs are read by the mains alone, and specs
   * take their scratch directories from [[TestDirs]]. The query packs'
@@ -74,10 +75,26 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found)
   }
 
-  test("StreamQueries starts its streams from at most 6 writeStream sites") {
+  test("StreamQueries starts its streams from at most 3 writeStream sites") {
     val found = hits(queryPacks.filter(_.getFileName.toString == "StreamQueries.scala"),
       "writeStream")
-    assert(found.nonEmpty && found.size <= 6, found)
+    assert(found.nonEmpty && found.size <= 3, found)
+  }
+
+  test("src/main wires the three processors only in KafkaTopology.runProcessors") {
+    Seq("collector", "detector", "flagger").foreach { p =>
+      val found = hits(main, s"DepositStreams.$p(")
+      assert(found.map(_._1) == Seq("KafkaTopology.scala"), (p, found))
+    }
+    // ... and inside runProcessors: after its def, before the next member.
+    val topology = main.filter(_.getFileName.toString == "KafkaTopology.scala")
+    val lines = Files.readAllLines(topology.head).asScala
+    val start = lines.indexWhere(_.contains("def runProcessors("))
+    val end = lines.indexWhere(l => l.startsWith("  def ") || l.startsWith("  val ") || l == "}",
+      start + 1)
+    val calls = hits(topology, "DepositStreams.").map(_._2 - 1)
+    assert(start >= 0 && calls.size == 3 && calls.forall(i => i > start && i < end),
+      (start, end, calls))
   }
 
   test("src/main folds a content fingerprint (bit_xor) only in IndexCache") {

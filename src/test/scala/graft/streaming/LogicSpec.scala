@@ -56,16 +56,16 @@ class LogicSpec extends AnyFunSuite {
   }
 
   test("flagger is last-write-wins; unflag zeroes the window start") {
-    val afterFlag = FlaggerLogic.step(None, FlagEvent(flagRemoved = false, 77L))
+    val afterFlag = FlaggerLogic.step(FlagEvent(flagRemoved = false, 77L))
     assert(afterFlag == FlagValue(flagged = true, 77L))
-    val afterUnflag = FlaggerLogic.step(Some(afterFlag), FlagEvent(flagRemoved = true, 0L))
+    val afterUnflag = FlaggerLogic.step(FlagEvent(flagRemoved = true, 0L))
     assert(afterUnflag == FlagValue(flagged = false, 0L))
   }
 
   test("manual flag is overwritten by the next detector verdict (SURVEY §2.3.2)") {
-    val manual = FlaggerLogic.step(None, FlagEvent(flagRemoved = false, 1L))
+    val manual = FlaggerLogic.step(FlagEvent(flagRemoved = false, 1L))
     assert(manual.flagged)
-    val next = FlaggerLogic.step(Some(manual), FlagEvent(flagRemoved = true, 0L))
+    val next = FlaggerLogic.step(FlagEvent(flagRemoved = true, 0L))
     assert(!next.flagged)
   }
 
