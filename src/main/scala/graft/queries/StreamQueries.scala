@@ -126,19 +126,16 @@ object StreamQueries {
     * `tsUnix`/`seq` stand in for the broker timestamp and offset. The
     * stream side must run a real wire decode per record to recover the
     * deposit — the byte-compatibility edge a drop-in consumer of the
-    * reference's topics exercises: the codegen'd expression runs the same
-    * per-record decode a broker consumer runs. */
+    * reference's topics exercises: it decodes through
+    * [[KafkaTopology.deposits]], the decode and amount check the
+    * deployment's Kafka source runs. */
   private def protoDepositFeed(s: SparkSession, dir: String): Feed = {
     val framed = parquetFeed("protofeed", dir)(written(depositProjection(s, dir)
       .select(
         call_function("proto_encode_deposit", col("walletId"), col("amount"))
           .as("value"),
         col("tsUnix"), col("seq")), _))
-    framed.copy(stream = sp => framed.stream(sp)
-      .select(call_function("proto_decode_deposit", col("value")).as("d"),
-        col("tsUnix"), col("seq"))
-      .select(col("d.wallet_id").as("walletId"),
-        col("d.amount").as("amount"), col("tsUnix"), col("seq")))
+    framed.copy(stream = sp => KafkaTopology.deposits(framed.stream(sp)).toDF())
   }
 
   /** Replay-log STREAM feed for the `graft-replay` connector's streaming

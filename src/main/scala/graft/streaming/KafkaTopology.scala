@@ -35,24 +35,31 @@ object KafkaTopology {
   /** O1: Kafka → validated, keyed deposit stream. The broker ingestion
     * timestamp supplies processing time (the reference stamps wall clock at
     * the consumer, detector.go:57; broker time is the deterministic
-    * equivalent), the offset supplies the LWW sequence. Values are proto
-    * `Deposit` messages (wallet.proto:14-17). */
-  def depositSource(spark: SparkSession, brokers: String): Dataset[TimedDeposit] = {
-    import spark.implicits._
-    spark.readStream
+    * equivalent), the offset supplies the LWW sequence. */
+  def depositSource(spark: SparkSession, brokers: String): Dataset[TimedDeposit] =
+    deposits(spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
       .option("subscribe", DepositTopic)
       .load()
-      .select(
-        call_function("proto_decode_deposit", col("value")).as("d"),
-        col("timestamp"), col("offset"))
-      .select(
-        col("d.wallet_id").as("walletId"),
-        col("d.amount").as("amount"),
-        unix_seconds(col("timestamp")).as("tsUnix"),
-        col("offset").as("seq"))
-      .where(col("amount") > 0) // service.go:87-91 — reject non-positive
+      .select(col("value"), unix_seconds(col("timestamp")).as("tsUnix"),
+        col("offset").as("seq")))
+
+  /** Deposits of deposit-topic records (value, tsUnix, seq), whose values
+    * are proto `Deposit` messages (wallet.proto:14-17): the one decode of
+    * the topic. Like `POST /deposit` (service.go:87-91), it drops every
+    * deposit whose amount is not a positive finite number; a NaN would
+    * poison its wallet's balance on every replay, and in Spark
+    * `NaN > 0` holds. */
+  def deposits(records: DataFrame): Dataset[TimedDeposit] = {
+    import records.sparkSession.implicits._
+    val amount = col("amount")
+    records
+      .select(call_function("proto_decode_deposit", col("value")).as("d"),
+        col("tsUnix"), col("seq"))
+      .select(col("d.wallet_id").as("walletId"), col("d.amount").as("amount"),
+        col("tsUnix"), col("seq"))
+      .where(amount > 0 && !isnan(amount) && amount =!= Double.PositiveInfinity)
       .as[TimedDeposit]
   }
 

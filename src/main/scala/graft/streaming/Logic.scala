@@ -5,7 +5,8 @@ import graft.model._
 /** The reference's detector and flagger state machines as pure functions —
   * independently unit-testable, wrapped by the Structured Streaming
   * processors in [[DepositStreams]]. (The collector's state machine is a
-  * running sum and lives in [[DepositStreams.collector]].)
+  * running sum, kept beside the detector's counter in the one keyed
+  * deposit fold that [[DepositStreams]] projects.)
   *
   * Branch order is load-bearing (SURVEY §2.3) and mirrored exactly from
   * /root/reference; each quirk has a named regression test.

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * its one map, and loaders set no session conf. The query packs get the
   * same treatment: one workspace ([[queries.Workspace]]), no env-var
   * forks, and the stream queries start through one harness. One
-  * function wires the three keyed processors. Persisted
+  * function wires the three keyed processors, one place sorts a deposit
+  * batch for the keyed fold, and one function decodes the deposit topic
+  * (beside the codec's own round-trip query). Persisted
   * indexes have one identity: one fingerprint and one root, both in
   * [[operators.IndexCache]]. Knobs are read by the mains alone, and specs
   * take their scratch directories from [[TestDirs]]. The query packs'
@@ -95,6 +97,18 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     val calls = hits(topology, "DepositStreams.").map(_._2 - 1)
     assert(start >= 0 && calls.size == 3 && calls.forall(i => i > start && i < end),
       (start, end, calls))
+  }
+
+  test("src/main/scala/graft/streaming sorts a deposit batch by (tsUnix, seq) in one place") {
+    val sort = """sortBy\(.*tsUnix.*seq""".r
+    val found = hitsWhere(scalaFiles("src/main/scala/graft/streaming"))(sort.findFirstIn(_).nonEmpty)
+    assert(found.map(_._1) == Seq("DepositStreams.scala"), found)
+  }
+
+  test("src/main decodes the deposit topic only in KafkaTopology and the codec round trip") {
+    val decode = """proto_decode_deposit["(]""".r
+    val found = hitsWhere(main)(decode.findFirstIn(_).nonEmpty)
+    assert(found.map(_._1).sorted == Seq("KafkaTopology.scala", "SerdeQueries.scala"), found)
   }
 
   test("src/main folds a content fingerprint (bit_xor) only in IndexCache") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.model._
-import graft.streaming.DepositStreams
+import graft.streaming.{DepositStreams, KafkaTopology}
 import graft.TestDirs.tempDir
 import org.apache.spark.unsafe.types.UTF8String
 import ProtoWire.{decode, encode}
@@ -173,7 +173,7 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
       TimedDeposit("b", 20000, 100, 3), TimedDeposit("b", 1, 300, 4))
 
     // Wire shape: (proto Deposit bytes, broker ts, offset) — what the Kafka
-    // source delivers; decode exactly as KafkaTopology.depositSource does.
+    // source delivers; decode through KafkaTopology.depositSource's own decode.
     val wire = deposits.map(d =>
       (encode(ProtoWire.Deposit, deposit(d.walletId, d.amount)), d.tsUnix, d.seq))
 
@@ -186,16 +186,19 @@ class ProtoWireSpec extends AnyFunSuite with SparkSpec {
       spark.table(name).as[KeyedFlagEvent].collect().toSeq.sortBy(_.seq)
     }
 
-    val decoded = wire.toDF("value", "tsUnix", "seq")
-      .select(call_function("proto_decode_deposit", col("value")).as("d"),
-        col("tsUnix"), col("seq"))
-      .select(col("d.wallet_id").as("walletId"), col("d.amount").as("amount"),
-        col("tsUnix"), col("seq"))
-      .where(col("amount") > 0)
-      .as[TimedDeposit]
-      .collect().toSeq
+    val decoded = KafkaTopology.deposits(wire.toDF("value", "tsUnix", "seq")).collect().toSeq
 
     assert(run(decoded, "proto_path") == run(deposits, "direct_path"))
+  }
+
+  test("the deposit topic's decode keeps only positive finite amounts") {
+    import spark.implicits._
+    val amounts = Seq(5.0, 0.0, -1.0, Double.NaN, Double.PositiveInfinity)
+    val records = amounts.zipWithIndex.map { case (a, i) =>
+      (encode(ProtoWire.Deposit, deposit(s"w$i", a)), 100L + i, i.toLong + 1)
+    }.toDF("value", "tsUnix", "seq")
+    assert(KafkaTopology.deposits(records).collect().toSeq ==
+      Seq(TimedDeposit("w0", 5.0, 100L, 1L)))
   }
 
   test("topology edge: expression-framed feed bytes equal the Go producer's wire bytes") {

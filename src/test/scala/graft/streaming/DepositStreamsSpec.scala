@@ -109,6 +109,19 @@ class DepositStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(flags == Seq(DepositStreams.FlagRow("w4", flagged = false, 0L)))
   }
 
+  test("the flagger writes no per-wallet state") {
+    val input = MemoryStream[KeyedFlagEvent]
+    val q = DepositStreams.flagger(spark, input.toDS())
+      .writeStream.format("memory").queryName(freshName).outputMode("update").start()
+    try {
+      input.addData(Seq(KeyedFlagEvent("w6", flagRemoved = false, 1000L, seq = 1L),
+        KeyedFlagEvent("w7", flagRemoved = true, 0L, seq = 2L)))
+      q.processAllAvailable()
+      val state = q.lastProgress.stateOperators
+      assert(state.length == 1 && state(0).numRowsTotal == 0L, state.toSeq)
+    } finally q.stop()
+  }
+
   test("streaming detector == pure state machine under arbitrary batch splits") {
     val rnd = new scala.util.Random(7)
     var t = 1000L
