@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -26,10 +30,14 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    then silently keeps the old file where the caller asked for an
   *    overwrite (a re-run batch's changelog); `FileContext` replaces it.
   *
-  * The local manager gets a `LocalFileSystem` of its own, not the cached
-  * instance `file:` resolves to: that may be a subclass with the HDFS
-  * rename rule. Hive's `ProxyLocalFileSystem`, which `hive-exec` registers
-  * for `file:` beside Spark, refuses to rename onto an existing file.
+  * The local manager gets a `LocalFileSystem` of its own
+  * ([[CheckpointFiles.LocalFiles]]), not the cached instance `file:`
+  * resolves to: that may be a subclass with the HDFS rename rule. Hive's
+  * `ProxyLocalFileSystem`, which `hive-exec` registers for `file:` beside
+  * Spark, refuses to rename onto an existing file. Its own instance also
+  * sets file modes in this process: Hadoop's, without its native library,
+  * forks a `chmod` for every file and `.crc` it creates and every
+  * directory it makes.
   */
 class CheckpointFiles(path: Path, hadoopConf: Configuration) extends CheckpointFileManager {
 
@@ -58,11 +66,33 @@ object CheckpointFiles {
     case _ => false
   }
 
-  /** `conf` with `file:` bound to a new, uncached `LocalFileSystem`. It
+  /** Hadoop's `LocalFileSystem` (checksums, rename(2)) over [[RawFiles]]. */
+  final class LocalFiles extends LocalFileSystem(new RawFiles)
+
+  /** Hadoop's `RawLocalFileSystem` that sets a file's mode through
+    * java.nio instead of a forked `chmod`. The fork is not only a process
+    * per file: Hadoop's `Shell` drops an interrupt that reaches it while it
+    * joins its reader thread, so a `StreamingQuery.stop()` whose interrupt
+    * lands in a checkpoint write goes unnoticed by the query's thread and
+    * waits for the whole next micro-batch. java.nio sets no
+    * sticky bit, so a mode with one keeps Hadoop's path. */
+  final class RawFiles extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if (permission.getStickyBit) super.setPermission(p, permission)
+      else Files.setPosixFilePermissions(pathToFile(p).toPath, posix(permission.toShort))
+  }
+
+  /** The rwx bits of `mode` (owner, group, others: the enum's order). */
+  private def posix(mode: Short): java.util.Set[PosixFilePermission] = {
+    val all = PosixFilePermission.values
+    all.indices.filter(i => (mode & (1 << (8 - i))) != 0).map(all(_)).toSet.asJava
+  }
+
+  /** `conf` with `file:` bound to a new, uncached [[LocalFiles]]. It
     * holds no resources, so nothing closes it. */
   private def plainLocal(conf: Configuration): Configuration = {
     val c = new Configuration(conf)
-    c.setClass("fs.file.impl", classOf[LocalFileSystem], classOf[FileSystem])
+    c.setClass("fs.file.impl", classOf[LocalFiles], classOf[FileSystem])
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
   }

@@ -413,10 +413,20 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
     val dir = tempDir("svc_unapplied").toString
     val a = new DepositService(spark, changelogDir = Some(dir))
     val dep = """{"wallet_id":"nia","amount":17,"ts_unix":1000,"idem":"k-unapplied"}"""
+    // stop() returns once the query's thread has ended. Should that thread
+    // miss the interrupt, it ends only after a micro-batch on the held
+    // cores, so the stop runs off this thread, which goes on once the
+    // query is inactive and joins the stop after releasing the cores.
+    val stopper = new Thread(() => a.servingQuery.stop())
     try withCoresHeld {
       val ack = postTo(a, dep)
       assert(ack.statusCode() == 200 && ack.body().contains("\"ok\""), ack.body())
-      a.servingQuery.stop()
+      stopper.start()
+      val deadline = System.currentTimeMillis() + 60000
+      while (a.servingQuery.isActive) {
+        assert(System.currentTimeMillis() < deadline, "the serving query is still active")
+        Thread.sleep(5)
+      }
       // The barrier needs a batch that will never run: 500, not a stale row.
       val t0 = System.nanoTime()
       val get = client.send(HttpRequest.newBuilder(
@@ -431,7 +441,8 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       val logged = logLines(dir)
       assert(postTo(a, """{"wallet_id":"nia","amount":5,"ts_unix":1100}""").statusCode() == 500)
       assert(logLines(dir) == logged)
-    } finally a.stop()
+    } finally { a.stop(); stopper.join(60000) }
+    assert(!stopper.isAlive, "the serving query's stop() did not return")
     val b = new DepositService(spark, changelogDir = Some(dir))
     try {
       assert(checkAt(b, "nia") ==

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
@@ -16,7 +17,7 @@ import graft.TestDirs.tempDir
 
 /** The engine's checkpoint file manager ([[CheckpointFiles]]): which of
   * Spark's managers it picks, and that a streaming query on a local
-  * checkpoint starts no process to rename its files. */
+  * checkpoint starts no process to write or rename its files. */
 class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
   private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -96,12 +97,27 @@ class CheckpointFilesSpec extends AnyFunSuite with SparkSpec {
     assert(readlinks.size == 0, s"readlink processes, first: ${readlinks.headOption}")
     val renames = events.filter(_._2.exists(_.endsWith(".renameTempFile")))
     assert(renames.size == 0, s"processes started by renameTempFile, first: ${renames.headOption}")
-    // What the checkpoint manager still starts is the chmod that Hadoop's
-    // local file system runs when it creates a file and its .crc.
+    // Nor a chmod: CheckpointFiles.RawFiles sets each new file's mode in
+    // this process.
     val fromManager = events.filter(_._2.exists(_.contains("CheckpointFileManager")))
-    val other = fromManager.filterNot { case (c, fs) =>
-      c == "chmod" && fs.exists(_.endsWith("CheckpointFileManager.createTempFile"))
-    }
-    assert(other.size == 0, s"other processes started by the checkpoint manager, first: ${other.headOption}")
+    assert(fromManager.size == 0,
+      s"processes started by the checkpoint manager, first: ${fromManager.headOption}")
+  }
+
+  test("a local checkpoint write on an interrupted thread completes and keeps the interrupt") {
+    val dir = tempDir("graft_ckpt_interrupt")
+    val fm = CheckpointFileManager.create(new Path(dir.toUri), spark.sessionState.newHadoopConf())
+    Thread.currentThread().interrupt()
+    val kept = try {
+      val out = fm.createAtomic(new Path(dir.resolve("sub").resolve("0").toUri), overwriteIfPossible = false)
+      out.write(Array[Byte](7))
+      out.close()
+      Thread.currentThread().isInterrupted
+    } finally Thread.interrupted() // the next test runs on this thread
+    assert(kept, "the write dropped the thread's interrupt")
+    val file = dir.resolve("sub").resolve("0")
+    assert(Files.readAllBytes(file).toSeq == Seq[Byte](7))
+    // Hadoop's default file mode 0666 under its default umask 022.
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) == "rw-r--r--")
   }
 }
