@@ -32,17 +32,16 @@ import org.apache.spark.sql.SparkSession
   *    (`nanosAsLong`) instead of failing the read; `sources.Tables`
   *    turns it back into micros.
   *  - Kryo serialization.
-  *  - [[plans.GraftExtensions]]: the engine's optimizer rule, its planner
-  *    strategy and every native SQL function of
-  *    [[functions.GraftFunctions.functions]], so no call site registers
-  *    them. `newSession()` gets them too.
+  *  - [[plans.GraftExtensions]]: the engine's optimizer rule and every
+  *    native SQL function of [[functions.GraftFunctions.functions]], so no
+  *    call site registers them. `newSession()` gets them too.
   *  - shuffle partitions default to cluster parallelism, not Spark's 200.
   *
   * The one fallback: extensions apply only when a session is created, so a
   * session built elsewhere (a caller's own `SparkSession.builder()`) has
-  * neither the functions, the planner strategy nor `nanosAsLong`.
-  * [[adopt]] gives it all three, idempotently; [[SparkEntry]], where such
-  * sessions enter the engine, calls it before every query.
+  * neither the functions nor `nanosAsLong`. [[adopt]] gives it both,
+  * idempotently; [[SparkEntry]], where such sessions enter the engine,
+  * calls it before every query.
   */
 object GraftSession {
 
@@ -106,19 +105,10 @@ object GraftSession {
   }
 
   /** The fallback for a session not built by [[builder]]: registers the
-    * native functions it lacks ([[functions.GraftFunctions.register]]),
-    * adds the planner strategy of [[plans.GraftExtensions]] when its
-    * planner lacks it, and sets `nanosAsLong`. A no-op on a session of
-    * [[builder]]. */
+    * native functions it lacks ([[functions.GraftFunctions.register]]) and
+    * sets `nanosAsLong`. A no-op on a session of [[builder]]. */
   def adopt(spark: SparkSession): SparkSession = {
     functions.GraftFunctions.register(spark)
-    // Check-then-append under one lock: two concurrent first calls would
-    // otherwise both pass the check and add the strategy twice.
-    GraftSession.synchronized {
-      if (!spark.sessionState.planner.strategies.contains(plans.DetectorFoldStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ plans.DetectorFoldStrategy
-    }
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.Counter
+import graft.streaming.DetectorLogic
 
 /** Batch re-expression of the reference's full operator surface (SURVEY §2.1,
   * O1–O11) over the `events` table (`user_id` ≈ wallet_id, `value` ≈ amount,
@@ -81,6 +83,35 @@ object DepositOps {
       .orderBy(unix_micros(col("ts")))
       .rangeBetween(-windowSec * 1000000L, 0L)
     deposits.withColumn("win_sum", round(sum(col("amount")).over(w), 2))
+  }
+
+  /** O4 (exact batch form) — the detector state machine
+    * ([[DetectorLogic.step]], detector.go:50-71) folded over each wallet's
+    * deposits in (tsec, seq) order: one (wallet_id, win_sum,
+    * above_threshold) row per wallet, the final window sum and the last
+    * re-asserted verdict (the flag is never latched, SURVEY §2.3.2).
+    * `deposits` carries (wallet_id, tsec, seq, amount). Spark plans one
+    * hash exchange on wallet_id and a sort on (wallet_id, tsec, seq) below
+    * the group fold, which streams each wallet's run in O(1) state: no
+    * per-wallet array, no recursion cap, unbounded history. */
+  def detectorFold(deposits: DataFrame, windowSec: Long = RollingPeriodSec,
+                   threshold: Double = MaxAmount): DataFrame = {
+    import deposits.sparkSession.implicits._
+    deposits.select(
+        col("wallet_id").cast("long").as("wallet_id"),
+        col("tsec").cast("long").as("tsec"),
+        col("seq").cast("long").as("seq"),
+        col("amount").cast("double").as("amount"))
+      .groupBy(col("wallet_id")).as[Long, (Long, Long, Long, Double)]
+      .flatMapSortedGroups(col("tsec"), col("seq")) { (wallet, rows) =>
+        var state = Counter(0L, 0.0); var flagged = false
+        rows.foreach { case (_, tsec, _, amount) =>
+          val (next, event) = DetectorLogic.step(state, amount, tsec, windowSec, threshold)
+          state = next; flagged = !event.flagRemoved
+        }
+        Iterator.single((wallet, state.received, flagged))
+      }
+      .toDF("wallet_id", "win_sum", "above_threshold")
   }
 
   /** O5 — threshold predicate (/root/reference/detector/detector.go:42-45):

@@ -44,9 +44,8 @@ object CountFilterToExists extends Rule[LogicalPlan] {
   }
 }
 
-/** The engine's session extension: the optimizer rule above, the
-  * [[DetectorFoldStrategy]] planner strategy and every native SQL function
-  * of [[graft.functions.GraftFunctions.functions]].
+/** The engine's session extension: the optimizer rule above and every
+  * native SQL function of [[graft.functions.GraftFunctions.functions]].
   * [[graft.GraftSession.builder]] installs it; a deployment that builds
   * its own session passes `--conf
   * spark.sql.extensions=graft.plans.GraftExtensions`. Extensions apply
@@ -57,7 +56,6 @@ object CountFilterToExists extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CountFilterToExists)
-    e.injectPlannerStrategy(_ => DetectorFoldStrategy)
     graft.functions.GraftFunctions.functions.foreach(e.injectFunction)
   }
 }

@@ -190,15 +190,11 @@ object CoreQueries {
           .orderBy(col("wallet_id"))
     },
 
-    // O4 through the CUSTOM WHOLE-OPERATOR path (round 9): the exact
-    // reset-discards-the-deposit machine as a logical node + planner
-    // strategy + physical exec (graft.plans.DetectorFold). The exec
-    // declares ClusteredDistribution(wallet) + (wallet, tsec, seq)
-    // ordering, so EnsureRequirements plans ONE hash exchange + sort and
-    // the fold streams each wallet's run in O(1) state — unbounded
-    // history, no per-wallet array row, no recursion cap. Tuned
-    // constants; the oracle replays the fold as an unbounded-depth
-    // recursive CTE.
+    // O4 as the exact reset-discards-the-deposit machine, folded per wallet
+    // in (tsec, seq) order (DepositOps.detectorFold): one hash exchange and
+    // sort, then O(1) state per wallet — unbounded history, no per-wallet
+    // array row, no recursion cap. Tuned constants; the oracle replays the
+    // fold as an unbounded-depth recursive CTE.
     Q("o4_fold_exec",
       s"WITH RECURSIVE $detectorDepositsCte, $detectorStepsCte, " +
         detectorFoldCte(TunedWindowSec, TunedThreshold, "CAST(0.0 AS DOUBLE)") +
@@ -208,7 +204,7 @@ object CoreQueries {
         .select(col("user_id").as("wallet_id"),
           expr("unix_micros(ts) div 1000000").as("tsec"),
           col("event_id").as("seq"), col("value").as("amount"))
-      graft.plans.DetectorFold(s, dep, TunedWindowSec, TunedThreshold)
+      DepositOps.detectorFold(dep, TunedWindowSec, TunedThreshold)
         .select(col("wallet_id"), round(col("win_sum"), 2).as("win_sum"),
           col("above_threshold"))
         .orderBy(col("wallet_id"))

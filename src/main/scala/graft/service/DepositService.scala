@@ -437,6 +437,7 @@ final class DepositService(spark: SparkSession, port: Int = 0,
     * same asymptotics as the reference's `view.Get` (service.go:128-133). */
   private def handleCheck(ex: HttpExchange): Unit =
     try {
+      if (ex.getRequestMethod != "GET") { respond(ex, 405, """{"error":"GET only"}"""); return }
       val wallet = ex.getRequestURI.getPath.stripPrefix("/check/")
       val row = folded(wallet, acked.getOrDefault(wallet, 0L))
       respond(ex, 200, mapper.writeValueAsString(mapper.createObjectNode()

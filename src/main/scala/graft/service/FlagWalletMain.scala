@@ -27,19 +27,25 @@ object FlagWalletMain {
       .toDF("walletId", "flagRemoved", "rollingPeriodStartUnix"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 1).collect {
-      case Array("--wallet", v)  => "wallet" -> v
-      case Array("--brokers", v) => "brokers" -> v
-    }.toMap
-    val remove = args.contains("--remove")
-    val wallet = opts.getOrElse("wallet",
-      sys.error("usage: --wallet <id> [--remove] [--brokers host:port]"))
+  /** Parsed command line: the wallet, whether to unflag it, and the
+    * brokers to produce to (none: dry run). */
+  final case class Args(wallet: String, remove: Boolean, brokers: Option[String])
 
+  /** Parses the command line; a missing `--wallet`, or a flag in place of
+    * a value, throws `IllegalArgumentException`. */
+  def parse(args: Seq[String]): Args = {
+    val opts = graft.Cli.values(args, Set("--wallet", "--brokers"))
+    val wallet = opts.getOrElse("--wallet", throw new IllegalArgumentException(
+      "--wallet required; usage: --wallet <id> [--remove] [--brokers host:port]"))
+    Args(wallet, args.contains("--remove"), opts.get("--brokers"))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(wallet, remove, brokers) = parse(args.toSeq)
     val spark = graft.GraftSession.local("graft-flag-wallet")
     spark.sparkContext.setLogLevel("WARN")
     val event = record(spark, wallet, remove)
-    opts.get("brokers") match {
+    brokers match {
       case Some(brokers) =>
         event.write.format("kafka")
           .option("kafka.bootstrap.servers", brokers)

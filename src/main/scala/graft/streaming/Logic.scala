@@ -50,10 +50,11 @@ object DetectorLogic {
 
   /** Fold a deposit sequence through the state machine (the reference
     * semantics oracle used by the property tests). */
-  def run(deposits: Seq[(Double, Long)]): (Counter, Seq[FlagEvent]) =
+  def run(deposits: Seq[(Double, Long)], windowSec: Long = RollingPeriodSec,
+          threshold: Double = MaxAmount): (Counter, Seq[FlagEvent]) =
     deposits.foldLeft((Counter(0L, 0.0), Vector.empty[FlagEvent])) {
       case ((st, out), (amt, now)) =>
-        val (next, ev) = step(st, amt, now)
+        val (next, ev) = step(st, amt, now, windowSec, threshold)
         (next, out :+ ev)
     }
 }

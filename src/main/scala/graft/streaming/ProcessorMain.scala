@@ -18,12 +18,10 @@ object ProcessorMain {
     * processors to run. */
   final case class Args(brokers: String, stateDir: String, processors: Set[String])
 
-  /** Parses the command line; a missing `--brokers` or `--state` throws
-    * `IllegalArgumentException`. */
+  /** Parses the command line; a missing `--brokers` or `--state`, or a
+    * flag in place of its value, throws `IllegalArgumentException`. */
   def parse(args: Seq[String]): Args = {
-    val opts = args.sliding(2).collect {
-      case Seq(k @ ("--brokers" | "--state"), v) => k -> v
-    }.toMap
+    val opts = graft.Cli.values(args, Set("--brokers", "--state"))
     def need(k: String) =
       opts.getOrElse(k, throw new IllegalArgumentException(s"$k required"))
     val chosen = KafkaTopology.Processors.filter(p => args.contains(s"--$p")).toSet

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{call_function, col}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.DetectorFoldStrategy
 
 /** The entry smoke: entry(spark) must return rows, on the engine's
   * session ([[GraftSession.builder]]) and on a session the caller built
@@ -32,9 +31,6 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  private def foldStrategies(s: SparkSession): Int =
-    s.sessionState.planner.strategies.count(_ == DetectorFoldStrategy)
-
   test("entry and the native functions run on a plain SparkSession.builder() session") {
     onPlainSession { plain =>
       assert(!plain.catalog.functionExists("theta_sketch"))
@@ -58,14 +54,9 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
     val fold = SparkEntry.queries("o4_fold_exec")
     val expected = fold(spark, dir).collect().toSeq
     assert(expected.nonEmpty)
-    // The engine's session has the strategy from its extension; adopting
-    // it adds no second copy.
-    assert(foldStrategies(spark) == 1)
     onPlainSession { plain =>
-      assert(foldStrategies(plain) == 0)
       assert(fold(plain, dir).collect().toSeq == expected)
       assert(fold(plain, dir).collect().toSeq == expected)
-      assert(foldStrategies(plain) == 1)
     }
   }
 

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan that keeps session setup in one place: every session of
   * `src/main` comes from [[GraftSession]], the native functions come from
-  * the extension it installs, state-store and checkpoint settings live in
-  * its one map, and loaders set no session conf. The query packs get the
+  * the extension it installs, no session needs a planner strategy,
+  * state-store and checkpoint settings live in its one map, and loaders
+  * set no session conf. The query packs get the
   * same treatment: one workspace ([[queries.Workspace]]), no env-var
   * forks, and the stream queries start through one harness. One
   * function wires the three keyed processors, one place sorts a deposit
@@ -129,9 +130,14 @@ class SessionSetupGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found)
   }
 
-  test("src/main adds planner strategies only in GraftSession") {
-    val found = hits(main, "extraStrategies")
-    assert(found.nonEmpty && found.forall(_._1 == "GraftSession.scala"), found)
+  test("src/main adds no planner strategy") {
+    val found = Seq("extraStrategies", "injectPlannerStrategy").flatMap(hits(main, _))
+    assert(found.isEmpty, found)
+    // Nor does it reach into Spark's own packages for private API.
+    val sparkPkg = Paths.get("src/main/scala/org/apache/spark")
+    val walk = if (Files.exists(sparkPkg)) Files.walk(sparkPkg) else java.util.stream.Stream.empty[Path]()
+    val inSpark = try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList finally walk.close()
+    assert(inSpark.isEmpty, inSpark)
   }
 
   test("src/main reads environment variables only in its three mains and IndexCache") {

@@ -1,17 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.{MapGroupsExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.operators.DepositOps
 import graft.streaming.DetectorLogic
 
-/** Pins the custom whole-operator path: DetectorFoldExec streams each
-  * wallet's (tsec, seq)-ordered run through the exact reference machine in
-  * O(1) state, with the hash exchange + sort inserted by EnsureRequirements
-  * from the exec's declared requirements — and matches the plain-JVM fold
+/** Pins the batch detector fold ([[DepositOps.detectorFold]]): the group
+  * fold streams each wallet's (tsec, seq)-ordered run through the exact
+  * reference machine in O(1) state, over the hash exchange + sort the
+  * planner inserts below it, and matches the plain-JVM fold
   * (DetectorLogic.run) on adversarial multi-partition input. */
 class DetectorFoldSpec extends AnyFunSuite with SparkSpec {
 
@@ -22,21 +23,15 @@ class DetectorFoldSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dep = rows.toDF("wallet_id", "tsec", "seq", "amount")
       .repartition(parts) // scatter wallets across input partitions
-    DetectorFold(spark, dep, w, th)
+    DepositOps.detectorFold(dep, w, th)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getBoolean(2)))).toMap
   }
 
   private def oracle(rows: Seq[(Long, Long, Long, Double)]) =
     rows.groupBy(_._1).map { case (wid, rs) =>
-      val ordered = rs.sortBy(r => (r._2, r._3))
-      var state = graft.model.Counter(0L, 0.0)
-      var flagged = false
-      ordered.foreach { r =>
-        val (next, ev) = DetectorLogic.step(state, r._4, r._2, w, th)
-        state = next
-        flagged = !ev.flagRemoved
-      }
-      wid -> ((state.received, flagged))
+      val ordered = rs.sortBy(r => (r._2, r._3)).map(r => (r._4, r._2))
+      val (state, events) = DetectorLogic.run(ordered, w, th)
+      wid -> ((state.received, !events.last.flagRemoved))
     }
 
   test("matches the plain-JVM reference fold on adversarial input") {
@@ -63,12 +58,12 @@ class DetectorFoldSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dep = Seq((1L, 1L, 1L, 5.0), (2L, 1L, 2L, 6.0))
       .toDF("wallet_id", "tsec", "seq", "amount").repartition(3)
-    val df = DetectorFold(spark, dep, w, th)
+    val df = DepositOps.detectorFold(dep, w, th)
     df.collect() // finalize any adaptive plan
     val helper = new AdaptiveSparkPlanHelper {}
     val plan = df.queryExecution.executedPlan
-    val fold = helper.collectFirst(plan) { case e: DetectorFoldExec => e }
-    assert(fold.isDefined, s"no DetectorFoldExec in:\n$plan")
+    val fold = helper.collectFirst(plan) { case e: MapGroupsExec => e }
+    assert(fold.isDefined, s"no MapGroupsExec in:\n$plan")
     val sortBelow = helper.collectFirst(fold.get) { case s: SortExec => s }
     val exchBelow = helper.collectFirst(fold.get) { case e: ShuffleExchangeExec => e }
     assert(sortBelow.isDefined && exchBelow.isDefined,

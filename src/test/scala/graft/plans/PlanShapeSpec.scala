@@ -1,13 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, MapGroupsExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SparkSpec}
 
 /** Executable plan audits: the PERF/PLANS claims that make queries fast at
   * 100 TB — filter pushdown into the scan, map-side WindowGroupLimit,
   * distributed TakeOrdered top-k, broadcast of tiny stats tables, the
-  * custom fold exec — pinned as assertions so a refactor that silently
+  * per-wallet detector fold over one keyed exchange — pinned as assertions so a refactor that silently
   * loses one fails CI instead of the bench. Plans are inspected PRE-execution
   * (the static shapes are what Catalyst promises regardless of AQE's
   * runtime re-planning). */
@@ -45,9 +47,14 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       p.take(2000))
   }
 
-  test("o4_fold_exec plans the custom DetectorFold operator") {
-    val p = planOf("o4_fold_exec")
-    assert(p.contains("DetectorFold"), p.take(2000))
+  test("o4_fold_exec folds each wallet over one hashpartitioning(wallet_id exchange, no collect_list") {
+    assert(!planOf("o4_fold_exec").contains("collect_list"))
+    val plan = SparkEntry.queries("o4_fold_exec")(spark, sf).queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val folds = helper.collect(plan) { case m: MapGroupsExec => m }
+    assert(folds.size == 1, plan)
+    val below = helper.collect(folds.head) { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+    assert(below.size == 1 && below.head.startsWith("hashpartitioning(wallet_id"), plan)
   }
 
   test("dedup_exact never broadcasts the corpus-sized hash table") {

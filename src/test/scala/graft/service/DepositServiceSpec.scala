@@ -81,6 +81,17 @@ class DepositServiceSpec extends AnyFunSuite with SparkSpec {
       """{"wallet_id":"carol","balance":18000.0,"above_threshold":false}""")
   }
 
+  test("a POST to /check is refused with 405 and records nothing") {
+    val resp = client.send(HttpRequest.newBuilder(URI.create(s"$base/check/post_check"))
+      .POST(HttpRequest.BodyPublishers.ofString(
+        """{"wallet_id":"post_check","amount":5,"ts_unix":1000}""")).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(resp.statusCode() == 405, resp.body())
+    assert(resp.body() == """{"error":"GET only"}""")
+    assert(check("post_check") ==
+      """{"wallet_id":"post_check","balance":0.0,"above_threshold":false}""")
+  }
+
   test("malformed body and wrong method get clean errors") {
     assert(post("""not json at all""").statusCode() == 500)
     assert(post("""{"amount": 5}""").statusCode() == 400)

@@ -19,4 +19,18 @@ class FlagWalletMainSpec extends AnyFunSuite with SparkSpec {
       assert(decoded == Seq(KeyedFlagEvent("wallet-42", remove, 0L, 7L)))
     }
   }
+
+  test("the command line selects the wallet, the unflag and the brokers") {
+    assert(FlagWalletMain.parse(Seq("--wallet", "w7", "--remove")) ==
+      FlagWalletMain.Args("w7", remove = true, brokers = None))
+    assert(FlagWalletMain.parse(Seq("--brokers", "kafka:9092", "--wallet", "w7")) ==
+      FlagWalletMain.Args("w7", remove = false, brokers = Some("kafka:9092")))
+  }
+
+  test("a flag is not taken as the wallet id") {
+    val e = intercept[IllegalArgumentException] {
+      FlagWalletMain.parse(Seq("--wallet", "--remove"))
+    }
+    assert(e.getMessage.contains("--wallet"))
+  }
 }

@@ -23,4 +23,11 @@ class ProcessorMainSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("--brokers"))
   }
+
+  test("a flag is not taken as another flag's value") {
+    val e = intercept[IllegalArgumentException] {
+      ProcessorMain.parse(Seq("--brokers", "--state", "/var/graft"))
+    }
+    assert(e.getMessage.contains("--brokers"))
+  }
 }
