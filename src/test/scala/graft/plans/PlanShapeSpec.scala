@@ -47,7 +47,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       p.take(2000))
   }
 
-  test("o4_fold_exec folds each wallet over one hashpartitioning(wallet_id exchange, no collect_list") {
+  test("o4_fold_exec folds wallets in one MapGroups over a wallet_id shuffle") {
     assert(!planOf("o4_fold_exec").contains("collect_list"))
     val plan = SparkEntry.queries("o4_fold_exec")(spark, sf).queryExecution.executedPlan
     val helper = new AdaptiveSparkPlanHelper {}
